@@ -1,7 +1,7 @@
-"""Long-lived engine service behind the REST surface (reference
-/root/reference/src/api/main.py:23-41 keeps Pipeline/SQLiteStore/
-LanceDBStore/HybridRetriever alive for the app's lifespan; here the
-long-lived state is ONE SparkSession plus session deltas).
+"""Long-lived engine service behind the REST surface (the reference's
+src/api/main.py:23-41 keeps Pipeline/SQLiteStore/LanceDBStore/
+HybridRetriever alive for the app's lifespan; here the long-lived state
+is ONE SparkSession plus session deltas).
 
 Storage model: the corpus is the immutable parquet lake (documents /
 embeddings tables). HTTP uploads and deletes are session DELTAS — a
@@ -12,6 +12,14 @@ row mutations (src/load/sqlite_store.py): at scale the same deltas are
 flushed through the sink rewrites (sources/sinks.py upsert/delete_where)
 into new table versions; the API semantics don't change.
 
+Serving view: `_docs()` is the one view every reader goes through — lake
+∪ uploads minus tombstones, one row per document carrying its `filename`
+and the `title` derived from it by the reference's filename rule. A
+search is one plan: the ranked top-k ids left-joined back to that view
+for title and text, collected once — the reference's retriever likewise
+returns each hit's title and text with its score
+(src/retrieve/hybrid_retriever.py:57-90).
+
 Everything here returns plain dicts/lists so the same engine backs any
 HTTP frontend (FastAPI when installed, Flask otherwise — api/app.py).
 """
@@ -21,7 +29,7 @@ from __future__ import annotations
 import hashlib
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import title_from_filename
@@ -45,6 +53,11 @@ class BadRequest(ValueError):
     """Raised for invalid request input (HTTP 400)."""
 
 
+def _titled(docs: DataFrame) -> DataFrame:
+    """The one title rule: `title` from `filename` (reference F10)."""
+    return docs.withColumn("title", title_from_filename(F.col("filename")))
+
+
 class SparkEngine:
     """The reference's app.state, Spark-shaped: one session, one corpus,
     session deltas for upload/delete."""
@@ -59,6 +72,7 @@ class SparkEngine:
         self._uploads: dict[str, dict[str, Any]] = {}  # doc_id -> row dict
         self._tombstones: set[str] = set()
         self._next_upload_ord = 1
+        self._dim: int | None = None  # corpus embedding width, read once
 
     def close(self) -> dict[str, int]:
         """Release session-pinned caches (bm25 live indexes, streaming
@@ -74,28 +88,28 @@ class SparkEngine:
 
     # ------------------------------------------------------------------ docs
 
-    def _base_docs(self) -> DataFrame:
-        return load_table(self.spark, self.sf_dir, "documents")
-
-    def _docs(self) -> DataFrame:
-        """Lake ∪ uploads, minus tombstones — the serving view."""
-        docs = self._base_docs().select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text", "lang", "source", "n_chars"
+    def _docs(self, uploads: bool = True) -> DataFrame:
+        """The serving view: lake ∪ uploads (unless `uploads` is False),
+        minus tombstones, with each document's filename and title."""
+        doc_id = F.col("doc_id").cast("string")
+        docs = load_table(self.spark, self.sf_dir, "documents").select(
+            doc_id.alias("doc_id"),
+            "text",
+            "lang",
+            "source",
+            "n_chars",
+            F.concat("source", F.lit("_report_"), doc_id, F.lit(".pdf")).alias("filename"),
         )
-        if self._uploads:
-            rows = [
-                (u["id"], u["text"] or "", "en", "upload", len(u["text"] or ""))
-                for u in self._uploads.values()
-                if u["status"] == "completed"
-            ]
-            if rows:
-                up = self.spark.createDataFrame(
-                    rows, ["doc_id", "text", "lang", "source", "n_chars"]
-                )
-                docs = docs.unionByName(up)
+        rows = [
+            (u["id"], u["text"] or "", "en", "upload", len(u["text"] or ""), u["filename"])
+            for u in self._uploads.values()
+            if uploads and u["status"] == "completed"
+        ]
+        if rows:
+            docs = docs.unionByName(self.spark.createDataFrame(rows, docs.schema))
         if self._tombstones:
             docs = docs.filter(~F.col("doc_id").isin(sorted(self._tombstones)))
-        return docs
+        return _titled(docs)
 
     def _doc_row(self, document_id: str) -> dict[str, Any]:
         if document_id in self._tombstones:
@@ -103,8 +117,9 @@ class SparkEngine:
         if document_id in self._uploads:
             return dict(self._uploads[document_id])
         row = (
-            self._base_docs()
-            .filter(F.col("doc_id").cast("string") == document_id)
+            self._docs(uploads=False)
+            .filter(F.col("doc_id") == document_id)
+            .select("filename", "title", "text")
             .limit(1)
             .collect()
         )
@@ -112,9 +127,9 @@ class SparkEngine:
             raise NotFound(document_id)
         r = row[0]
         return {
-            "id": str(r.doc_id),
-            "filename": f"{r.source}_report_{r.doc_id}.pdf",
-            "title": self._title_of(r.source, r.doc_id),
+            "id": document_id,
+            "filename": r.filename,
+            "title": r.title,
             "status": "completed",
             "page_count": 1,
             "source_path": f"{self.sf_dir}/documents.parquet",
@@ -124,14 +139,11 @@ class SparkEngine:
             "text": r.text,
         }
 
-    def _title_of(self, source: str, doc_id: Any) -> str:
-        # same F10 chain the engine queries use, driver-side for one value
-        row = (
-            self.spark.range(1)
-            .select(title_from_filename(F.lit(f"{source}_report_{doc_id}.pdf")).alias("t"))
-            .first()
-        )
-        return row.t
+    def _corpus_dim(self) -> int:
+        if self._dim is None:
+            emb = load_table(self.spark, self.sf_dir, "embeddings")
+            self._dim = len(emb.select("embedding").first()[0])
+        return self._dim
 
     # ---------------------------------------------------------------- search
 
@@ -145,100 +157,86 @@ class SparkEngine:
         """Reference POST /search (src/api/routes/search.py:17-59): one
         query, three modes. Keyword = BM25 over the serving view; vector =
         cosine over the embeddings table; hybrid = RRF fusion of both."""
+        return [
+            {
+                "chunk_id": f"{h.doc_id}:0",
+                "document_id": h.doc_id,
+                "document_title": h.title,
+                "text": h.text[:300],
+                "score": float(h.score),
+                "search_mode": mode,
+            }
+            for h in self._hits(query, mode, limit, title_filter)
+        ]
+
+    def _hits(self, query: str, mode: str, limit: int, title_filter: str | None) -> list[Row]:
+        """Top-`limit` rows (doc_id, score, title, text) in rank order, as
+        one plan collected once. A hit without a doc row (a vector id the
+        documents table lacks) gets "" for title and text."""
         try:
             mode_e = SearchMode(mode)
         except ValueError:
             raise BadRequest(f"Invalid search mode: {mode}. Use: vector, hybrid, keyword")
-        docs = self._docs()
-        if title_filter:
-            # F8 title LIKE filter — source+id synthesized filename chain
-            t = title_from_filename(
-                F.concat(F.col("source"), F.lit("_report_"), F.col("doc_id"), F.lit(".pdf"))
-            )
-            docs = docs.filter(t.contains(title_filter))
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise BadRequest("Empty query")
+        docs = self._docs()
+        if title_filter:  # F8 title LIKE filter, applied in every mode
+            docs = docs.filter(F.col("title").contains(title_filter))
 
-        kw = bm25_scores(docs, "doc_id", "text", terms)
-        if mode_e is SearchMode.KEYWORD:
-            ranked = (
-                kw.select(F.col("doc_key").alias("doc_id"), F.round("score", 4).alias("score"))
-                .orderBy(F.desc("score"), "doc_id")
-                .limit(limit)
-            )
-        else:
-            emb = load_table(self.spark, self.sf_dir, "embeddings")
-            corpus_dim = len(emb.select("embedding").first()[0])
-            qv = query_vector_lit(embed_query(query, HashEmbedder(dim=corpus_dim)))
-            vec = emb.select(
+        if mode_e is not SearchMode.VECTOR:
+            kw = bm25_scores(docs, "doc_id", "text", terms).withColumn("score", F.round("score", 4))
+        if mode_e is not SearchMode.KEYWORD:
+            qv = query_vector_lit(embed_query(query, HashEmbedder(dim=self._corpus_dim())))
+            vec = load_table(self.spark, self.sf_dir, "embeddings").select(
                 F.col("vec_id").cast("string").alias("doc_key"),
                 F.round(cosine(as_double("embedding"), qv), 4).alias("score"),
             )
-            if mode_e is SearchMode.VECTOR:
-                ranked = (
-                    vec.select(F.col("doc_key").alias("doc_id"), "score")
-                    .orderBy(F.desc("score"), "doc_id")
-                    .limit(limit)
-                )
-            else:
-                kw_rank = rank_top(kw, 2 * limit, "doc_key")
-                vec_rank = rank_top(vec, 2 * limit, "doc_key")
-                ranked = rrf_fuse(kw_rank, vec_rank, "doc_key", k=limit).withColumnRenamed(
-                    "doc_key", "doc_id"
-                )
+            if title_filter:
+                keep = docs.select(F.col("doc_id").alias("doc_key"))
+                vec = vec.join(keep, "doc_key", "left_semi")
+        if mode_e is SearchMode.HYBRID:
+            ranked = rrf_fuse(rank_top(kw, 2 * limit), rank_top(vec, 2 * limit), k=limit)
+        else:
+            scored = kw if mode_e is SearchMode.KEYWORD else vec
+            ranked = scored.orderBy(F.desc("score"), "doc_key").limit(limit)
 
-        out = []
-        for r in ranked.collect():
-            doc_id = str(r.doc_id)
-            try:
-                doc = self._doc_row(doc_id)
-            except NotFound:  # vector ids without a doc row keep id + score
-                doc = {"title": "", "text": ""}
-            snippet = (doc.get("text") or "")[:300]
-            out.append(
-                {
-                    "chunk_id": f"{doc_id}:0",
-                    "document_id": doc_id,
-                    "document_title": doc.get("title", ""),
-                    "text": snippet,
-                    "score": float(r.score),
-                    "search_mode": mode_e.value,
-                }
+        return (
+            ranked.withColumnRenamed("doc_key", "doc_id")
+            .join(docs.select("doc_id", "title", "text"), "doc_id", "left")
+            .select(
+                "doc_id",
+                "score",
+                F.coalesce("title", F.lit("")).alias("title"),
+                F.coalesce("text", F.lit("")).alias("text"),
             )
-        return out
+            .orderBy(F.desc("score"), "doc_id")
+            .collect()
+        )
 
     def get_context(
         self, query: str, max_tokens: int = 4000, mode: str = "hybrid"
     ) -> dict[str, Any]:
         """Reference POST /search/context (search.py:62-105): overfetched
         ranked results cut to the token budget, formatted with source
-        attribution."""
-        results = self.search(query, mode=mode, limit=20)
-        kept: list[dict[str, Any]] = []
+        attribution. The budget counts each hit's full text, which the
+        search plan already collected."""
+        kept: list[Row] = []
         budget = 0
-        for r in results:
-            doc = self._doc_row_or_none(r["document_id"])
-            text = (doc or {}).get("text") or r["text"]
-            tokens = int(len(text.split()) * TOKEN_FACTOR)
+        for h in self._hits(query, mode, 20, None):
+            tokens = int(len(h.text.split()) * TOKEN_FACTOR)
             if budget + tokens > max_tokens:
                 break
             budget += tokens
-            kept.append({**r, "text": text})
-        titles = list(dict.fromkeys(k["document_title"] for k in kept if k["document_title"]))
+            kept.append(h)
+        titles = list(dict.fromkeys(h.title for h in kept if h.title))
         header = "Documents referenced:\n" + "\n".join(f"- {t}" for t in titles)
-        body = "\n\n---\n\n".join(k["text"] for k in kept)
+        body = "\n\n---\n\n".join(h.text for h in kept)
         return {
             "context": f"{header}\n\n---\n\n{body}" if kept else "",
             "documents_referenced": titles,
             "topic": route_topic(query),
         }
-
-    def _doc_row_or_none(self, document_id: str) -> dict[str, Any] | None:
-        try:
-            return self._doc_row(document_id)
-        except NotFound:
-            return None
 
     # ----------------------------------------------------------------- stats
 
@@ -266,26 +264,22 @@ class SparkEngine:
         out: list[dict[str, Any]] = []
         if status in (None, "completed"):
             rows = (
-                self._base_docs()
-                .select(F.col("doc_id").cast("string").alias("doc_id"), "source")
+                self._docs(uploads=False)
+                .select("doc_id", "filename", "title")
                 .orderBy(F.col("doc_id").cast("long"))
-                .limit(limit + len(self._tombstones))
+                .limit(limit)
                 .collect()
             )
-            for r in rows:
-                if r.doc_id in self._tombstones:
-                    continue
-                out.append(
-                    {
-                        "id": r.doc_id,
-                        "filename": f"{r.source}_report_{r.doc_id}.pdf",
-                        "title": f"{r.source} report {r.doc_id}",
-                        "status": "completed",
-                        "page_count": 1,
-                    }
-                )
-                if len(out) >= limit:
-                    break
+            out = [
+                {
+                    "id": r.doc_id,
+                    "filename": r.filename,
+                    "title": r.title,
+                    "status": "completed",
+                    "page_count": 1,
+                }
+                for r in rows
+            ]
         for u in self._uploads.values():
             if len(out) >= limit:
                 break
@@ -346,15 +340,11 @@ class SparkEngine:
             status, err = "completed", None
         except Exception as e:  # parse-side capture, M4 policy
             text, pages, status, err = None, None, "failed", str(e)
-        title_row = (
-            self.spark.range(1)
-            .select(title_from_filename(F.lit(filename)).alias("t"))
-            .first()
-        )
+        title = _titled(self.spark.createDataFrame([(filename,)], "filename string")).first().title
         self._uploads[doc_id] = {
             "id": doc_id,
             "filename": filename,
-            "title": title_row.t,
+            "title": title,
             "status": status,
             "page_count": pages,
             "source_path": f"upload://{filename}",

@@ -72,10 +72,6 @@ def text_len(text: Column) -> Column:
     return F.length(text)
 
 
-def words_per_page(text: Column, page_count: Column) -> Column:
-    return F.size(tokens(text)) / F.greatest(page_count, F.lit(1))
-
-
 def avg_word_length(text: Column) -> Column:
     # Σ token lengths == length of the text with all whitespace removed
     # (tokens are exactly the non-whitespace runs), which keeps the whole
@@ -92,8 +88,3 @@ def whitespace_ratio(text: Column) -> Column:
 def non_ascii_ratio(text: Column) -> Column:
     non_ascii = F.length(F.regexp_replace(text, r"[\x00-\x7F]", ""))
     return non_ascii / F.greatest(F.length(text), F.lit(1))
-
-
-def punct_ratio(text: Column) -> Column:
-    punct = F.length(F.regexp_replace(text, r"[^.,;:!?'\"()\[\]-]", ""))
-    return punct / F.greatest(F.length(text), F.lit(1))

@@ -1,1 +1,1 @@
-from . import bm25, embedder, hybrid, vector_search  # noqa: F401
+from . import bm25, embedder, hybrid  # noqa: F401

@@ -439,10 +439,6 @@ def table_scalar_cached(spark: SparkSession, sf_dir: str, table: str, tag: str, 
     return val
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so `spark.sql` queries work."""
     for name in TABLES:

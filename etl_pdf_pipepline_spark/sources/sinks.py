@@ -42,17 +42,6 @@ def upsert(table: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     return survivors.unionByName(updates)
 
 
-def overwrite_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
-    """M3 reprocess: dynamic partition overwrite — only partitions present
-    in df are replaced."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
 def merge_partitions(
     merged_slice: DataFrame,
     lake_path: str,

@@ -130,13 +130,16 @@ def test_search_invalid_mode_400(client):
     assert "Invalid search mode" in r.get_json()["detail"]
 
 
-def test_search_title_filter(client):
+@pytest.mark.parametrize("mode", ["keyword", "vector", "hybrid"])
+def test_search_title_filter(client, mode):
     r = client.post(
         "/search",
-        json={"query": "spark", "mode": "keyword", "limit": 5, "title_filter": "src1"},
+        json={"query": "spark", "mode": mode, "limit": 5, "title_filter": "src1"},
     )
     assert r.status_code == 200
-    for row in r.get_json():
+    rows = r.get_json()
+    assert rows
+    for row in rows:
         assert "src1" in row["document_title"]
 
 
