@@ -1,7 +1,8 @@
 """Long-lived engine service behind the REST surface (the reference's
 src/api/main.py:23-41 keeps Pipeline/SQLiteStore/LanceDBStore/
 HybridRetriever alive for the app's lifespan; here the long-lived state
-is ONE SparkSession plus session deltas).
+is ONE SparkSession, the corpus's persisted BM25 index and session
+deltas).
 
 Storage model: the corpus is the immutable parquet lake (documents /
 embeddings tables). HTTP uploads and deletes are session DELTAS — a
@@ -12,13 +13,27 @@ row mutations (src/load/sqlite_store.py): at scale the same deltas are
 flushed through the sink rewrites (sources/sinks.py upsert/delete_where)
 into new table versions; the API semantics don't change.
 
-Serving view: `_docs()` is the one view every reader goes through — lake
-∪ uploads minus tombstones, one row per document carrying its `filename`
-and the `title` derived from it by the reference's filename rule. A
-search is one plan: the ranked top-k ids left-joined back to that view
-for title and text, collected once — the reference's retriever likewise
-returns each hit's title and text with its score
-(src/retrieve/hybrid_retriever.py:57-90).
+Serving view: `_docs()` is lake ∪ uploads minus tombstones, one row per
+document carrying its `filename` and the `title` derived from it by the
+reference's filename rule. Listing, stats and the title filter read it.
+
+Search: the keyword leg is served from the persisted BM25 index, built
+or found fresh once per engine (retrieval/queries.py::ensure_bm25_index
+— the reference builds its full-text index once per ingest batch and
+every query reads it, src/pipeline.py:164-165). The deltas edit that
+index exactly at read time (bm25.IndexDelta): each upload's term counts
+are taken once, at upload, and each deleted lake document's posting rows
+once, at delete; a search corrects N, total_dl and df by them, skips the
+tombstoned keys in the postings scan and unions the uploads' rows in.
+Uploads are not written into the shared index: they are not in the
+documents table, so its freshness record would serve them to every other
+reader of the corpus. The vector leg is a cosine scan of the embeddings
+with the query vector as a literal, and hybrid mode fuses the two with
+RRF — all one spark.sql text, collected once. A second, small collect
+then reads title and text for at most `limit` lake ids; upload rows are
+already on the driver. Two collects and not one: folding the lookup into
+the ranked plan either broadcasts every document's text (left join) or
+evaluates the ranking twice (semi-join), and both measured slower.
 
 Everything here returns plain dicts/lists so the same engine backs any
 HTTP frontend (FastAPI when installed, Flask otherwise — api/app.py).
@@ -27,19 +42,24 @@ HTTP frontend (FastAPI when installed, Flask otherwise — api/app.py).
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 from typing import Any
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import title_from_filename
-from ..functions.vectors import as_double, cosine, query_vector_lit
+from ..functions.text import title_from_filename, tokens
+from ..functions.vectors import array_lit_sql, as_double_sql, cosine_sql
 from ..operators.chunker import chunk_text
 from ..operators.multimodal import decode_image_fake, media_table
-from ..retrieval.bm25 import bm25_scores
+# perfbench/run.py::_wrap_layers re-binds bm25_scores, embed_query and
+# load_table on this module to span them, so all three must stay bound
+# here — bm25_scores too, although the engine no longer calls it.
+from ..retrieval.bm25 import IndexDelta, bm25_scores, scored_from_index_sqltext  # noqa: F401
 from ..retrieval.embedder import HashEmbedder, embed_query
-from ..retrieval.hybrid import SearchMode, rank_top, route_topic, rrf_fuse
-from ..sources.catalog import DEFAULT_SF_DIR, load_table
+from ..retrieval.hybrid import SearchMode, route_topic, rrf_sql
+from ..retrieval.queries import ensure_bm25_index
+from ..sources.catalog import DEFAULT_SF_DIR, load_table, read_parquet_cached
 from ..sources.extract import _parse_passthrough
 
 TOKEN_FACTOR = 1.3  # reference src/transform/chunker.py:124-126
@@ -53,14 +73,31 @@ class BadRequest(ValueError):
     """Raised for invalid request input (HTTP 400)."""
 
 
+def _lake_filename(doc_id: Column) -> Column:
+    """A lake document's filename, the input of its title."""
+    return F.concat("source", F.lit("_report_"), doc_id, F.lit(".pdf"))
+
+
 def _titled(docs: DataFrame) -> DataFrame:
     """The one title rule: `title` from `filename` (reference F10)."""
     return docs.withColumn("title", title_from_filename(F.col("filename")))
 
 
+def _lake_id(document_id: str) -> int:
+    """The documents table's bigint key for a lake id; NotFound for any
+    id that is not one (no lake row's id reads "007" or "up-1")."""
+    try:
+        key = int(document_id)
+    except ValueError:
+        raise NotFound(document_id)
+    if str(key) != document_id:
+        raise NotFound(document_id)
+    return key
+
+
 class SparkEngine:
-    """The reference's app.state, Spark-shaped: one session, one corpus,
-    session deltas for upload/delete."""
+    """The reference's app.state, Spark-shaped: one session, one corpus
+    and its BM25 index, session deltas for upload/delete."""
 
     def __init__(
         self,
@@ -69,8 +106,13 @@ class SparkEngine:
     ) -> None:
         self.spark = spark
         self.sf_dir = sf_dir
+        self._index = ensure_bm25_index(spark, sf_dir)
         self._uploads: dict[str, dict[str, Any]] = {}  # doc_id -> row dict
         self._tombstones: set[str] = set()
+        # the index deltas: live completed uploads' and tombstoned lake
+        # documents' {term: tf}
+        self._added: dict[str, Counter] = {}
+        self._removed: dict[int, dict[str, int]] = {}
         self._next_upload_ord = 1
         self._dim: int | None = None  # corpus embedding width, read once
 
@@ -98,7 +140,7 @@ class SparkEngine:
             "lang",
             "source",
             "n_chars",
-            F.concat("source", F.lit("_report_"), doc_id, F.lit(".pdf")).alias("filename"),
+            _lake_filename(doc_id).alias("filename"),
         )
         rows = [
             (u["id"], u["text"] or "", "en", "upload", len(u["text"] or ""), u["filename"])
@@ -111,21 +153,25 @@ class SparkEngine:
             docs = docs.filter(~F.col("doc_id").isin(sorted(self._tombstones)))
         return _titled(docs)
 
+    def _lake_rows(self, keys: list[int]) -> dict[str, Row]:
+        """{doc_id: Row(filename, title, text)} for the lake documents
+        with these raw ids: the filter is on the bigint key, so it reaches
+        the parquet scan, and titles are derived only for matching rows."""
+        docs = load_table(self.spark, self.sf_dir, "documents").filter(F.col("doc_id").isin(keys))
+        doc_id = F.col("doc_id").cast("string")
+        rows = _titled(
+            docs.select(doc_id.alias("doc_id"), "text", _lake_filename(doc_id).alias("filename"))
+        ).collect()
+        return {r.doc_id: r for r in rows}
+
     def _doc_row(self, document_id: str) -> dict[str, Any]:
         if document_id in self._tombstones:
             raise NotFound(document_id)
         if document_id in self._uploads:
             return dict(self._uploads[document_id])
-        row = (
-            self._docs(uploads=False)
-            .filter(F.col("doc_id") == document_id)
-            .select("filename", "title", "text")
-            .limit(1)
-            .collect()
-        )
-        if not row:
+        r = self._lake_rows([_lake_id(document_id)]).get(document_id)
+        if r is None:
             raise NotFound(document_id)
-        r = row[0]
         return {
             "id": document_id,
             "filename": r.filename,
@@ -155,8 +201,15 @@ class SparkEngine:
         title_filter: str | None = None,
     ) -> list[dict[str, Any]]:
         """Reference POST /search (src/api/routes/search.py:17-59): one
-        query, three modes. Keyword = BM25 over the serving view; vector =
-        cosine over the embeddings table; hybrid = RRF fusion of both."""
+        query, three modes. Keyword = BM25 over the corpus index with the
+        session's uploads and deletes applied; vector = cosine over the
+        embeddings table; hybrid = RRF fusion of both.
+
+        `title_filter` keeps only candidates whose title contains it, on
+        both legs. BM25's N, df and avgdl stay those of the whole serving
+        corpus, so a hit that passes the filter scores the same with or
+        without it — as in the reference, whose filter is a `where` on a
+        search over the whole index."""
         return [
             {
                 "chunk_id": f"{h.doc_id}:0",
@@ -170,9 +223,10 @@ class SparkEngine:
         ]
 
     def _hits(self, query: str, mode: str, limit: int, title_filter: str | None) -> list[Row]:
-        """Top-`limit` rows (doc_id, score, title, text) in rank order, as
-        one plan collected once. A hit without a doc row (a vector id the
-        documents table lacks) gets "" for title and text."""
+        """Top-`limit` rows (doc_id, score, title, text) in rank order:
+        the ranking is one spark.sql text collected once, then one lookup
+        of the lake hits' title and text. A hit without a doc row (a
+        vector id the documents table lacks) gets "" for title and text."""
         try:
             mode_e = SearchMode(mode)
         except ValueError:
@@ -180,39 +234,42 @@ class SparkEngine:
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise BadRequest("Empty query")
-        docs = self._docs()
+        frames: dict[str, DataFrame] = {}
+        keep = ""
         if title_filter:  # F8 title LIKE filter, applied in every mode
-            docs = docs.filter(F.col("title").contains(title_filter))
+            view = self._docs().filter(F.col("title").contains(title_filter))
+            frames["keep"] = view.select("doc_id")
+            keep = " WHERE doc_key IN (SELECT doc_id FROM {keep})"
 
         if mode_e is not SearchMode.VECTOR:
-            kw = bm25_scores(docs, "doc_id", "text", terms).withColumn("score", F.round("score", 4))
+            frames["post"] = read_parquet_cached(self.spark, f"{self._index}/postings")
+            delta = IndexDelta(added=self._added, removed=self._removed)
+            kw = scored_from_index_sqltext(self.spark, self._index, terms, delta=delta)
+            kw = f"SELECT doc_key, round(score, 4) AS score FROM ({kw}) s{keep}"
         if mode_e is not SearchMode.KEYWORD:
-            qv = query_vector_lit(embed_query(query, HashEmbedder(dim=self._corpus_dim())))
-            vec = load_table(self.spark, self.sf_dir, "embeddings").select(
-                F.col("vec_id").cast("string").alias("doc_key"),
-                F.round(cosine(as_double("embedding"), qv), 4).alias("score"),
-            )
-            if title_filter:
-                keep = docs.select(F.col("doc_id").alias("doc_key"))
-                vec = vec.join(keep, "doc_key", "left_semi")
+            frames["emb"] = load_table(self.spark, self.sf_dir, "embeddings")
+            qv = embed_query(query, HashEmbedder(dim=self._corpus_dim()))
+            cos = cosine_sql(as_double_sql("embedding"), array_lit_sql(qv))
+            vec = f"SELECT CAST(vec_id AS STRING) AS doc_key, round({cos}, 4) AS score FROM {{emb}}"
+            if self._removed:
+                vec += " WHERE vec_id NOT IN (" + ", ".join(map(str, self._removed)) + ")"
+            if keep:
+                vec = f"SELECT doc_key, score FROM ({vec}) v{keep}"
         if mode_e is SearchMode.HYBRID:
-            ranked = rrf_fuse(rank_top(kw, 2 * limit), rank_top(vec, 2 * limit), k=limit)
+            sql = rrf_sql(kw, vec, depth=2 * limit, k=limit)
         else:
-            scored = kw if mode_e is SearchMode.KEYWORD else vec
-            ranked = scored.orderBy(F.desc("score"), "doc_key").limit(limit)
+            leg = kw if mode_e is SearchMode.KEYWORD else vec
+            sql = f"SELECT doc_key, score FROM ({leg}) r ORDER BY score DESC, doc_key LIMIT {int(limit)}"
+        ranked = self.spark.sql(sql, **frames).collect()
 
-        return (
-            ranked.withColumnRenamed("doc_key", "doc_id")
-            .join(docs.select("doc_id", "title", "text"), "doc_id", "left")
-            .select(
-                "doc_id",
-                "score",
-                F.coalesce("title", F.lit("")).alias("title"),
-                F.coalesce("text", F.lit("")).alias("text"),
-            )
-            .orderBy(F.desc("score"), "doc_id")
-            .collect()
-        )
+        lake = [int(r.doc_key) for r in ranked if r.doc_key not in self._uploads]
+        docs = {**(self._lake_rows(lake) if lake else {}), **self._uploads}
+        hits = []
+        for r in ranked:
+            doc = docs.get(r.doc_key)
+            title, text = (doc["title"], doc["text"] or "") if doc else ("", "")
+            hits.append(Row(doc_id=r.doc_key, score=r.score, title=title, text=text))
+        return hits
 
     def get_context(
         self, query: str, max_tokens: int = 4000, mode: str = "hybrid"
@@ -224,10 +281,10 @@ class SparkEngine:
         kept: list[Row] = []
         budget = 0
         for h in self._hits(query, mode, 20, None):
-            tokens = int(len(h.text.split()) * TOKEN_FACTOR)
-            if budget + tokens > max_tokens:
+            n_tokens = int(len(h.text.split()) * TOKEN_FACTOR)
+            if budget + n_tokens > max_tokens:
                 break
-            budget += tokens
+            budget += n_tokens
             kept.append(h)
         titles = list(dict.fromkeys(h.title for h in kept if h.title))
         header = "Documents referenced:\n" + "\n".join(f"- {t}" for t in titles)
@@ -340,7 +397,15 @@ class SparkEngine:
             status, err = "completed", None
         except Exception as e:  # parse-side capture, M4 policy
             text, pages, status, err = None, None, "failed", str(e)
-        title = _titled(self.spark.createDataFrame([(filename,)], "filename string")).first().title
+        # one job yields the title and the upload's index delta
+        row = (
+            _titled(self.spark.createDataFrame([(filename, text)], "filename string, text string"))
+            .select("title", tokens("text").alias("terms"))
+            .first()
+        )
+        title = row.title
+        if status == "completed":
+            self._added[doc_id] = Counter(row.terms or [])
         self._uploads[doc_id] = {
             "id": doc_id,
             "filename": filename,
@@ -366,6 +431,13 @@ class SparkEngine:
         M2 cascade as a tombstone; the lake rewrite (sinks.delete_where)
         applies it durably."""
         self._doc_row(document_id)  # 404 if unknown
+        if document_id in self._uploads:
+            self._added.pop(document_id, None)
+        else:  # withdraw the lake document's posting rows from the index
+            key = int(document_id)
+            post = read_parquet_cached(self.spark, f"{self._index}/postings")
+            rows = post.filter(F.col("doc_key") == key).select("term", "tf").collect()
+            self._removed[key] = {r.term: int(r.tf) for r in rows}
         self._tombstones.add(document_id)
         return {"message": f"Document deleted: {document_id}"}
 

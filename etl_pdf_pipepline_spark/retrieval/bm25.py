@@ -19,6 +19,9 @@ ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene's non-negative variant).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -56,14 +59,14 @@ def bm25_scores(
     first join, so the scored set is the posting lists of the query terms —
     the same work a posting-list index union would do.
     """
-    # The postings/doc-stats pair IS the FTS index (reference S12,
-    # /root/reference/src/load/lancedb_store.py:104-112). Within a session
-    # we .cache() both: Spark's cache manager matches canonicalized plans,
-    # so every query against the same corpus (bm25, hybrid, routed,
-    # context) reuses one materialization instead of re-tokenizing — the
-    # same build-once-query-many contract as the reference's index. At
-    # cluster scale the same DataFrames are persisted as a bucketed-by-term
-    # parquet/Delta table instead of executor memory (persist_index below).
+    # The live index: tokenized from `docs` and .cache()d, so repeated
+    # queries over the same corpus lineage (Spark's cache manager matches
+    # canonicalized plans) reuse one materialization. Its callers are
+    # cli.py and the registry rows that score a derived view (routed,
+    # title-weighted, context) or the unindexed fallback. Serving
+    # (api/engine.py) reads the persisted index instead
+    # (persist_index / scored_from_index_sqltext below), which pins no
+    # executor memory per corpus lineage.
     postings = build_postings(docs, id_col, text_col).cache()
     doc_stats = build_doc_stats(postings).cache()
     _CACHED_INDEXES.append((postings, doc_stats))
@@ -251,33 +254,39 @@ def persist_index(
     consumers that want the per-doc view. Rebuild cadence mirrors the
     reference: once per ingest batch
     (/root/reference/src/pipeline.py:164-165)."""
-    postings = build_postings(docs, id_col, text_col)
-    doc_stats = build_doc_stats(postings)
-    # Term dictionary FIRST (r13): (term, df) — the Lucene docFreq slot.
-    # Written before the postings so a crash mid-build/mid-extend can
-    # only leave df rows whose postings are missing (scores then
-    # under-weight those terms' idf slightly), never postings rows with
-    # no df entry (which would NULL their scores in the literal-df
-    # serving plan). Readers sum rows per term, so extends can append.
-    _write_term_df(postings, path, "overwrite", n_buckets)
-    (
-        postings.join(doc_stats, "doc_key")
-        .repartition(n_buckets, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(f"{path}/postings")
-    )
-    doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
-    # Corpus scalars (N, total token count; avgdl derives) are published
-    # through the manifest CAS (sources/manifest.py commit_meta) — the
-    # repo's one artifact-publication protocol. The commit is atomic, so
-    # a reader never sees a half-replaced record (the crash window a
-    # mode('overwrite') parquet rewrite of the old {path}/corpus dir
-    # had), and the exact integer total lets extend_index merge scalars
-    # exactly instead of reconstructing the sum from a rounded double.
-    row = doc_stats.agg(
-        F.count("*").alias("n"), F.sum("dl").alias("total_dl")
-    ).collect()[0]
+    # Tokenized once: the term dictionary, the doc_stats join, the
+    # doc_stats write and the scalars all read these postings, and each
+    # would otherwise re-tokenize the corpus.
+    postings = build_postings(docs, id_col, text_col).cache()
+    try:
+        doc_stats = build_doc_stats(postings)
+        # Term dictionary FIRST (r13): (term, df) — the Lucene docFreq slot.
+        # Written before the postings so a crash mid-build/mid-extend can
+        # only leave df rows whose postings are missing (scores then
+        # under-weight those terms' idf slightly), never postings rows with
+        # no df entry (which would NULL their scores in the literal-df
+        # serving plan). Readers sum rows per term, so extends can append.
+        _write_term_df(postings, path, "overwrite", n_buckets)
+        (
+            postings.join(doc_stats, "doc_key")
+            .repartition(n_buckets, "term")
+            .sortWithinPartitions("term")
+            .write.mode("overwrite")
+            .parquet(f"{path}/postings")
+        )
+        doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
+        # Corpus scalars (N, total token count; avgdl derives) are published
+        # through the manifest CAS (sources/manifest.py commit_meta) — the
+        # repo's one artifact-publication protocol. The commit is atomic, so
+        # a reader never sees a half-replaced record (the crash window a
+        # mode('overwrite') parquet rewrite of the old {path}/corpus dir
+        # had), and the exact integer total lets extend_index merge scalars
+        # exactly instead of reconstructing the sum from a rounded double.
+        row = doc_stats.agg(
+            F.count("*").alias("n"), F.sum("dl").alias("total_dl")
+        ).collect()[0]
+    finally:
+        postings.unpersist()
     from ..sources.manifest import commit_meta
 
     # source_signature (when the caller supplies one — a stat digest of
@@ -526,12 +535,31 @@ def compact_index(spark, path: str, n_buckets: int = 16) -> dict[str, int]:
 
 
 def _sql_str_lit(t: str) -> str:
-    """SQL string-literal escape for raw tokens."""
-    return "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """SQL string literal for a spark.sql template: backslash and quote
+    escaped for the parser, braces doubled for the template formatter."""
+    t = t.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + t.replace("{", "{{").replace("}", "}}") + "'"
+
+
+@dataclass(frozen=True)
+class IndexDelta:
+    """Exact read-time edits of a persisted index, each document given
+    as its {term: tf} counts: `added` documents served beside the index
+    (keyed by string id) and `removed` documents withdrawn from it
+    (keyed by their index key). Scoring over the index plus a delta
+    equals scoring a rebuild over (indexed − removed + added)."""
+
+    added: Mapping[str, Mapping[str, int]]
+    removed: Mapping[int, Mapping[str, int]]
 
 
 def scored_from_index_sqltext(
-    spark, path: str, query_terms: list[str], k1: float = K1, b: float = B
+    spark,
+    path: str,
+    query_terms: list[str],
+    k1: float = K1,
+    b: float = B,
+    delta: IndexDelta | None = None,
 ) -> str | None:
     """The index-served scorer as ONE SQL text over a `{post}` DataFrame
     arg (the signature-memoized postings scan): literal IN term pushdown,
@@ -543,16 +571,44 @@ def scored_from_index_sqltext(
     this index predates the term_df layout (callers keep the legacy
     two-scan plan) so the emitted rows are identical by construction.
     Also the composable kw-leg fragment for the hybrid family's single
-    SQL text (retrieval/queries.py)."""
+    SQL text (retrieval/queries.py).
+
+    With a `delta`, N, total_dl and each query term's df are corrected
+    by its documents, the removed keys are excluded from the postings
+    scan and the added documents' query-term rows are unioned in as a
+    VALUES list; the scoring expression is the same. Keys are then
+    strings (index keys cast), so ties break by string id."""
     if not query_terms:
         return None
     term_dfs = _term_df_lookup(path, query_terms)
-    if not term_dfs:
+    if term_dfs is None:
         return None
     n, total_dl = corpus_scalars(spark, path)
+    terms = sorted(set(query_terms))
+    dfs = {t: term_dfs.get(t, 0) for t in terms}
+    terms_in = ", ".join(_sql_str_lit(t) for t in terms)
+    key_sql = "doc_key" if delta is None else "CAST(doc_key AS STRING) AS doc_key"
+    rows = "SELECT " + key_sql + ", term, tf, dl FROM {post} WHERE term IN (" + terms_in + ")"
+    if delta is not None:
+        for sign, docs in ((-1, delta.removed), (1, delta.added)):
+            for tfs in docs.values():
+                dl = sum(tfs.values())
+                n += sign if dl else 0
+                total_dl += sign * dl
+                for t in terms:
+                    dfs[t] += sign if t in tfs else 0
+        if delta.removed:
+            rows += " AND doc_key NOT IN (" + ", ".join(str(int(k)) for k in delta.removed) + ")"
+        added = [
+            f"({_sql_str_lit(doc)}, {_sql_str_lit(t)}, {tfs[t]}L, {sum(tfs.values())}L)"
+            for doc, tfs in delta.added.items()
+            for t in terms
+            if t in tfs
+        ]
+        if added:
+            rows += " UNION ALL SELECT * FROM VALUES " + ", ".join(added) + " AS up(doc_key, term, tf, dl)"
     avgdl = float(total_dl) / n if n else 0.0
-    terms_in = ", ".join(_sql_str_lit(t) for t in sorted(set(query_terms)))
-    entries = ", ".join(f"{_sql_str_lit(t)}, {df}L" for t, df in sorted(term_dfs.items()))
+    entries = ", ".join(f"{_sql_str_lit(t)}, {dfs[t]}L" for t in terms)
     score = _term_score_sql(k1, b, n=n, avgdl=avgdl)
     # NB: literal braces around `post` are load-bearing — this text is
     # passed to spark.sql(..., post=<postings scan>) as a template, never
@@ -560,7 +616,7 @@ def scored_from_index_sqltext(
     return (
         "SELECT doc_key, sum(" + score + ") AS score FROM ("
         "  SELECT doc_key, tf, dl, element_at(map(" + entries + "), term) AS df"
-        "  FROM {post} WHERE term IN (" + terms_in + ")"
+        "  FROM (" + rows + ") p"
         ") m GROUP BY doc_key"
     )
 

@@ -107,6 +107,30 @@ def rrf_fuse(
     return fused.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
+def rrf_sql(kw_sql: str, vec_sql: str, depth: int, k: int, rrf_k: int = RRF_K) -> str:
+    """`rank_top` of each leg to `depth` and `rrf_fuse` to `k`, as ONE SQL
+    text over two scored (doc_key, score) SQL texts — the same total
+    order (rounded score desc, id asc), the same union + sum and the same
+    rounding, for callers that build the whole search as one spark.sql
+    round-trip. Returns (doc_key, score) ordered by score desc, doc_key."""
+    order = "ORDER BY round(score, 4) DESC, doc_key"
+    ranks = []
+    for leg, sql in (("kw", kw_sql), ("vec", vec_sql)):
+        ranks.append(
+            f"{leg} AS ({sql}), "
+            f"{leg}_top AS (SELECT doc_key, score FROM {leg} {order} LIMIT {int(depth)}), "
+            f"{leg}_rank AS (SELECT doc_key, row_number() OVER ({order}) AS rank FROM {leg}_top)"
+        )
+    contrib = f"1.0D / ({int(rrf_k)} + rank) AS contrib"
+    return (
+        "WITH " + ", ".join(ranks) + ", "
+        f"u AS (SELECT doc_key, {contrib} FROM kw_rank "
+        f"UNION ALL SELECT doc_key, {contrib} FROM vec_rank) "
+        "SELECT doc_key, round(sum(contrib), 6) AS score FROM u "
+        f"GROUP BY doc_key ORDER BY score DESC, doc_key LIMIT {int(k)}"
+    )
+
+
 def route_topic(query_text: str, topics: tuple[str, ...] = KNOWN_TOPICS) -> str | None:
     """First topic substring-matched in the query — reference
     `_extract_topics` (/root/reference/src/retrieve/hybrid_retriever.py:148-151).

@@ -327,7 +327,9 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     lifecycle slot (reference: Tantivy index built once per ingest batch,
     /root/reference/src/pipeline.py:164-165). Persists WITH a freshness
     signature, so bm25_index_servable can route steady-state searches to
-    the files; reuses the index while the documents table is unchanged."""
+    the files; reuses the index while the documents table is unchanged.
+    SparkEngine calls it once per engine and serves keyword search from
+    the returned path."""
     from ..sources.catalog import table_stat_signature
     from .bm25 import ensure_index
 
@@ -442,10 +444,9 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13 construction floor (guide §1): on the served route the ENTIRE
     query — index-scored kw leg, literal-vector leg, both top-20 ranks,
     union-RRF, top-10 — is ONE spark.sql round-trip (profiled 0.27 s of
-    op-by-op py4j construction per call at sf0.1). Each CTE is the same
-    text the rank_top/rrf_fuse helpers built: topk LIMIT then
-    row_number over the identical total order, union + sum + rounded
-    fuse; executed plan and rows verified identical."""
+    op-by-op py4j construction per call at sf0.1), built by
+    hybrid.rrf_sql, the SQL twin of rank_top/rrf_fuse that SparkEngine
+    serves hybrid search with too."""
     emb = load_table(spark, sf_dir, "embeddings")
 
     kw_sql = None
@@ -457,28 +458,16 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..functions.vectors import array_lit_sql, as_double_sql, cosine_sql
         from ..operators.similarity import _query_vector_cached
         from ..sources.catalog import read_parquet_cached
-        from .hybrid import RRF_K
+        from .hybrid import rrf_sql
 
         qv_sql = array_lit_sql(_query_vector_cached(spark, sf_dir, 0))
         cos = cosine_sql(as_double_sql("embedding"), qv_sql)
-        order = "ORDER BY round(score, 4) DESC, doc_key"
-        text = (
-            "WITH kw AS (" + kw_sql + "), "
-            "kw_top AS (SELECT doc_key, score FROM kw " + order + " LIMIT 20), "
-            "kw_rank AS (SELECT doc_key, row_number() OVER (" + order + ") AS rank FROM kw_top), "
-            "vec AS (SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}), "
-            "vec_top AS (SELECT doc_key, score FROM vec " + order + " LIMIT 20), "
-            "vec_rank AS (SELECT doc_key, row_number() OVER (" + order + ") AS rank FROM vec_top), "
-            "u AS (SELECT doc_key, 1.0D / (" + str(RRF_K) + " + rank) AS contrib FROM kw_rank "
-            "UNION ALL SELECT doc_key, 1.0D / (" + str(RRF_K) + " + rank) AS contrib FROM vec_rank) "
-            "SELECT doc_key AS doc_id, round(sum(contrib), 6) AS score FROM u "
-            "GROUP BY doc_key ORDER BY score DESC, doc_id LIMIT 10"
-        )
+        vec_sql = "SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}"
         return spark.sql(
-            text,
+            rrf_sql(kw_sql, vec_sql, depth=20, k=10),
             post=read_parquet_cached(spark, _bm25_index_path(sf_dir) + "/postings"),
             emb=emb,
-        )
+        ).withColumnRenamed("doc_key", "doc_id")
 
     docs = load_table(spark, sf_dir, "documents")
     kw = bm25_scores(docs, "doc_id", "text", QUERY_TERMS)

@@ -1,12 +1,33 @@
 """SparkEngine behaviours below the HTTP layer: the serving view's title
-column is the one title every reader reports, and a search is one Spark
-plan whatever its limit."""
+column is the one title every reader reports, a search's job count does
+not grow with its limit, and uploads and deletes edit the served BM25
+index exactly, pinning no executor memory."""
 
 from __future__ import annotations
 
-from etl_pdf_pipepline_spark.api.engine import SparkEngine
+import pytest
+from pyspark.sql import functions as F
+
+from etl_pdf_pipepline_spark.api.engine import NotFound, SparkEngine
+from etl_pdf_pipepline_spark.functions.vectors import as_double, cosine, query_vector_lit
+from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_scores, release_indexes
+from etl_pdf_pipepline_spark.retrieval.embedder import HashEmbedder, embed_query
+from etl_pdf_pipepline_spark.retrieval.hybrid import rank_top, rrf_fuse
+from etl_pdf_pipepline_spark.sources.catalog import load_table
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+def _jobs(spark, group: str, call):
+    """(call's result, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_list_documents_title_matches_filename_rule(spark, tmp_path):
@@ -34,22 +55,109 @@ def test_title_filter_matches_upload_filename_title(spark):
 
 
 def test_search_is_one_plan(spark):
-    """Job count of a warmed hybrid search does not grow with its limit
-    (no per-hit lookups after the ranked collect)."""
-    sc = spark.sparkContext
+    """Job count of a warmed hybrid search does not grow with its limit:
+    the ranking is one collect and the title/text lookup one more, never
+    one lookup per hit."""
     eng = SparkEngine(spark, SF_SMALL)
     query = "spark join window"
 
     def jobs(limit: int) -> int:
-        group = f"test-one-plan-{limit}"
-        sc.setJobGroup(group, "search")
-        try:
-            hits = eng.search(query, mode="hybrid", limit=limit)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        hits, n = _jobs(spark, f"test-one-plan-{limit}", lambda: eng.search(query, mode="hybrid", limit=limit))
         assert len(hits) == limit
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return n
 
-    eng.search(query, mode="hybrid", limit=10)  # builds the cached index
+    eng.search(query, mode="hybrid", limit=10)  # reads the corpus dimension once
     assert jobs(3) == jobs(10)
+
+
+def test_unknown_non_numeric_id_runs_no_job(spark):
+    eng = SparkEngine(spark, SF_SMALL)
+    for bad in ("nope-999", "007"):
+
+        def lookup():
+            with pytest.raises(NotFound):
+                eng.get_document(bad)
+
+        assert _jobs(spark, f"test-not-found-{bad}", lookup)[1] == 0
+
+
+def test_title_filter_keeps_corpus_wide_scores(spark):
+    """BM25 statistics stay corpus-wide under a title filter, as in the
+    reference, whose filter is a `where` on a search over the whole index."""
+    eng = SparkEngine(spark, SF_SMALL)
+    top = eng.search("spark join window", mode="keyword", limit=1)[0]
+    kept = eng.search("spark join window", mode="keyword", limit=1, title_filter=top["document_title"])
+    assert [(h["document_id"], h["score"]) for h in kept] == [(top["document_id"], top["score"])]
+
+
+def test_query_terms_are_sql_literals(spark):
+    """Terms the corpus lacks add nothing to a BM25 score, so quotes,
+    backslashes and template braces in them must not change the answer."""
+    eng = SparkEngine(spark, SF_SMALL)
+    eng.upload("odd.pdf", b"%PDF-1.4 spark {post} o'neil \\x")
+    plain = eng.search("spark", mode="keyword", limit=5)
+    odd = eng.search("spark {emb} it's \\ {{x}}", mode="keyword", limit=5)
+    assert [(h["document_id"], h["score"]) for h in odd] == [(h["document_id"], h["score"]) for h in plain]
+    up = eng.search("{post} o'neil \\x", mode="keyword", limit=5)
+    assert [h["document_title"] for h in up] == ["odd"]
+
+
+def _recompute(spark, eng, deleted: set[str], query: str, mode: str, limit: int):
+    """The from-scratch ranking: the live bm25_scores over the serving view
+    and cosine over the embeddings minus the deleted ids, ranked with
+    rank_top/rrf_fuse."""
+    docs = eng._docs()
+    kw = bm25_scores(docs, "doc_id", "text", query.lower().split()).withColumn("score", F.round("score", 4))
+    qv = query_vector_lit(embed_query(query, HashEmbedder(dim=eng._corpus_dim())))
+    vec = (
+        load_table(spark, SF_SMALL, "embeddings")
+        .select(
+            F.col("vec_id").cast("string").alias("doc_key"),
+            F.round(cosine(as_double("embedding"), qv), 4).alias("score"),
+        )
+        .filter(~F.col("doc_key").isin(sorted(deleted)))
+    )
+    if mode == "hybrid":
+        ranked = rrf_fuse(rank_top(kw, 2 * limit), rank_top(vec, 2 * limit), k=limit)
+    else:
+        ranked = (kw if mode == "keyword" else vec).orderBy(F.desc("score"), "doc_key").limit(limit)
+    return [(r.doc_key, float(r.score)) for r in ranked.collect()]
+
+
+def test_churn_matches_recompute_and_pins_nothing(spark):
+    sc = spark.sparkContext
+    release_indexes()
+    pinned = sc._jsc.getPersistentRDDs().size()
+    eng = SparkEngine(spark, SF_SMALL)
+    queries = ("spark join window", "watermark join")
+    bodies = [
+        b"%PDF-1.4 spark join watermark join window",
+        b"%PDF-1.4 watermark watermark spark",
+        b"%PDF-1.4 join window window window batch spark spark",
+    ]
+    deleted: set[str] = set()
+
+    def check() -> None:
+        assert sc._jsc.getPersistentRDDs().size() == pinned
+        for query in queries:
+            for mode in ("keyword", "vector", "hybrid"):
+                got = [(h["document_id"], h["score"]) for h in eng.search(query, mode=mode, limit=5)]
+                assert got == _recompute(spark, eng, deleted, query, mode, 5), (query, mode)
+        release_indexes()  # the recompute's live index, not the engine's
+
+    check()
+    ups = [eng.upload(f"churn_{i}.pdf", body)["document_id"] for i, body in enumerate(bodies)]
+    check()
+    again = eng.upload("churn_again.pdf", bodies[0], force=True)
+    assert again["status"] == "completed"
+    deleted.add(ups[0])
+    check()
+    lake: list[str] = []
+    for mode in ("keyword", "vector"):  # the top lake hit of each leg
+        hits = [h["document_id"] for h in eng.search(queries[0], mode=mode, limit=10)]
+        lake.append(next(d for d in hits if not d.startswith("up-") and d not in lake))
+    for doc_id in (*lake, ups[1]):
+        eng.delete_document(doc_id)
+        deleted.add(doc_id)
+        check()
+    assert sc._jsc.getPersistentRDDs().size() == pinned
