@@ -21,9 +21,10 @@ Search: the keyword leg is served from the persisted BM25 index, built
 or found fresh once per engine (retrieval/queries.py::ensure_bm25_index
 — the reference builds its full-text index once per ingest batch and
 every query reads it, src/pipeline.py:164-165). The deltas edit that
-index exactly at read time (bm25.IndexDelta): each upload's term counts
-are taken once, at upload, and each deleted lake document's posting rows
-once, at delete; a search corrects N, total_dl and df by them, skips the
+index exactly at read time (bm25.scored_from_index_sqltext's `added`
+and `removed`): each upload's term counts are taken once, at upload, and
+kept on its row, and each deleted lake document's posting rows once, at
+delete; a search corrects N, total_dl and df by them, skips the
 tombstoned keys in the postings scan and unions the uploads' rows in.
 Uploads are not written into the shared index: they are not in the
 documents table, so its freshness record would serve them to every other
@@ -55,7 +56,7 @@ from ..operators.multimodal import decode_image_fake, media_table
 # perfbench/run.py::_wrap_layers re-binds bm25_scores, embed_query and
 # load_table on this module to span them, so all three must stay bound
 # here — bm25_scores too, although the engine no longer calls it.
-from ..retrieval.bm25 import IndexDelta, bm25_scores, scored_from_index_sqltext  # noqa: F401
+from ..retrieval.bm25 import bm25_scores, scored_from_index_sqltext  # noqa: F401
 from ..retrieval.embedder import HashEmbedder, embed_query
 from ..retrieval.hybrid import SearchMode, route_topic, rrf_sql
 from ..retrieval.queries import ensure_bm25_index
@@ -97,7 +98,11 @@ def _lake_id(document_id: str) -> int:
 
 class SparkEngine:
     """The reference's app.state, Spark-shaped: one session, one corpus
-    and its BM25 index, session deltas for upload/delete."""
+    and its BM25 index, session deltas for upload/delete.
+
+    Construction serves the corpus's persisted BM25 index, or builds it
+    under the repo's spark-warehouse/ (retrieval/queries.py::
+    ensure_bm25_index) when none is fresh for `sf_dir`."""
 
     def __init__(
         self,
@@ -109,9 +114,7 @@ class SparkEngine:
         self._index = ensure_bm25_index(spark, sf_dir)
         self._uploads: dict[str, dict[str, Any]] = {}  # doc_id -> row dict
         self._tombstones: set[str] = set()
-        # the index deltas: live completed uploads' and tombstoned lake
-        # documents' {term: tf}
-        self._added: dict[str, Counter] = {}
+        # tombstoned lake documents' {term: tf}, withdrawn from the index
         self._removed: dict[int, dict[str, int]] = {}
         self._next_upload_ord = 1
         self._dim: int | None = None  # corpus embedding width, read once
@@ -243,8 +246,12 @@ class SparkEngine:
 
         if mode_e is not SearchMode.VECTOR:
             frames["post"] = read_parquet_cached(self.spark, f"{self._index}/postings")
-            delta = IndexDelta(added=self._added, removed=self._removed)
-            kw = scored_from_index_sqltext(self.spark, self._index, terms, delta=delta)
+            added = {
+                u["id"]: u["terms"]
+                for u in self._uploads.values()
+                if u["status"] == "completed" and u["id"] not in self._tombstones
+            }
+            kw = scored_from_index_sqltext(self.spark, self._index, terms, added=added, removed=self._removed)
             kw = f"SELECT doc_key, round(score, 4) AS score FROM ({kw}) s{keep}"
         if mode_e is not SearchMode.KEYWORD:
             frames["emb"] = load_table(self.spark, self.sf_dir, "embeddings")
@@ -352,6 +359,7 @@ class SparkEngine:
         doc["chunk_count"] = len(chunks)
         doc["image_count"] = len(self._images_for(document_id))
         doc.pop("text", None)
+        doc.pop("terms", None)
         return doc
 
     def get_document_markdown(self, document_id: str) -> dict[str, Any]:
@@ -403,13 +411,10 @@ class SparkEngine:
             .select("title", tokens("text").alias("terms"))
             .first()
         )
-        title = row.title
-        if status == "completed":
-            self._added[doc_id] = Counter(row.terms or [])
         self._uploads[doc_id] = {
             "id": doc_id,
             "filename": filename,
-            "title": title,
+            "title": row.title,
             "status": status,
             "page_count": pages,
             "source_path": f"upload://{filename}",
@@ -417,6 +422,7 @@ class SparkEngine:
             "extraction_method": "passthrough",
             "error_message": err,
             "text": text,
+            "terms": Counter(row.terms or []),  # its {term: tf} index delta
         }
         return {
             "document_id": doc_id,
@@ -431,9 +437,7 @@ class SparkEngine:
         M2 cascade as a tombstone; the lake rewrite (sinks.delete_where)
         applies it durably."""
         self._doc_row(document_id)  # 404 if unknown
-        if document_id in self._uploads:
-            self._added.pop(document_id, None)
-        else:  # withdraw the lake document's posting rows from the index
+        if document_id not in self._uploads:  # withdraw its posting rows from the index
             key = int(document_id)
             post = read_parquet_cached(self.spark, f"{self._index}/postings")
             rows = post.filter(F.col("doc_key") == key).select("term", "tf").collect()

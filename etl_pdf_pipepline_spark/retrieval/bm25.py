@@ -20,7 +20,6 @@ ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene's non-negative variant).
 from __future__ import annotations
 
 from collections.abc import Mapping
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -541,25 +540,14 @@ def _sql_str_lit(t: str) -> str:
     return "'" + t.replace("{", "{{").replace("}", "}}") + "'"
 
 
-@dataclass(frozen=True)
-class IndexDelta:
-    """Exact read-time edits of a persisted index, each document given
-    as its {term: tf} counts: `added` documents served beside the index
-    (keyed by string id) and `removed` documents withdrawn from it
-    (keyed by their index key). Scoring over the index plus a delta
-    equals scoring a rebuild over (indexed − removed + added)."""
-
-    added: Mapping[str, Mapping[str, int]]
-    removed: Mapping[int, Mapping[str, int]]
-
-
 def scored_from_index_sqltext(
     spark,
     path: str,
     query_terms: list[str],
     k1: float = K1,
     b: float = B,
-    delta: IndexDelta | None = None,
+    added: Mapping[str, Mapping[str, int]] | None = None,
+    removed: Mapping[int, Mapping[str, int]] | None = None,
 ) -> str | None:
     """The index-served scorer as ONE SQL text over a `{post}` DataFrame
     arg (the signature-memoized postings scan): literal IN term pushdown,
@@ -573,11 +561,16 @@ def scored_from_index_sqltext(
     Also the composable kw-leg fragment for the hybrid family's single
     SQL text (retrieval/queries.py).
 
-    With a `delta`, N, total_dl and each query term's df are corrected
-    by its documents, the removed keys are excluded from the postings
-    scan and the added documents' query-term rows are unioned in as a
-    VALUES list; the scoring expression is the same. Keys are then
-    strings (index keys cast), so ties break by string id."""
+    `added` and `removed` are exact read-time edits of the index, each
+    document given as its {term: tf} counts: `added` documents (keyed by
+    string id) are served beside the index and `removed` ones (keyed by
+    index key) withdrawn from it, so the scores equal a rebuild over
+    (indexed − removed + added). N, total_dl and each query term's df
+    are corrected by them, the removed keys are excluded from the
+    postings scan and the added documents' query-term rows are unioned
+    in as a VALUES list; the scoring expression is the same. With either
+    edit given, keys are strings (index keys cast), so ties break by
+    string id."""
     if not query_terms:
         return None
     term_dfs = _term_df_lookup(path, query_terms)
@@ -587,26 +580,27 @@ def scored_from_index_sqltext(
     terms = sorted(set(query_terms))
     dfs = {t: term_dfs.get(t, 0) for t in terms}
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
-    key_sql = "doc_key" if delta is None else "CAST(doc_key AS STRING) AS doc_key"
+    edited = added is not None or removed is not None
+    added, removed = added or {}, removed or {}
+    key_sql = "CAST(doc_key AS STRING) AS doc_key" if edited else "doc_key"
     rows = "SELECT " + key_sql + ", term, tf, dl FROM {post} WHERE term IN (" + terms_in + ")"
-    if delta is not None:
-        for sign, docs in ((-1, delta.removed), (1, delta.added)):
-            for tfs in docs.values():
-                dl = sum(tfs.values())
-                n += sign if dl else 0
-                total_dl += sign * dl
-                for t in terms:
-                    dfs[t] += sign if t in tfs else 0
-        if delta.removed:
-            rows += " AND doc_key NOT IN (" + ", ".join(str(int(k)) for k in delta.removed) + ")"
-        added = [
-            f"({_sql_str_lit(doc)}, {_sql_str_lit(t)}, {tfs[t]}L, {sum(tfs.values())}L)"
-            for doc, tfs in delta.added.items()
-            for t in terms
-            if t in tfs
-        ]
-        if added:
-            rows += " UNION ALL SELECT * FROM VALUES " + ", ".join(added) + " AS up(doc_key, term, tf, dl)"
+    for sign, docs in ((-1, removed), (1, added)):
+        for tfs in docs.values():
+            dl = sum(tfs.values())
+            n += sign if dl else 0
+            total_dl += sign * dl
+            for t in terms:
+                dfs[t] += sign if t in tfs else 0
+    if removed:
+        rows += " AND doc_key NOT IN (" + ", ".join(str(int(k)) for k in removed) + ")"
+    values = [
+        f"({_sql_str_lit(doc)}, {_sql_str_lit(t)}, {tfs[t]}L, {sum(tfs.values())}L)"
+        for doc, tfs in added.items()
+        for t in terms
+        if t in tfs
+    ]
+    if values:
+        rows += " UNION ALL SELECT * FROM VALUES " + ", ".join(values) + " AS up(doc_key, term, tf, dl)"
     avgdl = float(total_dl) / n if n else 0.0
     entries = ", ".join(f"{_sql_str_lit(t)}, {dfs[t]}L" for t in terms)
     score = _term_score_sql(k1, b, n=n, avgdl=avgdl)

@@ -107,7 +107,7 @@ def rrf_fuse(
     return fused.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
-def rrf_sql(kw_sql: str, vec_sql: str, depth: int, k: int, rrf_k: int = RRF_K) -> str:
+def rrf_sql(kw_sql: str, vec_sql: str, depth: int, k: int) -> str:
     """`rank_top` of each leg to `depth` and `rrf_fuse` to `k`, as ONE SQL
     text over two scored (doc_key, score) SQL texts — the same total
     order (rounded score desc, id asc), the same union + sum and the same
@@ -121,7 +121,7 @@ def rrf_sql(kw_sql: str, vec_sql: str, depth: int, k: int, rrf_k: int = RRF_K) -
             f"{leg}_top AS (SELECT doc_key, score FROM {leg} {order} LIMIT {int(depth)}), "
             f"{leg}_rank AS (SELECT doc_key, row_number() OVER ({order}) AS rank FROM {leg}_top)"
         )
-    contrib = f"1.0D / ({int(rrf_k)} + rank) AS contrib"
+    contrib = f"1.0D / ({RRF_K} + rank) AS contrib"
     return (
         "WITH " + ", ".join(ranks) + ", "
         f"u AS (SELECT doc_key, {contrib} FROM kw_rank "

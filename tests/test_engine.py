@@ -5,6 +5,8 @@ index exactly, pinning no executor memory."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,7 @@ from etl_pdf_pipepline_spark.functions.vectors import as_double, cosine, query_v
 from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_scores, release_indexes
 from etl_pdf_pipepline_spark.retrieval.embedder import HashEmbedder, embed_query
 from etl_pdf_pipepline_spark.retrieval.hybrid import rank_top, rrf_fuse
+from etl_pdf_pipepline_spark.retrieval.queries import _bm25_index_path
 from etl_pdf_pipepline_spark.sources.catalog import load_table
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -37,12 +40,15 @@ def test_list_documents_title_matches_filename_rule(spark, tmp_path):
         [(7, "alpha text", "en", "src0", 10), (1234, "beta text", "en", "src1", 9)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    eng = SparkEngine(spark, str(tmp_path))
-    listed = {d["id"]: d["title"] for d in eng.list_documents()}
-    assert listed == {"7": "src0 report 7", "1234": "src1 report"}
-    assert listed["1234"] == eng.get_document_chunks("1234")[0]["document_title"]
-    hits = eng.search("beta", mode="keyword", limit=1)
-    assert hits[0]["document_title"] == "src1 report"
+    try:  # the engine builds this corpus's index under spark-warehouse/
+        eng = SparkEngine(spark, str(tmp_path))
+        listed = {d["id"]: d["title"] for d in eng.list_documents()}
+        assert listed == {"7": "src0 report 7", "1234": "src1 report"}
+        assert listed["1234"] == eng.get_document_chunks("1234")[0]["document_title"]
+        hits = eng.search("beta", mode="keyword", limit=1)
+        assert hits[0]["document_title"] == "src1 report"
+    finally:
+        shutil.rmtree(_bm25_index_path(str(tmp_path)), ignore_errors=True)
 
 
 def test_title_filter_matches_upload_filename_title(spark):
