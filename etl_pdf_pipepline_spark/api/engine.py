@@ -6,14 +6,15 @@ deltas).
 
 Storage model: the corpus is the immutable parquet lake (documents /
 embeddings tables). HTTP uploads and deletes are session DELTAS — a
-driver-side list of uploaded documents (each a single parsed file) and a
-tombstone set — applied as a union / anti-filter over the lake at read
-time. That is deliberately the lakehouse shape of the reference's SQLite
-row mutations (src/load/sqlite_store.py): at scale the same deltas are
+driver-side map of uploaded documents (each a single parsed file;
+deleting one drops it) and a map of the deleted lake documents' posting
+rows — applied as a union / anti-filter over the lake at read time.
+That is deliberately the lakehouse shape of the reference's SQLite row
+mutations (src/load/sqlite_store.py): at scale the same deltas are
 flushed through the sink rewrites (sources/sinks.py upsert/delete_where)
 into new table versions; the API semantics don't change.
 
-Serving view: `_docs()` is lake ∪ uploads minus tombstones, one row per
+Serving view: `_docs()` is (lake minus deleted) ∪ uploads, one row per
 document carrying its `filename` and the `title` derived from it by the
 reference's filename rule. Listing, stats and the title filter read it.
 
@@ -25,7 +26,7 @@ index exactly at read time (bm25.scored_from_index_sqltext's `added`
 and `removed`): each upload's term counts are taken once, at upload, and
 kept on its row, and each deleted lake document's posting rows once, at
 delete; a search corrects N, total_dl and df by them, skips the
-tombstoned keys in the postings scan and unions the uploads' rows in.
+deleted keys in the postings scan and unions the uploads' rows in.
 Uploads are not written into the shared index: they are not in the
 documents table, so its freshness record would serve them to every other
 reader of the corpus. The vector leg is a cosine scan of the embeddings
@@ -113,8 +114,7 @@ class SparkEngine:
         self.sf_dir = sf_dir
         self._index = ensure_bm25_index(spark, sf_dir)
         self._uploads: dict[str, dict[str, Any]] = {}  # doc_id -> row dict
-        self._tombstones: set[str] = set()
-        # tombstoned lake documents' {term: tf}, withdrawn from the index
+        # deleted lake documents' {term: tf}, withdrawn from the index
         self._removed: dict[int, dict[str, int]] = {}
         self._next_upload_ord = 1
         self._dim: int | None = None  # corpus embedding width, read once
@@ -134,10 +134,14 @@ class SparkEngine:
     # ------------------------------------------------------------------ docs
 
     def _docs(self, uploads: bool = True) -> DataFrame:
-        """The serving view: lake ∪ uploads (unless `uploads` is False),
-        minus tombstones, with each document's filename and title."""
+        """The serving view: the lake minus its deleted documents ∪ uploads
+        (unless `uploads` is False), with each document's filename and
+        title."""
         doc_id = F.col("doc_id").cast("string")
-        docs = load_table(self.spark, self.sf_dir, "documents").select(
+        docs = load_table(self.spark, self.sf_dir, "documents")
+        if self._removed:
+            docs = docs.filter(~F.col("doc_id").isin(list(self._removed)))
+        docs = docs.select(
             doc_id.alias("doc_id"),
             "text",
             "lang",
@@ -152,8 +156,6 @@ class SparkEngine:
         ]
         if rows:
             docs = docs.unionByName(self.spark.createDataFrame(rows, docs.schema))
-        if self._tombstones:
-            docs = docs.filter(~F.col("doc_id").isin(sorted(self._tombstones)))
         return _titled(docs)
 
     def _lake_rows(self, keys: list[int]) -> dict[str, Row]:
@@ -168,11 +170,12 @@ class SparkEngine:
         return {r.doc_id: r for r in rows}
 
     def _doc_row(self, document_id: str) -> dict[str, Any]:
-        if document_id in self._tombstones:
-            raise NotFound(document_id)
         if document_id in self._uploads:
             return dict(self._uploads[document_id])
-        r = self._lake_rows([_lake_id(document_id)]).get(document_id)
+        key = _lake_id(document_id)
+        if key in self._removed:
+            raise NotFound(document_id)
+        r = self._lake_rows([key]).get(document_id)
         if r is None:
             raise NotFound(document_id)
         return {
@@ -246,12 +249,8 @@ class SparkEngine:
 
         if mode_e is not SearchMode.VECTOR:
             frames["post"] = read_parquet_cached(self.spark, f"{self._index}/postings")
-            added = {
-                u["id"]: u["terms"]
-                for u in self._uploads.values()
-                if u["status"] == "completed" and u["id"] not in self._tombstones
-            }
-            kw = scored_from_index_sqltext(self.spark, self._index, terms, added=added, removed=self._removed)
+            added = {u["id"]: u["terms"] for u in self._uploads.values() if u["status"] == "completed"}
+            kw = scored_from_index_sqltext(self._index, terms, added=added, removed=self._removed)
             kw = f"SELECT doc_key, round(score, 4) AS score FROM ({kw}) s{keep}"
         if mode_e is not SearchMode.KEYWORD:
             frames["emb"] = load_table(self.spark, self.sf_dir, "embeddings")
@@ -347,8 +346,6 @@ class SparkEngine:
         for u in self._uploads.values():
             if len(out) >= limit:
                 break
-            if u["id"] in self._tombstones:
-                continue
             if status is None or u["status"] == status:
                 out.append({k: u[k] for k in ("id", "filename", "title", "status", "page_count")})
         return out
@@ -380,14 +377,7 @@ class SparkEngine:
         if not filename or not filename.lower().endswith(".pdf"):
             raise BadRequest("Only PDF files are accepted")
         file_hash = "sha256:" + hashlib.sha256(content).hexdigest()
-        existing = next(
-            (
-                u
-                for u in self._uploads.values()
-                if u["file_hash"] == file_hash and u["id"] not in self._tombstones
-            ),
-            None,
-        )
+        existing = next((u for u in self._uploads.values() if u["file_hash"] == file_hash), None)
         if existing and not force:
             return {
                 "document_id": existing["id"],
@@ -434,15 +424,16 @@ class SparkEngine:
 
     def delete_document(self, document_id: str) -> dict[str, Any]:
         """Reference DELETE /documents/{id} (documents.py:170-186) — the
-        M2 cascade as a tombstone; the lake rewrite (sinks.delete_where)
+        M2 cascade as a session delta: an upload is dropped, a lake
+        document's posting rows are withdrawn from the index (its one
+        record, `_removed`); the lake rewrite (sinks.delete_where)
         applies it durably."""
         self._doc_row(document_id)  # 404 if unknown
-        if document_id not in self._uploads:  # withdraw its posting rows from the index
+        if self._uploads.pop(document_id, None) is None:
             key = int(document_id)
             post = read_parquet_cached(self.spark, f"{self._index}/postings")
             rows = post.filter(F.col("doc_key") == key).select("term", "tf").collect()
             self._removed[key] = {r.term: int(r.tf) for r in rows}
-        self._tombstones.add(document_id)
         return {"message": f"Document deleted: {document_id}"}
 
     # ---------------------------------------------------------------- chunks

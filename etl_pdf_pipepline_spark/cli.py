@@ -21,9 +21,7 @@ import sys
 from pyspark.sql import functions as F
 
 from .registry import all_queries
-from .retrieval.bm25 import bm25_scores
-from .retrieval.hybrid import SearchMode, rank_top, route_topic, rrf_fuse
-from .retrieval.embedder import embed_query
+from .retrieval.hybrid import SearchMode, route_topic
 from .session import get_spark
 from .sources.catalog import DEFAULT_SF_DIR, load_table
 
@@ -48,47 +46,24 @@ def cmd_process(args) -> int:
 
 
 def cmd_search(args) -> int:
+    """Search through the same SparkEngine the REST API serves: one JSON
+    line per hit, each the REST /search hit object (chunk_id,
+    document_id, document_title, text, score, search_mode), ranked by
+    score with ties ordered by string id. An invalid query (empty)
+    prints the error to stderr and exits 2."""
+    from .api.engine import BadRequest, SparkEngine
+
     spark = get_spark("cli-search")
-    docs = load_table(spark, args.sf_dir, "documents")
-    mode = SearchMode(args.mode)
-    terms = args.query.lower().split()
-
-    kw = bm25_scores(docs, "doc_id", "text", terms)
-    if mode is SearchMode.KEYWORD:
-        result = (
-            kw.select(F.col("doc_key").alias("doc_id"), F.round("score", 4).alias("score"))
-            .orderBy(F.desc("score"), "doc_id")
-            .limit(args.k)
-        )
-    else:
-        from .functions.vectors import as_double, cosine, query_vector_lit
-        from .retrieval.embedder import HashEmbedder
-
-        emb = load_table(spark, args.sf_dir, "embeddings")
-        # Embed the query at the CORPUS dimension — a mismatched query
-        # vector zip_withs to nulls and every cosine score becomes NULL.
-        corpus_dim = len(emb.select("embedding").first()[0])
-        qv = query_vector_lit(embed_query(args.query, HashEmbedder(dim=corpus_dim)))
-        vec = emb.select(
-            F.col("vec_id").alias("doc_key"),
-            F.round(cosine(as_double("embedding"), qv), 4).alias("score"),
-        )
-        if mode is SearchMode.VECTOR:
-            result = (
-                vec.select(F.col("doc_key").alias("doc_id"), "score")
-                .orderBy(F.desc("score"), "doc_id")
-                .limit(args.k)
-            )
-        else:  # hybrid
-            kw_rank = rank_top(kw, 2 * args.k, "doc_key")
-            vec_rank = rank_top(vec, 2 * args.k, "doc_key")
-            result = rrf_fuse(kw_rank, vec_rank, "doc_key", k=args.k).withColumnRenamed(
-                "doc_key", "doc_id"
-            )
+    try:
+        hits = SparkEngine(spark, args.sf_dir).search(args.query, args.mode, limit=args.k)
+    except BadRequest as e:
+        print(e, file=sys.stderr)
+        return 2
     topic = route_topic(args.query)
     if topic:
         print(f"# routed topic: {topic}", file=sys.stderr)
-    _print_df(result, args.k)
+    for h in hits:
+        print(json.dumps(h))
     return 0
 
 

@@ -61,9 +61,9 @@ def bm25_scores(
     # The live index: tokenized from `docs` and .cache()d, so repeated
     # queries over the same corpus lineage (Spark's cache manager matches
     # canonicalized plans) reuse one materialization. Its callers are
-    # cli.py and the registry rows that score a derived view (routed,
-    # title-weighted, context) or the unindexed fallback. Serving
-    # (api/engine.py) reads the persisted index instead
+    # the registry rows that score a derived view (routed, title-weighted,
+    # context) or the unindexed fallback. Serving (api/engine.py, which
+    # cli.py search calls) reads the persisted index instead
     # (persist_index / scored_from_index_sqltext below), which pins no
     # executor memory per corpus lineage.
     postings = build_postings(docs, id_col, text_col).cache()
@@ -97,9 +97,10 @@ def _score_postings(
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """The one copy of the Lucene-style scoring plan, shared by the live
-    (cached) and persisted-index paths: broadcast the query-term list,
-    join df-counts/doc-stats/corpus scalars, sum per-doc term scores."""
+    """The live (cached) path's Lucene-style scoring plan: broadcast the
+    query-term list, join df-counts/doc-stats/corpus scalars, sum
+    per-doc term scores (the scoring expression is the persisted-index
+    path's too — _term_score_sql)."""
     spark = postings.sparkSession
     if not query_terms:
         # Empty query scores nothing (createDataFrame([]) cannot infer a
@@ -204,17 +205,12 @@ def _write_term_df(postings: DataFrame, path: str, mode: str, n_buckets: int) ->
 _TERM_DF_CACHE: dict[tuple[str, str, frozenset], dict[str, int]] = {}
 
 
-def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int] | None:
-    """{term: df} for the query terms from the index's term dictionary,
-    or None when this index predates the term_df layout (pre-r13 builds
-    keep working through the legacy two-scan plan)."""
-    import os
-
+def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int]:
+    """{term: df} for the query terms from the index's term dictionary;
+    a missing term_df/ raises (the reader, not a fallback)."""
     from ..sources.catalog import path_stat_signature
 
     d = f"{path}/term_df"
-    if not os.path.isdir(d):
-        return None
     key = (d, path_stat_signature(d), frozenset(query_terms))
     hit = _TERM_DF_CACHE.get(key)
     if hit is not None:
@@ -242,9 +238,10 @@ def persist_index(
 ) -> None:
     """Materialize the index as parquet: postings hash-partitioned by term
     (repartition(n_buckets, term) + sorted within partitions), the
-    per-doc length DENORMALIZED into each posting row, and the corpus
-    scalars (N, avgdl) as a one-row table. A query's term lookup then
-    touches only the partitions/row-groups its terms hash to, and scoring
+    per-doc length DENORMALIZED into each posting row, the term_df
+    dictionary, and the corpus scalars (N, total_dl) in the CAS meta
+    record. A query's term lookup then touches only the
+    partitions/row-groups its terms hash to, and scoring
     needs NO doc-side join at all — the same reason Lucene stores norms
     inline in the postings rather than in a separate doc table. The dl
     copy costs ~one long per posting row at build time (amortized across
@@ -301,49 +298,38 @@ def persist_index(
     commit_meta(path, payload)
 
 
-# Persisted-index layout version. 2 (r13) = postings + doc_stats + the
-# term_df dictionary; 1 (implicit, pre-r13 records without the key) =
-# no term dictionary. ensure_index rebuilds on a version mismatch so a
-# warm warehouse upgrades to the one-scan serving plan at its next
-# ingest slot; readers never require the new layout (legacy indexes
-# serve through the two-scan fallback).
+# Persisted-index layout version: 2 (r13) = postings + doc_stats + the
+# term_df dictionary, with the corpus scalars in the CAS meta record.
+# It is the only layout any reader accepts; ensure_index rebuilds an
+# index recorded with any other (or none).
 _LAYOUT_VERSION = 2
 
 
-def corpus_scalars(spark, path: str) -> tuple[int, int]:
-    """(n, total_dl) for a persisted index, wherever this index's
-    vintage stored them:
-
-    1. the CAS-committed meta record (r8+, the one commit path);
-    2. the legacy one-row {path}/corpus parquet (pre-r8 indexes keep
-       working — migration is transparent, the next extend_index
-       re-publishes through the CAS);
-    3. a legacy corpus row WITHOUT total_dl (pre-r7): reconstructed
-       exactly as sum(dl) over doc_stats — one aggregate over the
-       per-doc table, the fallback ADVICE r7 asked for instead of a
-       bare KeyError.
-    """
-    import os
-
+def corpus_scalars(path: str) -> tuple[int, int]:
+    """(n, total_dl) from the index's CAS-committed meta record. An index
+    without one of the current layout raises: rebuild it (persist_index
+    or ensure_index)."""
     from ..sources.manifest import read_meta
 
-    meta = read_meta(path)
-    if meta is not None and "n" in meta and "total_dl" in meta:
-        return int(meta["n"]), int(meta["total_dl"])
-    corpus_dir = f"{path}/corpus"
-    if os.path.isdir(corpus_dir):
-        row = spark.read.parquet(corpus_dir).collect()[0]
-        n = int(row["n"])
-        if "total_dl" in row.asDict():
-            return n, int(row["total_dl"])
-        total = spark.read.parquet(f"{path}/doc_stats").agg(
-            F.sum("dl").alias("s")
-        ).collect()[0]["s"]
-        return n, int(total or 0)
-    raise FileNotFoundError(
-        f"no corpus scalars at {path}: neither a committed meta record "
-        "(_manifests) nor a legacy corpus/ parquet exists — run "
-        "persist_index to (re)build this index"
+    meta = read_meta(path) or {}
+    if meta.get("layout") != _LAYOUT_VERSION:
+        raise FileNotFoundError(
+            f"no layout-{_LAYOUT_VERSION} BM25 index meta record at {path} — "
+            "run persist_index or ensure_index to rebuild this index"
+        )
+    return int(meta["n"]), int(meta["total_dl"])
+
+
+def index_is_current(path: str, source_signature: str) -> bool:
+    """True when the index at `path` was built (or extended) from the
+    source with this stat signature, in the current layout — the one
+    freshness predicate for serve-or-build and for query routing."""
+    from ..sources.manifest import read_meta
+
+    meta = read_meta(path) or {}
+    return (
+        meta.get("source_signature") == source_signature
+        and meta.get("layout") == _LAYOUT_VERSION
     )
 
 
@@ -366,13 +352,7 @@ def ensure_index(
     ingest delta → extend_index(..., source_signature=post_ingest_sig) →
     the next ensure_index serves the EXTENDED files with no rebuild
     (pinned by tests/test_layout_freshness.py)."""
-    from ..sources.manifest import read_meta
-
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == source_signature
-        and meta.get("layout") == _LAYOUT_VERSION
-    ):
+    if index_is_current(path, source_signature):
         return path
     persist_index(
         docs, id_col, text_col, path,
@@ -407,10 +387,9 @@ def extend_index(
     in the last ulp because double summation order follows file layout
     — under the round(4) serving contract the results are equal, and
     tests/test_bm25_incremental.py asserts both bounds):
-    (a) df is derived at query time from the postings themselves
-        (bm25_scores_from_index groupBy(term) over matched rows), so
-        appended posting lists update df with no stored statistic to
-        go stale;
+    (a) df is the per-term sum of the term_df rows, and the delta's
+        (term, df) rows are appended beside the base ones (delta ids
+        are NEW, so the counts add exactly);
     (b) dl is per-doc and denormalized into each appended row, same as
         the build path;
     (c) the corpus scalars merge EXACTLY: the stored integer total_dl
@@ -429,30 +408,16 @@ def extend_index(
     complete record), so a crash mid-extend leaves scores slightly
     UNDER-counting avgdl/n on the new rows rather than referencing
     postings that don't exist."""
-    spark = new_docs.sparkSession
-    # Read the base scalars BEFORE any append: the legacy-layout
-    # fallback reconstructs total_dl from doc_stats, which must not yet
-    # contain this delta (reading after the append double-counts it).
-    # These pre-read values are only the RACE-FREE fallback seed — the
-    # commit itself goes through update_meta's pinned-version CAS, which
-    # re-adds THIS delta to whatever payload actually won any concurrent
-    # race (two concurrent extends both land; last-writer-wins would
-    # silently drop one delta's counts from the scalars forever).
-    legacy_n, legacy_total = corpus_scalars(spark, path)
+    # An index without committed current-layout scalars raises here,
+    # before any append (it needs a rebuild, not an extend).
+    corpus_scalars(path)
     delta_postings = build_postings(new_docs, id_col, text_col)
     delta_stats = build_doc_stats(delta_postings).cache()
     try:
         # Delta term-df rows land first (see _write_term_df's crash-order
         # rationale); readers sum rows per term, and delta ids are NEW
-        # docs by contract, so delta counts add exactly. Legacy (pre-r13)
-        # indexes have no term dictionary: appending only the delta's
-        # counts would leave a PARTIAL dictionary that under-counts every
-        # base term, so they stay dictionary-less until the next full
-        # rebuild (ensure_index upgrades on layout mismatch).
-        import os as _os
-
-        if _os.path.isdir(f"{path}/term_df"):
-            _write_term_df(delta_postings, path, "append", n_buckets)
+        # docs by contract, so delta counts add exactly.
+        _write_term_df(delta_postings, path, "append", n_buckets)
         (
             delta_postings.join(delta_stats, "doc_key")
             .repartition(n_buckets, "term")
@@ -465,18 +430,22 @@ def extend_index(
         dn, dtotal = int(d["c"]), int(d["s"] or 0)
         from ..sources.manifest import update_meta
 
+        # The commit goes through update_meta's pinned-version CAS, which
+        # re-adds THIS delta to whatever payload won any concurrent race
+        # (two concurrent extends both land; last-writer-wins would
+        # silently drop one delta's counts from the scalars forever).
         def add_delta(current: dict | None) -> dict:
-            base_n = int(current["n"]) if current else legacy_n
-            base_total = int(current["total_dl"]) if current else legacy_total
+            if current is None:
+                raise FileNotFoundError(f"BM25 index meta record at {path} vanished mid-extend")
             # Preserve every other key (notably source_signature) — the
             # scalar accumulation must not strip the freshness record —
             # and ADVANCE the signature when the caller hands in the
             # post-ingest one, in the SAME pinned-version CAS commit as
             # the scalars, so ensure_index serves the extended files
             # instead of full-rebuilding (the r9 economics defect).
-            out = dict(current or {})
-            out["n"] = base_n + dn
-            out["total_dl"] = base_total + dtotal
+            out = dict(current)
+            out["n"] = int(current["n"]) + dn
+            out["total_dl"] = int(current["total_dl"]) + dtotal
             if source_signature is not None:
                 out["source_signature"] = source_signature
             return out
@@ -524,8 +493,6 @@ def compact_index(spark, path: str, n_buckets: int = 16) -> dict[str, int]:
         ),
     ):
         live = f"{path}/{sub}"
-        if not os.path.isdir(live):
-            continue  # pre-r13 index without a term dictionary
         tmp = live + "__compacting"
         writer(spark.read.parquet(live)).write.mode("overwrite").parquet(tmp)
         swap_directory(live, tmp)
@@ -541,25 +508,22 @@ def _sql_str_lit(t: str) -> str:
 
 
 def scored_from_index_sqltext(
-    spark,
     path: str,
     query_terms: list[str],
     k1: float = K1,
     b: float = B,
     added: Mapping[str, Mapping[str, int]] | None = None,
     removed: Mapping[int, Mapping[str, int]] | None = None,
-) -> str | None:
+) -> str:
     """The index-served scorer as ONE SQL text over a `{post}` DataFrame
     arg (the signature-memoized postings scan): literal IN term pushdown,
     df from the term dictionary folded in as a literal map, corpus
-    scalars as double literals — the same plan bm25_scores_from_index
-    built op by op, now one spark.sql round-trip for the whole tree
-    (r13 construction-floor fix, guide §1: the op-by-op build cost
-    ~0.16 s of py4j per bm25_search call at sf0.1). Returns None when
-    this index predates the term_df layout (callers keep the legacy
-    two-scan plan) so the emitted rows are identical by construction.
-    Also the composable kw-leg fragment for the hybrid family's single
-    SQL text (retrieval/queries.py).
+    scalars as double literals — one spark.sql round-trip for the whole
+    tree (r13 construction-floor fix, guide §1: the op-by-op build cost
+    ~0.16 s of py4j per bm25_search call at sf0.1). Also the composable
+    kw-leg fragment for the hybrid family's single SQL text
+    (retrieval/queries.py). An empty term list yields a text that scores
+    nothing.
 
     `added` and `removed` are exact read-time edits of the index, each
     document given as its {term: tf} counts: `added` documents (keyed by
@@ -571,18 +535,16 @@ def scored_from_index_sqltext(
     in as a VALUES list; the scoring expression is the same. With either
     edit given, keys are strings (index keys cast), so ties break by
     string id."""
-    if not query_terms:
-        return None
-    term_dfs = _term_df_lookup(path, query_terms)
-    if term_dfs is None:
-        return None
-    n, total_dl = corpus_scalars(spark, path)
+    edited = added is not None or removed is not None
+    key_sql = "CAST(doc_key AS STRING) AS doc_key" if edited else "doc_key"
     terms = sorted(set(query_terms))
+    if not terms:
+        return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false"
+    n, total_dl = corpus_scalars(path)
+    term_dfs = _term_df_lookup(path, terms)
     dfs = {t: term_dfs.get(t, 0) for t in terms}
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
-    edited = added is not None or removed is not None
     added, removed = added or {}, removed or {}
-    key_sql = "CAST(doc_key AS STRING) AS doc_key" if edited else "doc_key"
     rows = "SELECT " + key_sql + ", term, tf, dl FROM {post} WHERE term IN (" + terms_in + ")"
     for sign, docs in ((-1, removed), (1, added)):
         for tfs in docs.values():
@@ -624,10 +586,11 @@ def bm25_scores_from_index(
 ) -> DataFrame:
     """(doc_key, score) from a persisted index: no tokenization, no
     corpus scan, no doc-side join — read the posting lists of the query
-    terms and score them. Two scan-path properties carry the whole cost
-    model:
+    terms and score them, as the one spark.sql text of
+    scored_from_index_sqltext. The scan-path properties that carry the
+    whole cost model:
 
-    - The term lookup is a LITERAL isin predicate on the scan, not only a
+    - The term lookup is a LITERAL IN predicate on the scan, not a
       broadcast join probe (which cannot push down to parquet): without
       it the scan reads every posting row (measured 20.5 s over ~375M
       postings at sf100); with it, PushedFilters carries In(term, ...)
@@ -636,12 +599,10 @@ def bm25_scores_from_index(
     - dl rides inside the posting rows (persist_index denormalizes it),
       so scoring is matched-rows algebra + one groupBy(doc_key) — the
       1.5M-doc doc_stats join the live path needs is gone.
-
-    The corpus scalars enter the plan as LITERALS (one driver-side meta
-    read — corpus_scalars — instead of the old one-row parquet
-    crossJoin): constants fold into the whole-stage-codegen score
-    expression, and the plan is one scan + one broadcast join + one
-    aggregate.
+    - df (from the term dictionary) and the corpus scalars (from the
+      meta record) enter as LITERALS read driver-side, so they fold into
+      the whole-stage-codegen score expression: the plan is one postings
+      scan → score projection → groupBy(doc_key).
 
     Same scores as the live path (same dl, same scalars): proven by the
     shared oracle row and the round-trip test."""
@@ -651,42 +612,9 @@ def bm25_scores_from_index(
     # of the served bm25/hybrid walls at sf0.1.
     from ..sources.catalog import read_parquet_cached
 
-    matched = read_parquet_cached(spark, f"{path}/postings").filter(
-        F.col("term").isin(list(set(query_terms)))
-    )
-    if not query_terms:
-        return (
-            matched.select(F.col("doc_key"), F.lit(0.0).alias("score")).limit(0)
-        )
-    n, total_dl = corpus_scalars(spark, path)
-    # Same division the live path's aggregate performs: exact integer
-    # total over exact integer count, in double.
-    avgdl = float(total_dl) / n if n else 0.0
-    # r13: df comes from the index's term dictionary (one driver-side
-    # pyarrow read, memoized) and folds into the plan as a literal map —
-    # the pre-r13 plan recomputed df with a SECOND scan of the
-    # term-pruned postings plus a groupBy and a BroadcastExchange (a
-    # separate driver job on every query). With the literal fold the
-    # whole serving query is: one postings scan → score projection →
-    # groupBy(doc_key). The arithmetic is unchanged: df enters the SAME
-    # _term_score_sql tree as a bigint, n/avgdl as the same double
-    # literals, so per-(doc,term) scores are bit-identical to the
-    # two-scan plan (element_at only substitutes where the join probe
-    # did). Pre-r13 indexes without a term_df dir fall back to the
-    # two-scan plan.
-    sql = scored_from_index_sqltext(spark, path, query_terms, k1, b)
-    if sql is not None:
-        return spark.sql(sql, post=read_parquet_cached(spark, f"{path}/postings"))
-    df_counts = matched.groupBy("term").agg(F.count("*").alias("df"))
-    return (
-        matched.join(F.broadcast(df_counts), "term")
-        # One JVM-parsed scoring expression (r12): the corpus scalars fold
-        # in as double literals (repr() round-trips exactly), same tree and
-        # same arithmetic as the Column form it replaces — construction is
-        # one py4j call instead of ~15.
-        .withColumn("term_score", F.expr(_term_score_sql(k1, b, n=n, avgdl=avgdl)))
-        .groupBy("doc_key")
-        .agg(F.sum("term_score").alias("score"))
+    return spark.sql(
+        scored_from_index_sqltext(path, query_terms, k1, b),
+        post=read_parquet_cached(spark, f"{path}/postings"),
     )
 
 
@@ -698,17 +626,14 @@ def bm25_topk_from_index(
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """Top-k by rounded score over bm25_scores_from_index. When the index
-    carries a term dictionary the whole query — scorer + rounded top-k —
-    is one spark.sql round-trip (same plan: scan → score → hash agg →
-    TakeOrderedAndProject)."""
-    sql = scored_from_index_sqltext(spark, path, query_terms, k1, b)
-    if sql is not None:
-        from ..sources.catalog import read_parquet_cached
+    """Top-k by rounded score over the index-served scorer: the whole
+    query — scorer + rounded top-k — is one spark.sql round-trip (scan →
+    score → hash agg → TakeOrderedAndProject)."""
+    from ..sources.catalog import read_parquet_cached
 
-        return spark.sql(
-            "SELECT doc_key, round(score, 4) AS score FROM (" + sql + ") kw "
-            "ORDER BY score DESC, doc_key LIMIT " + str(int(k)),
-            post=read_parquet_cached(spark, f"{path}/postings"),
-        )
-    return _topk_by_score(bm25_scores_from_index(spark, path, query_terms, k1, b), k)
+    return spark.sql(
+        "SELECT doc_key, round(score, 4) AS score FROM ("
+        + scored_from_index_sqltext(path, query_terms, k1, b)
+        + ") kw ORDER BY score DESC, doc_key LIMIT " + str(int(k)),
+        post=read_parquet_cached(spark, f"{path}/postings"),
+    )

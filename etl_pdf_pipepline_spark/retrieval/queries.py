@@ -346,21 +346,21 @@ def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
 def bm25_index_servable(spark: SparkSession, sf_dir: str) -> bool:
     """Routing predicate for the keyword-search family, the FTS twin of
     plans/bucketed.bucketed_layout_exists: True when this corpus's
-    persisted postings index carries a freshness signature matching the
-    current documents table. Honors force_scan_path (the same override
-    bench.py uses to publish the scan-path walls beside the served
-    ones), and never triggers a build — a serving query must not hide an
+    persisted postings index is current (bm25.index_is_current: its
+    freshness signature matches the documents table and its layout is
+    the one the index readers accept). Honors force_scan_path (the same
+    override bench.py uses to publish the scan-path walls beside the
+    served ones), and never triggers a build — a serving query must not hide an
     index build inside its wall; ensure_bm25_index is the ingest-slot
     verb."""
     from ..plans.bucketed import scan_forced
     from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
+    from .bm25 import index_is_current
 
     if scan_forced():
         return False
-    meta = read_meta(_bm25_index_path(sf_dir)) or {}
-    return meta.get("source_signature") == table_stat_signature(
-        sf_dir, ("documents",)
+    return index_is_current(
+        _bm25_index_path(sf_dir), table_stat_signature(sf_dir, ("documents",))
     )
 
 
@@ -449,17 +449,14 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves hybrid search with too."""
     emb = load_table(spark, sf_dir, "embeddings")
 
-    kw_sql = None
     if bm25_index_servable(spark, sf_dir):
-        from .bm25 import scored_from_index_sqltext
-
-        kw_sql = scored_from_index_sqltext(spark, _bm25_index_path(sf_dir), QUERY_TERMS)
-    if kw_sql is not None:
         from ..functions.vectors import array_lit_sql, as_double_sql, cosine_sql
         from ..operators.similarity import _query_vector_cached
         from ..sources.catalog import read_parquet_cached
+        from .bm25 import scored_from_index_sqltext
         from .hybrid import rrf_sql
 
+        kw_sql = scored_from_index_sqltext(_bm25_index_path(sf_dir), QUERY_TERMS)
         qv_sql = array_lit_sql(_query_vector_cached(spark, sf_dir, 0))
         cos = cosine_sql(as_double_sql("embedding"), qv_sql)
         vec_sql = "SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}"

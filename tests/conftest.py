@@ -24,3 +24,30 @@ SF_SMALL = "/root/testdata/sf0.001"
 def spark():
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _settle_unreachable_rdds():
+    """Before each module, let Spark unpersist what earlier modules left
+    unreachable. A dropped localCheckpoint()ed DataFrame stays in
+    getPersistentRDDs() until a JVM GC hands it to Spark's ContextCleaner,
+    so without this a GC landing mid-test shrinks the count a test such as
+    test_engine.py::test_churn_matches_recompute_and_pins_nothing pins."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        import gc
+        import time
+
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        jsc = spark.sparkContext._jsc
+        seen = jsc.getPersistentRDDs().size()
+        for _ in range(20):  # until the cleaner is idle, at most ~4 s
+            time.sleep(0.2)
+            now = jsc.getPersistentRDDs().size()
+            if now == seen:
+                break
+            seen = now
+    yield

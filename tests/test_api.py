@@ -210,6 +210,12 @@ def test_upload_dedup_force_delete_cycle(client):
     assert client.get(f"/documents/{new_id}").status_code == 404
     assert client.delete(f"/documents/{new_id}").status_code == 404
 
+    # the same bytes again after the delete -> a fresh upload, not a skip
+    r4 = client.upload("/documents/upload", "spark_guide.pdf", body)
+    assert r4.get_json()["status"] == "completed"
+    assert r4.get_json()["document_id"] not in (doc_id, new_id)
+    assert client.get(f"/documents/{new_id}").status_code == 404
+
 
 def test_upload_rejects_non_pdf(client):
     r = client.upload("/documents/upload", "notes.txt", b"hello")

@@ -56,13 +56,21 @@ def test_absent_term_empty(spark, docs):
 
 
 def test_persisted_index_matches_in_memory(spark, docs, tmp_path):
-    from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_topk_from_index, persist_index
+    from etl_pdf_pipepline_spark.retrieval.bm25 import (
+        bm25_scores_from_index,
+        bm25_topk_from_index,
+        persist_index,
+    )
 
     path = str(tmp_path / "idx")
     persist_index(docs, "doc_id", "text", path, n_buckets=2)
     live = bm25_topk(docs, "doc_id", "text", ["spark", "sql"], k=10).collect()
     from_idx = bm25_topk_from_index(spark, path, ["spark", "sql"], k=10).collect()
     assert [(r.doc_key, r.score) for r in live] == [(r.doc_key, r.score) for r in from_idx]
+    # an empty query scores nothing, keyed like the index (string ids here)
+    empty = bm25_scores_from_index(spark, path, [])
+    assert empty.count() == 0 and dict(empty.dtypes)["doc_key"] == "string"
+    assert bm25_topk_from_index(spark, path, [], k=10).count() == 0
 
 
 @settings(max_examples=15, deadline=None)

@@ -1,10 +1,11 @@
 """extend_index ≡ full rebuild (retrieval/bm25.py): the O(delta) FTS
 index extension must score bit-identically to rebuilding over the whole
-corpus — postings, denormalized dl, query-time df, and the exactly-merged
-corpus scalars all have to agree."""
+corpus — postings, denormalized dl, the term_df dictionary, and the
+exactly-merged corpus scalars all have to agree."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pdf_pipepline_spark.retrieval.bm25 import (
@@ -33,7 +34,7 @@ def test_extend_equals_full_rebuild(spark, tmp_path):
 
     # scalars live in the CAS-committed meta record (r8); the exact
     # integer merge means the extended index's stats equal the rebuild's
-    assert corpus_scalars(spark, incr_path) == corpus_scalars(spark, full_path)
+    assert corpus_scalars(incr_path) == corpus_scalars(full_path)
 
     full = dict(bm25_scores_from_index(spark, full_path, TERMS).collect())
     incr = dict(bm25_scores_from_index(spark, incr_path, TERMS).collect())
@@ -52,9 +53,9 @@ def test_extend_empty_delta_is_noop(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     path = str(tmp_path / "idx")
     persist_index(docs, "doc_id", "text", path)
-    before = corpus_scalars(spark, path)
+    before = corpus_scalars(path)
     extend_index(docs.filter(F.lit(False)), "doc_id", "text", path)
-    assert corpus_scalars(spark, path) == before
+    assert corpus_scalars(path) == before
 
 
 def test_compact_preserves_scores_and_folds_files(spark, tmp_path):
@@ -77,53 +78,17 @@ def test_compact_preserves_scores_and_folds_files(spark, tmp_path):
 
     assert n_files("postings") > n_buckets  # the accumulation is real
     before_scores = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    before_scalars = corpus_scalars(spark, path)
+    before_scalars = corpus_scalars(path)
 
     counts = compact_index(spark, path, n_buckets)
     assert counts["postings"] == n_buckets == n_files("postings")
-    assert corpus_scalars(spark, path) == before_scalars
+    assert corpus_scalars(path) == before_scalars
     after_scores = dict(bm25_scores_from_index(spark, path, TERMS).collect())
     assert set(after_scores) == set(before_scores)
     for k, v in before_scores.items():
         # same per-component algebra; per-doc double fold order may move
         # with the file layout — the serving tier's round(4) contract
         assert round(v, 4) == round(after_scores[k], 4), k
-
-
-def test_extend_migrates_legacy_corpus_layouts(spark, tmp_path):
-    """Pre-r8 indexes stored scalars as a one-row {path}/corpus parquet;
-    pre-r7 ones lacked total_dl entirely. extend_index must accept both
-    (ADVICE r7: fall back to reconstructing total_dl from doc_stats)
-    and re-publish through the CAS meta, scoring identically to a full
-    rebuild afterward."""
-    import shutil
-
-    docs = load_table(spark, SF, "documents")
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    delta = docs.filter(F.col("doc_id") % 5 == 0)
-
-    for drop_total_dl in (False, True):
-        path = str(tmp_path / f"legacy_{drop_total_dl}")
-        persist_index(base, "doc_id", "text", path)
-        n, total = corpus_scalars(spark, path)
-        # devolve to the legacy layout: corpus parquet, no meta record
-        cols = [F.lit(n).cast("long").alias("n")]
-        if not drop_total_dl:
-            cols.append(F.lit(total).cast("long").alias("total_dl"))
-        cols.insert(0, F.lit(float(total) / n).alias("avgdl"))
-        spark.range(1).select(*cols).write.parquet(f"{path}/corpus")
-        shutil.rmtree(f"{path}/_manifests")
-        assert corpus_scalars(spark, path) == (n, total)
-
-        extend_index(delta, "doc_id", "text", path)
-        full_path = str(tmp_path / f"full_{drop_total_dl}")
-        persist_index(docs, "doc_id", "text", full_path)
-        assert corpus_scalars(spark, path) == corpus_scalars(spark, full_path)
-        incr = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-        full = dict(bm25_scores_from_index(spark, full_path, TERMS).collect())
-        assert set(incr) == set(full)
-        for k in full:
-            assert round(full[k], 4) == round(incr[k], 4), k
 
 
 def test_term_df_dictionary_matches_live_scores(spark, tmp_path):
@@ -151,26 +116,10 @@ def test_term_df_dictionary_matches_live_scores(spark, tmp_path):
         assert round(live[k], 4) == round(got[k], 4), k
 
 
-def test_legacy_index_without_term_df_still_serves(spark, tmp_path):
-    """Pre-r13 indexes (no term_df dir) must keep serving through the
-    two-scan fallback with identical scores."""
-    import shutil
-
-    path = str(tmp_path / "idx")
-    docs = load_table(spark, SF, "documents")
-    persist_index(docs, "doc_id", "text", path)
-    with_dict = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    shutil.rmtree(f"{path}/term_df")
-    legacy = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    assert set(with_dict) == set(legacy)
-    for k in with_dict:
-        assert abs(with_dict[k] - legacy[k]) <= 1e-12 * max(abs(with_dict[k]), 1.0), k
-
-
 def test_extend_keeps_term_df_in_sync(spark, tmp_path):
     """After an extend, the dictionary's per-term totals must equal the
-    postings' actual per-term row counts (the df the legacy plan would
-    compute at query time)."""
+    postings' actual per-term row counts (the df a query-time count
+    over the postings would give)."""
     docs = load_table(spark, SF, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
@@ -195,3 +144,24 @@ def test_extend_keeps_term_df_in_sync(spark, tmp_path):
         .collect()
     }
     assert from_dict == from_postings
+
+
+def test_older_layout_is_never_read_or_extended(spark, tmp_path):
+    """Only the layout persist_index writes is read: an index whose meta
+    record lacks the layout key (the pre-r13 shape) raises in the scorer
+    and in extend_index, and the extend raises before appending."""
+    import os
+
+    from etl_pdf_pipepline_spark.sources.manifest import commit_meta, read_meta
+
+    docs = load_table(spark, SF, "documents")
+    path = str(tmp_path / "idx")
+    persist_index(docs.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", path)
+    commit_meta(path, {k: v for k, v in read_meta(path).items() if k != "layout"})
+    files = sorted(os.listdir(f"{path}/postings"))
+
+    with pytest.raises(FileNotFoundError, match="rebuild"):
+        bm25_scores_from_index(spark, path, TERMS)
+    with pytest.raises(FileNotFoundError, match="rebuild"):
+        extend_index(docs.filter(F.col("doc_id") % 5 == 0), "doc_id", "text", path)
+    assert sorted(os.listdir(f"{path}/postings")) == files

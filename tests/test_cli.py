@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
+from etl_pdf_pipepline_spark.api.engine import SparkEngine
 from etl_pdf_pipepline_spark.cli import main
 
 SF = "/root/testdata/sf0.001"
@@ -15,25 +18,22 @@ def run(capsys, *argv):
     return rc, [json.loads(line) for line in out if line.startswith("{")]
 
 
-def test_search_keyword(spark, capsys):
-    rc, rows = run(capsys, "search", "spark table", "--mode", "keyword", "-k", "3")
-    assert rc == 0 and len(rows) == 3
+@pytest.mark.parametrize("mode", ["keyword", "vector", "hybrid"])
+def test_search_matches_engine(spark, capsys, mode):
+    """The verb prints the engine's REST hit objects, one per line."""
+    rc, rows = run(capsys, "search", "spark joins", "--mode", mode, "-k", "5")
+    assert rc == 0 and len(rows) == 5
+    assert rows == SparkEngine(spark, SF).search("spark joins", mode=mode, limit=5)
+    # regression: a query embedded at a different dim than the corpus
+    # made every cosine NULL
     scores = [r["score"] for r in rows]
+    assert all(s is not None for s in scores)
     assert scores == sorted(scores, reverse=True)
 
 
-def test_search_hybrid(spark, capsys):
-    rc, rows = run(capsys, "search", "spark joins", "-k", "5")
-    assert rc == 0 and len(rows) == 5
-    assert all(r["score"] is not None and r["score"] > 0 for r in rows)
-
-
-def test_search_vector_scores_not_null(spark, capsys):
-    # regression: query embedded at a different dim than the corpus made
-    # every cosine NULL
-    rc, rows = run(capsys, "search", "spark joins", "--mode", "vector", "-k", "3")
-    assert rc == 0 and len(rows) == 3
-    assert all(r["score"] is not None for r in rows)
+def test_search_empty_query_exits_2(spark, capsys):
+    assert main(["--sf-dir", SF, "search", "   "]) == 2
+    assert "Empty query" in capsys.readouterr().err
 
 
 def test_stats_and_list(spark, capsys):

@@ -255,6 +255,42 @@ def test_bm25_routing_serves_fresh_and_falls_back(spark, corpus_copy):
         _shutil.rmtree(path, ignore_errors=True)
 
 
+def test_bm25_routing_never_serves_older_layout(spark, corpus_copy):
+    """An index whose meta record lacks the current layout (the pre-r13
+    shape, signature still matching) is not servable: bm25_search takes
+    the scan path, and ensure_bm25_index rebuilds it in the current
+    layout, after which it serves again."""
+    import shutil as _shutil
+
+    from etl_pdf_pipepline_spark.retrieval.bm25 import _LAYOUT_VERSION
+    from etl_pdf_pipepline_spark.retrieval.queries import (
+        _bm25_index_path,
+        bm25_index_servable,
+        bm25_search,
+        ensure_bm25_index,
+    )
+    from etl_pdf_pipepline_spark.sources.manifest import commit_meta, read_meta
+
+    path = _bm25_index_path(corpus_copy)
+    try:
+        scan = [tuple(r) for r in bm25_search(spark, corpus_copy).collect()]
+        ensure_bm25_index(spark, corpus_copy)
+        meta = read_meta(path)
+        commit_meta(path, {k: v for k, v in meta.items() if k != "layout"})
+
+        assert not bm25_index_servable(spark, corpus_copy)
+        assert [tuple(r) for r in bm25_search(spark, corpus_copy).collect()] == scan
+        plan = bm25_search(spark, corpus_copy)._jdf.queryExecution().toString()
+        assert "documents.parquet" in plan
+
+        ensure_bm25_index(spark, corpus_copy)
+        assert read_meta(path)["layout"] == _LAYOUT_VERSION
+        assert bm25_index_servable(spark, corpus_copy)
+        assert [tuple(r) for r in bm25_search(spark, corpus_copy).collect()] == scan
+    finally:
+        _shutil.rmtree(path, ignore_errors=True)
+
+
 def test_signature_manifests_serve_fresh_and_fall_back(spark, corpus_copy):
     """r11 signature-at-ingest routing: dedup_minhash_signatures /
     dedup_simhash serve the persisted signature manifests while fresh,
