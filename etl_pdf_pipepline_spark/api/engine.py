@@ -169,12 +169,18 @@ class SparkEngine:
         ).collect()
         return {r.doc_id: r for r in rows}
 
-    def _doc_row(self, document_id: str) -> dict[str, Any]:
-        if document_id in self._uploads:
-            return dict(self._uploads[document_id])
+    def _live_lake_id(self, document_id: str) -> int:
+        """_lake_id for a lake document this engine still serves: NotFound
+        for a non-canonical id and for a deleted document."""
         key = _lake_id(document_id)
         if key in self._removed:
             raise NotFound(document_id)
+        return key
+
+    def _doc_row(self, document_id: str) -> dict[str, Any]:
+        if document_id in self._uploads:
+            return dict(self._uploads[document_id])
+        key = self._live_lake_id(document_id)
         r = self._lake_rows([key]).get(document_id)
         if r is None:
             raise NotFound(document_id)
@@ -470,13 +476,10 @@ class SparkEngine:
     def _images_for(self, document_id: str) -> list[dict[str, Any]]:
         if document_id in self._uploads:
             return []
-        try:
-            base_id = int(document_id)
-        except ValueError:
-            raise NotFound(document_id)
+        key = self._live_lake_id(document_id)
         rows = (
             media_table(self.spark, self.sf_dir)
-            .filter(F.col("media_id") == base_id)
+            .filter(F.col("media_id") == key)
             .select("media_id", "media_type", "content")
             .collect()
         )
@@ -516,12 +519,12 @@ class SparkEngine:
         if not image_id.startswith("img-"):
             raise NotFound(image_id)
         try:
-            base_id = int(image_id[4:])
-        except ValueError:
+            key = self._live_lake_id(image_id[4:])
+        except NotFound:
             raise NotFound(image_id)
         row = (
             media_table(self.spark, self.sf_dir)
-            .filter(F.col("media_id") == base_id)
+            .filter(F.col("media_id") == key)
             .select("content")
             .limit(1)
             .collect()

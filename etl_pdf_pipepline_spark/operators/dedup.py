@@ -47,7 +47,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import distinct_tokens, tokens
 from ..registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, warehouse_path
 
 N_MINHASH = 8  # signature length
 SHINGLE = 3  # word-shingle width
@@ -1176,12 +1176,7 @@ def extend_components(
 
 
 def cc_labels_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"cc_labels_{tag}")
+    return warehouse_path(sf_dir, "cc_labels")
 
 
 def persist_cc_labels(spark: SparkSession, sf_dir: str, exclude_mod: int = 20) -> str:
@@ -1215,15 +1210,12 @@ def ensure_cc_labels(spark: SparkSession, sf_dir: str, exclude_mod: int = 20) ->
     maintained artifact completing the lifecycle symmetry (bands:
     ensure_lsh_band_index; IVF: ensure_ivf_index; BM25: ensure_index).
     Reuse while the freshness record matches the documents table and
-    the build contract; rebuild (re-close) otherwise."""
-    from ..sources.manifest import read_meta
+    the build contract (manifest.meta_matches); rebuild (re-close)
+    otherwise."""
+    from ..sources.manifest import meta_matches
 
     path = cc_labels_path(sf_dir)
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == _docs_signature(sf_dir)
-        and meta.get("exclude_mod") == exclude_mod
-    ):
+    if meta_matches(path, source_signature=_docs_signature(sf_dir), exclude_mod=exclude_mod):
         return path
     return persist_cc_labels(spark, sf_dir, exclude_mod=exclude_mod)
 
@@ -1797,12 +1789,7 @@ def doc_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lsh_index_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"lsh_band_index_{tag}")
+    return warehouse_path(sf_dir, "lsh_band_index")
 
 
 def persist_lsh_band_index(
@@ -1854,15 +1841,12 @@ def ensure_lsh_band_index(
     reader never sees a torn record. Rebuilds themselves keep the
     standard single-builder contract (the data write is a Spark
     overwrite that clobbers the whole path, meta included); serialize
-    concurrent REBUILDS of the same corpus externally."""
-    from ..sources.manifest import read_meta
+    concurrent REBUILDS of the same corpus externally. Freshness is
+    manifest.meta_matches."""
+    from ..sources.manifest import meta_matches
 
     path = lsh_index_path(sf_dir)
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == _docs_signature(sf_dir)
-        and meta.get("exclude_mod") == exclude_mod
-    ):
+    if meta_matches(path, source_signature=_docs_signature(sf_dir), exclude_mod=exclude_mod):
         return path
     return persist_lsh_band_index(spark, sf_dir, exclude_mod=exclude_mod)
 
@@ -1870,12 +1854,7 @@ def ensure_lsh_band_index(
 def signature_manifest_path(sf_dir: str, family: str) -> str:
     """Warehouse location of this corpus's persisted signature table
     (`family` = 'minhash' or 'simhash'), keyed by corpus dir."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"{family}_sigs_{tag}")
+    return warehouse_path(sf_dir, f"{family}_sigs")
 
 
 def ensure_minhash_signatures(spark: SparkSession, sf_dir: str) -> str:
@@ -1886,30 +1865,31 @@ def ensure_minhash_signatures(spark: SparkSession, sf_dir: str) -> str:
     most expensive recurring cost in the dedup family at 100 TB — the
     sf100 row pays ~51 s per recompute). Same serve-or-build/freshness
     contract as the band index; the standard CAS meta record carries the
-    documents-table stat signature."""
-    from ..sources.manifest import commit_meta, read_meta
-
-    path = signature_manifest_path(sf_dir, "minhash")
-    sig = _docs_signature(sf_dir)
-    if (read_meta(path) or {}).get("source_signature") == sig:
-        return path
-    docs = load_table(spark, sf_dir, "documents")
-    minhash_signature(docs, "doc_id", "text").write.mode("overwrite").parquet(path)
-    commit_meta(path, {"source_signature": sig})
-    return path
+    documents-table stat signature, and freshness is manifest.meta_matches."""
+    return _ensure_signatures(
+        spark, sf_dir, "minhash", lambda docs: minhash_signature(docs, "doc_id", "text")
+    )
 
 
 def ensure_simhash_signatures(spark: SparkSession, sf_dir: str) -> str:
     """SimHash twin of ensure_minhash_signatures — one (doc_id, simhash)
     row per document, persisted at ingest, freshness-recorded."""
-    from ..sources.manifest import commit_meta, read_meta
+    return _ensure_signatures(spark, sf_dir, "simhash", simhash_signatures)
 
-    path = signature_manifest_path(sf_dir, "simhash")
+
+def _ensure_signatures(spark: SparkSession, sf_dir: str, family: str, sign) -> str:
+    """Shared serve-or-build body of the two signature families: `sign`
+    maps the documents table to the family's signature rows. The source
+    signature is read ONCE, before the build, and that same value is
+    committed — an ingest landing mid-build leaves a record that
+    under-claims (tests/test_manifest_races.py)."""
+    from ..sources.manifest import commit_meta, meta_matches
+
+    path = signature_manifest_path(sf_dir, family)
     sig = _docs_signature(sf_dir)
-    if (read_meta(path) or {}).get("source_signature") == sig:
+    if meta_matches(path, source_signature=sig):
         return path
-    docs = load_table(spark, sf_dir, "documents")
-    simhash_signatures(docs).write.mode("overwrite").parquet(path)
+    sign(load_table(spark, sf_dir, "documents")).write.mode("overwrite").parquet(path)
     commit_meta(path, {"source_signature": sig})
     return path
 
@@ -1918,14 +1898,15 @@ def signatures_servable(spark: SparkSession, sf_dir: str, family: str) -> bool:
     """Routing predicate for the signature queries — same contract as
     plans/bucketed.bucketed_layout_exists / retrieval's
     bm25_index_servable: fresh record required, scan override honored,
-    never builds inside a serving query."""
+    never builds inside a serving query. Freshness is manifest.meta_matches."""
     from ..plans.bucketed import scan_forced
-    from ..sources.manifest import read_meta
+    from ..sources.manifest import meta_matches
 
     if scan_forced():
         return False
-    meta = read_meta(signature_manifest_path(sf_dir, family)) or {}
-    return meta.get("source_signature") == _docs_signature(sf_dir)
+    return meta_matches(
+        signature_manifest_path(sf_dir, family), source_signature=_docs_signature(sf_dir)
+    )
 
 
 def extend_lsh_band_index(
@@ -2129,12 +2110,7 @@ def doc_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def docs_lake_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"docs_lake_{tag}")
+    return warehouse_path(sf_dir, "docs_lake")
 
 
 @query("docs_lake_cdf_admission", oracle=_INCR_ORACLE)

@@ -204,9 +204,9 @@ def _events_user_sliced(
     raw corpus is time-ordered and its user stats span everything) when a
     FRESH layout exists, raw scan otherwise. Same freshness contract as
     every maintained artifact here: the layout's CAS meta record must
-    match the current events file stats; `scan_forced()` honors the
-    force_scan_path override so the scan branch stays measurable and
-    gate-covered (events_sessionization_scan)."""
+    match the current events file stats (manifest.meta_matches);
+    `scan_forced()` honors the force_scan_path override so the scan
+    branch stays measurable and gate-covered (events_sessionization_scan)."""
     from ..plans.bucketed import scan_forced
     from ..plans.zorder import zorder_events_path, zorder_pruned_files
     from ..sources.catalog import (
@@ -217,7 +217,7 @@ def _events_user_sliced(
         read_parquet_paths_cached,
         table_stat_signature,
     )
-    from ..sources.manifest import read_meta
+    from ..sources.manifest import meta_matches
 
     if not scan_forced():
         # r13 final session: try the RAW directory's own footer stats
@@ -253,8 +253,7 @@ def _events_user_sliced(
         if files:
             return read_parquet_paths_cached(spark, tuple(files))
         path = zorder_events_path(sf_dir)
-        meta = read_meta(path) or {}
-        if meta.get("source_signature") == table_stat_signature(sf_dir, ("events",)):
+        if meta_matches(path, source_signature=table_stat_signature(sf_dir, ("events",))):
             return read_parquet_cached(spark, path)
     return load_table(spark, sf_dir, "events")
 

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, warehouse_path
 
 MIN_IMAGE_SIDE = 100  # reference min_width/min_height (image_extractor.py:30)
 
@@ -281,12 +281,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def media_manifest_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"media_manifest_{tag}")
+    return warehouse_path(sf_dir, "media_manifest")
 
 
 def ensure_media_manifest(spark: SparkSession, sf_dir: str) -> str:
@@ -302,14 +297,13 @@ def ensure_media_manifest(spark: SparkSession, sf_dir: str) -> str:
     query from this NARROW table (four thin columns, no payload read,
     no digest). A real ingest pipeline computes the digest while the
     bytes are already in hand; re-deriving it here from the source is
-    the local-corpus equivalent."""
+    the local-corpus equivalent. Freshness is manifest.meta_matches."""
     from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import commit_meta, read_meta
+    from ..sources.manifest import commit_meta, meta_matches
 
     path = media_manifest_path(sf_dir)
     sig = table_stat_signature(sf_dir, ("documents",))
-    meta = read_meta(path) or {}
-    if meta.get("source_signature") == sig:
+    if meta_matches(path, source_signature=sig):
         return path
     media = media_table(spark, sf_dir)
     (

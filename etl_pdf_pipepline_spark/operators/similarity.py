@@ -32,7 +32,7 @@ from ..functions.vectors import (
     round_half_away,
 )
 from ..registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, warehouse_path
 
 # NULL (not NaN) on zero-norm inputs, mirroring functions/vectors.py::cosine —
 # both engines then agree that a zero vector never passes a `score >= t` filter.
@@ -366,12 +366,7 @@ def ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ivf_index_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"ivf_index_{tag}")
+    return warehouse_path(sf_dir, "ivf_index")
 
 
 def _assign_to_centroids(d: DataFrame, c: DataFrame) -> DataFrame:
@@ -458,24 +453,21 @@ def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     record matches the current embeddings files AND the index is a
     full-corpus build (no exclusion, no base_filter), rebuild otherwise.
     This is the reader of the source_signature persist_ivf_index
-    commits — without it the record was write-only (r8 review)."""
+    commits — without it the record was write-only (r8 review).
+    Freshness is manifest.meta_matches, so the build-variant keys must be
+    PRESENT, not merely falsy: a legacy record (pre-variant
+    persist_ivf_index wrote only source_signature, even for
+    exclude/base_filter builds) rebuilds instead of serving a surviving
+    partial index as full (ADVICE r9)."""
     from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
+    from ..sources.manifest import meta_matches
 
     path = ivf_index_path(sf_dir)
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == table_stat_signature(sf_dir, ("embeddings",))
-        # Build-variant keys must be PRESENT, not merely falsy: a legacy
-        # meta record (pre-variant persist_ivf_index wrote only
-        # source_signature, even for exclude/base_filter builds) would
-        # otherwise pass both `is None` checks by key absence and a
-        # surviving partial index from an older checkout could be served
-        # as full (ADVICE r9). Absent keys → rebuild.
-        and "exclude_vec_id" in meta
-        and meta["exclude_vec_id"] is None
-        and "partial" in meta
-        and meta["partial"] is False
+    if meta_matches(
+        path,
+        source_signature=table_stat_signature(sf_dir, ("embeddings",)),
+        exclude_vec_id=None,
+        partial=False,
     ):
         return path
     return persist_ivf_index(spark, sf_dir)
@@ -552,10 +544,6 @@ def compact_ivf_index(spark: SparkSession, path: str) -> int:
     manifest layer). Assignments are untouched — compaction moves
     bytes, never cell membership. Returns the total data-file count
     after. Equivalence proven by tests/test_ivf_incremental.py."""
-    import os
-
-    from ..sources.sinks import swap_directory
-
     return _compact_cell_layout(spark, f"{path}/vectors")
 
 
@@ -1218,13 +1206,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def int8_codes_path(sf_dir: str) -> str:
     """Warehouse location of this corpus's persisted int8 code table,
-    keyed by corpus dir — same convention as dedup.signature_manifest_path."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"int8_codes_{tag}")
+    keyed by corpus dir (catalog.warehouse_path)."""
+    return warehouse_path(sf_dir, "int8_codes")
 
 
 def _emb_signature(sf_dir: str) -> str:
@@ -1249,13 +1232,13 @@ def ensure_int8_codes(spark: SparkSession, sf_dir: str) -> str:
     ingest (the same lifecycle slot as the minhash/simhash signature
     manifests) and every quantized-serving query reads int8 + one double
     per row instead of re-projecting the float32 column. Standard CAS
-    meta record carries the embeddings-table stat signature."""
-    from ..sources.catalog import load_table
-    from ..sources.manifest import commit_meta, read_meta
+    meta record carries the embeddings-table stat signature; freshness
+    is manifest.meta_matches."""
+    from ..sources.manifest import commit_meta, meta_matches
 
     path = int8_codes_path(sf_dir)
     sig = _emb_signature(sf_dir)
-    if (read_meta(path) or {}).get("source_signature") == sig:
+    if meta_matches(path, source_signature=sig):
         return path
     emb = load_table(spark, sf_dir, "embeddings")
     _int8_code_table(emb).write.mode("overwrite").parquet(path)
@@ -1266,14 +1249,13 @@ def ensure_int8_codes(spark: SparkSession, sf_dir: str) -> str:
 def int8_codes_servable(spark: SparkSession, sf_dir: str) -> bool:
     """Routing predicate — same contract as dedup.signatures_servable:
     fresh record required, force_scan_path honored, never builds inside
-    a serving query."""
+    a serving query. Freshness is manifest.meta_matches."""
     from ..plans.bucketed import scan_forced
-    from ..sources.manifest import read_meta
+    from ..sources.manifest import meta_matches
 
     if scan_forced():
         return False
-    meta = read_meta(int8_codes_path(sf_dir)) or {}
-    return meta.get("source_signature") == _emb_signature(sf_dir)
+    return meta_matches(int8_codes_path(sf_dir), source_signature=_emb_signature(sf_dir))
 
 
 @query(
@@ -1353,12 +1335,7 @@ def _dequantized_query_cached(spark: SparkSession, sf_dir: str, dq: DataFrame) -
 
 
 def ivf_int8_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"ivf_int8_{tag}")
+    return warehouse_path(sf_dir, "ivf_int8")
 
 
 def _quantize_to_cells(vecs: DataFrame) -> DataFrame:
@@ -1398,21 +1375,16 @@ def ensure_ivf_int8(spark: SparkSession, sf_dir: str) -> str:
     embeddings stat signature (the same currency as every serve-or-build
     artifact); a stale parent rebuild bumps the vectors files, but the
     meta here pins the SOURCE, so one signature check covers both. The
-    `partial` variant key must be PRESENT and False — the incremental
-    gate builds a partial layout at this path (same discipline as
-    ensure_ivf_index's build-variant keys), and steady-state serving
-    must never mistake it for a full build."""
+    check is manifest.meta_matches, so the `partial` variant key must be
+    PRESENT and False — the incremental gate builds a partial layout
+    at this path, and steady-state serving must never mistake it for a
+    full build."""
     from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import commit_meta, read_meta
+    from ..sources.manifest import commit_meta, meta_matches
 
     path = ivf_int8_path(sf_dir)
     sig = table_stat_signature(sf_dir, ("embeddings",))
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == sig
-        and "partial" in meta
-        and meta["partial"] is False
-    ):
+    if meta_matches(path, source_signature=sig, partial=False):
         return path
     parent = ensure_ivf_index(spark, sf_dir)
     _write_int8_codes(spark, parent, path, mode="overwrite")

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import (
-    avg_word_length,
     distinct_tokens,
     non_ascii_ratio,
     tokens,

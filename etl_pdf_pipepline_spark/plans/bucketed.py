@@ -36,7 +36,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.money import cents as _cents
 from ..functions.ordering import ordered_small
 from ..registry import query
 from ..sources.catalog import load_table
@@ -198,16 +197,15 @@ def bucketed_layout_exists(spark: SparkSession, sf_dir: str) -> bool:
     regenerated in place stop matching and the route falls back to scan
     instead of serving stale buckets — same invalidation contract as any
     materialized index (bm25 postings, IVF centroids), now enforced
-    rather than documented."""
+    rather than documented. Freshness is manifest.meta_matches."""
     if _force_scan:
         return False
     li_name, o_name = bucketed_table_names(spark, sf_dir)
     if not (spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name)):
         return False
-    from ..sources.manifest import read_meta
+    from ..sources.manifest import meta_matches
 
-    meta = read_meta(_meta_root(spark, sf_dir)) or {}
-    return meta.get("source_signature") == _source_signature(sf_dir)
+    return meta_matches(_meta_root(spark, sf_dir), source_signature=_source_signature(sf_dir))
 
 
 def revenue_from_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

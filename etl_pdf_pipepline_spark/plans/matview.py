@@ -49,7 +49,6 @@ freshness contracts are asserted in tests/test_matview.py.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,24 +57,18 @@ from pyspark.sql import functions as F
 from ..functions.money import cents as _cents
 from ..functions.ordering import ordered_small
 from ..registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, warehouse_path
 from .partitioned import MERGE_ORACLE, TARGET_DAY, _merge_cdc_batch
-
-
-def _warehouse_path(sf_dir: str, stem: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"{stem}_{tag}")
 
 
 def mv_lake_path(sf_dir: str) -> str:
     """Base lake for the matview gate (own path — the gate rebuilds it,
     which would clobber events_versioned_merge's lake mid-session)."""
-    return _warehouse_path(sf_dir, "events_mv_base")
+    return warehouse_path(sf_dir, "events_mv_base")
 
 
 def rollup_view_path(sf_dir: str) -> str:
-    return _warehouse_path(sf_dir, "events_rollup_mv")
+    return warehouse_path(sf_dir, "events_rollup_mv")
 
 
 def _mv_meta_root(sf_dir: str) -> str:
@@ -291,7 +284,7 @@ def streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.manifest import append_commit, latest_version
 
-    base = _warehouse_path(sf_dir, "events_stream_mv")
+    base = warehouse_path(sf_dir, "events_stream_mv")
     shutil.rmtree(base, ignore_errors=True)  # fresh deterministic run per gate
     base_root = os.path.join(base, "table")
     view_root = os.path.join(base, "view")
@@ -410,8 +403,8 @@ def events_rollup_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_meta,
     )
 
-    root = _warehouse_path(sf_dir, "events_cdf_mv_base")
-    view_root = _warehouse_path(sf_dir, "events_rollup_cdf_mv")
+    root = warehouse_path(sf_dir, "events_cdf_mv_base")
+    view_root = warehouse_path(sf_dir, "events_rollup_cdf_mv")
     meta_root = view_root + "_meta"
     ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     init_versioned_lake(ev, root, "event_date")
@@ -481,8 +474,8 @@ def events_rollup_after_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_meta,
     )
 
-    root = _warehouse_path(sf_dir, "events_dv_mv_base")
-    view_root = _warehouse_path(sf_dir, "events_rollup_dv_mv")
+    root = warehouse_path(sf_dir, "events_dv_mv_base")
+    view_root = warehouse_path(sf_dir, "events_rollup_dv_mv")
     meta_root = view_root + "_meta"
     ev = load_table(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
     init_versioned_lake(ev, root, "event_date")
@@ -561,7 +554,7 @@ def ensure_streaming_hourly_view(spark: SparkSession, sf_dir: str) -> str:
         rows_changed_since,
     )
 
-    base = _warehouse_path(sf_dir, "events_stream_hourly")
+    base = warehouse_path(sf_dir, "events_stream_hourly")
     base_root = os.path.join(base, "table")
     view_root = os.path.join(base, "view")
     meta_root = os.path.join(base, "view_meta")

@@ -20,23 +20,18 @@ layout-path ≡ scan-path. tests/test_bucketing.py asserts the plan property
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import cents as _cents
 from ..registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, warehouse_path
 
 TARGET_DAY = "2024-01-15"
 
 
 def partitioned_events_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_by_day_{tag}")
+    return warehouse_path(sf_dir, "events_by_day")
 
 
 def write_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
@@ -97,15 +92,11 @@ def events_partition_pruned_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fragmented_events_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_by_day_frag_{tag}")
+    return warehouse_path(sf_dir, "events_by_day_frag")
 
 
 def compacted_events_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_by_day_compact_{tag}")
+    return warehouse_path(sf_dir, "events_by_day_compact")
 
 
 FRAGMENT_TASKS = 8  # simulated ingest parallelism: files per day before compaction
@@ -156,9 +147,7 @@ MERGE_INS_OFFSET = 10_000_000_000
 
 
 def merge_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_by_day_merge_{tag}")
+    return warehouse_path(sf_dir, "events_by_day_merge")
 
 
 def _merge_cdc_batch(ev: DataFrame):
@@ -312,9 +301,7 @@ def events_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def versioned_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_versioned_{tag}")
+    return warehouse_path(sf_dir, "events_versioned")
 
 
 @query("events_versioned_merge", oracle=MERGE_ORACLE)
@@ -399,9 +386,7 @@ _SNAPSHOT_PRUNED_ORACLE = f"""
 
 
 def stats_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_stats_lake_{tag}")
+    return warehouse_path(sf_dir, "events_stats_lake")
 
 
 @query("events_snapshot_pruned", oracle=_SNAPSHOT_PRUNED_ORACLE)
@@ -482,9 +467,7 @@ _SCHEMA_EVOLUTION_ORACLE = f"""
 
 
 def evo_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_evo_lake_{tag}")
+    return warehouse_path(sf_dir, "events_evo_lake")
 
 
 @query("events_schema_evolution", oracle=_SCHEMA_EVOLUTION_ORACLE)
@@ -551,9 +534,7 @@ _OPTIMIZE_ORACLE = """
 
 
 def optimize_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_opt_lake_{tag}")
+    return warehouse_path(sf_dir, "events_opt_lake")
 
 
 @query("events_lake_optimize", oracle=_OPTIMIZE_ORACLE)
@@ -607,9 +588,7 @@ _AUTOPILOT_ORACLE = f"""
 
 
 def autopilot_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_autopilot_lake_{tag}")
+    return warehouse_path(sf_dir, "events_autopilot_lake")
 
 
 @query("events_lake_autopilot", oracle=_AUTOPILOT_ORACLE)
@@ -670,9 +649,7 @@ def events_lake_autopilot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdf_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_cdf_{tag}")
+    return warehouse_path(sf_dir, "events_cdf")
 
 
 _CHANGE_FEED_ORACLE = f"""
@@ -797,9 +774,7 @@ def events_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mor_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_mor_{tag}")
+    return warehouse_path(sf_dir, "events_mor")
 
 
 _MOR_ORACLE = f"""
@@ -882,9 +857,7 @@ def events_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def count_lake_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_count_{tag}")
+    return warehouse_path(sf_dir, "events_count")
 
 
 _COUNT_SERVED_ORACLE = f"""

@@ -41,7 +41,6 @@ the beyond-reference lake layer SURVEY.md §2.11+ claims.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -50,7 +49,12 @@ from pyspark.sql import functions as F
 from ..functions.money import cents as _cents
 from ..functions.ordering import ordered_small
 from ..registry import query
-from ..sources.catalog import load_table, read_parquet_cached, table_scalar_cached
+from ..sources.catalog import (
+    load_table,
+    read_parquet_cached,
+    table_scalar_cached,
+    warehouse_path,
+)
 
 Z_BITS_PER_DIM = 8  # 256 cells per dimension, 16-bit Morton code
 
@@ -91,9 +95,7 @@ def _cell(col: Column, lo, hi, bits: int = Z_BITS_PER_DIM) -> Column:
 
 
 def zorder_events_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_zorder_{tag}")
+    return warehouse_path(sf_dir, "events_zorder")
 
 
 def write_zorder_events(
@@ -243,20 +245,19 @@ def ensure_zorder_events(
     CAS-committed freshness record (manifest commit_meta — the repo's
     one artifact protocol) matches the current events files and file
     count, rebuild otherwise — the same lifecycle every maintained
-    artifact here has (bucketed facts, LSH bands, BM25/IVF indexes)."""
+    artifact here has (bucketed facts, LSH bands, BM25/IVF indexes).
+    Freshness is manifest.meta_matches."""
     from ..session import derive_shuffle_partitions
     from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
-
-    from ..sources.manifest import commit_meta
+    from ..sources.manifest import meta_matches
 
     path = zorder_events_path(sf_dir)
     n = n_files or derive_shuffle_partitions(sf_dir)
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == table_stat_signature(sf_dir, ("events",))
-        and meta.get("n_files") == n
-        and meta.get("layout_rev") == ZORDER_LAYOUT_REV
+    if meta_matches(
+        path,
+        source_signature=table_stat_signature(sf_dir, ("events",)),
+        n_files=n,
+        layout_rev=ZORDER_LAYOUT_REV,
     ):
         return path
     return write_zorder_events(spark, sf_dir, n_files=n)

@@ -322,15 +322,12 @@ def corpus_scalars(path: str) -> tuple[int, int]:
 
 def index_is_current(path: str, source_signature: str) -> bool:
     """True when the index at `path` was built (or extended) from the
-    source with this stat signature, in the current layout — the one
-    freshness predicate for serve-or-build and for query routing."""
-    from ..sources.manifest import read_meta
+    source with this stat signature, in the current layout (freshness is
+    manifest.meta_matches) — the one freshness predicate for
+    serve-or-build and for query routing."""
+    from ..sources.manifest import meta_matches
 
-    meta = read_meta(path) or {}
-    return (
-        meta.get("source_signature") == source_signature
-        and meta.get("layout") == _LAYOUT_VERSION
-    )
+    return meta_matches(path, source_signature=source_signature, layout=_LAYOUT_VERSION)
 
 
 def ensure_index(

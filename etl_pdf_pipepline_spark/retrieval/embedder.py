@@ -31,7 +31,6 @@ from typing import Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
 
 

@@ -8,13 +8,13 @@ rankings with RRF exactly as hybrid.py does.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import title_from_filename, tokens
-from ..functions.vectors import as_double, as_double_sql, cosine, cosine_expr
+from ..functions.vectors import as_double_sql, cosine_expr
 from ..registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, warehouse_path
 from .bm25 import bm25_scores, bm25_topk
 from .hybrid import context_budget_cut, rank_top, route_topic, rrf_fuse
 
@@ -263,20 +263,12 @@ def bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index's 55.8 s-build / 8.1 s-marginal split (SCALING.md). The gate
     row intentionally pays base-build + extend + query every call, like
     the other index rows; the steady-state cost is the extend alone."""
-    import hashlib
-    import os
-
     from .bm25 import bm25_topk_from_index, extend_index, persist_index
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 20 != 0)
     delta = docs.filter(F.col("doc_id") % 20 == 0)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"bm25_index_incr_{tag}",
-    )
+    path = warehouse_path(sf_dir, "bm25_index_incr")
     persist_index(base, "doc_id", "text", path)
     extend_index(delta, "doc_id", "text", path)
     return (
@@ -286,17 +278,8 @@ def bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_index_path(sf_dir: str) -> str:
-    """This corpus's shared BM25 index location under the repo warehouse
-    (path keyed by corpus dir so gate runs at different sf don't collide)."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"bm25_index_{tag}",
-    )
+    """This corpus's shared BM25 index location (catalog.warehouse_path)."""
+    return warehouse_path(sf_dir, "bm25_index")
 
 
 def _build_bm25_index(spark: SparkSession, sf_dir: str) -> str:

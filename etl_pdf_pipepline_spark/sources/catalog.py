@@ -30,6 +30,23 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_WAREHOUSE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "spark-warehouse",
+)
+
+
+def warehouse_path(sf_dir: str, stem: str) -> str:
+    """Location of the build-once artifact `stem` derived from the corpus
+    at `sf_dir`: `spark-warehouse/{stem}_{tag}` under the repo root, the
+    tag being md5 of the corpus's absolute path so distinct corpora never
+    share an artifact. The one location rule every persisted index,
+    layout, manifest and lake uses."""
+    import hashlib
+
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    return os.path.join(_WAREHOUSE_DIR, f"{stem}_{tag}")
+
 
 _DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
@@ -275,8 +292,7 @@ def _raw_stats_manifest_root(table_dir: str, col: str) -> str:
     import hashlib
 
     tag = hashlib.md5(f"{table_dir}::{col}".encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"raw_stats_{tag}")
+    return os.path.join(_WAREHOUSE_DIR, f"raw_stats_{tag}")
 
 
 def _footer_minmax(fp: str, col: str) -> tuple[int, int] | None:

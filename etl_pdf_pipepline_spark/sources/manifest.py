@@ -1449,6 +1449,16 @@ def read_meta(root: str) -> dict | None:
         return None
 
 
+def meta_matches(root: str, **expected) -> bool:
+    """The one freshness test for a build-once artifact: True when the
+    latest meta record at `root` exists and carries every `expected` key,
+    PRESENT and equal. Presence matters for keys expected as None or
+    False: a record written before the key existed must not pass by
+    absence (ADVICE r9), so it reads as stale and the caller rebuilds."""
+    meta = read_meta(root)
+    return meta is not None and all(k in meta and meta[k] == v for k, v in expected.items())
+
+
 def vacuum(root: str, keep_versions: int = 2) -> list[str]:
     """Delete data files referenced by NO kept manifest (and the expired
     manifests themselves). keep_versions=2 keeps the current and one

@@ -26,7 +26,6 @@ append-only lake table partition-compactable like any other."""
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -35,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import _INCR_ORACLE, lsh_band_keys, persist_lsh_band_index
 from ..registry import query
+from ..sources.catalog import warehouse_path
 
 _SCHEMA_CACHE: dict[tuple[int, str], object] = {}
 
@@ -75,9 +75,7 @@ def streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_id", "band_key", F.col("doc_id").alias("dup_id")
     )
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    base = os.path.join(repo_root, "spark-warehouse", f"stream_neardup_{tag}")
+    base = warehouse_path(sf_dir, "stream_neardup")
     shutil.rmtree(base, ignore_errors=True)  # fresh deterministic run per gate
     out = os.path.join(base, "decisions")
 

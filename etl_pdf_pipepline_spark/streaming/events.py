@@ -34,6 +34,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..plans.partitioned import DAY_ROLLUP_ORACLE as _DAY_ROLLUP_ORACLE
 from ..registry import query
+from ..sources.catalog import warehouse_path
 
 SESSION_GAP_MS = 30 * 60 * 1000
 
@@ -505,16 +506,12 @@ def streaming_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     not duplicate data — asserted in tests/test_streaming.py); appends
     are partition-local so a continuous deployment compacts per-day
     directories without touching the stream."""
-    import hashlib
-    import os
     import shutil
 
     from ..functions.money import cents as _cents
     from ..plans.partitioned import TARGET_DAY
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    base = os.path.join(repo_root, "spark-warehouse", f"stream_events_lake_{tag}")
+    base = warehouse_path(sf_dir, "stream_events_lake")
     shutil.rmtree(base, ignore_errors=True)  # fresh deterministic ingest per gate run
 
     ev = stream_events(spark, sf_dir).withColumn("event_date", F.to_date("ts"))
@@ -561,16 +558,13 @@ def streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebases on a lost CAS — continuous ingest runs beside CDC MERGE and
     OPTIMIZE without conflict classes; per-batch cost is O(batch files)
     staging + one manifest link; snapshot reads stay O(manifest)."""
-    import hashlib
     import shutil
 
     from ..functions.money import cents as _cents
     from ..plans.partitioned import TARGET_DAY
     from ..sources.manifest import append_commit, read_snapshot
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    base = os.path.join(repo_root, "spark-warehouse", f"stream_events_vlake_{tag}")
+    base = warehouse_path(sf_dir, "stream_events_vlake")
     shutil.rmtree(base, ignore_errors=True)  # fresh deterministic ingest per gate run
     root = os.path.join(base, "table")
 
@@ -633,7 +627,6 @@ def streaming_cdc_dv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast anti-join whose right side is the total outstanding DV
     rows — bounded by purge cadence (purge_deletes folds them in as a
     rows_preserved rewrite off the hot path)."""
-    import hashlib
     import shutil
 
     from ..functions.money import cents as _cents
@@ -646,9 +639,7 @@ def streaming_cdc_dv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    base = os.path.join(repo_root, "spark-warehouse", f"stream_events_dvlake_{tag}")
+    base = warehouse_path(sf_dir, "stream_events_dvlake")
     shutil.rmtree(base, ignore_errors=True)  # fresh deterministic ingest per gate run
     root = os.path.join(base, "table")
     src = os.path.join(base, "src")

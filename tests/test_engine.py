@@ -87,6 +87,29 @@ def test_unknown_non_numeric_id_runs_no_job(spark):
         assert _jobs(spark, f"test-not-found-{bad}", lookup)[1] == 0
 
 
+def test_image_endpoints_serve_only_live_canonical_ids(spark):
+    """Images follow the documents they belong to: a deleted document's
+    image is gone from every image endpoint (the reference's M2 delete
+    cascade), and a non-canonical id such as "img-00" is not an alias of
+    "img-0". Its own engine: the delete is a session delta of this one."""
+    eng = SparkEngine(spark, SF_SMALL)
+    assert eng.get_image("img-0")["document_id"] == "0"
+    assert eng.get_image_file("img-0")
+    for bad in ("img-00", "img-+0"):
+        with pytest.raises(NotFound):
+            eng.get_image(bad)
+        with pytest.raises(NotFound):
+            eng.get_image_file(bad)
+    eng.delete_document("0")
+    with pytest.raises(NotFound):
+        eng.get_document_images("0")
+    with pytest.raises(NotFound):
+        eng.get_image("img-0")
+    with pytest.raises(NotFound):
+        eng.get_image_file("img-0")
+    assert eng.get_image("img-3")["document_id"] == "3"
+
+
 def test_title_filter_keeps_corpus_wide_scores(spark):
     """BM25 statistics stay corpus-wide under a title filter, as in the
     reference, whose filter is a `where` on a search over the whole index."""

@@ -98,39 +98,40 @@ def test_ensure_ivf_after_extend_serves_without_rebuild(
 
 
 def test_ensure_ivf_rebuilds_on_legacy_meta_without_variant_keys(
-    spark, growing_corpus
+    spark, growing_corpus, monkeypatch
 ):
     """ADVICE r9: a LEGACY meta record (pre-variant persist wrote only
     source_signature — no exclude_vec_id/partial keys) must NOT be
     served as a fresh full index: key absence means unknown build
     variant, and a surviving partial index would otherwise serve as
-    full. Absent keys → rebuild."""
+    full. Absent keys → rebuild. Two inputs: the float IVF index (record
+    without exclude_vec_id and partial) and the int8 IVF layout (record
+    without partial)."""
     from etl_pdf_pipepline_spark.operators import similarity as sim
     from etl_pdf_pipepline_spark.sources.manifest import read_meta, update_meta
 
-    path = sim.ensure_ivf_index(spark, growing_corpus)
+    sig = table_stat_signature(growing_corpus, ("embeddings",))
+    cases = [
+        (sim.ensure_ivf_index, "persist_ivf_index", {"exclude_vec_id": None, "partial": False}),
+        (sim.ensure_ivf_int8, "_write_int8_codes", {"partial": False}),
+    ]
+    paths = []
     try:
-        sig = table_stat_signature(growing_corpus, ("embeddings",))
-
-        def strip_variant(current):
-            return {"source_signature": sig}  # the legacy record shape
-
-        update_meta(path, strip_variant)
-        calls = []
-        real = sim.persist_ivf_index
-        sim_persist = lambda *a, **k: (calls.append(1), real(*a, **k))[1]  # noqa: E731
-        try:
-            sim.persist_ivf_index, orig = sim_persist, sim.persist_ivf_index
-            # (direct attr swap: monkeypatch-free so the finally below
-            # restores even if the assert throws)
-            assert sim.ensure_ivf_index(spark, growing_corpus) == path
-        finally:
-            sim.persist_ivf_index = real
-        assert calls == [1], "legacy variant-less meta must force a rebuild"
-        meta = read_meta(path)
-        assert meta["partial"] is False and meta["exclude_vec_id"] is None
+        for ensure, builder, variant in cases:
+            path = ensure(spark, growing_corpus)
+            paths.append(path)
+            update_meta(path, lambda current: {"source_signature": sig})  # the legacy shape
+            calls = []
+            real = getattr(sim, builder)
+            with monkeypatch.context() as m:
+                m.setattr(sim, builder, lambda *a, **k: (calls.append(1), real(*a, **k))[1])
+                assert ensure(spark, growing_corpus) == path
+            assert calls == [1], f"{ensure.__name__}: legacy variant-less meta must force a rebuild"
+            meta = read_meta(path)
+            assert {k: meta[k] for k in variant} == variant
     finally:
-        shutil.rmtree(path, ignore_errors=True)
+        for path in paths:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def test_ensure_lsh_after_extend_serves_without_rebuild(

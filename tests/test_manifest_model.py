@@ -24,11 +24,13 @@ from pyspark.sql import types as T
 
 from etl_pdf_pipepline_spark.sources.manifest import (
     append_commit,
+    commit_meta,
     delete_commit,
     init_versioned_lake,
     latest_version,
     maintain_lake,
     merge_commit,
+    meta_matches,
     optimize_commit,
     purge_deletes,
     read_snapshot,
@@ -371,3 +373,23 @@ def test_dv_optimize_cdf_triple_interleaving(spark, tmp_path_factory):
             ("dv_delete", 0, 0),
         ],
     )
+
+
+def test_meta_matches_needs_every_expected_key_present_and_equal(tmp_path):
+    """The one freshness test of the build-once artifacts: the latest
+    meta record must carry every expected key, present and equal."""
+    root = str(tmp_path / "artifact")
+    assert not meta_matches(root)  # no record
+    assert not meta_matches(root, source_signature="s1")
+    commit_meta(root, {"source_signature": "s1", "n": 3})
+    assert meta_matches(root)
+    assert meta_matches(root, source_signature="s1")  # extra keys ignored
+    assert meta_matches(root, source_signature="s1", n=3)
+    # absent keys never match, not even when expected as None or False
+    assert not meta_matches(root, source_signature="s1", exclude_vec_id=None)
+    assert not meta_matches(root, source_signature="s1", partial=False)
+    assert not meta_matches(root, source_signature="s2")  # wrong value
+    assert not meta_matches(root, source_signature="s1", n=4)
+    commit_meta(root, {"source_signature": "s2", "exclude_vec_id": None, "partial": False})
+    assert not meta_matches(root, source_signature="s1")  # only the latest record counts
+    assert meta_matches(root, source_signature="s2", exclude_vec_id=None, partial=False)

@@ -136,10 +136,8 @@ def test_streaming_maintenance_matches_batch_and_is_multi_batch(spark):
     flat table, and the drain must have genuinely run build + >=3
     incremental refreshes (one manifest version per micro-batch)."""
     from etl_pdf_pipepline_spark.functions.money import cents as _cents
-    from etl_pdf_pipepline_spark.plans.matview import (
-        _warehouse_path,
-        streaming_rollup_maintenance,
-    )
+    from etl_pdf_pipepline_spark.plans.matview import streaming_rollup_maintenance
+    from etl_pdf_pipepline_spark.sources.catalog import warehouse_path
 
     got = streaming_rollup_maintenance(spark, SF)
     ev = load_table(spark, SF, "events").withColumn("event_date", F.to_date("ts"))
@@ -154,7 +152,7 @@ def test_streaming_maintenance_matches_batch_and_is_multi_batch(spark):
         .orderBy("event_date", "event_type")
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
-    view_root = os.path.join(_warehouse_path(SF, "events_stream_mv"), "view")
+    view_root = os.path.join(warehouse_path(SF, "events_stream_mv"), "view")
     assert latest_version(view_root) >= 4  # v1 build + one refresh per later batch
 
 
