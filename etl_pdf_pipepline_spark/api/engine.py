@@ -75,6 +75,13 @@ class BadRequest(ValueError):
     """Raised for invalid request input (HTTP 400)."""
 
 
+def _check_limit(limit: int) -> None:
+    """A negative limit is the caller's error: Spark rejects LIMIT -1
+    and a list slice [:-1] would silently drop the last item."""
+    if limit < 0:
+        raise BadRequest(f"Invalid limit: {limit}. Use 0 or more")
+
+
 def _lake_filename(doc_id: Column) -> Column:
     """A lake document's filename, the input of its title."""
     return F.concat("source", F.lit("_report_"), doc_id, F.lit(".pdf"))
@@ -243,6 +250,7 @@ class SparkEngine:
             mode_e = SearchMode(mode)
         except ValueError:
             raise BadRequest(f"Invalid search mode: {mode}. Use: vector, hybrid, keyword")
+        _check_limit(limit)
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise BadRequest("Empty query")
@@ -330,6 +338,7 @@ class SparkEngine:
     def list_documents(self, status: str | None = None, limit: int = 100) -> list[dict[str, Any]]:
         if status is not None and status not in {"completed", "failed", "pending", "processing"}:
             raise BadRequest(f"Invalid status: {status}")
+        _check_limit(limit)
         out: list[dict[str, Any]] = []
         if status in (None, "completed"):
             rows = (
@@ -445,6 +454,7 @@ class SparkEngine:
     # ---------------------------------------------------------------- chunks
 
     def get_document_chunks(self, document_id: str, limit: int = 100) -> list[dict[str, Any]]:
+        _check_limit(limit)
         doc = self._doc_row(document_id)
         chunks = chunk_text(doc.get("text") or "")[:limit]
         return [

@@ -64,22 +64,6 @@ def title_from_filename(filename: Column | str) -> Column:
 # /root/reference/src/extract/pymupdf_extractor.py:173-205) ---------------
 
 
-def chars_per_page(text: Column, page_count: Column) -> Column:
-    return text_len(text) / F.greatest(page_count, F.lit(1))
-
-
-def text_len(text: Column) -> Column:
-    return F.length(text)
-
-
-def avg_word_length(text: Column) -> Column:
-    # Σ token lengths == length of the text with all whitespace removed
-    # (tokens are exactly the non-whitespace runs), which keeps the whole
-    # expression in codegen instead of an interpreted F.aggregate fold.
-    total = F.length(F.regexp_replace(text, r"\s+", ""))
-    return total / F.greatest(F.size(tokens(text)), F.lit(1))
-
-
 def whitespace_ratio(text: Column) -> Column:
     ws = F.length(F.regexp_replace(text, r"\S", ""))
     return ws / F.greatest(F.length(text), F.lit(1))

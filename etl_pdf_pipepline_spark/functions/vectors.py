@@ -164,59 +164,22 @@ def cosine_scores_pandas(query_vec: list[float]):
     return score
 
 
-def cosine_topk_pandas(df, vec_col: str, query_vec: list[float], k: int, id_col: str = "vec_id"):
-    """Vectorized scorer — the scale path for wide embeddings.
-
-    zip_with/aggregate HOFs are interpreted per element (fine at dim 64 /
-    small corpora); for dim ≥ 512 at corpus scale, one Arrow batch into
-    numpy turns the whole partition's scoring into a single BLAS matmul.
-    Same scores as the Arrow tier: rounding happens INSIDE the UDF via
-    round_half_away, so the pandas and mapInArrow tiers agree even at .5
-    decimal boundaries (Spark's F.round would diverge there — see
-    round_half_away), keeping the cross-tier equality test exact."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @pandas_udf(DoubleType())
-    def score(vecs: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(round_half_away(sims))
-
-    return (
-        df.select(id_col, score(F.col(vec_col)).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-@pandas_udf(DoubleType())
-def pair_cosine_pandas(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """Vectorized cosine over row-aligned vector PAIRS (similarity
-    self-joins). One Arrow batch → two stacked float64 matrices → a
-    single fused numpy pass per partition; the interpreted
-    zip_with/aggregate fold costs ~64 expression evaluations per pair,
-    which is the bottleneck when the pair count is quadratic in LSH
-    bucket occupancy."""
-    a = np.vstack([np.asarray(v, dtype=np.float64) for v in va])
-    b = np.vstack([np.asarray(v, dtype=np.float64) for v in vb])
-    denom = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = np.where(denom != 0.0, (a * b).sum(axis=1) / denom, np.nan)
-    # Arrow ships NaN as NaN (not null) — callers filtering on a threshold
-    # must drop NaN explicitly (Spark's NaN >= t is true; see cosine()).
-    return pd.Series(sims)
-
-
 @pandas_udf(DoubleType())
 def pair_cosine_rounded_pandas(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """pair_cosine_pandas with round_half_away(·, 4) applied INSIDE the
-    UDF, for callers whose output is hash-compared against a DuckDB
-    round() oracle: Spark's F.round (BigDecimal shortest-decimal) diverges
-    from DuckDB at .5 decimal boundaries, round_half_away does not — so
-    SQL-facing pair scorers round here instead of wrapping in F.round,
-    and all scorer tiers (Arrow, single-query pandas, pair pandas) share
-    one rounding rule."""
+    """Vectorized cosine over row-aligned vector PAIRS (similarity
+    self-joins), rounded with round_half_away(·, 4). One Arrow batch →
+    two stacked float64 matrices → a single fused numpy pass per
+    partition; the interpreted zip_with/aggregate fold costs ~64
+    expression evaluations per pair, which is the bottleneck when the
+    pair count is quadratic in LSH bucket occupancy.
+
+    The rounding happens INSIDE the UDF because the output is
+    hash-compared against a DuckDB round() oracle: Spark's F.round
+    (BigDecimal shortest-decimal) diverges from DuckDB at .5 decimal
+    boundaries, round_half_away does not. Zero-norm pairs score NaN —
+    Arrow ships NaN as NaN (not null), so callers filtering on a
+    threshold must drop NaN explicitly (Spark's NaN >= t is true; see
+    cosine())."""
     a = np.vstack([np.asarray(v, dtype=np.float64) for v in va])
     b = np.vstack([np.asarray(v, dtype=np.float64) for v in vb])
     denom = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)

@@ -199,41 +199,3 @@ def chunk_documents(
         .select("document_id", *carry, "c.*")
     )
 
-
-# --------------------------------------------------------------------------
-# Native Python UDTF form (Spark 4): the same 1→N chunker as a lateral-join
-# table function. Equivalent to the pandas-UDF+explode path above; exists
-# because a UDTF is the direct expression of the reference's UDTF-shaped
-# stages (SURVEY.md §2.10) and composes in SQL:
-#   SELECT c.* FROM documents, LATERAL chunk_udtf(doc_id, text) c
-# The pandas path stays the default — Arrow batching beats the UDTF's
-# row-at-a-time emit for bulk chunking; the UDTF is the SQL-surface form.
-# --------------------------------------------------------------------------
-
-from pyspark.sql.functions import udtf  # noqa: E402
-
-
-@udtf(returnType=(
-    "document_id string, text string, section_h1 string, section_h2 string, "
-    "section_h3 string, is_section_start boolean, token_count int, "
-    "chunk_index int, total_chunks int"
-))
-class ChunkUDTF:
-    def eval(self, document_id: str, text: str):
-        for c in chunk_text(text or ""):
-            yield (
-                document_id,
-                c["text"],
-                c["section_h1"],
-                c["section_h2"],
-                c["section_h3"],
-                c["is_section_start"],
-                c["token_count"],
-                c["chunk_index"],
-                c["total_chunks"],
-            )
-
-
-def register_chunk_udtf(spark) -> None:
-    """Expose the chunker to SQL as `chunk_udtf` (lateral-join table fn)."""
-    spark.udtf.register("chunk_udtf", ChunkUDTF)

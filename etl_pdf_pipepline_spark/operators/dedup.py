@@ -41,7 +41,7 @@ _INCR_ORACLE.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -61,24 +61,6 @@ SHINGLE = 3  # word-shingle width
 MH_P = 2147483647  # 2^31 - 1
 MH_A = [15485863, 32452843, 49979687, 67867967, 86028121, 104395301, 122949823, 141650939]
 MH_B = [377424577, 1877850533, 1085273731, 1406367907, 701925941, 1985772143, 259261057, 1644482837]
-
-
-def word_shingles(text_col: Column | str, width: int = SHINGLE) -> Column:
-    """Word w-shingles as an array; whole token string when < w tokens.
-
-    Array-valued form for composition/tests. The hot path
-    (`shingle_rows`) avoids this expression: a per-shingle interpreted
-    lambda (transform's slice+concat per element) measured ~5× slower
-    than exploding the arrays_zip of w shifted slices, which does w
-    native slices per DOCUMENT and leaves concat_ws on the codegen
-    path per row."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    shingled = F.transform(
-        F.sequence(F.lit(1), n - (width - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, width)),
-    )
-    return F.when(n >= width, shingled).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
 def shingle_rows(df: DataFrame, id_col: str, text_col: str, width: int = SHINGLE) -> DataFrame:
@@ -563,12 +545,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap = max(1, int(MAX_DF_FRAC * n_docs))
     # r13: the whole query — tokenize, window DF cap, term self-join,
     # Jaccard, top-20 — is one spark.sql round-trip (guide §1; op-by-op
-    # construction profiled ~0.14 s/call at sf0.1). Same tree as
-    # token_jaccard_pairs(docs, max_df_count=cap) + orderBy/limit, which
-    # tests/test_dedup.py still exercises directly: tokens() is the
-    # regexp-trim + split + empty-case CASE verbatim, the DF count rides
-    # the same term-partitioned window, AQE still picks the join
-    # strategies (no hints either way).
+    # construction profiled ~0.14 s/call at sf0.1). The tokenizer is
+    # functions.text.tokens() verbatim (regexp-trim + split + empty-case
+    # CASE), the DF count is a window over the same term-partitioned
+    # exchange the self-join reuses, and AQE picks the join strategies
+    # (no hints either way).
     return spark.sql(
         f"""
         WITH terms AS (
@@ -598,68 +579,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         LIMIT 20
         """,
         docs=load_table(spark, sf_dir, "documents"),
-    )
-
-
-def token_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_df_frac: float = MAX_DF_FRAC,
-    max_df_count: int | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard) over the DF-capped token vocabulary.
-
-    r12 plan shape: the DF cap is applied with a count-over-window on the
-    SAME term-partitioned exchange the pair self-join needs anyway (the
-    old groupBy(term)+left_semi shape tokenized the corpus twice and
-    added a second term shuffle for the semi probe; the window adds a
-    per-partition sort but removes a whole pass — and the self-join
-    below reuses the exchange). `max_df_count`, when given, is the cap
-    as a driver-side literal (callers memoize it per table signature via
-    table_scalar_cached) — otherwise one single-row aggregate is
-    broadcast-crossed in, which costs an extra broadcast job per call."""
-    terms = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(distinct_tokens(text_col)).alias("term")
-    )
-    w_term = Window.partitionBy("term")
-    with_df = terms.withColumn("df", F.count("*").over(w_term))
-    if max_df_count is not None:
-        kept = with_df.filter(F.col("df") <= F.lit(int(max_df_count))).drop("df")
-    else:
-        max_df = docs.agg(
-            F.greatest(F.lit(1), F.floor(F.lit(max_df_frac) * F.count("*"))).alias("max_df")
-        )
-        kept = (
-            with_df.crossJoin(F.broadcast(max_df))
-            .filter(F.col("df") <= F.col("max_df"))
-            .drop("df", "max_df")
-        )
-    sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = kept.alias("a")
-    b = kept.alias("b")
-    inter = (
-        a.join(b, (F.col("a.term") == F.col("b.term")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        # No broadcast hint: `sizes` is per-doc (corpus-sized when callers skip
-        # a pre-filter), so a forced broadcast here would be the same shape as
-        # the r5 keeper-table bug. AQE still picks broadcast at gate scale.
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("sa.n") + F.col("sb.n") - F.col("n_inter")),
-                4,
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -1173,92 +1092,6 @@ def extend_components(
     old_label_ids = base_labels.select(F.col("label").alias("id")).distinct()
     fresh_out = q_labels.join(old_label_ids, "id", "left_anti")
     return base_out.unionByName(fresh_out)
-
-
-def cc_labels_path(sf_dir: str) -> str:
-    return warehouse_path(sf_dir, "cc_labels")
-
-
-def persist_cc_labels(spark: SparkSession, sf_dir: str, exclude_mod: int = 20) -> str:
-    """Materialize the near-dup component labels for the corpus slice the
-    band index covers (doc_id % exclude_mod != 0 — the same build
-    contract as persist_lsh_band_index, because labels are DERIVED from
-    that index's bands) with the standard CAS-committed freshness
-    record. Labels are the smallest artifact in the lifecycle — two
-    longs per doc in ≥1 pair — but the costliest to derive (the
-    iterative closure), which is exactly the build-once/extend-marginal
-    profile."""
-    path = cc_labels_path(sf_dir)
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % exclude_mod != 0
-    )
-    labels = connected_components(
-        banded_pairs(lsh_band_keys(docs)).select("doc_a", "doc_b").distinct()
-    )
-    labels.write.mode("overwrite").parquet(path)
-    from ..sources.manifest import commit_meta
-
-    commit_meta(
-        path,
-        {"source_signature": _docs_signature(sf_dir), "exclude_mod": exclude_mod},
-    )
-    return path
-
-
-def ensure_cc_labels(spark: SparkSession, sf_dir: str, exclude_mod: int = 20) -> str:
-    """Serve-or-build for the persisted component labels — the fourth
-    maintained artifact completing the lifecycle symmetry (bands:
-    ensure_lsh_band_index; IVF: ensure_ivf_index; BM25: ensure_index).
-    Reuse while the freshness record matches the documents table and
-    the build contract (manifest.meta_matches); rebuild (re-close)
-    otherwise."""
-    from ..sources.manifest import meta_matches
-
-    path = cc_labels_path(sf_dir)
-    if meta_matches(path, source_signature=_docs_signature(sf_dir), exclude_mod=exclude_mod):
-        return path
-    return persist_cc_labels(spark, sf_dir, exclude_mod=exclude_mod)
-
-
-def extend_cc_labels(
-    spark: SparkSession,
-    delta_bands: DataFrame,
-    band_index_path: str,
-    path: str,
-    source_signature: str | None = None,
-) -> None:
-    """O(delta + affected) update of the persisted labels when a delta
-    is admitted: run extend_components' quotient closure against the
-    persisted BAND INDEX (the corpus side never re-bands) and the
-    persisted labels, then publish the updated label table and
-    CAS-advance the freshness record in the same logical commit (the
-    r10 extender contract — without the record advance, the next
-    ensure_cc_labels would re-close the corpus, the exact economics
-    defect the other three families had). The label table is rewritten
-    wholesale — it is the tiny artifact (two longs per paired doc), so
-    the rewrite is O(labels), not O(corpus text); the expensive part
-    (the closure) runs only over the quotient. Written to a sibling dir
-    + two-rename swap so readers never see a half-written table.
-    Contract: delta doc_ids are NEW and the caller extends the band
-    index with the same delta in the same maintenance pass (labels and
-    bands must describe the same corpus)."""
-    from ..sources.manifest import commit_meta, read_meta
-    from ..sources.sinks import swap_directory
-
-    # The freshness record lives INSIDE the label dir (path/_manifests)
-    # and the two-rename swap replaces the dir wholesale — carry the
-    # record across: read before, re-publish after (in the new dir the
-    # chain restarts at v1; read_meta only ever reads the latest).
-    carried = dict(read_meta(path) or {"exclude_mod": None})
-    old = spark.read.parquet(path).localCheckpoint(eager=True)
-    base_bands = spark.read.parquet(band_index_path)
-    updated = extend_components(spark, old, base_bands, delta_bands)
-    tmp = path + "__extending"
-    updated.write.mode("overwrite").parquet(tmp)
-    swap_directory(path, tmp)
-    if source_signature is not None:
-        carried["source_signature"] = source_signature
-    commit_meta(path, carried)
 
 
 @query("dedup_cc_incremental", oracle=_CC_ORACLE)
@@ -1909,52 +1742,6 @@ def signatures_servable(spark: SparkSession, sf_dir: str, family: str) -> bool:
     )
 
 
-def extend_lsh_band_index(
-    spark: SparkSession,
-    delta_docs: DataFrame,
-    path: str,
-    source_signature: str | None = None,
-) -> None:
-    """O(delta) extension of the persisted band index with NEWLY ADMITTED
-    documents — the band-side twin of similarity.extend_ivf_index and
-    bm25.extend_index (the admission loop's missing write half: check the
-    delta against the index via _delta_admission, admit the non-dups,
-    then APPEND their bands so tomorrow's delta is checked against them
-    too). Bands only the delta (its own shingle/minhash cost, no corpus
-    rescan) and appends into the band_id-partitioned layout, so the
-    (band_id, band_key) directory pruning the admission join relies on
-    keeps working; each extend adds at most one file per band directory
-    (compaction folds them back, the standard lake-maintenance pass).
-
-    `source_signature` is the post-ingest stat signature of the
-    documents table this extension brings the index up to date with.
-    When given, the freshness record is CAS-advanced in the same logical
-    commit as the band append — otherwise the next ensure_lsh_band_index
-    sees a stale signature and pays the full O(corpus) re-banding the
-    extend exists to avoid (the r9 economics defect). `exclude_mod` in
-    the record is PRESERVED: it names the build contract (which slice of
-    the source is indexed), and the caller extending must hand in a
-    delta filtered by the same contract. Contract: delta doc_ids are NEW
-    (same as extend_index — re-sending an id double-inserts its bands).
-    No-rebuild-after-extend is pinned by tests/test_layout_freshness.py."""
-    (
-        lsh_band_keys(delta_docs)
-        .repartition(F.col("band_id"))
-        .write.partitionBy("band_id")
-        .mode("append")
-        .parquet(path)
-    )
-    if source_signature is not None:
-        from ..sources.manifest import update_meta
-
-        def advance(current: dict | None) -> dict:
-            out = dict(current or {"exclude_mod": None})
-            out["source_signature"] = source_signature
-            return out
-
-        update_meta(path, advance)
-
-
 _INCR_ORACLE = f"""
     WITH {_LSH_CTE_BODY}
     SELECT a.doc_id AS doc_id,
@@ -2135,8 +1922,7 @@ def docs_lake_cdf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the daemon reads two manifest JSONs + only the
     ingest's new files (O(delta) I/O); banding and the (band_id,
     band_key) index join are the adjudicated near_dup_admission shape;
-    the extension appends at most one file per band directory
-    (compaction folds them back)."""
+    the extension appends at most one file per band directory."""
     from ..sources.manifest import (
         append_commit,
         changed_files,

@@ -173,68 +173,6 @@ def decode_media(df: DataFrame, codec=decode_image_fake) -> DataFrame:
     return df.mapInPandas(batches, DECODED_SCHEMA)
 
 
-# Output contract of sample_frames — kept as the declared schema even
-# though the JVM rewrite produces it by construction (tests assert it).
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("offset_bytes", T.LongType()),
-        T.StructField("frame_digest", T.StringType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame, frames_per_clip: int = 4, digest: str = "sha256"
-) -> DataFrame:
-    """1→N frame sampling over video binaries: evenly spaced byte offsets
-    stand in for timestamps; the per-frame 'decode' is a digest of the
-    64-byte window at the offset (deterministic fake). Fan-out factor is
-    explicit so output volume is input_rows × frames_per_clip by plan.
-
-    Pure JVM column algebra — rewritten from mapInPandas in round 5.
-    The previous form shipped every full video binary across Arrow into
-    Python to hash four 64-byte windows: at sf100 that serialization was
-    the whole cost (27.7 s, 2.31× the DuckDB oracle). Everything the fake
-    computes is expressible scan-side: `transform(sequence(...))` builds
-    the per-clip frame structs (offset arithmetic + sha2-of-substring)
-    against ONE copy of the blob inside whole-stage codegen, and only the
-    tiny {index, offset, digest} structs fan out through explode — the
-    binary itself never leaves the JVM and is pruned before any exchange.
-    (decode_media keeps its mapInPandas form deliberately: it is the
-    documented real-codec seam where Python IS the point.)"""
-    n_total = F.octet_length("content").cast("bigint")
-    # digest choice is a stand-in knob (sha256 | md5): both exist in
-    # DuckDB too, so the oracle can mirror whichever the caller picks.
-    digest_fn = {
-        "sha256": lambda c: F.sha2(c, 256),
-        "md5": F.md5,
-    }[digest]
-
-    def frame(i):
-        off = F.floor((F.col("n_total") * i) / F.lit(frames_per_clip)).cast("bigint")
-        return F.struct(
-            i.cast("int").alias("frame_index"),
-            off.alias("offset_bytes"),
-            digest_fn(
-                F.col("content").substr((off + 1).cast("int"), F.lit(64))
-            ).alias("frame_digest"),
-        )
-
-    # frames_per_clip is a plan-time constant, so the per-frame structs are
-    # built as a STATIC array instead of F.transform over F.sequence: the
-    # higher-order function is interpreted per element (it closes whole-stage
-    # codegen), while a literal array of struct expressions stays inside
-    # codegen end-to-end. Measured sf100 (r7): 4.30 → 3.75 s unsorted.
-    frames_arr = F.array(*[frame(F.lit(i)) for i in range(frames_per_clip)])
-    return (
-        df.select("media_id", n_total.alias("n_total"), "content")
-        .select("media_id", F.explode(frames_arr).alias("f"))
-        .select("media_id", "f.frame_index", "f.offset_bytes", "f.frame_digest")
-    )
-
-
 # --------------------------------------------------------------------------
 # Registered queries
 # --------------------------------------------------------------------------
@@ -409,8 +347,12 @@ def media_decode_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1→N frame sampling (4 frames/clip) over video binaries — the
     fan-out pattern for video pipelines; per-frame digest of the byte
-    window stands in for the frame decode. All-JVM since round 5 (see
-    sample_frames): the binary never crosses into Python.
+    window stands in for the frame decode. All-JVM since round 5: the
+    mapInPandas form before it shipped every full video binary across
+    Arrow into Python to hash four 64-byte windows, and at sf100 that
+    serialization was the whole cost (27.7 s, 2.31× the DuckDB oracle).
+    Now only the tiny {index, offset, digest} structs fan out through
+    explode; the binary never crosses into Python.
 
     UNSORTED since r8: a frame manifest is set-valued — every consumer
     keys on (media_id, frame_index), none on row position — and at lake
@@ -432,9 +374,10 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14: built as ONE spark.sql round-trip (guide §1 — the 4 per-frame
     struct expressions cost ~0.08 s of op-by-op py4j per call, MORE
     than the query's 0.064 s noop execution; the r13 SQL-ification
-    pattern). Same expressions verbatim — static 4-element struct array
-    (codegen-resident, the r7 finding) exploded to rows; equality vs
-    the op-by-op form pinned in tests/test_multimodal.py."""
+    pattern). A static 4-element struct array (codegen-resident: a
+    transform over sequence() is interpreted per element, measured sf100
+    r7 4.30 → 3.75 s) exploded to rows; the offsets and digests are
+    pinned in tests/test_multimodal.py."""
     frames = ", ".join(
         f"named_struct('frame_index', CAST({i} AS INT), "
         f"'offset_bytes', CAST(FLOOR((n_total * {i}) / 4) AS BIGINT), "

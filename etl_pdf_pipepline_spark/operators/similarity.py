@@ -487,8 +487,7 @@ def extend_ivf_index(
     centroid table (delta × k broadcast scoring — no corpus rescan, no
     retraining) and appends into the centroid-partitioned layout, so
     directory-level probe pruning keeps working and each extend adds at
-    most one file per touched cell (periodic compaction folds them
-    back, the standard lake-maintenance pass).
+    most one file per touched cell.
 
     Contract (same as extend_index): delta vec_ids are NEW; centroids
     are intentionally STALE — IVF maintenance everywhere (FAISS,
@@ -512,7 +511,7 @@ def extend_ivf_index(
     preserved from the current record — an extension never changes
     WHAT slice the index covers relative to its build contract, only
     brings it forward in time. No-rebuild-after-extend is pinned by
-    tests/test_layout_freshness.py."""
+    tests/test_index_freshness.py."""
     c = spark.read.parquet(f"{path}/centroids")
     d = delta.select("vec_id", "embedding", as_double("embedding").alias("v"))
     (
@@ -531,50 +530,6 @@ def extend_ivf_index(
             return out
 
         update_meta(path, advance)
-
-
-def compact_ivf_index(spark: SparkSession, path: str) -> int:
-    """Fold an extended IVF layout back to one file per cell: each
-    extend_ivf_index appends a file into every touched centroid
-    directory, and a year of daily ingests turns the nprobe directory
-    reads into hundreds-of-small-files reads. Rewrite =
-    repartition(centroid_id) + partitionBy(centroid_id) into a sibling
-    dir, then the two-rename swap (complete copy on disk at every
-    instant; serialize with readers for the rename window, or adopt the
-    manifest layer). Assignments are untouched — compaction moves
-    bytes, never cell membership. Returns the total data-file count
-    after. Equivalence proven by tests/test_ivf_incremental.py."""
-    return _compact_cell_layout(spark, f"{path}/vectors")
-
-
-def compact_ivf_int8(spark: SparkSession, path: str) -> int:
-    """compact_ivf_index's twin for the quantized layout: fold the files
-    extend_ivf_int8 appended into one per cell. Same swap mechanics,
-    same invariant (bytes move, membership and code values never).
-    Equivalence proven by tests/test_ivf_incremental.py."""
-    return _compact_cell_layout(spark, f"{path}/codes")
-
-
-def _compact_cell_layout(spark: SparkSession, live: str) -> int:
-    import os
-
-    from ..sources.sinks import swap_directory
-
-    tmp = live + "__compacting"
-    (
-        spark.read.parquet(live)
-        .repartition(F.col("centroid_id"))
-        .write.partitionBy("centroid_id")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    swap_directory(live, tmp)
-    n = 0
-    for entry in os.listdir(live):
-        p = os.path.join(live, entry)
-        if entry.startswith("centroid_id=") and os.path.isdir(p):
-            n += sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
-    return n
 
 
 @query("ivf_probe_from_index", oracle=_IVF_PROBE_ORACLE)
@@ -1204,58 +1159,14 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unbounded per-vector listing — no terminal sort (r12 doctrine)
 
 
-def int8_codes_path(sf_dir: str) -> str:
-    """Warehouse location of this corpus's persisted int8 code table,
-    keyed by corpus dir (catalog.warehouse_path)."""
-    return warehouse_path(sf_dir, "int8_codes")
-
-
-def _emb_signature(sf_dir: str) -> str:
-    from ..sources.catalog import table_stat_signature
-
-    return table_stat_signature(sf_dir, ("embeddings",))
-
-
 def _int8_code_table(emb: DataFrame) -> DataFrame:
     """(vec_id, scale, q8) — the quantization projection, shared by the
-    listing query, the ingest-slot builder, and the live fallback."""
+    listing query and the quantized top-k."""
     return (
         emb.select("vec_id", F.expr(as_double_sql("embedding")).alias("v"))
         .withColumn("scale", F.expr("array_max(transform(v, x -> abs(x))) / 127.0D"))
         .select("vec_id", "scale", F.expr(_Q8_SQL).alias("q8"))
     )
-
-
-def ensure_int8_codes(spark: SparkSession, sf_dir: str) -> str:
-    """Serve-or-build for the persisted int8 code table — codes are a
-    pure function of the embeddings, so production computes them ONCE at
-    ingest (the same lifecycle slot as the minhash/simhash signature
-    manifests) and every quantized-serving query reads int8 + one double
-    per row instead of re-projecting the float32 column. Standard CAS
-    meta record carries the embeddings-table stat signature; freshness
-    is manifest.meta_matches."""
-    from ..sources.manifest import commit_meta, meta_matches
-
-    path = int8_codes_path(sf_dir)
-    sig = _emb_signature(sf_dir)
-    if meta_matches(path, source_signature=sig):
-        return path
-    emb = load_table(spark, sf_dir, "embeddings")
-    _int8_code_table(emb).write.mode("overwrite").parquet(path)
-    commit_meta(path, {"source_signature": sig})
-    return path
-
-
-def int8_codes_servable(spark: SparkSession, sf_dir: str) -> bool:
-    """Routing predicate — same contract as dedup.signatures_servable:
-    fresh record required, force_scan_path honored, never builds inside
-    a serving query. Freshness is manifest.meta_matches."""
-    from ..plans.bucketed import scan_forced
-    from ..sources.manifest import meta_matches
-
-    if scan_forced():
-        return False
-    return meta_matches(int8_codes_path(sf_dir), source_signature=_emb_signature(sf_dir))
 
 
 @query(
@@ -1280,21 +1191,10 @@ def ann_cosine_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k over the DEQUANTIZED int8 codes — the serving path of
     the quantized store (quantize → dequantize → cosine), gated against
     a DuckDB oracle running the identical integer pipeline, so the whole
-    quantization round-trip is pinned end-to-end. Routing (r12, same
-    contract as the signature manifests): when this corpus's persisted
-    code table is fresh (ensure_int8_codes — the ingest lifecycle slot),
-    serve it as a memoized columnar read of int8 codes + one double per
-    row (~4× fewer scan bytes than float32); cold corpus or stale record
-    quantizes live from the float column — same oracle either way
-    (tests/test_layout_freshness.py pins served ≡ live). Scoring stays a
-    shuffle-free scored scan + TakeOrderedAndProject, same as
-    ann_cosine_topk."""
-    if int8_codes_servable(spark, sf_dir):
-        from ..sources.catalog import read_parquet_cached
-
-        codes = read_parquet_cached(spark, int8_codes_path(sf_dir))
-    else:
-        codes = _int8_code_table(load_table(spark, sf_dir, "embeddings"))
+    quantization round-trip is pinned end-to-end. The codes are
+    quantized live from the float column. Scoring stays a shuffle-free
+    scored scan + TakeOrderedAndProject, same as ann_cosine_topk."""
+    codes = _int8_code_table(load_table(spark, sf_dir, "embeddings"))
     dq = codes.select("vec_id", F.expr("transform(q8, c -> c * scale)").alias("w"))
     # r13: the dequantized query vector enters as a SQL literal (memoized
     # per embeddings signature) — no broadcast job; see array_lit_sql.

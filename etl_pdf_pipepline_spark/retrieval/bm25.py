@@ -28,6 +28,8 @@ from ..functions.text import tokens
 
 K1 = 1.2
 B = 0.75
+# Postings files per index build or extend (hash-partitioned by term).
+N_BUCKETS = 16
 
 
 def build_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -49,8 +51,6 @@ def bm25_scores(
     id_col: str,
     text_col: str,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Score every document containing ≥1 query term; returns (doc_key, score).
 
@@ -69,7 +69,7 @@ def bm25_scores(
     postings = build_postings(docs, id_col, text_col).cache()
     doc_stats = build_doc_stats(postings).cache()
     _CACHED_INDEXES.append((postings, doc_stats))
-    return _score_postings(postings, doc_stats, query_terms, k1, b)
+    return _score_postings(postings, doc_stats, query_terms)
 
 
 # Every live (cached) index registered here so long-lived sessions (the
@@ -94,8 +94,6 @@ def _score_postings(
     postings: DataFrame,
     doc_stats: DataFrame,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """The live (cached) path's Lucene-style scoring plan: broadcast the
     query-term list, join df-counts/doc-stats/corpus scalars, sum
@@ -122,15 +120,13 @@ def _score_postings(
         .join(doc_stats, "doc_key")
         .crossJoin(F.broadcast(corpus))
         # One JVM-parsed scoring expression (r12) — see _term_score_sql.
-        .withColumn("term_score", F.expr(_term_score_sql(k1, b)))
+        .withColumn("term_score", F.expr(_term_score_sql()))
         .groupBy("doc_key")
         .agg(F.sum("term_score").alias("score"))
     )
 
 
-def _term_score_sql(
-    k1: float, b: float, n: int | None = None, avgdl: float | None = None
-) -> str:
+def _term_score_sql(n: int | None = None, avgdl: float | None = None) -> str:
     """The Lucene-style per-posting score as ONE SQL string — parsed
     JVM-side in a single py4j round-trip instead of built as ~15 chained
     Column calls (the r12 construction-floor fix; the parsed tree and its
@@ -144,8 +140,8 @@ def _term_score_sql(
     avgdl_sql = "avgdl" if avgdl is None else f"{float(avgdl)!r}D"
     return (
         f"log(1.0D + ({n_sql} - df + 0.5D) / (df + 0.5D)) "
-        f"* (tf * {k1 + 1.0!r}D) "
-        f"/ (tf + {k1!r}D * ({1.0 - b!r}D + {b!r}D * dl / {avgdl_sql}))"
+        f"* (tf * {K1 + 1.0!r}D) "
+        f"/ (tf + {K1!r}D * ({1.0 - B!r}D + {B!r}D * dl / {avgdl_sql}))"
     )
 
 
@@ -176,7 +172,7 @@ def bm25_topk(
 # --------------------------------------------------------------------------
 
 
-def _write_term_df(postings: DataFrame, path: str, mode: str, n_buckets: int) -> None:
+def _write_term_df(postings: DataFrame, path: str, mode: str) -> None:
     """Materialize the per-term document frequency — Lucene's docFreq,
     stored in the term dictionary rather than recomputed per query.
     Before r13 the serving plan derived df at query time with a SECOND
@@ -191,41 +187,48 @@ def _write_term_df(postings: DataFrame, path: str, mode: str, n_buckets: int) ->
     (
         postings.groupBy("term")
         .agg(F.count("*").alias("df"))
-        .repartition(max(1, n_buckets // 8), "term")
+        .repartition(max(1, N_BUCKETS // 8), "term")
         .sortWithinPartitions("term")
         .write.mode(mode)
         .parquet(f"{path}/term_df")
     )
 
 
-# Driver-side term-df lookups, memoized per (dir, file-stat signature,
-# query-term set): a warm lookup is a dict hit; a cold one is a pyarrow
-# row-group-pruned read of a tiny table — no Spark job either way (the
-# same pattern as corpus_scalars' literal fold).
-_TERM_DF_CACHE: dict[tuple[str, str, frozenset], dict[str, int]] = {}
+# Driver-side term-df lookups, one entry per term_df directory: its
+# file-stat signature and the df of every term looked up under it (0 for
+# a term the index lacks). A warm lookup is a dict read; a cold one reads
+# only the terms the entry lacks, with a pyarrow row-group-pruned read of
+# a tiny table — no Spark job either way (the same pattern as
+# corpus_scalars' literal fold). A rewritten index has a new signature,
+# which replaces the entry, so each index holds one entry.
+_TERM_DF_CACHE: dict[str, tuple[str, dict[str, int]]] = {}
 
 
 def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int]:
-    """{term: df} for the query terms from the index's term dictionary;
-    a missing term_df/ raises (the reader, not a fallback)."""
+    """{term: df} for the query terms from the index's term dictionary,
+    0 for a term it lacks; a missing term_df/ raises (the reader, not a
+    fallback)."""
     from ..sources.catalog import path_stat_signature
 
     d = f"{path}/term_df"
-    key = (d, path_stat_signature(d), frozenset(query_terms))
-    hit = _TERM_DF_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import pyarrow.dataset as pads
+    sig = path_stat_signature(d)
+    cached_sig, known = _TERM_DF_CACHE.get(d, (None, {}))
+    if cached_sig != sig:
+        known = {}
+    missing = sorted(set(query_terms) - known.keys())
+    if missing:
+        import pyarrow.dataset as pads
 
-    terms = sorted(set(query_terms))
-    tbl = pads.dataset(d, format="parquet").to_table(
-        filter=pads.field("term").isin(terms), columns=["term", "df"]
-    )
-    out: dict[str, int] = {}
-    for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-        out[term] = out.get(term, 0) + int(df)
-    _TERM_DF_CACHE[key] = out
-    return out
+        tbl = pads.dataset(d, format="parquet").to_table(
+            filter=pads.field("term").isin(missing), columns=["term", "df"]
+        )
+        # A new dict, published whole: a concurrent lookup never sees, or
+        # adds to, a half-summed entry.
+        known = {**known, **dict.fromkeys(missing, 0)}
+        for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+            known[term] += int(df)
+        _TERM_DF_CACHE[d] = (sig, known)
+    return {t: known[t] for t in query_terms}
 
 
 def persist_index(
@@ -233,11 +236,10 @@ def persist_index(
     id_col: str,
     text_col: str,
     path: str,
-    n_buckets: int = 16,
     source_signature: str | None = None,
 ) -> None:
     """Materialize the index as parquet: postings hash-partitioned by term
-    (repartition(n_buckets, term) + sorted within partitions), the
+    (repartition(N_BUCKETS, term) + sorted within partitions), the
     per-doc length DENORMALIZED into each posting row, the term_df
     dictionary, and the corpus scalars (N, total_dl) in the CAS meta
     record. A query's term lookup then touches only the
@@ -262,10 +264,10 @@ def persist_index(
         # under-weight those terms' idf slightly), never postings rows with
         # no df entry (which would NULL their scores in the literal-df
         # serving plan). Readers sum rows per term, so extends can append.
-        _write_term_df(postings, path, "overwrite", n_buckets)
+        _write_term_df(postings, path, "overwrite")
         (
             postings.join(doc_stats, "doc_key")
-            .repartition(n_buckets, "term")
+            .repartition(N_BUCKETS, "term")
             .sortWithinPartitions("term")
             .write.mode("overwrite")
             .parquet(f"{path}/postings")
@@ -336,7 +338,6 @@ def ensure_index(
     text_col: str,
     path: str,
     source_signature: str,
-    n_buckets: int = 16,
 ) -> str:
     """Serve-or-build for the persisted BM25 index — the FTS face of the
     lifecycle the other maintained artifacts have (ensure_ivf_index,
@@ -348,13 +349,10 @@ def ensure_index(
     stale-index bug this record exists to prevent. Steady-state loop:
     ingest delta → extend_index(..., source_signature=post_ingest_sig) →
     the next ensure_index serves the EXTENDED files with no rebuild
-    (pinned by tests/test_layout_freshness.py)."""
+    (pinned by tests/test_index_freshness.py)."""
     if index_is_current(path, source_signature):
         return path
-    persist_index(
-        docs, id_col, text_col, path,
-        n_buckets=n_buckets, source_signature=source_signature,
-    )
+    persist_index(docs, id_col, text_col, path, source_signature=source_signature)
     return path
 
 
@@ -363,7 +361,6 @@ def extend_index(
     id_col: str,
     text_col: str,
     path: str,
-    n_buckets: int = 16,
     source_signature: str | None = None,
 ) -> None:
     """O(delta) extension of a persisted index with NEW documents — the
@@ -397,10 +394,9 @@ def extend_index(
     Scale posture: the appended files are hash-partitioned by term and
     sorted within partitions like the base files, so the In(term)
     pushdown and row-group pruning that carry the query path keep
-    working; each extend adds n_buckets files (periodic compaction —
-    sinks.compact — folds them back, the standard lake-maintenance
-    pass). Corpus-scalar ordering is crash-safe in the useful direction:
-    postings/doc_stats append first, the scalar record commits last
+    working; each extend adds N_BUCKETS postings files. Corpus-scalar
+    ordering is crash-safe in the useful direction: postings/doc_stats
+    append first, the scalar record commits last
     (atomically, via the manifest CAS — a reader always sees one
     complete record), so a crash mid-extend leaves scores slightly
     UNDER-counting avgdl/n on the new rows rather than referencing
@@ -414,10 +410,10 @@ def extend_index(
         # Delta term-df rows land first (see _write_term_df's crash-order
         # rationale); readers sum rows per term, and delta ids are NEW
         # docs by contract, so delta counts add exactly.
-        _write_term_df(delta_postings, path, "append", n_buckets)
+        _write_term_df(delta_postings, path, "append")
         (
             delta_postings.join(delta_stats, "doc_key")
-            .repartition(n_buckets, "term")
+            .repartition(N_BUCKETS, "term")
             .sortWithinPartitions("term")
             .write.mode("append")
             .parquet(f"{path}/postings")
@@ -452,51 +448,6 @@ def extend_index(
         delta_stats.unpersist()
 
 
-def compact_index(spark, path: str, n_buckets: int = 16) -> dict[str, int]:
-    """Lake-maintenance pass for an extended index: every extend_index
-    call appends up to n_buckets postings files (plus doc_stats files),
-    and the accumulation eventually poisons scan parallelism and listing
-    cost — the standard small-files disease. This folds both tables back
-    to the build-time layout (postings hash-partitioned by term, sorted
-    within partitions, so In(term) pushdown and row-group pruning keep
-    their build-time effectiveness) with the same two-rename swap as
-    sinks.compact: the rewrite lands complete in a sibling dir before
-    any rename, so data is never lost; serialize with readers (or adopt
-    the manifest layer) for the sub-millisecond rename window. Scalars
-    are untouched — compaction moves bytes, never statistics. Returns
-    {table: file_count_after}. Equivalence proven by
-    tests/test_bm25_incremental.py::test_compact_preserves_scores."""
-    import os
-
-    from ..sources.sinks import swap_directory
-
-    out = {}
-    for sub, writer in (
-        (
-            "postings",
-            lambda df: df.repartition(n_buckets, "term").sortWithinPartitions("term"),
-        ),
-        ("doc_stats", lambda df: df.repartition(max(1, n_buckets // 4))),
-        (
-            # Term dictionary: extends append one delta row per (term,
-            # batch); compaction folds them back to one row per term
-            # (sum preserves the reader's per-term-total invariant) in
-            # the build-time layout.
-            "term_df",
-            lambda df: df.groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .repartition(max(1, n_buckets // 8), "term")
-            .sortWithinPartitions("term"),
-        ),
-    ):
-        live = f"{path}/{sub}"
-        tmp = live + "__compacting"
-        writer(spark.read.parquet(live)).write.mode("overwrite").parquet(tmp)
-        swap_directory(live, tmp)
-        out[sub] = sum(1 for f in os.listdir(live) if f.endswith(".parquet"))
-    return out
-
-
 def _sql_str_lit(t: str) -> str:
     """SQL string literal for a spark.sql template: backslash and quote
     escaped for the parser, braces doubled for the template formatter."""
@@ -507,8 +458,6 @@ def _sql_str_lit(t: str) -> str:
 def scored_from_index_sqltext(
     path: str,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
     added: Mapping[str, Mapping[str, int]] | None = None,
     removed: Mapping[int, Mapping[str, int]] | None = None,
 ) -> str:
@@ -538,8 +487,7 @@ def scored_from_index_sqltext(
     if not terms:
         return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false"
     n, total_dl = corpus_scalars(path)
-    term_dfs = _term_df_lookup(path, terms)
-    dfs = {t: term_dfs.get(t, 0) for t in terms}
+    dfs = _term_df_lookup(path, terms)
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
     added, removed = added or {}, removed or {}
     rows = "SELECT " + key_sql + ", term, tf, dl FROM {post} WHERE term IN (" + terms_in + ")"
@@ -562,7 +510,7 @@ def scored_from_index_sqltext(
         rows += " UNION ALL SELECT * FROM VALUES " + ", ".join(values) + " AS up(doc_key, term, tf, dl)"
     avgdl = float(total_dl) / n if n else 0.0
     entries = ", ".join(f"{_sql_str_lit(t)}, {dfs[t]}L" for t in terms)
-    score = _term_score_sql(k1, b, n=n, avgdl=avgdl)
+    score = _term_score_sql(n=n, avgdl=avgdl)
     # NB: literal braces around `post` are load-bearing — this text is
     # passed to spark.sql(..., post=<postings scan>) as a template, never
     # through an f-string.
@@ -578,8 +526,6 @@ def bm25_scores_from_index(
     spark,
     path: str,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(doc_key, score) from a persisted index: no tokenization, no
     corpus scan, no doc-side join — read the posting lists of the query
@@ -610,7 +556,7 @@ def bm25_scores_from_index(
     from ..sources.catalog import read_parquet_cached
 
     return spark.sql(
-        scored_from_index_sqltext(path, query_terms, k1, b),
+        scored_from_index_sqltext(path, query_terms),
         post=read_parquet_cached(spark, f"{path}/postings"),
     )
 
@@ -620,8 +566,6 @@ def bm25_topk_from_index(
     path: str,
     query_terms: list[str],
     k: int,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Top-k by rounded score over the index-served scorer: the whole
     query — scorer + rounded top-k — is one spark.sql round-trip (scan →
@@ -630,7 +574,7 @@ def bm25_topk_from_index(
 
     return spark.sql(
         "SELECT doc_key, round(score, 4) AS score FROM ("
-        + scored_from_index_sqltext(path, query_terms, k1, b)
+        + scored_from_index_sqltext(path, query_terms)
         + ") kw ORDER BY score DESC, doc_key LIMIT " + str(int(k)),
         post=read_parquet_cached(spark, f"{path}/postings"),
     )

@@ -56,24 +56,14 @@ KNOWN_TOPICS = (
 )
 
 
-def rank_by_score(scored: DataFrame, id_col: str = "doc_key") -> DataFrame:
-    """Dense total-order ranking: rounded score desc, id asc. Rounding
-    first turns near-ties (1-ulp cross-engine drift) into exact ties broken
-    deterministically by id.
-
-    The single-partition window here ranks the WHOLE scored set — use
-    only when that set is already small; for top-k consumers use
-    `rank_top`, which bounds the window to k rows."""
-    w = Window.orderBy(F.desc(F.round("score", 4)), F.asc(id_col))
-    return scored.select(id_col, F.row_number().over(w).alias("rank"))
-
-
 def rank_top(scored: DataFrame, k: int, id_col: str = "doc_key") -> DataFrame:
-    """Top-k ranking that scales: TakeOrderedAndProject reduces the set to
-    k rows FIRST (parallel per-partition top-k + merge, never a global
-    sort), then the row_number window runs over just those k. Identical
-    output to `rank_by_score(...).filter(rank <= k)` because the ordering
-    (rounded score desc, id asc) is total."""
+    """Dense total-order top-k ranking: rounded score desc, id asc.
+    Rounding first turns near-ties (1-ulp cross-engine drift) into exact
+    ties broken deterministically by id. It scales: TakeOrderedAndProject
+    reduces the set to k rows FIRST (parallel per-partition top-k + merge,
+    never a global sort), then the row_number window runs over just those
+    k. Because the ordering is total, the ranks equal those of a window
+    over the whole scored set."""
     order = [F.desc(F.round("score", 4)), F.asc(id_col)]
     topk = scored.orderBy(*order).limit(k)
     w = Window.orderBy(*order)
@@ -85,9 +75,8 @@ def rrf_fuse(
     rank_b: DataFrame,
     id_col: str = "doc_key",
     k: int = 10,
-    rrf_k: int = RRF_K,
 ) -> DataFrame:
-    """RRF = Σ sides 1/(rrf_k + rank), missing side contributes 0 — which
+    """RRF = Σ sides 1/(RRF_K + rank), missing side contributes 0 — which
     is exactly a union + sum-by-id, so no join at all. The r1 full-outer
     join form compiled to a SortMergeJoin (Spark has no broadcast
     full-outer for equi-keys); this HashAggregate over ≤2k rows
@@ -95,7 +84,7 @@ def rrf_fuse(
     free. Arithmetic is bit-identical (two-double add is commutative;
     single-side rows sum to themselves vs the old value + 0.0)."""
     contribs = [
-        df.select(F.col(id_col), (1.0 / (F.lit(rrf_k) + F.col("rank"))).alias("contrib"))
+        df.select(F.col(id_col), (1.0 / (F.lit(RRF_K) + F.col("rank"))).alias("contrib"))
         for df in (rank_a, rank_b)
     ]
     fused = (
@@ -131,12 +120,12 @@ def rrf_sql(kw_sql: str, vec_sql: str, depth: int, k: int) -> str:
     )
 
 
-def route_topic(query_text: str, topics: tuple[str, ...] = KNOWN_TOPICS) -> str | None:
+def route_topic(query_text: str) -> str | None:
     """First topic substring-matched in the query — reference
     `_extract_topics` (/root/reference/src/retrieve/hybrid_retriever.py:148-151).
     Driver-side: the topic list is a constant, not data."""
     q = query_text.lower()
-    for t in topics:
+    for t in KNOWN_TOPICS:
         if t in q:
             return t
     return None

@@ -201,24 +201,3 @@ def extract_markdown(
     )
     return df.select("path", "content", *carry).mapInPandas(run, schema)
 
-
-def read_markdown_checkpoints(spark: SparkSession, directory: str) -> DataFrame:
-    """S7 raw form: ingest reference-style markdown checkpoint files
-    (`data/markdown/{id}.md`, YAML-ish frontmatter written by
-    /root/reference/src/extract/pymupdf_extractor.py:150-171 and parsed
-    back by src/transform/markdown_parser.py:33-102). The parquet stage
-    table is this engine's native checkpoint; this reader exists so
-    reference-written .md trees ingest directly. Frontmatter parsing is
-    all JVM expressions: regexp block split + str_to_map — no Python."""
-    raw = (
-        spark.read.option("pathGlobFilter", "*.md")
-        .text(directory, wholetext=True)
-        .withColumn("path", F.input_file_name())
-    )
-    fm_block = F.regexp_extract("value", r"(?s)\A---\n(.*?)\n---\n", 1)
-    body = F.regexp_replace("value", r"(?s)\A---\n.*?\n---\n", "")
-    return raw.select(
-        "path",
-        F.str_to_map(fm_block, F.lit("\n"), F.lit(": ")).alias("frontmatter"),
-        body.alias("markdown"),
-    )

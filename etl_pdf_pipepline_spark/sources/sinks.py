@@ -70,8 +70,7 @@ def merge_partitions(
     partitions — a reader racing the loop can see day A new and day B
     old. That cross-partition atomicity is exactly what table-format
     manifests (Delta/Iceberg MERGE, sources/manifest.py here) add; on a
-    manifest-less parquet lake this is the honest contract, same as
-    compact()'s documented window."""
+    manifest-less parquet lake this is the honest contract."""
     import os
     import shutil
     import uuid
@@ -118,43 +117,3 @@ def merge_partitions(
             shutil.rmtree(os.path.join(lake_path, entry))
             swapped.append(entry)
     return swapped
-
-
-def swap_directory(live: str, tmp: str) -> None:
-    """The two-rename directory swap every rewrite-style maintenance pass
-    here uses (compact, compact_index, compact_ivf_index): `tmp` must be
-    a COMPLETE replacement already on disk. Data is never lost — a full
-    copy exists at every instant — but POSIX has no atomic directory
-    exchange, so there IS a sub-millisecond window between the renames
-    where `live` is absent; serialize with readers, or use the manifest
-    layer whose pointer swap is atomic. A failure after the first rename
-    rolls the original back."""
-    import os
-    import shutil
-
-    old = live.rstrip("/") + "__old"
-    os.rename(live, old)
-    try:
-        os.rename(tmp, live)
-    except Exception:
-        os.rename(old, live)  # roll back: restore the original directory
-        raise
-    shutil.rmtree(old)
-
-
-def compact(spark, path: str, target_partitions: int) -> None:
-    """Small-files compaction: rewrite a table directory into
-    `target_partitions` files. Long-running ingest (especially streaming
-    micro-batches) accretes small files that poison scan parallelism and
-    NameNode/listing cost; periodic coalesce-rewrite is the standard
-    lake-maintenance pass. Uses repartition (full shuffle) rather than
-    coalesce so output files are size-balanced, not input-lineage-skewed.
-
-    Swap contract: see swap_directory (rewrite lands complete in a
-    sibling dir first; serialize with readers for the rename window, or
-    use a table format whose manifest swap is atomic — Delta OPTIMIZE —
-    which is also the right tool beyond local filesystems)."""
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
-    df.repartition(target_partitions).write.mode("overwrite").parquet(tmp)
-    swap_directory(path, tmp)

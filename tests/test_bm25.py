@@ -63,7 +63,7 @@ def test_persisted_index_matches_in_memory(spark, docs, tmp_path):
     )
 
     path = str(tmp_path / "idx")
-    persist_index(docs, "doc_id", "text", path, n_buckets=2)
+    persist_index(docs, "doc_id", "text", path)
     live = bm25_topk(docs, "doc_id", "text", ["spark", "sql"], k=10).collect()
     from_idx = bm25_topk_from_index(spark, path, ["spark", "sql"], k=10).collect()
     assert [(r.doc_key, r.score) for r in live] == [(r.doc_key, r.score) for r in from_idx]

@@ -58,39 +58,6 @@ def test_extend_empty_delta_is_noop(spark, tmp_path):
     assert corpus_scalars(path) == before
 
 
-def test_compact_preserves_scores_and_folds_files(spark, tmp_path):
-    """compact_index must fold the per-extend file accumulation back to
-    the build-time layout without changing a single score — compaction
-    moves bytes, never statistics or postings content."""
-    import os
-
-    from etl_pdf_pipepline_spark.retrieval.bm25 import compact_index
-
-    docs = load_table(spark, SF, "documents")
-    path = str(tmp_path / "idx")
-    n_buckets = 8
-    persist_index(docs.filter(F.col("doc_id") % 5 == 1), "doc_id", "text", path, n_buckets)
-    for m in (2, 3, 4, 0):  # four daily extends
-        extend_index(docs.filter(F.col("doc_id") % 5 == m), "doc_id", "text", path, n_buckets)
-
-    def n_files(sub):
-        return sum(1 for f in os.listdir(f"{path}/{sub}") if f.endswith(".parquet"))
-
-    assert n_files("postings") > n_buckets  # the accumulation is real
-    before_scores = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    before_scalars = corpus_scalars(path)
-
-    counts = compact_index(spark, path, n_buckets)
-    assert counts["postings"] == n_buckets == n_files("postings")
-    assert corpus_scalars(path) == before_scalars
-    after_scores = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    assert set(after_scores) == set(before_scores)
-    for k, v in before_scores.items():
-        # same per-component algebra; per-doc double fold order may move
-        # with the file layout — the serving tier's round(4) contract
-        assert round(v, 4) == round(after_scores[k], 4), k
-
-
 def test_term_df_dictionary_matches_live_scores(spark, tmp_path):
     """r13 layout: the persisted term dictionary's literal-df serving
     plan must score bit-identically to the live (tokenize + query-time
@@ -165,3 +132,44 @@ def test_older_layout_is_never_read_or_extended(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="rebuild"):
         extend_index(docs.filter(F.col("doc_id") % 5 == 0), "doc_id", "text", path)
     assert sorted(os.listdir(f"{path}/postings")) == files
+
+
+def test_term_df_cache_holds_one_entry_per_index(spark, tmp_path):
+    """The driver-side term-df cache keeps one entry per index: distinct
+    queries add terms to that entry, not entries, and rewriting the index
+    replaces the entry, so a stale signature's terms are dropped."""
+    from etl_pdf_pipepline_spark.retrieval import bm25
+
+    docs = load_table(spark, SF, "documents")
+    path = str(tmp_path / "idx")
+    key = f"{path}/term_df"
+    persist_index(docs.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", path)
+
+    def postings_df(terms):
+        rows = (
+            spark.read.parquet(f"{path}/postings")
+            .filter(F.col("term").isin(terms))
+            .groupBy("term")
+            .count()
+            .collect()
+        )
+        return {t: 0 for t in terms} | {r["term"]: r["count"] for r in rows}
+
+    def lookup(terms):
+        got = bm25._term_df_lookup(path, terms)
+        return {t: got.get(t, 0) for t in terms}
+
+    vocab = sorted(r.term for r in spark.read.parquet(key).select("term").distinct().collect())[:31]
+    for i in range(30):
+        terms = [vocab[i], vocab[i + 1], f"absent{i}"]
+        assert lookup(terms) == postings_df(terms)
+    assert [k for k in bm25._TERM_DF_CACHE if str(tmp_path) in str(k)] == [key]
+    old_sig, known = bm25._TERM_DF_CACHE[key]
+    assert len(known) == 31 + 30  # every term looked up, absent ones as 0
+
+    extend_index(docs.filter(F.col("doc_id") % 5 == 0), "doc_id", "text", path)
+    terms = vocab[:3]
+    assert lookup(terms) == postings_df(terms)
+    assert [k for k in bm25._TERM_DF_CACHE if str(tmp_path) in str(k)] == [key]
+    new_sig, known = bm25._TERM_DF_CACHE[key]
+    assert new_sig != old_sig and set(known) == set(terms)

@@ -126,22 +126,6 @@ def test_chunk_documents_explode_shape(spark):
     assert d1[0].section_h1 == "Title"
 
 
-def test_chunk_udtf_matches_pandas_path(spark):
-    from etl_pdf_pipepline_spark.operators.chunker import register_chunk_udtf
-
-    register_chunk_udtf(spark)
-    df = spark.createDataFrame([("d1", MD), ("d2", "short")], ["doc_id", "text"])
-    df.createOrReplaceTempView("udtf_docs")
-    via_sql = spark.sql(
-        "SELECT c.* FROM udtf_docs, LATERAL chunk_udtf(doc_id, text) c"
-    ).collect()
-    via_pandas = chunk_documents(df, "doc_id", "text").collect()
-    key = lambda r: (r.document_id, r.chunk_index)
-    assert sorted([tuple(r) for r in via_sql], key=lambda t: (t[0], t[7])) == sorted(
-        [tuple(r) for r in via_pandas], key=lambda t: (t[0], t[7])
-    )
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     st.text(alphabet=st.sampled_from("ab .\n"), min_size=0, max_size=2000),

@@ -8,37 +8,23 @@ from etl_pdf_pipepline_spark.operators.dedup import (
     N_MINHASH,
     minhash_signature,
     shingle_rows,
-    word_shingles,
 )
 
 SF_SMALL = "/root/testdata/sf0.001"
 
 
-def test_word_shingles_width3(spark):
-    df = spark.createDataFrame([("a b c d",)], ["t"])
-    got = df.select(word_shingles("t").alias("s")).first()["s"]
-    assert got == ["a b c", "b c d"]
-
-
-def test_word_shingles_short_text_whole_string(spark):
-    df = spark.createDataFrame([("only two",)], ["t"])
-    assert df.select(word_shingles("t").alias("s")).first()["s"] == ["only two"]
-
-
-def test_shingle_rows_matches_array_form(spark):
+def test_shingle_rows_width3_sliding_and_short_text_whole(spark):
     df = spark.createDataFrame(
         [("d1", "a b c d e"), ("d2", "x y"), ("d3", "one two three")], ["id", "t"]
     )
-    rows = shingle_rows(df, "id", "t").collect()
     got = {}
-    for r in rows:
+    for r in shingle_rows(df, "id", "t").collect():
         got.setdefault(r["__id"], []).append(r.sh)
-    arr = {
-        r.id: r.s
-        for r in df.select("id", word_shingles("t").alias("s")).collect()
+    assert {k: sorted(v) for k, v in got.items()} == {
+        "d1": ["a b c", "b c d", "c d e"],
+        "d2": ["x y"],  # fewer than 3 tokens: the whole string
+        "d3": ["one two three"],
     }
-    for k in arr:
-        assert sorted(got[k]) == sorted(arr[k])
 
 
 def test_minhash_identical_texts_identical_signatures(spark):
@@ -64,42 +50,23 @@ def test_minhash_similar_texts_share_components(spark):
     assert agree >= N_MINHASH // 2
 
 
-def test_jaccard_df_cap_drops_universal_stopword(spark):
-    # Every doc contains "the"; only (d1, d2) share real vocabulary.
-    # With max_df_frac=0.5 over 4 docs, "the" (DF=4 > 2) is dropped, so
-    # docs that share ONLY the stopword must not pair at all.
-    from etl_pdf_pipepline_spark.operators.dedup import token_jaccard_pairs
+def test_jaccard_df_cap_drops_universal_stopword(spark, tmp_path):
+    # Every doc contains "the"; only (1, 2) share real vocabulary. Over 20
+    # docs the cap is floor(0.15 * 20) = 3, so "the" (DF=20) is dropped
+    # and docs that share ONLY the stopword must not pair at all.
+    from etl_pdf_pipepline_spark.operators.dedup import dedup_ngram_jaccard
 
-    df = spark.createDataFrame(
-        [
-            (1, "the apple banana cherry"),
-            (2, "the apple banana damson"),
-            (3, "the xylophone quartz"),
-            (4, "the zephyr marble"),
-        ],
-        ["doc_id", "text"],
+    rows = [(1, "the apple banana cherry"), (2, "the apple banana damson")]
+    rows += [(i, f"the xylophone{i} quartz{i}") for i in range(3, 21)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
     )
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in token_jaccard_pairs(df, "doc_id", "text", max_df_frac=0.5).collect()
+        for r in dedup_ngram_jaccard(spark, str(tmp_path)).collect()
     }
-    assert set(pairs) == {(1, 2)}
     # capped vocab: {apple, banana, cherry} vs {apple, banana, damson}
-    assert pairs[(1, 2)] == 0.5
-
-
-def test_jaccard_without_cap_pairs_everything(spark):
-    # Control: with the cap disabled (frac=1.0) the universal stopword
-    # makes every doc pair — the quadratic blow-up the cap exists to stop.
-    from etl_pdf_pipepline_spark.operators.dedup import token_jaccard_pairs
-
-    df = spark.createDataFrame(
-        [(i, f"the unique{i}") for i in range(1, 5)], ["doc_id", "text"]
-    )
-    n = token_jaccard_pairs(df, "doc_id", "text", max_df_frac=1.0).count()
-    assert n == 6  # all C(4,2) pairs
-    n_capped = token_jaccard_pairs(df, "doc_id", "text", max_df_frac=0.5).count()
-    assert n_capped == 0
+    assert pairs == {(1, 2): 0.5}
 
 
 def test_connected_components_chain_and_islands(spark):

@@ -10,7 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pdf_pipepline_spark.api.engine import NotFound, SparkEngine
+from etl_pdf_pipepline_spark.api.engine import BadRequest, NotFound, SparkEngine
 from etl_pdf_pipepline_spark.functions.vectors import as_double, cosine, query_vector_lit
 from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_scores, release_indexes
 from etl_pdf_pipepline_spark.retrieval.embedder import HashEmbedder, embed_query
@@ -74,6 +74,21 @@ def test_search_is_one_plan(spark):
 
     eng.search(query, mode="hybrid", limit=10)  # reads the corpus dimension once
     assert jobs(3) == jobs(10)
+
+
+@pytest.mark.parametrize("mode", ["keyword", "vector", "hybrid"])
+def test_negative_limit_is_a_bad_request(spark, mode):
+    eng = SparkEngine(spark, SF_SMALL)
+    with pytest.raises(BadRequest, match="limit"):
+        eng.search("spark join", mode=mode, limit=-1)
+    with pytest.raises(BadRequest, match="limit"):
+        eng.list_documents(limit=-1)
+    with pytest.raises(BadRequest, match="limit"):
+        eng.get_document_chunks("0", limit=-1)
+    # zero stays a valid, empty answer
+    assert eng.search("spark join", mode=mode, limit=0) == []
+    assert eng.list_documents(limit=0) == []
+    assert eng.get_document_chunks("0", limit=0) == []
 
 
 def test_unknown_non_numeric_id_runs_no_job(spark):

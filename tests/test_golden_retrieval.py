@@ -11,7 +11,7 @@ from etl_pdf_pipepline_spark.functions.vectors import as_double, cosine, query_v
 from etl_pdf_pipepline_spark.operators.chunker import chunk_documents
 from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_topk
 from etl_pdf_pipepline_spark.retrieval.embedder import HashEmbedder, embed_dataframe, embed_query
-from etl_pdf_pipepline_spark.retrieval.hybrid import rank_by_score, rrf_fuse
+from etl_pdf_pipepline_spark.retrieval.hybrid import rank_top, rrf_fuse
 
 # `relevant` shares 3 query tokens, `partial` exactly 1 — asymmetric by
 # construction so BM25, cosine, and the RRF fusion all rank `relevant`
@@ -63,5 +63,7 @@ def test_hybrid_golden_top1(spark, store):
         F.col("chunk_key").alias("doc_key"),
         F.round(cosine(as_double("embedding"), qv), 4).alias("score"),
     )
-    fused = rrf_fuse(rank_by_score(kw), rank_by_score(vec), k=3).collect()
+    # one chunk per document: a depth of len(CORPUS) ranks every chunk
+    depth = len(CORPUS)
+    fused = rrf_fuse(rank_top(kw, depth), rank_top(vec, depth), k=3).collect()
     assert fused[0].doc_key.startswith("relevant#")

@@ -7,7 +7,7 @@ import pytest
 from etl_pdf_pipepline_spark.retrieval.hybrid import (
     RRF_K,
     context_budget_cut,
-    rank_by_score,
+    rank_top,
     route_topic,
     rrf_fuse,
 )
@@ -30,11 +30,11 @@ def test_rrf_limit(spark):
     assert rrf_fuse(ra, rb, k=5).count() == 5
 
 
-def test_rank_by_score_tie_break(spark):
+def test_rank_top_tie_break(spark):
     scored = spark.createDataFrame(
         [("z", 1.0), ("a", 1.0), ("m", 2.0)], ["doc_key", "score"]
     )
-    got = {r.doc_key: r.rank for r in rank_by_score(scored).collect()}
+    got = {r.doc_key: r.rank for r in rank_top(scored, 3).collect()}
     assert got == {"m": 1, "a": 2, "z": 3}  # ties broken by id asc
 
 

@@ -1,16 +1,16 @@
 """ensure-after-extend must NOT rebuild — the index-lifecycle economics
 contract (VERDICT r9 defect #1).
 
-All three maintained index families (IVF: operators/similarity.py, LSH
-bands: operators/dedup.py, BM25: retrieval/bm25.py) advertise the
-steady-state loop `ingest delta → extend index by O(delta) → serve`.
+The extendable index families (IVF: operators/similarity.py, BM25:
+retrieval/bm25.py) advertise the steady-state loop `ingest delta →
+extend index by O(delta) → serve`.
 That loop only pays O(delta) if the extender CAS-advances the
 serve-or-build freshness record (`source_signature`) in the same logical
 commit as the delta append; otherwise the very next ensure_* call sees a
 signature mismatch and silently pays the FULL O(corpus) rebuild the
 extend machinery exists to avoid. Correctness never depended on this
 (extend ≡ rebuild is oracle-gated by ivf_incremental_index /
-bm25_incremental_index / near_dup_incremental); these tests pin the
+bm25_incremental_index); these tests pin the
 ECONOMICS: after a source ingest + extend, ensure_* serves the extended
 files with zero rebuild, and the served layout really contains the delta.
 
@@ -134,31 +134,6 @@ def test_ensure_ivf_rebuilds_on_legacy_meta_without_variant_keys(
             shutil.rmtree(path, ignore_errors=True)
 
 
-def test_ensure_lsh_after_extend_serves_without_rebuild(
-    spark, growing_corpus, monkeypatch
-):
-    from etl_pdf_pipepline_spark.operators import dedup
-
-    path = dedup.ensure_lsh_band_index(spark, growing_corpus, exclude_mod=20)
-    try:
-        delta, new_sig = _ingest_delta(spark, growing_corpus, "documents", "doc_id")
-        # delta ids are % 5 == 3, hence never % 20 == 0: every delta doc
-        # belongs in the index under the exclude_mod=20 build contract.
-        delta_ids = {r.doc_id for r in delta.select("doc_id").collect()}
-        assert delta_ids and all(i % 20 != 0 for i in delta_ids)
-        dedup.extend_lsh_band_index(spark, delta, path, source_signature=new_sig)
-
-        _fail_on_call(monkeypatch, dedup, "persist_lsh_band_index")
-        assert dedup.ensure_lsh_band_index(spark, growing_corpus, exclude_mod=20) == path
-        served = {
-            r.doc_id
-            for r in spark.read.parquet(path).select("doc_id").collect()
-        }
-        assert delta_ids <= served
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def test_ensure_bm25_after_extend_serves_without_rebuild(
     spark, growing_corpus, tmp_path, monkeypatch
 ):
@@ -214,131 +189,3 @@ def test_bm25_extend_without_signature_preserves_existing_record(
     assert meta["source_signature"] == sig0  # preserved, not stripped
     assert meta["n"] == docs.count() + delta.count()
 
-
-def test_steady_state_admission_loop_two_days(spark, tmp_path, monkeypatch):
-    """The full production loop the extenders exist for, run for two
-    consecutive ingest days: ensure (build once) → day-1 delta checked
-    via the marginal admission plan → delta ingested + index extended →
-    ensure serves WITHOUT rebuild → day-2 delta checked against the
-    EXTENDED index (its candidates must include day-1 docs sharing a
-    band — the whole point of appending day 1's bands). Composes
-    _delta_admission + extend_lsh_band_index + ensure_lsh_band_index
-    end-to-end rather than per-function."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from etl_pdf_pipepline_spark.operators import dedup
-
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    full = spark.read.parquet(f"{SF}/documents.parquet")
-    # base: % 5 in (1, 2, 4); day1: % 5 == 3; day2: % 5 == 0 but NOT
-    # % 20 == 0 (the exclude_mod=20 build contract skips those ids, so a
-    # day-2 delta of them would not be indexable — keep the test inside
-    # the contract by using ids % 20 == 10).
-    base = full.filter((F.col("doc_id") % 5 != 3) & (F.col("doc_id") % 20 != 10))
-    base.coalesce(1).write.parquet(str(corpus / "documents.parquet"))
-
-    path = dedup.ensure_lsh_band_index(spark, str(corpus), exclude_mod=20)
-    try:
-        # ---- day 1 ----
-        day1 = full.filter(F.col("doc_id") % 5 == 3)
-        # the shipping admission plan (_delta_admission) is corpus-wired
-        # to the doc_id%20 gate split; check day-1 bands directly against
-        # the index instead (identical join shape)
-        idx = spark.read.parquet(path).select(
-            "band_id", "band_key", F.col("doc_id").alias("dup_id")
-        )
-        d1_bands = dedup.lsh_band_keys(day1)
-        d1_check = (
-            d1_bands.join(idx, ["band_id", "band_key"], "left")
-            .groupBy("doc_id").agg(F.countDistinct("dup_id").alias("n_dup"))
-        )
-        assert d1_check.count() == day1.count()
-
-        # ingest day 1 + extend
-        day1.coalesce(1).write.mode("append").parquet(str(corpus / "documents.parquet"))
-        sig1 = table_stat_signature(str(corpus), ("documents",))
-        dedup.extend_lsh_band_index(spark, day1, path, source_signature=sig1)
-        _fail_on_call(monkeypatch, dedup, "persist_lsh_band_index")
-        assert dedup.ensure_lsh_band_index(spark, str(corpus), exclude_mod=20) == path
-        monkeypatch.undo()
-
-        # ---- day 2: exact copies of day-1 docs (new ids % 20 == 10) ----
-        day1_rows = day1.select("doc_id", "text").limit(3).collect()
-        day2 = spark.createDataFrame(
-            [(int(r.doc_id) + 1_000_010 - (int(r.doc_id) + 1_000_010) % 20 + 10, r.text)
-             for r in day1_rows],
-            "doc_id long, text string",
-        )
-        idx2 = spark.read.parquet(path).select(
-            "band_id", "band_key", F.col("doc_id").alias("dup_id")
-        )
-        d2_check = (
-            dedup.lsh_band_keys(day2).join(idx2, ["band_id", "band_key"], "left")
-            .groupBy("doc_id").agg(F.countDistinct("dup_id").alias("n_dup"),
-                                   F.collect_set("dup_id").alias("dups"))
-            .collect()
-        )
-        day1_ids = {int(r.doc_id) for r in day1_rows}
-        # every day-2 exact copy must surface its day-1 twin as a dup
-        # candidate — only possible because day 1's bands were appended
-        for r in d2_check:
-            hits = {int(x) for x in (r.dups or []) if x is not None}
-            assert hits & day1_ids, (
-                f"day-2 doc {r.doc_id} missed its day-1 twin: the extended "
-                "bands are not being served"
-            )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-
-
-def test_ensure_cc_labels_after_extend_serves_without_rebuild(
-    spark, growing_corpus, monkeypatch
-):
-    """The fourth maintained artifact (component labels) gets the same
-    lifecycle contract as bands/IVF/BM25: one maintenance pass per
-    ingest day extends BOTH the band index and the labels derived from
-    it, CAS-advancing both freshness records — after which ensure_*
-    serves with zero rebuild and the served labels equal a from-scratch
-    closure over the grown corpus slice."""
-    from etl_pdf_pipepline_spark.operators import dedup
-
-    band_path = dedup.ensure_lsh_band_index(spark, growing_corpus, exclude_mod=20)
-    label_path = dedup.ensure_cc_labels(spark, growing_corpus, exclude_mod=20)
-    try:
-        delta, new_sig = _ingest_delta(spark, growing_corpus, "documents", "doc_id")
-        delta_bands = dedup.lsh_band_keys(delta).localCheckpoint(eager=True)
-        # one maintenance pass: bands first (labels derive from them)
-        dedup.extend_lsh_band_index(spark, delta, band_path, source_signature=new_sig)
-        dedup.extend_cc_labels(
-            spark, delta_bands, band_path, label_path, source_signature=new_sig
-        )
-
-        _fail_on_call(monkeypatch, dedup, "persist_cc_labels")
-        _fail_on_call(monkeypatch, dedup, "persist_lsh_band_index")
-        assert dedup.ensure_cc_labels(spark, growing_corpus, exclude_mod=20) == label_path
-        assert (
-            dedup.ensure_lsh_band_index(spark, growing_corpus, exclude_mod=20)
-            == band_path
-        )
-        monkeypatch.undo()
-
-        served = {
-            (r.id, r.label)
-            for r in spark.read.parquet(label_path).collect()
-        }
-        docs_now = spark.read.parquet(f"{growing_corpus}/documents.parquet").filter(
-            F.col("doc_id") % 20 != 0
-        )
-        scratch = {
-            (r.id, r.label)
-            for r in dedup.connected_components(
-                dedup.banded_pairs(dedup.lsh_band_keys(docs_now))
-                .select("doc_a", "doc_b")
-                .distinct()
-            ).collect()
-        }
-        assert served == scratch
-    finally:
-        shutil.rmtree(label_path, ignore_errors=True)
-        shutil.rmtree(band_path, ignore_errors=True)

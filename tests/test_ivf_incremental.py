@@ -78,27 +78,6 @@ def test_extend_matches_full_build_and_touches_no_base_file(spark):
     ext_probe = [tuple(r) for r in _probe_persisted_index(spark, SF, path).collect()]
     assert ext_probe == full_probe
 
-    # compaction folds the appended files to one per cell and changes
-    # neither assignments nor probe results
-    from etl_pdf_pipepline_spark.operators.similarity import compact_ivf_index
-
-    n_cells = spark.read.parquet(f"{path}/centroids").count()
-    assert len(_vector_files(path)) > n_cells  # extension left extra files
-    assert compact_ivf_index(spark, path) == len(_vector_files(path))
-    per_cell = {}
-    for rel in _vector_files(path):
-        cell = rel.split(os.sep)[0]
-        per_cell[cell] = per_cell.get(cell, 0) + 1
-    assert all(v == 1 for v in per_cell.values()), per_cell
-    assert {
-        r["vec_id"]: r["centroid_id"]
-        for r in spark.read.parquet(f"{path}/vectors").select(
-            "vec_id", "centroid_id"
-        ).collect()
-    } == full_assign
-    assert [
-        tuple(r) for r in _probe_persisted_index(spark, SF, path).collect()
-    ] == full_probe
 
 
 def test_ensure_ivf_index_serve_or_build(spark):
@@ -179,22 +158,6 @@ def test_int8_extend_matches_full_code_and_touches_no_base_file(spark):
     }
     assert ext_rows == full_rows
 
-    # compaction folds the appended files to one per cell and changes
-    # no code byte (the int8 twin of the float compaction invariant)
-    from etl_pdf_pipepline_spark.operators.similarity import compact_ivf_int8
-
-    n_cells = len({cid for (cid, _s, _q) in ext_rows.values()})
-    assert len(_code_files(path)) > n_cells
-    assert compact_ivf_int8(spark, path) == len(_code_files(path))
-    per_cell = {}
-    for rel in _code_files(path):
-        cell = rel.split(os.sep)[0]
-        per_cell[cell] = per_cell.get(cell, 0) + 1
-    assert all(v == 1 for v in per_cell.values()), per_cell
-    assert {
-        r["vec_id"]: (r["centroid_id"], r["scale"], tuple(r["q8"]))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    } == full_rows
 
 
 def test_ensure_ivf_int8_serve_or_build_and_extend_economics(spark):

@@ -388,43 +388,3 @@ def test_table_scalar_cached_invalidates_on_table_change(spark, corpus_copy):
     assert table_scalar_cached(spark, corpus_copy, "documents", "probe", compute) == 42
     assert calls["n"] == 2
 
-
-def test_int8_codes_serve_fresh_and_fall_back(spark, corpus_copy, tmp_path):
-    """r12 int8-at-ingest routing: ann_cosine_topk_int8 serves the
-    persisted code table while fresh, matches the live quantization
-    exactly, honors force_scan_path, and invalidates on a source
-    rewrite — same contract as the signature manifests."""
-    import shutil as _shutil
-
-    from etl_pdf_pipepline_spark.operators.similarity import (
-        ann_cosine_topk_int8,
-        ensure_int8_codes,
-        int8_codes_path,
-        int8_codes_servable,
-    )
-    from etl_pdf_pipepline_spark.plans.bucketed import force_scan_path
-
-    src = "/root/testdata/sf0.001"
-    _shutil.copy(os.path.join(src, "embeddings.parquet"), os.path.join(corpus_copy, "embeddings.parquet"))
-    path = int8_codes_path(corpus_copy)
-    try:
-        assert not int8_codes_servable(spark, corpus_copy)
-        live = sorted(tuple(r) for r in ann_cosine_topk_int8(spark, corpus_copy).collect())
-
-        ensure_int8_codes(spark, corpus_copy)
-        assert int8_codes_servable(spark, corpus_copy)
-        served = sorted(tuple(r) for r in ann_cosine_topk_int8(spark, corpus_copy).collect())
-        assert served == live
-
-        plan = ann_cosine_topk_int8(spark, corpus_copy)._jdf.queryExecution().toString()
-        assert "int8_codes_" in plan and "embeddings.parquet" not in plan
-
-        with force_scan_path():
-            assert not int8_codes_servable(spark, corpus_copy)
-            fplan = ann_cosine_topk_int8(spark, corpus_copy)._jdf.queryExecution().toString()
-            assert "embeddings.parquet" in fplan
-
-        _touch(os.path.join(corpus_copy, "embeddings.parquet"))
-        assert not int8_codes_servable(spark, corpus_copy)
-    finally:
-        _shutil.rmtree(path, ignore_errors=True)

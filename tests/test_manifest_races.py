@@ -303,61 +303,3 @@ def test_signature_ensure_raced_by_ingest_never_overclaims(
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
-
-@pytest.mark.parametrize("ingest_at", ["after_sig_read", "before_meta_commit"])
-def test_int8_codes_ensure_raced_by_ingest_never_overclaims(
-    spark, tmp_path_factory, monkeypatch, ingest_at
-):
-    """The r12 int8-code manifest gets the same raced-ingest guarantee as
-    the signature manifests: an ingest landing anywhere inside ensure's
-    window leaves a record that under-claims (not servable for the new
-    corpus), and the next ensure rebuilds."""
-    import os
-    import shutil
-
-    import etl_pdf_pipepline_spark.operators.similarity as S
-    import etl_pdf_pipepline_spark.sources.manifest as MM
-
-    src = "/root/testdata/sf0.001"
-    corpus = str(tmp_path_factory.mktemp("int8_corpus"))
-    shutil.copy(os.path.join(src, "embeddings.parquet"), os.path.join(corpus, "embeddings.parquet"))
-
-    def touch_emb():
-        p = os.path.join(corpus, "embeddings.parquet")
-        st = os.stat(p)
-        os.utime(p, ns=(st.st_mtime_ns + 1_000_000, st.st_mtime_ns + 1_000_000))
-
-    path = S.int8_codes_path(corpus)
-    try:
-        fired = {"n": 0}
-        if ingest_at == "after_sig_read":
-            real_sig = S._emb_signature
-
-            def racing_sig(sf_dir):
-                s = real_sig(sf_dir)
-                if fired["n"] == 0:
-                    fired["n"] = 1
-                    touch_emb()
-                return s
-
-            monkeypatch.setattr(S, "_emb_signature", racing_sig)
-        else:
-            real_commit = MM.commit_meta
-
-            def racing_commit(root, payload):
-                if fired["n"] == 0:
-                    fired["n"] = 1
-                    touch_emb()
-                return real_commit(root, payload)
-
-            monkeypatch.setattr(MM, "commit_meta", racing_commit)
-
-        S.ensure_int8_codes(spark, corpus)
-        assert fired["n"] == 1, "race window never exercised"
-        assert not S.int8_codes_servable(spark, corpus)
-
-        monkeypatch.undo()
-        S.ensure_int8_codes(spark, corpus)
-        assert S.int8_codes_servable(spark, corpus)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)

@@ -11,8 +11,8 @@ from etl_pdf_pipepline_spark.operators.multimodal import (
     decode_image_fake,
     decode_image_real,
     decode_media,
+    media_frame_sample,
     media_table,
-    sample_frames,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -59,11 +59,14 @@ def test_decode_media_matches_python(spark):
         assert r.n_bytes == len(src[r.media_id])
 
 
-def test_sample_frames_fanout_and_digest(spark):
-    m = media_table(spark, SF).filter(F.col("media_type") == "video").limit(5)
-    frames = sample_frames(m, 4).collect()
-    assert len(frames) == 5 * 4
-    src = {r.media_id: bytes(r.content) for r in m.collect()}
+def test_media_frame_sample_fanout_and_digest(spark):
+    frames = media_frame_sample(spark, SF).collect()
+    videos = media_table(spark, SF).filter(F.col("media_type") == "video")
+    src = {r.media_id: bytes(r.content) for r in videos.collect()}
+    assert src and len(frames) == len(src) * 4
+    assert {(fr.media_id, fr.frame_index) for fr in frames} == {
+        (m, i) for m in src for i in range(4)
+    }
     for fr in frames:
         content = src[fr.media_id]
         off = (len(content) * fr.frame_index) // 4
@@ -221,20 +224,3 @@ def test_real_pil_jpeg_roundtrip(spark):
     rows = {r.media_id: r for r in decode_media(df, codec=decode_image_real).collect()}
     for i, _ in payloads:
         assert (rows[i].width, rows[i].height, rows[i].format) == (4 + i, 3 + i, "jpeg")
-
-
-def test_media_frame_sample_sql_equals_op_by_op(spark):
-    """r14: the SQL-built media_frame_sample equals the op-by-op
-    media_table+sample_frames form row-for-row (same expressions, one
-    spark.sql construction)."""
-    from etl_pdf_pipepline_spark.operators.multimodal import (
-        media_frame_sample,
-        media_table,
-        sample_frames,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    sql_rows = sorted(map(tuple, media_frame_sample(spark, sf).collect()))
-    media = media_table(spark, sf).filter("media_type = 'video'")
-    op_rows = sorted(map(tuple, sample_frames(media, 4).collect()))
-    assert sql_rows == op_rows and len(sql_rows) > 0

@@ -97,37 +97,3 @@ def test_sink_mutations(spark):
     merged = upsert(table, updates, "k")
     got = {r.k: r.val for r in merged.collect()}
     assert got[3] == "NEW" and got[5] == "v5" and len(got) == 10
-
-
-def test_compact_rewrites_to_target_files(spark, tmp_path):
-    from etl_pdf_pipepline_spark.sources.sinks import compact
-
-    path = str(tmp_path / "frag")
-    df = spark.range(1000).withColumnRenamed("id", "k")
-    df.repartition(16).write.parquet(path)
-    import glob
-
-    assert len(glob.glob(f"{path}/part-*")) == 16
-    compact(spark, path, 2)
-    assert len(glob.glob(f"{path}/part-*")) == 2
-    back = spark.read.parquet(path)
-    assert back.count() == 1000 and sorted(back.columns) == ["k"]
-
-
-def test_read_markdown_checkpoints(spark, tmp_path):
-    from etl_pdf_pipepline_spark.sources.extract import read_markdown_checkpoints
-
-    d = tmp_path / "md"
-    d.mkdir()
-    (d / "doc1.md").write_text(
-        "---\ndocument_id: abc-123\ntitle: My Doc\npage_count: 4\n---\n# Body\ncontent here\n"
-    )
-    (d / "doc2.md").write_text("no frontmatter, just text\n")
-    rows = {r.path.split("/")[-1]: r for r in read_markdown_checkpoints(spark, str(d)).collect()}
-    r1 = rows["doc1.md"]
-    assert r1.frontmatter["document_id"] == "abc-123"
-    assert r1.frontmatter["title"] == "My Doc"
-    assert r1.frontmatter["page_count"] == "4"
-    assert r1.markdown.startswith("# Body")
-    r2 = rows["doc2.md"]
-    assert r2.markdown.startswith("no frontmatter")

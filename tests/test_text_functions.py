@@ -50,10 +50,7 @@ def test_quality_ratios(spark):
     s = "ab cd"  # 5 chars, 1 space
     assert one(spark, TX.whitespace_ratio(F.col("s")), s=s) == 1 / 5
     assert one(spark, TX.non_ascii_ratio(F.col("s")), s="abé") == 1 / 3
-    assert one(spark, TX.avg_word_length(F.col("s")), s="ab cdef") == 3.0
-    assert one(spark, TX.chars_per_page(F.col("s"), F.lit(2)), s="abcdef") == 3.0
 
 
 def test_quality_ratios_empty_text_no_div_zero(spark):
     assert one(spark, TX.whitespace_ratio(F.col("s")), s="") == 0.0
-    assert one(spark, TX.avg_word_length(F.col("s")), s="") == 0.0

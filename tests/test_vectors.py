@@ -47,27 +47,8 @@ def test_cosine_self_is_one(spark, vec_df):
         assert r.c == pytest.approx(1.0)
 
 
-def test_pandas_cosine_matches_hof(spark):
-    from etl_pdf_pipepline_spark.functions.vectors import cosine_topk_pandas
-    from etl_pdf_pipepline_spark.sources.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
-    hof = (
-        emb.select(
-            "vec_id",
-            F.round(cosine(as_double("embedding"), query_vector_lit(q)), 4).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(15)
-        .collect()
-    )
-    pud = cosine_topk_pandas(emb, "embedding", q, 15).collect()
-    assert [(r.vec_id, r.score) for r in hof] == [(r.vec_id, r.score) for r in pud]
-
-
-def test_pair_cosine_pandas_matches_hof(spark):
-    from etl_pdf_pipepline_spark.functions.vectors import pair_cosine_pandas
+def test_pair_cosine_rounded_pandas_matches_hof(spark):
+    from etl_pdf_pipepline_spark.functions.vectors import pair_cosine_rounded_pandas
     from etl_pdf_pipepline_spark.sources.catalog import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -78,7 +59,7 @@ def test_pair_cosine_pandas_matches_hof(spark):
     out = pairs.select(
         "ia", "ib",
         F.round(cosine(F.col("va"), F.col("vb")), 4).alias("hof"),
-        F.round(pair_cosine_pandas(F.col("va"), F.col("vb")), 4).alias("vec"),
+        pair_cosine_rounded_pandas(F.col("va"), F.col("vb")).alias("vec"),
     ).collect()
     assert len(out) == 190  # C(20, 2)
     for r in out:

@@ -35,12 +35,10 @@ ARTIFACT_PATHS = [
     ("plans.matview", "mv_lake_path", "events_mv_base"),
     ("plans.matview", "rollup_view_path", "events_rollup_mv"),
     ("plans.zorder", "zorder_events_path", "events_zorder"),
-    ("operators.dedup", "cc_labels_path", "cc_labels"),
     ("operators.dedup", "lsh_index_path", "lsh_band_index"),
     ("operators.dedup", "docs_lake_path", "docs_lake"),
     ("operators.multimodal", "media_manifest_path", "media_manifest"),
     ("operators.similarity", "ivf_index_path", "ivf_index"),
-    ("operators.similarity", "int8_codes_path", "int8_codes"),
     ("operators.similarity", "ivf_int8_path", "ivf_int8"),
     ("retrieval.queries", "_bm25_index_path", "bm25_index"),
 ]
