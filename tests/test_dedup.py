@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from etl_pdf_pipepline_spark.operators.dedup import (
     N_MINHASH,
+    SHINGLE,
     minhash_signature,
     shingle_rows,
 )
@@ -13,18 +14,35 @@ from etl_pdf_pipepline_spark.operators.dedup import (
 SF_SMALL = "/root/testdata/sf0.001"
 
 
-def test_shingle_rows_width3_sliding_and_short_text_whole(spark):
-    df = spark.createDataFrame(
-        [("d1", "a b c d e"), ("d2", "x y"), ("d3", "one two three")], ["id", "t"]
-    )
+def _shingles_by_id(df):
     got = {}
     for r in shingle_rows(df, "id", "t").collect():
         got.setdefault(r["__id"], []).append(r.sh)
-    assert {k: sorted(v) for k, v in got.items()} == {
-        "d1": ["a b c", "b c d", "c d e"],
-        "d2": ["x y"],  # fewer than 3 tokens: the whole string
-        "d3": ["one two three"],
-    }
+    return {k: sorted(v) for k, v in got.items()}
+
+
+def test_word_shingles_width3(spark):
+    df = spark.createDataFrame([("d1", "a b c d")], ["id", "t"])
+    assert _shingles_by_id(df) == {"d1": ["a b c", "b c d"]}
+
+
+def test_word_shingles_short_text_whole_string(spark):
+    df = spark.createDataFrame([("d1", "only two")], ["id", "t"])
+    assert _shingles_by_id(df) == {"d1": ["only two"]}
+
+
+def test_shingle_rows_matches_array_form(spark):
+    # The array form: sliding SHINGLE-token windows over the whitespace
+    # tokens, or the whole string when the text has fewer tokens.
+    texts = {"d1": "a b c d e", "d2": "x y", "d3": "one two three"}
+    df = spark.createDataFrame(list(texts.items()), ["id", "t"])
+    arr = {}
+    for k, t in texts.items():
+        toks = t.split()
+        arr[k] = sorted(
+            " ".join(toks[i:i + SHINGLE]) for i in range(len(toks) - SHINGLE + 1)
+        ) or [t]
+    assert _shingles_by_id(df) == arr
 
 
 def test_minhash_identical_texts_identical_signatures(spark):
