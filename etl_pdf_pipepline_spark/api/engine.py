@@ -30,12 +30,21 @@ deleted keys in the postings scan and unions the uploads' rows in.
 Uploads are not written into the shared index: they are not in the
 documents table, so its freshness record would serve them to every other
 reader of the corpus. The vector leg is a cosine scan of the embeddings
-with the query vector as a literal, and hybrid mode fuses the two with
-RRF — all one spark.sql text, collected once. A second, small collect
-then reads title and text for at most `limit` lake ids; upload rows are
-already on the driver. Two collects and not one: folding the lookup into
-the ranked plan either broadcasts every document's text (left join) or
-evaluates the ranking twice (semi-join), and both measured slower.
+with the query vector as a literal (functions/vectors.py::cosine_lit_sql,
+each per-row value computed once), and hybrid mode fuses the two with
+RRF — all one spark.sql text, collected once. When the query terms'
+postings are few (bm25.postings_scan: Σdf at most
+SINGLE_TASK_POSTINGS), the keyword leg reads them in one task, its
+GROUP BY needs no exchange and the ranking is one Spark job with one
+stage; above that, and whenever uploads are served (their VALUES rows
+union a second partition in), the leg shuffles and AQE runs that
+exchange as a job of its own. A second, small collect then reads title
+and text for at most `limit` lake ids, one spark.sql text over a lake
+view built once per engine; upload rows are already on the driver. Two
+collects and not one: folding the lookup into the ranked plan either
+broadcasts every document's text (left join) or evaluates the ranking
+twice (semi-join), and both measured slower. So a warmed search with no
+uploads runs 2 Spark jobs in every mode.
 
 Everything here returns plain dicts/lists so the same engine backs any
 HTTP frontend (FastAPI when installed, Flask otherwise — api/app.py).
@@ -51,13 +60,13 @@ from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import title_from_filename, tokens
-from ..functions.vectors import array_lit_sql, as_double_sql, cosine_sql
+from ..functions.vectors import cosine_lit_sql
 from ..operators.chunker import chunk_text
 from ..operators.multimodal import decode_image_fake, media_table
 # perfbench/run.py::_wrap_layers re-binds bm25_scores, embed_query and
 # load_table on this module to span them, so all three must stay bound
 # here — bm25_scores too, although the engine no longer calls it.
-from ..retrieval.bm25 import bm25_scores, scored_from_index_sqltext  # noqa: F401
+from ..retrieval.bm25 import bm25_scores, postings_scan, scored_from_index_sqltext  # noqa: F401
 from ..retrieval.embedder import HashEmbedder, embed_query
 from ..retrieval.hybrid import SearchMode, route_topic, rrf_sql
 from ..retrieval.queries import ensure_bm25_index
@@ -125,6 +134,7 @@ class SparkEngine:
         self._removed: dict[int, dict[str, int]] = {}
         self._next_upload_ord = 1
         self._dim: int | None = None  # corpus embedding width, read once
+        self._lake: DataFrame | None = None  # the titled lake view, built once
 
     def close(self) -> dict[str, int]:
         """Release session-pinned caches (bm25 live indexes, streaming
@@ -167,12 +177,24 @@ class SparkEngine:
 
     def _lake_rows(self, keys: list[int]) -> dict[str, Row]:
         """{doc_id: Row(filename, title, text)} for the lake documents
-        with these raw ids: the filter is on the bigint key, so it reaches
-        the parquet scan, and titles are derived only for matching rows."""
-        docs = load_table(self.spark, self.sf_dir, "documents").filter(F.col("doc_id").isin(keys))
-        doc_id = F.col("doc_id").cast("string")
-        rows = _titled(
-            docs.select(doc_id.alias("doc_id"), "text", _lake_filename(doc_id).alias("filename"))
+        with these raw ids, as one spark.sql text over the lake view the
+        engine builds once: the filter is on the bigint key `k`, so it
+        reaches the parquet scan, and titles are derived only for matching
+        rows."""
+        if self._lake is None:
+            doc_id = F.col("doc_id").cast("string")
+            self._lake = _titled(
+                load_table(self.spark, self.sf_dir, "documents").select(
+                    F.col("doc_id").alias("k"),
+                    doc_id.alias("doc_id"),
+                    "text",
+                    _lake_filename(doc_id).alias("filename"),
+                )
+            )
+        in_keys = ", ".join(str(int(k)) for k in keys)
+        rows = self.spark.sql(
+            f"SELECT doc_id, filename, title, text FROM {{lake}} WHERE k IN ({in_keys})",
+            lake=self._lake,
         ).collect()
         return {r.doc_id: r for r in rows}
 
@@ -262,14 +284,14 @@ class SparkEngine:
             keep = " WHERE doc_key IN (SELECT doc_id FROM {keep})"
 
         if mode_e is not SearchMode.VECTOR:
-            frames["post"] = read_parquet_cached(self.spark, f"{self._index}/postings")
             added = {u["id"]: u["terms"] for u in self._uploads.values() if u["status"] == "completed"}
             kw = scored_from_index_sqltext(self._index, terms, added=added, removed=self._removed)
+            frames["post"] = postings_scan(self.spark, self._index, terms)
             kw = f"SELECT doc_key, round(score, 4) AS score FROM ({kw}) s{keep}"
         if mode_e is not SearchMode.KEYWORD:
             frames["emb"] = load_table(self.spark, self.sf_dir, "embeddings")
             qv = embed_query(query, HashEmbedder(dim=self._corpus_dim()))
-            cos = cosine_sql(as_double_sql("embedding"), array_lit_sql(qv))
+            cos = cosine_lit_sql("embedding", qv)
             vec = f"SELECT CAST(vec_id AS STRING) AS doc_key, round({cos}, 4) AS score FROM {{emb}}"
             if self._removed:
                 vec += " WHERE vec_id NOT IN (" + ", ".join(map(str, self._removed)) + ")"

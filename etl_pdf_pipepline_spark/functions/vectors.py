@@ -11,6 +11,8 @@ in double → identical left-to-right sums).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -75,17 +77,15 @@ def query_vector_lit(vec: list[float]) -> Column:
 
 
 # --------------------------------------------------------------------------
-# SQL-string twins of the HOF builders (r12).
+# SQL-string forms (r12).
 #
 # Building the cosine tree through the Python Column DSL costs dozens of
 # py4j round-trips per call site — profiled ~0.19 s to CONSTRUCT the
 # scored-scan leg at sf0.1, plus a slower analysis pass, vs ~0.09 s for
 # the identical expression parsed JVM-side from one string (and the
-# e2e wall halved, 0.49 → 0.25 s; results bit-identical). The string
-# forms below parse to exactly the trees the HOF builders produce —
-# same zero-norm NULL contract, same double accumulation — and the hot
-# query paths use them; the Column forms above remain the public
-# composable API.
+# e2e wall halved, 0.49 → 0.25 s; results bit-identical). The hot query
+# paths use the string forms below; the Column forms above remain the
+# public composable API.
 # --------------------------------------------------------------------------
 
 
@@ -104,38 +104,40 @@ def array_lit_sql(vec: list[float]) -> str:
     query PARAMETER (the reference's arrives as a literal argument), and
     the crossJoin(broadcast(qdf)) form pays a BroadcastExchange — a
     separate driver job (~60-90 ms at sf0.1) — per call. As a literal
-    the scored scan is a pure projection, and Catalyst's constant
-    folding evaluates norm(q) once at plan time instead of per row."""
+    the scored scan is a pure projection. Catalyst does NOT fold a
+    higher-order function over it (a lambda is never foldable), so
+    anything derived from the vector alone, such as its norm, must be
+    computed driver-side: see cosine_lit_sql."""
     return "array(" + ", ".join(f"{float(x)!r}D" for x in vec) + ")"
 
 
-def _norm_sq_sql(a: str) -> str:
-    return f"aggregate({a}, cast(0.0 as double), (acc, x) -> acc + x * x)"
+def cosine_lit_sql(col: str, vec: list[float]) -> str:
+    """SQL fragment: cosine of the array column `col` (float, double or
+    int elements) against the literal query vector `vec`, each per-row
+    value computed once: one dot fold and one norm fold, with the double
+    casts inside their lambdas, and one denominator. Spark runs these
+    higher-order functions interpreted, without codegen, so every
+    repeated fold or cast is real per-row work.
 
-
-def dot_sql(a: str, b: str) -> str:
-    """SQL fragment: dot product of two array<double> fragments."""
+    |vec| is folded driver-side into a double literal, with the JVM's
+    own arithmetic: the same left-to-right sum of x*x from 0.0, then a
+    correctly rounded sqrt, and the product taken as |row| * |vec|, so
+    scores are bit-identical to `cosine()` over double-cast arrays
+    computed per row (tests/test_vectors.py). The zero-norm contract of
+    `cosine()` holds: `nullif` turns a zero denominator (zero row or
+    zero query) into NULL, as do a NULL embedding and one whose length
+    differs from the query's (zip_with pads with NULL)."""
+    # An explicit loop, not sum(): from Python 3.12 on, sum() of floats
+    # is compensated and would not match the JVM's plain sequential fold.
+    qsq = 0.0
+    for x in map(float, vec):
+        qsq += x * x
     return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        f"cast(0.0 as double), (acc, x) -> acc + x)"
+        f"aggregate(zip_with({col}, {array_lit_sql(vec)}, (x, y) -> cast(x as double) * y), "
+        "0.0D, (acc, p) -> acc + p) / nullif(sqrt(aggregate("
+        f"{col}, 0.0D, (acc, x) -> acc + cast(x as double) * cast(x as double))) * "
+        f"{math.sqrt(qsq)!r}D, 0.0D)"
     )
-
-
-def cosine_sql(a: str, b: str) -> str:
-    """SQL fragment: cosine(a, b) with the same zero-norm → NULL contract
-    as `cosine()` (CASE with no ELSE). `a`/`b` are SQL fragments
-    producing array<double> (wrap raw float columns in as_double_sql)."""
-    denom = f"sqrt({_norm_sq_sql(a)}) * sqrt({_norm_sq_sql(b)})"
-    return (
-        f"CASE WHEN {denom} != cast(0.0 as double) "
-        f"THEN {dot_sql(a, b)} / ({denom}) END"
-    )
-
-
-def cosine_expr(a: str, b: str, digits: int | None = None) -> Column:
-    """`round(cosine(a, b), digits)` as ONE JVM-parsed expression."""
-    s = cosine_sql(a, b)
-    return F.expr(f"round({s}, {digits})" if digits is not None else s)
 
 
 def cosine_scores_pandas(query_vec: list[float]):

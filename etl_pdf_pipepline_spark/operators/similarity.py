@@ -25,6 +25,7 @@ from ..functions.vectors import (
     as_double,
     as_double_sql,
     cosine,
+    cosine_lit_sql,
     cosine_topk_arrow,
     dot,
     pair_cosine_rounded_pandas,
@@ -1198,12 +1199,10 @@ def ann_cosine_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq = codes.select("vec_id", F.expr("transform(q8, c -> c * scale)").alias("w"))
     # r13: the dequantized query vector enters as a SQL literal (memoized
     # per embeddings signature) — no broadcast job; see array_lit_sql.
-    from ..functions.vectors import array_lit_sql, cosine_expr
-
-    qw_sql = array_lit_sql(_dequantized_query_cached(spark, sf_dir, dq))
+    cos = cosine_lit_sql("w", _dequantized_query_cached(spark, sf_dir, dq))
     return (
         dq.filter(F.col("vec_id") != 0)
-        .select("vec_id", cosine_expr("w", qw_sql, digits=4).alias("score"))
+        .select("vec_id", F.expr(f"round({cos}, 4)").alias("score"))
         .orderBy(F.desc("score"), "vec_id")
         .limit(10)
     )
@@ -1432,12 +1431,10 @@ def _probe_int8_codes(spark: SparkSession, sf_dir: str, parent: str, path: str) 
         .filter(F.col("centroid_id").isin(probe_ids))
         .filter(F.col("vec_id") != 4)
     )
-    from ..functions.vectors import array_lit_sql, cosine_expr
-
-    qw_sql = array_lit_sql(qvec)
+    cos = cosine_lit_sql("w", qvec)
     return (
         codes.select("vec_id", F.expr("transform(q8, c -> c * scale)").alias("w"))
-        .select("vec_id", cosine_expr("w", qw_sql, digits=4).alias("score"))
+        .select("vec_id", F.expr(f"round({cos}, 4)").alias("score"))
         .orderBy(F.desc("score"), "vec_id")
         .limit(10)
     )
@@ -1509,21 +1506,19 @@ def ann_recall_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _int8_code_table(emb)
     dq = codes.select("vec_id", F.expr("transform(q8, c -> c * scale)").alias("w"))
 
-    from ..functions.vectors import array_lit_sql, cosine_expr
-
-    qv_sql = array_lit_sql(_query_vector_cached(spark, sf_dir, 0))
-    qw_sql = array_lit_sql(_dequantized_query_cached(spark, sf_dir, dq))
+    cos_f = cosine_lit_sql("v", _query_vector_cached(spark, sf_dir, 0))
+    cos_q = cosine_lit_sql("w", _dequantized_query_cached(spark, sf_dir, dq))
 
     topf = (
         d.filter(F.col("vec_id") != 0)
-        .select("vec_id", cosine_expr("v", qv_sql, digits=4).alias("s"))
+        .select("vec_id", F.expr(f"round({cos_f}, 4)").alias("s"))
         .orderBy(F.desc("s"), "vec_id")
         .limit(10)
         .select("vec_id")
     )
     top8 = (
         dq.filter(F.col("vec_id") != 0)
-        .select("vec_id", cosine_expr("w", qw_sql, digits=4).alias("s"))
+        .select("vec_id", F.expr(f"round({cos_q}, 4)").alias("s"))
         .orderBy(F.desc("s"), "vec_id")
         .limit(10)
         .select("vec_id")

@@ -68,22 +68,24 @@ def bm25_scores(
     # executor memory per corpus lineage.
     postings = build_postings(docs, id_col, text_col).cache()
     doc_stats = build_doc_stats(postings).cache()
-    _CACHED_INDEXES.append((postings, doc_stats))
+    _CACHED_INDEXES.setdefault(postings.semanticHash(), (postings, doc_stats))
     return _score_postings(postings, doc_stats, query_terms)
 
 
 # Every live (cached) index registered here so long-lived sessions (the
 # REST API, notebook sessions) can drop them: each DISTINCT corpus lineage
-# pins one materialization in executor memory until released (re-caching
-# an identical canonical plan is a no-op, so per-query calls don't stack).
-_CACHED_INDEXES: list[tuple[DataFrame, DataFrame]] = []
+# pins one materialization in executor memory until released. Re-caching
+# an identical canonical plan is a no-op in Spark's cache manager, and the
+# entry is keyed by that plan's semantic hash, so per-query calls over one
+# lineage hold one entry.
+_CACHED_INDEXES: dict[int, tuple[DataFrame, DataFrame]] = {}
 
 
 def release_indexes() -> int:
-    """Unpersist all cached live indexes; returns how many registrations
-    were dropped. Idempotent — double-unpersist is a Spark no-op."""
+    """Unpersist all cached live indexes; returns how many lineages were
+    dropped. Idempotent — double-unpersist is a Spark no-op."""
     n = len(_CACHED_INDEXES)
-    for postings, doc_stats in _CACHED_INDEXES:
+    for postings, doc_stats in _CACHED_INDEXES.values():
         doc_stats.unpersist()
         postings.unpersist()
     _CACHED_INDEXES.clear()
@@ -522,6 +524,32 @@ def scored_from_index_sqltext(
     )
 
 
+# Σdf (posting rows a query's keyword leg reads) at or below which the
+# leg reads them in ONE task: its GROUP BY doc_key then needs no exchange,
+# so AQE runs no separate shuffle-map job and the leg is one Spark job
+# with one stage. Measured on a 4-vCPU host (local[4], 4 query terms of
+# 250 000 postings each, top-10, median of 7): one task takes 1.47-1.55 s
+# at 1 M rows and the shuffle plan 1.30-1.58 s, so up to this size the
+# single task costs no more. Above it the partitioned scan and its
+# shuffle spread the work, which is the path large corpora take.
+SINGLE_TASK_POSTINGS = 1_000_000
+
+
+def postings_scan(spark, path: str, query_terms: list[str]) -> DataFrame:
+    """The `{post}` argument of scored_from_index_sqltext: the index's
+    memoized postings scan (read_parquet_cached), coalesced to one
+    partition when the query terms' summed df — known before planning,
+    from the term dictionary, a dict read when warm — is at most
+    SINGLE_TASK_POSTINGS. The term IN filter still pushes through the
+    coalesce into the parquet scan."""
+    from ..sources.catalog import read_parquet_cached
+
+    post = read_parquet_cached(spark, f"{path}/postings")
+    if sum(_term_df_lookup(path, query_terms).values()) <= SINGLE_TASK_POSTINGS:
+        return post.coalesce(1)
+    return post
+
+
 def bm25_scores_from_index(
     spark,
     path: str,
@@ -553,11 +581,9 @@ def bm25_scores_from_index(
     # (read_parquet_cached) — an unchanged index used to pay a ~190 ms
     # footer/listing round-trip on EVERY query, the single largest slice
     # of the served bm25/hybrid walls at sf0.1.
-    from ..sources.catalog import read_parquet_cached
-
     return spark.sql(
         scored_from_index_sqltext(path, query_terms),
-        post=read_parquet_cached(spark, f"{path}/postings"),
+        post=postings_scan(spark, path, query_terms),
     )
 
 
@@ -570,11 +596,9 @@ def bm25_topk_from_index(
     """Top-k by rounded score over the index-served scorer: the whole
     query — scorer + rounded top-k — is one spark.sql round-trip (scan →
     score → hash agg → TakeOrderedAndProject)."""
-    from ..sources.catalog import read_parquet_cached
-
     return spark.sql(
         "SELECT doc_key, round(score, 4) AS score FROM ("
         + scored_from_index_sqltext(path, query_terms)
         + ") kw ORDER BY score DESC, doc_key LIMIT " + str(int(k)),
-        post=read_parquet_cached(spark, f"{path}/postings"),
+        post=postings_scan(spark, path, query_terms),
     )

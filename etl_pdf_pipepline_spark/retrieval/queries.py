@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import title_from_filename, tokens
-from ..functions.vectors import as_double_sql, cosine_expr
 from ..registry import query
 from ..sources.catalog import load_table, warehouse_path
 from .bm25 import bm25_scores, bm25_topk
@@ -421,8 +420,10 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: the query vector enters the vector leg as a SQL LITERAL
     (array_lit_sql over the signature-memoized fetch) instead of a
     broadcast 1-row DF — the scored scan is a pure projection, one
-    BroadcastExchange driver job gone, and constant folding evaluates
-    the query norm at plan time.
+    BroadcastExchange driver job gone. The query norm is not
+    constant-folded (a higher-order function never is): cosine_lit_sql
+    folds it driver-side into a literal and computes each per-row
+    value once.
 
     r13 construction floor (guide §1): on the served route the ENTIRE
     query — index-scored kw leg, literal-vector leg, both top-20 ranks,
@@ -433,19 +434,18 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
 
     if bm25_index_servable(spark, sf_dir):
-        from ..functions.vectors import array_lit_sql, as_double_sql, cosine_sql
+        from ..functions.vectors import cosine_lit_sql
         from ..operators.similarity import _query_vector_cached
-        from ..sources.catalog import read_parquet_cached
-        from .bm25 import scored_from_index_sqltext
+        from .bm25 import postings_scan, scored_from_index_sqltext
         from .hybrid import rrf_sql
 
-        kw_sql = scored_from_index_sqltext(_bm25_index_path(sf_dir), QUERY_TERMS)
-        qv_sql = array_lit_sql(_query_vector_cached(spark, sf_dir, 0))
-        cos = cosine_sql(as_double_sql("embedding"), qv_sql)
+        path = _bm25_index_path(sf_dir)
+        kw_sql = scored_from_index_sqltext(path, QUERY_TERMS)
+        cos = cosine_lit_sql("embedding", _query_vector_cached(spark, sf_dir, 0))
         vec_sql = "SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}"
         return spark.sql(
             rrf_sql(kw_sql, vec_sql, depth=20, k=10),
-            post=read_parquet_cached(spark, _bm25_index_path(sf_dir) + "/postings"),
+            post=postings_scan(spark, path, QUERY_TERMS),
             emb=emb,
         ).withColumnRenamed("doc_key", "doc_id")
 
@@ -459,14 +459,11 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _vec_scored_lit(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     """(doc_key, score): the hybrid family's vector leg — cosine against
     the literal query vector, shared by the live and from-index paths."""
-    from ..functions.vectors import array_lit_sql
+    from ..functions.vectors import cosine_lit_sql
     from ..operators.similarity import _query_vector_cached
 
-    qv_sql = array_lit_sql(_query_vector_cached(spark, sf_dir, 0))
-    return emb.select(
-        F.col("vec_id").alias("doc_key"),
-        cosine_expr(as_double_sql("embedding"), qv_sql, digits=4).alias("score"),
-    )
+    cos = cosine_lit_sql("embedding", _query_vector_cached(spark, sf_dir, 0))
+    return emb.select(F.col("vec_id").alias("doc_key"), F.expr(f"round({cos}, 4)").alias("score"))
 
 
 @query("hybrid_rrf_from_index", oracle=_HYBRID_ORACLE)

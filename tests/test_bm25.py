@@ -109,9 +109,25 @@ def test_release_indexes_unpersists_cached_postings(spark):
     )
     bm25.bm25_scores(df, "doc_id", "text", ["spark"]).collect()
     assert len(bm25._CACHED_INDEXES) >= 1
-    cached = [p for p, _ in bm25._CACHED_INDEXES]
+    cached = [p for p, _ in bm25._CACHED_INDEXES.values()]
     n = bm25.release_indexes()
     assert n >= 1 and not bm25._CACHED_INDEXES
     for p in cached:
         assert not p.is_cached
     assert bm25.release_indexes() == 0  # idempotent
+
+
+def test_live_index_list_holds_one_entry_per_lineage(spark):
+    """Repeated queries over one corpus lineage register one live index,
+    not one per call; release_indexes still drops it."""
+    from etl_pdf_pipepline_spark.retrieval import bm25
+
+    bm25.release_indexes()
+    df = spark.createDataFrame(
+        [(1, "spark joins shuffle"), (2, "window functions rank")], ["doc_id", "text"]
+    )
+    for i in range(20):
+        bm25.bm25_scores(df, "doc_id", "text", ["spark", "rank"][: 1 + i % 2])
+    assert len(bm25._CACHED_INDEXES) == 1
+    (postings, _), = bm25._CACHED_INDEXES.values()
+    assert bm25.release_indexes() == 1 and not postings.is_cached

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from etl_pdf_pipepline_spark.api.engine import BadRequest, NotFound, SparkEngine
 from etl_pdf_pipepline_spark.functions.vectors import as_double, cosine, query_vector_lit
+from etl_pdf_pipepline_spark.retrieval import bm25
 from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_scores, release_indexes
 from etl_pdf_pipepline_spark.retrieval.embedder import HashEmbedder, embed_query
 from etl_pdf_pipepline_spark.retrieval.hybrid import rank_top, rrf_fuse
@@ -63,17 +64,22 @@ def test_title_filter_matches_upload_filename_title(spark):
 def test_search_is_one_plan(spark):
     """Job count of a warmed hybrid search does not grow with its limit:
     the ranking is one collect and the title/text lookup one more, never
-    one lookup per hit."""
+    one lookup per hit. With no session deltas and a small posting
+    union, the ranking is one job in every mode, so a search runs at
+    most 2."""
     eng = SparkEngine(spark, SF_SMALL)
     query = "spark join window"
 
-    def jobs(limit: int) -> int:
-        hits, n = _jobs(spark, f"test-one-plan-{limit}", lambda: eng.search(query, mode="hybrid", limit=limit))
+    def jobs(limit: int, mode: str = "hybrid") -> int:
+        hits, n = _jobs(spark, f"test-one-plan-{mode}-{limit}", lambda: eng.search(query, mode=mode, limit=limit))
         assert len(hits) == limit
         return n
 
     eng.search(query, mode="hybrid", limit=10)  # reads the corpus dimension once
     assert jobs(3) == jobs(10)
+    for mode in ("keyword", "vector", "hybrid"):
+        eng.search(query, mode=mode, limit=5)  # warms this mode's lookup path
+        assert jobs(5, mode) <= 2, mode
 
 
 @pytest.mark.parametrize("mode", ["keyword", "vector", "hybrid"])
@@ -144,6 +150,35 @@ def test_query_terms_are_sql_literals(spark):
     assert [(h["document_id"], h["score"]) for h in odd] == [(h["document_id"], h["score"]) for h in plain]
     up = eng.search("{post} o'neil \\x", mode="keyword", limit=5)
     assert [h["document_title"] for h in up] == ["odd"]
+
+
+def test_shuffle_path_ranks_like_the_single_task_path(spark, monkeypatch):
+    """The keyword leg's two plans, one task (small Σdf) and the
+    partitioned scan with its shuffle (SINGLE_TASK_POSTINGS forced to 0),
+    rank keyword and hybrid searches the same, before and after an
+    upload and a delete."""
+    eng = SparkEngine(spark, SF_SMALL)
+    queries = ("spark join window", "watermark join")
+
+    def rankings() -> list:
+        return [
+            [(h["document_id"], h["score"]) for h in eng.search(q, mode=mode, limit=8)]
+            for q in queries
+            for mode in ("keyword", "hybrid")
+        ]
+
+    def both_paths() -> list:
+        single = rankings()
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "SINGLE_TASK_POSTINGS", 0)
+            assert rankings() == single
+        return single
+
+    before = both_paths()
+    eng.upload("paths.pdf", b"%PDF-1.4 spark join join window watermark")
+    eng.delete_document(before[0][0][0])
+    after = both_paths()
+    assert after != before
 
 
 def _recompute(spark, eng, deleted: set[str], query: str, mode: str, limit: int):

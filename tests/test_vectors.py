@@ -7,8 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pdf_pipepline_spark.functions.vectors import (
+    array_lit_sql,
     as_double,
     cosine,
+    cosine_lit_sql,
     dot,
     norm,
     query_vector_lit,
@@ -160,6 +162,61 @@ def test_cosine_topk_arrow_null_and_ragged_rows_skipped(spark):
     out = cosine_topk_arrow(df, q, k=5).collect()
     assert len(out) == 5
     assert all(r.vec_id not in (20, 21) for r in out)
+
+
+
+def _two_fragment_cosine(col: str, q: list[float]) -> str:
+    """The generic cosine form cosine_lit_sql replaced: the row cast by a
+    transform and both norms folded per row, inside a CASE."""
+    a = f"transform({col}, x -> cast(x as double))"
+    b = array_lit_sql(q)
+
+    def norm_sq(v: str) -> str:
+        return f"aggregate({v}, cast(0.0 as double), (acc, x) -> acc + x * x)"
+
+    denom = f"sqrt({norm_sq(a)}) * sqrt({norm_sq(b)})"
+    dot_ab = f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
+    return f"CASE WHEN {denom} != cast(0.0 as double) THEN {dot_ab} / ({denom}) END"
+
+
+def test_cosine_lit_sql_bit_identical_to_two_fragment_form(spark):
+    """Unrounded scores equal the two-fragment form, and the Column
+    cosine(), bit for bit on random float32 rows: the driver-folded |q|
+    uses the JVM's own arithmetic."""
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.standard_normal(64).astype(np.float32)]) for i in range(300)]
+    df = spark.createDataFrame(rows, "id int, v array<float>")
+    for q in (rows[0][1], [float(x) for x in rng.uniform(-3, 3, 64)], rows[5][1][:63] + [1e-30]):
+        out = df.select(
+            "id",
+            F.expr(cosine_lit_sql("v", q)).alias("new"),
+            F.expr(_two_fragment_cosine("v", q)).alias("old"),
+            cosine(as_double("v"), query_vector_lit(q)).alias("col"),
+        ).collect()
+        assert all(r.new is not None for r in out)
+        assert [r.new for r in out] == [r.old for r in out] == [r.col for r in out]
+
+
+def test_cosine_lit_sql_null_contract(spark):
+    """NULL, never NaN or an error, for a zero-norm row, a NULL embedding,
+    a zero query vector and an embedding shorter or longer than the
+    query — as the two-fragment form gives."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [0.0, 0.0, 0.0]), (2, None), (3, [1.0, 2.0]), (4, [1.0, 2.0, 3.0, 4.0])],
+        "id int, v array<float>",
+    )
+
+    def scores(q):
+        out = df.select(
+            "id", F.expr(cosine_lit_sql("v", q)).alias("new"), F.expr(_two_fragment_cosine("v", q)).alias("old")
+        ).orderBy("id").collect()
+        assert [r.new for r in out] == [r.old for r in out]
+        return [r.new for r in out]
+
+    got = scores([0.5, -1.0, 2.0])
+    assert got[0] == pytest.approx(4.5 / (np.sqrt(14.0) * np.sqrt(5.25)))
+    assert got[1:] == [None, None, None, None]
+    assert scores([0.0, 0.0, 0.0]) == [None] * 5
 
 
 try:
