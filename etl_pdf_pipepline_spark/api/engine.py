@@ -22,7 +22,7 @@ Search: the keyword leg is served from the persisted BM25 index, built
 or found fresh once per engine (retrieval/queries.py::ensure_bm25_index
 — the reference builds its full-text index once per ingest batch and
 every query reads it, src/pipeline.py:164-165). The deltas edit that
-index exactly at read time (bm25.scored_from_index_sqltext's `added`
+index exactly at read time (bm25.scored_from_index_sql's `added`
 and `removed`): each upload's term counts are taken once, at upload, and
 kept on its row, and each deleted lake document's posting rows once, at
 delete; a search corrects N, total_dl and df by them, skips the
@@ -33,7 +33,7 @@ reader of the corpus. The vector leg is a cosine scan of the embeddings
 with the query vector as a literal (functions/vectors.py::cosine_lit_sql,
 each per-row value computed once), and hybrid mode fuses the two with
 RRF — all one spark.sql text, collected once. When the query terms'
-postings are few (bm25.postings_scan: Σdf at most
+postings are few (bm25.scored_from_index_sql: Σdf at most
 SINGLE_TASK_POSTINGS), the keyword leg reads them in one task, its
 GROUP BY needs no exchange and the ranking is one Spark job with one
 stage; above that, and whenever uploads are served (their VALUES rows
@@ -66,7 +66,7 @@ from ..operators.multimodal import decode_image_fake, media_table
 # perfbench/run.py::_wrap_layers re-binds bm25_scores, embed_query and
 # load_table on this module to span them, so all three must stay bound
 # here — bm25_scores too, although the engine no longer calls it.
-from ..retrieval.bm25 import bm25_scores, postings_scan, scored_from_index_sqltext  # noqa: F401
+from ..retrieval.bm25 import bm25_scores, scored_from_index_sql  # noqa: F401
 from ..retrieval.embedder import HashEmbedder, embed_query
 from ..retrieval.hybrid import SearchMode, route_topic, rrf_sql
 from ..retrieval.queries import ensure_bm25_index
@@ -285,8 +285,9 @@ class SparkEngine:
 
         if mode_e is not SearchMode.VECTOR:
             added = {u["id"]: u["terms"] for u in self._uploads.values() if u["status"] == "completed"}
-            kw = scored_from_index_sqltext(self._index, terms, added=added, removed=self._removed)
-            frames["post"] = postings_scan(self.spark, self._index, terms)
+            kw, frames["post"] = scored_from_index_sql(
+                self.spark, self._index, terms, added=added, removed=self._removed
+            )
             kw = f"SELECT doc_key, round(score, 4) AS score FROM ({kw}) s{keep}"
         if mode_e is not SearchMode.KEYWORD:
             frames["emb"] = load_table(self.spark, self.sf_dir, "embeddings")

@@ -64,11 +64,12 @@ def bm25_scores(
     # the registry rows that score a derived view (routed, title-weighted,
     # context) or the unindexed fallback. Serving (api/engine.py, which
     # cli.py search calls) reads the persisted index instead
-    # (persist_index / scored_from_index_sqltext below), which pins no
+    # (persist_index / scored_from_index_sql below), which pins no
     # executor memory per corpus lineage.
     postings = build_postings(docs, id_col, text_col).cache()
     doc_stats = build_doc_stats(postings).cache()
-    _CACHED_INDEXES.setdefault(postings.semanticHash(), (postings, doc_stats))
+    key = (id(postings.sparkSession), postings.semanticHash())
+    _CACHED_INDEXES.setdefault(key, (postings, doc_stats))
     return _score_postings(postings, doc_stats, query_terms)
 
 
@@ -76,9 +77,10 @@ def bm25_scores(
 # REST API, notebook sessions) can drop them: each DISTINCT corpus lineage
 # pins one materialization in executor memory until released. Re-caching
 # an identical canonical plan is a no-op in Spark's cache manager, and the
-# entry is keyed by that plan's semantic hash, so per-query calls over one
-# lineage hold one entry.
-_CACHED_INDEXES: dict[int, tuple[DataFrame, DataFrame]] = {}
+# entry is keyed by the session and that plan's semantic hash, so
+# per-query calls over one lineage hold one entry while the same plan
+# cached in another session gets its own.
+_CACHED_INDEXES: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
 
 
 def release_indexes() -> int:
@@ -457,21 +459,43 @@ def _sql_str_lit(t: str) -> str:
     return "'" + t.replace("{", "{{").replace("}", "}}") + "'"
 
 
-def scored_from_index_sqltext(
+# Σdf (posting rows a query's keyword leg reads) at or below which the
+# leg reads them in ONE task: its GROUP BY doc_key then needs no exchange,
+# so AQE runs no separate shuffle-map job and the leg is one Spark job
+# with one stage. Above it the partitioned scan and its shuffle stay.
+# Placed at the measured crossover (tools/keyword_leg_crossover.py:
+# 4-vCPU host, local[4], 4 query terms each in every doc of an N-doc
+# index, top-10; medians of 7 runs, 2-5 interleaved rounds; wall seconds,
+# one task vs shuffle): 0.5 M rows 0.74 vs 0.77, 1 M 1.34 vs 1.37 (a tie),
+# 1.5 M 1.75 vs 1.40, 2 M 2.46 vs 1.51, 4 M 5.09 vs 3.07, 8 M 10.31 vs
+# 5.66. The one task grows ~1.3 s per M rows on one core; from 1.5 M the
+# shuffle's 4 tasks win on wall time, though the one task stays cheaper
+# in CPU at every size.
+SINGLE_TASK_POSTINGS = 1_000_000
+
+
+def scored_from_index_sql(
+    spark,
     path: str,
     query_terms: list[str],
     added: Mapping[str, Mapping[str, int]] | None = None,
     removed: Mapping[int, Mapping[str, int]] | None = None,
-) -> str:
-    """The index-served scorer as ONE SQL text over a `{post}` DataFrame
-    arg (the signature-memoized postings scan): literal IN term pushdown,
-    df from the term dictionary folded in as a literal map, corpus
-    scalars as double literals — one spark.sql round-trip for the whole
-    tree (r13 construction-floor fix, guide §1: the op-by-op build cost
-    ~0.16 s of py4j per bm25_search call at sf0.1). Also the composable
-    kw-leg fragment for the hybrid family's single SQL text
+) -> tuple[str, DataFrame]:
+    """The index-served scorer as ONE SQL text and the `{post}` DataFrame
+    it reads, to pass as spark.sql(text, post=post): literal IN term
+    pushdown, df from the term dictionary folded in as a literal map,
+    corpus scalars as double literals — one spark.sql round-trip for the
+    whole tree (r13 construction-floor fix, guide §1: the op-by-op build
+    cost ~0.16 s of py4j per bm25_search call at sf0.1). Also the
+    composable kw-leg fragment for the hybrid family's single SQL text
     (retrieval/queries.py). An empty term list yields a text that scores
     nothing.
+
+    `post` is the index's memoized postings scan (read_parquet_cached),
+    coalesced to one partition when the query terms' summed df — read
+    from the term dictionary with the df literals, a dict read when warm
+    — is at most SINGLE_TASK_POSTINGS. The term IN filter still pushes
+    through the coalesce into the parquet scan.
 
     `added` and `removed` are exact read-time edits of the index, each
     document given as its {term: tf} counts: `added` documents (keyed by
@@ -483,13 +507,18 @@ def scored_from_index_sqltext(
     in as a VALUES list; the scoring expression is the same. With either
     edit given, keys are strings (index keys cast), so ties break by
     string id."""
+    from ..sources.catalog import read_parquet_cached
+
+    post = read_parquet_cached(spark, f"{path}/postings")
     edited = added is not None or removed is not None
     key_sql = "CAST(doc_key AS STRING) AS doc_key" if edited else "doc_key"
     terms = sorted(set(query_terms))
     if not terms:
-        return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false"
+        return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false", post
     n, total_dl = corpus_scalars(path)
     dfs = _term_df_lookup(path, terms)
+    if sum(dfs.values()) <= SINGLE_TASK_POSTINGS:
+        post = post.coalesce(1)
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
     added, removed = added or {}, removed or {}
     rows = "SELECT " + key_sql + ", term, tf, dl FROM {post} WHERE term IN (" + terms_in + ")"
@@ -516,38 +545,13 @@ def scored_from_index_sqltext(
     # NB: literal braces around `post` are load-bearing — this text is
     # passed to spark.sql(..., post=<postings scan>) as a template, never
     # through an f-string.
-    return (
+    text = (
         "SELECT doc_key, sum(" + score + ") AS score FROM ("
         "  SELECT doc_key, tf, dl, element_at(map(" + entries + "), term) AS df"
         "  FROM (" + rows + ") p"
         ") m GROUP BY doc_key"
     )
-
-
-# Σdf (posting rows a query's keyword leg reads) at or below which the
-# leg reads them in ONE task: its GROUP BY doc_key then needs no exchange,
-# so AQE runs no separate shuffle-map job and the leg is one Spark job
-# with one stage. Measured on a 4-vCPU host (local[4], 4 query terms of
-# 250 000 postings each, top-10, median of 7): one task takes 1.47-1.55 s
-# at 1 M rows and the shuffle plan 1.30-1.58 s, so up to this size the
-# single task costs no more. Above it the partitioned scan and its
-# shuffle spread the work, which is the path large corpora take.
-SINGLE_TASK_POSTINGS = 1_000_000
-
-
-def postings_scan(spark, path: str, query_terms: list[str]) -> DataFrame:
-    """The `{post}` argument of scored_from_index_sqltext: the index's
-    memoized postings scan (read_parquet_cached), coalesced to one
-    partition when the query terms' summed df — known before planning,
-    from the term dictionary, a dict read when warm — is at most
-    SINGLE_TASK_POSTINGS. The term IN filter still pushes through the
-    coalesce into the parquet scan."""
-    from ..sources.catalog import read_parquet_cached
-
-    post = read_parquet_cached(spark, f"{path}/postings")
-    if sum(_term_df_lookup(path, query_terms).values()) <= SINGLE_TASK_POSTINGS:
-        return post.coalesce(1)
-    return post
+    return text, post
 
 
 def bm25_scores_from_index(
@@ -558,7 +562,7 @@ def bm25_scores_from_index(
     """(doc_key, score) from a persisted index: no tokenization, no
     corpus scan, no doc-side join — read the posting lists of the query
     terms and score them, as the one spark.sql text of
-    scored_from_index_sqltext. The scan-path properties that carry the
+    scored_from_index_sql. The scan-path properties that carry the
     whole cost model:
 
     - The term lookup is a LITERAL IN predicate on the scan, not a
@@ -581,10 +585,8 @@ def bm25_scores_from_index(
     # (read_parquet_cached) — an unchanged index used to pay a ~190 ms
     # footer/listing round-trip on EVERY query, the single largest slice
     # of the served bm25/hybrid walls at sf0.1.
-    return spark.sql(
-        scored_from_index_sqltext(path, query_terms),
-        post=postings_scan(spark, path, query_terms),
-    )
+    text, post = scored_from_index_sql(spark, path, query_terms)
+    return spark.sql(text, post=post)
 
 
 def bm25_topk_from_index(
@@ -596,9 +598,9 @@ def bm25_topk_from_index(
     """Top-k by rounded score over the index-served scorer: the whole
     query — scorer + rounded top-k — is one spark.sql round-trip (scan →
     score → hash agg → TakeOrderedAndProject)."""
+    text, post = scored_from_index_sql(spark, path, query_terms)
     return spark.sql(
-        "SELECT doc_key, round(score, 4) AS score FROM ("
-        + scored_from_index_sqltext(path, query_terms)
-        + ") kw ORDER BY score DESC, doc_key LIMIT " + str(int(k)),
-        post=postings_scan(spark, path, query_terms),
+        "SELECT doc_key, round(score, 4) AS score FROM (" + text + ") kw ORDER BY score DESC, doc_key LIMIT "
+        + str(int(k)),
+        post=post,
     )

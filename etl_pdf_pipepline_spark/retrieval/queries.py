@@ -436,16 +436,15 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     if bm25_index_servable(spark, sf_dir):
         from ..functions.vectors import cosine_lit_sql
         from ..operators.similarity import _query_vector_cached
-        from .bm25 import postings_scan, scored_from_index_sqltext
+        from .bm25 import scored_from_index_sql
         from .hybrid import rrf_sql
 
-        path = _bm25_index_path(sf_dir)
-        kw_sql = scored_from_index_sqltext(path, QUERY_TERMS)
+        kw_sql, post = scored_from_index_sql(spark, _bm25_index_path(sf_dir), QUERY_TERMS)
         cos = cosine_lit_sql("embedding", _query_vector_cached(spark, sf_dir, 0))
         vec_sql = "SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}"
         return spark.sql(
             rrf_sql(kw_sql, vec_sql, depth=20, k=10),
-            post=postings_scan(spark, path, QUERY_TERMS),
+            post=post,
             emb=emb,
         ).withColumnRenamed("doc_key", "doc_id")
 

@@ -119,15 +119,20 @@ def test_release_indexes_unpersists_cached_postings(spark):
 
 def test_live_index_list_holds_one_entry_per_lineage(spark):
     """Repeated queries over one corpus lineage register one live index,
-    not one per call; release_indexes still drops it."""
+    not one per call; the same plan from another session registers its
+    own; release_indexes still drops them all."""
     from etl_pdf_pipepline_spark.retrieval import bm25
 
     bm25.release_indexes()
-    df = spark.createDataFrame(
-        [(1, "spark joins shuffle"), (2, "window functions rank")], ["doc_id", "text"]
-    )
+    rows = "SELECT * FROM VALUES (1, 'spark joins shuffle'), (2, 'window functions rank') AS t(doc_id, text)"
+    df = spark.sql(rows)
     for i in range(20):
         bm25.bm25_scores(df, "doc_id", "text", ["spark", "rank"][: 1 + i % 2])
     assert len(bm25._CACHED_INDEXES) == 1
-    (postings, _), = bm25._CACHED_INDEXES.values()
-    assert bm25.release_indexes() == 1 and not postings.is_cached
+    other = spark.newSession().sql(rows)
+    assert other.semanticHash() == df.semanticHash()
+    bm25.bm25_scores(other, "doc_id", "text", ["spark"])
+    assert len(bm25._CACHED_INDEXES) == 2
+    cached = [p for p, _ in bm25._CACHED_INDEXES.values()]
+    assert bm25.release_indexes() == 2
+    assert not any(p.is_cached for p in cached)
