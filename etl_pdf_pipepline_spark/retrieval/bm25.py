@@ -465,8 +465,8 @@ def _sql_str_lit(t: str) -> str:
 # with one stage. Above it the partitioned scan and its shuffle stay.
 # Placed at the measured crossover (tools/keyword_leg_crossover.py:
 # 4-vCPU host, local[4], 4 query terms each in every doc of an N-doc
-# index, top-10; medians of 7 runs, 2-5 interleaved rounds; wall seconds,
-# one task vs shuffle): 0.5 M rows 0.74 vs 0.77, 1 M 1.34 vs 1.37 (a tie),
+# index, top-10; per size, the median over 2-5 interleaved rounds of each
+# round's median of 7 runs; wall seconds, one task vs shuffle): 0.5 M rows 0.74 vs 0.77, 1 M 1.34 vs 1.37 (a tie),
 # 1.5 M 1.75 vs 1.40, 2 M 2.46 vs 1.51, 4 M 5.09 vs 3.07, 8 M 10.31 vs
 # 5.66. The one task grows ~1.3 s per M rows on one core; from 1.5 M the
 # shuffle's 4 tasks win on wall time, though the one task stays cheaper
