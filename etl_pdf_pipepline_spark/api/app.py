@@ -39,6 +39,30 @@ except Exception:  # pragma: no cover - environment-dependent
     HAVE_FASTAPI = False
 
 
+def _int_arg(value: Any, name: str) -> int:
+    """An integer request field; BadRequest (HTTP 400) when it is not one."""
+    try:
+        return int(value)
+    except (TypeError, ValueError, OverflowError):
+        raise BadRequest(f"{name} must be an integer")
+
+
+def _search_body(body: Any, count: str, default: int) -> tuple[str, str, int, str | None]:
+    """(query, mode, `count`, title_filter) from a /search or
+    /search/context JSON body, the one parser both frontends use:
+    BadRequest (HTTP 400) for a body that is not an object and for a
+    field of the wrong type."""
+    if not isinstance(body, dict):
+        raise BadRequest("The request body must be a JSON object")
+    query, mode, title = body.get("query", ""), body.get("mode", "hybrid"), body.get("title_filter")
+    for name, value in (("query", query), ("mode", mode)):
+        if not isinstance(value, str):
+            raise BadRequest(f"{name} must be a string")
+    if title is not None and not isinstance(title, str):
+        raise BadRequest("title_filter must be a string")
+    return query, mode, _int_arg(body.get(count, default), count), title
+
+
 def _engine(spark=None, sf_dir: str | None = None) -> SparkEngine:
     if spark is None:
         from ..session import get_spark
@@ -76,22 +100,13 @@ def create_app(spark=None, sf_dir: str | None = None):  # pragma: no cover
 
     @app.post("/search")
     def search(body: dict[str, Any]) -> list[dict[str, Any]]:
-        return guard(
-            eng.search,
-            body.get("query", ""),
-            body.get("mode", "hybrid"),
-            int(body.get("limit", 10)),
-            body.get("title_filter"),
-        )
+        query, mode, limit, title_filter = guard(_search_body, body, "limit", 10)
+        return guard(eng.search, query, mode, limit, title_filter)
 
     @app.post("/search/context")
     def context(body: dict[str, Any]) -> dict[str, Any]:
-        return guard(
-            eng.get_context,
-            body.get("query", ""),
-            int(body.get("max_tokens", 4000)),
-            body.get("mode", "hybrid"),
-        )
+        query, mode, max_tokens, _ = guard(_search_body, body, "max_tokens", 4000)
+        return guard(eng.get_context, query, max_tokens, mode)
 
     @app.get("/stats")
     def stats() -> dict[str, Any]:
@@ -167,25 +182,13 @@ def create_flask_app(spark=None, sf_dir: str | None = None):
     @app.post("/search")
     def search():
         body = request.get_json(force=True, silent=True) or {}
-        return jsonify(
-            eng.search(
-                body.get("query", ""),
-                body.get("mode", "hybrid"),
-                int(body.get("limit", 10)),
-                body.get("title_filter"),
-            )
-        )
+        return jsonify(eng.search(*_search_body(body, "limit", 10)))
 
     @app.post("/search/context")
     def context():
         body = request.get_json(force=True, silent=True) or {}
-        return jsonify(
-            eng.get_context(
-                body.get("query", ""),
-                int(body.get("max_tokens", 4000)),
-                body.get("mode", "hybrid"),
-            )
-        )
+        query, mode, max_tokens, _ = _search_body(body, "max_tokens", 4000)
+        return jsonify(eng.get_context(query, max_tokens, mode))
 
     @app.get("/stats")
     def stats():
@@ -195,7 +198,7 @@ def create_flask_app(spark=None, sf_dir: str | None = None):
     def list_documents():
         return jsonify(
             eng.list_documents(
-                request.args.get("status"), int(request.args.get("limit", 100))
+                request.args.get("status"), _int_arg(request.args.get("limit", 100), "limit")
             )
         )
 
@@ -222,7 +225,7 @@ def create_flask_app(spark=None, sf_dir: str | None = None):
     @app.get("/documents/<document_id>/chunks")
     def document_chunks(document_id):
         return jsonify(
-            eng.get_document_chunks(document_id, int(request.args.get("limit", 100)))
+            eng.get_document_chunks(document_id, _int_arg(request.args.get("limit", 100), "limit"))
         )
 
     @app.get("/chunks/<chunk_id>")

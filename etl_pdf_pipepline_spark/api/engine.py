@@ -22,7 +22,7 @@ Search: the keyword leg is served from the persisted BM25 index, built
 or found fresh once per engine (retrieval/queries.py::ensure_bm25_index
 — the reference builds its full-text index once per ingest batch and
 every query reads it, src/pipeline.py:164-165). The deltas edit that
-index exactly at read time (bm25.scored_from_index_sql's `added`
+index exactly at read time (bm25.scored_sql's `added`
 and `removed`): each upload's term counts are taken once, at upload, and
 kept on its row, and each deleted lake document's posting rows once, at
 delete; a search corrects N, total_dl and df by them, skips the
@@ -33,7 +33,7 @@ reader of the corpus. The vector leg is a cosine scan of the embeddings
 with the query vector as a literal (functions/vectors.py::cosine_lit_sql,
 each per-row value computed once), and hybrid mode fuses the two with
 RRF — all one spark.sql text, collected once. When the query terms'
-postings are few (bm25.scored_from_index_sql: Σdf at most
+postings are few (bm25.scored_sql: Σdf at most
 SINGLE_TASK_POSTINGS), the keyword leg reads them in one task, its
 GROUP BY needs no exchange and the ranking is one Spark job with one
 stage; above that, and whenever uploads are served (their VALUES rows
@@ -59,7 +59,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import title_from_filename, tokens
+from ..functions.text import query_tokens, title_from_filename, tokens
 from ..functions.vectors import cosine_lit_sql
 from ..operators.chunker import chunk_text
 from ..operators.multimodal import decode_image_fake, media_table
@@ -273,7 +273,7 @@ class SparkEngine:
         except ValueError:
             raise BadRequest(f"Invalid search mode: {mode}. Use: vector, hybrid, keyword")
         _check_limit(limit)
-        terms = [t for t in query.lower().split() if t]
+        terms = query_tokens(query)
         if not terms:
             raise BadRequest("Empty query")
         frames: dict[str, DataFrame] = {}

@@ -2,10 +2,14 @@
 
 Every function here returns a pyspark Column built ONLY from built-in
 functions, so the whole expression stays inside whole-stage codegen (no
-Python in the hot path). Each cites the reference behavior it re-expresses.
+Python in the hot path); the one exception is query_tokens, the driver-side
+twin of `tokens` for query strings. Each cites the reference behavior it
+re-expresses.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,6 +32,22 @@ def tokens(col: Column | str) -> Column:
     return F.when(cleaned == "", F.array().cast("array<string>")).otherwise(
         F.split(cleaned, r"\s+")
     )
+
+
+# Java's \s without UNICODE_CHARACTER_CLASS, the class `tokens` splits
+# on: ASCII whitespace only, so U+00A0 or U+3000 stays inside a token.
+_JAVA_WS = r"[ \t\n\x0b\f\r]+"
+# `tokens`' edge strip, ^\s+|\s+$, where Java's $ also matches before a
+# final line terminator that is not whitespace (U+0085, U+2028, U+2029).
+_JAVA_EDGE_WS = re.compile(f"^{_JAVA_WS}|{_JAVA_WS}" + r"(?=[\u0085\u2028\u2029]?\Z)")
+
+
+def query_tokens(text: str) -> list[str]:
+    """`tokens` on the driver, for a query string: the same lowercase,
+    edge strip and split, so a query term is spelled as the index spells
+    it (Python's str.split() would also split on Unicode whitespace)."""
+    cleaned = _JAVA_EDGE_WS.sub("", text.lower())
+    return re.split(_JAVA_WS, cleaned) if cleaned else []
 
 
 def distinct_tokens(col: Column | str) -> Column:

@@ -2,16 +2,20 @@
 
 The reference delegates BM25 to LanceDB's Tantivy FTS index
 (/root/reference/src/load/lancedb_store.py:104-112,192-222). Here the
-"index" is an explicit pair of DataFrames — postings (term frequencies) and
-doc stats — built with plain tokenize→explode→groupBy aggregations, so
-Catalyst plans them as partial+final hash aggregates with map-side combine.
+index is one postings frame, (doc_key, term, tf, dl): tokenize, take each
+document's token count dl, explode, count tf per (doc, term). Catalyst
+plans the count as a partial+final hash aggregate with map-side combine.
+The frame is either persisted as parquet (persist_index / extend_index,
+hash-partitioned by term, with the term_df dictionary and the corpus
+scalars beside it) or, for a corpus with no index, tokenized live and
+.cache()d (bm25_scores).
 
-Scale posture (100 TB): postings build shuffles once on (doc, term); the
-corpus-level scalars (N, avgdl) are a one-row aggregate cross-joined back
-in (broadcast). Query scoring joins the tiny query-term list against
-postings — broadcast join, no full-corpus shuffle — then TakeOrderedAndProject
-for top-k. Persist postings as a bucketed-by-term table to make repeated
-query scoring shuffle-free.
+Every BM25 request is scored by ONE SQL text (scored_sql) over either
+frame: a literal IN term filter on the postings, df and the corpus
+scalars (N, avgdl) folded in as literals, one GROUP BY doc_key. The
+index reader takes those literals from the term dictionary and the meta
+record; the live reader from one aggregate over its cached postings.
+top-k is that text under ORDER BY ... LIMIT (TakeOrderedAndProject).
 
 Parameters k1=1.2, b=0.75 (Lucene/LanceDB defaults, SURVEY.md §7.3), idf =
 ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene's non-negative variant).
@@ -33,17 +37,22 @@ N_BUCKETS = 16
 
 
 def build_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, term, tf) — term frequencies per document."""
+    """(doc_key, term, tf, dl) — term frequencies per document, each row
+    carrying its document's token count dl, taken from the token array
+    before the explode (a document with no tokens has no rows). A
+    document is one row of `docs`: ids must be unique."""
+    toks = docs.select(F.col(id_col).alias("doc_key"), tokens(text_col).alias("toks"))
+    dl = toks.select("doc_key", "toks", F.size("toks").cast("bigint").alias("dl"))
+    # explode_outer and a null-term filter, not explode: under an explode
+    # of a column Spark infers a size(toks) > 0 filter and pushes it below
+    # the projection, where it tokenizes every document a second time.
     return (
-        docs.select(F.col(id_col).alias("doc_key"), F.explode(tokens(text_col)).alias("term"))
-        .groupBy("doc_key", "term")
+        dl.select("doc_key", F.explode_outer("toks").alias("term"), "dl")
+        .where(F.col("term").isNotNull())
+        .groupBy("doc_key", "term", "dl")
         .agg(F.count("*").alias("tf"))
+        .select("doc_key", "term", "tf", "dl")
     )
-
-
-def build_doc_stats(postings: DataFrame) -> DataFrame:
-    """(id, dl) — token length per document, derived from postings."""
-    return postings.groupBy("doc_key").agg(F.sum("tf").alias("dl"))
 
 
 def bm25_scores(
@@ -52,25 +61,35 @@ def bm25_scores(
     text_col: str,
     query_terms: list[str],
 ) -> DataFrame:
-    """Score every document containing ≥1 query term; returns (doc_key, score).
+    """Score every document containing ≥1 query term; returns (doc_key, score)."""
+    text, post = scored_live_sql(docs, id_col, text_col, query_terms)
+    return post.sparkSession.sql(text, post=post)
 
-    Only rows whose term is in the (tiny, broadcast) query list survive the
-    first join, so the scored set is the posting lists of the query terms —
-    the same work a posting-list index union would do.
-    """
-    # The live index: tokenized from `docs` and .cache()d, so repeated
-    # queries over the same corpus lineage (Spark's cache manager matches
-    # canonicalized plans) reuse one materialization. Its callers are
-    # the registry rows that score a derived view (routed, title-weighted,
-    # context) or the unindexed fallback. Serving (api/engine.py, which
-    # cli.py search calls) reads the persisted index instead
-    # (persist_index / scored_from_index_sql below), which pins no
-    # executor memory per corpus lineage.
-    postings = build_postings(docs, id_col, text_col).cache()
-    doc_stats = build_doc_stats(postings).cache()
-    key = (id(postings.sparkSession), postings.semanticHash())
-    _CACHED_INDEXES.setdefault(key, (postings, doc_stats))
-    return _score_postings(postings, doc_stats, query_terms)
+
+def scored_live_sql(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    query_terms: list[str],
+) -> tuple[str, DataFrame]:
+    """scored_sql over the live index of `docs`: its postings, tokenized
+    and .cache()d, so repeated queries over the same corpus lineage
+    (Spark's cache manager matches canonicalized plans) reuse one
+    materialization. df of the query terms, N and total_dl come from one
+    aggregate collect over those postings. Its callers are the registry
+    rows that score a derived view (routed, title-weighted, context) or a
+    corpus without a fresh index. Serving (api/engine.py, which cli.py
+    search calls) reads the persisted index instead
+    (scored_from_index_sql), which pins no executor memory per corpus
+    lineage."""
+    post = build_postings(docs, id_col, text_col).cache()
+    _CACHED_INDEXES.setdefault((id(post.sparkSession), post.semanticHash()), post)
+    terms = sorted(set(query_terms))
+    # postings rows are unique per (doc, term): a term's row count is its df
+    n, total_dl, *dfs = post.agg(
+        F.count_distinct("doc_key"), F.sum("tf"), *[F.count_if(F.col("term") == t) for t in terms]
+    ).first()
+    return scored_sql(post, terms, dict(zip(terms, dfs)), n, total_dl or 0)
 
 
 # Every live (cached) index registered here so long-lived sessions (the
@@ -80,81 +99,42 @@ def bm25_scores(
 # entry is keyed by the session and that plan's semantic hash, so
 # per-query calls over one lineage hold one entry while the same plan
 # cached in another session gets its own.
-_CACHED_INDEXES: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
+_CACHED_INDEXES: dict[tuple[int, int], DataFrame] = {}
 
 
 def release_indexes() -> int:
     """Unpersist all cached live indexes; returns how many lineages were
     dropped. Idempotent — double-unpersist is a Spark no-op."""
     n = len(_CACHED_INDEXES)
-    for postings, doc_stats in _CACHED_INDEXES.values():
-        doc_stats.unpersist()
+    for postings in _CACHED_INDEXES.values():
         postings.unpersist()
     _CACHED_INDEXES.clear()
     return n
 
 
-def _score_postings(
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    query_terms: list[str],
-) -> DataFrame:
-    """The live (cached) path's Lucene-style scoring plan: broadcast the
-    query-term list, join df-counts/doc-stats/corpus scalars, sum
-    per-doc term scores (the scoring expression is the persisted-index
-    path's too — _term_score_sql)."""
-    spark = postings.sparkSession
-    if not query_terms:
-        # Empty query scores nothing (createDataFrame([]) cannot infer a
-        # schema, and zero terms genuinely means an empty posting union).
-        return (
-            doc_stats.select(F.col("doc_key"), F.lit(0.0).alias("score")).limit(0)
-        )
-    # N = docs with ≥1 token (= |doc_stats|): one single-row aggregate
-    # serves both corpus scalars, broadcast everywhere.
-    corpus = doc_stats.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n"))
-    qterms = spark.createDataFrame([(t,) for t in set(query_terms)], ["term"])
-
-    matched = postings.join(F.broadcast(qterms), "term")
-    # postings rows are unique per (doc, term), so count(*) == distinct docs
-    df_counts = matched.groupBy("term").agg(F.count("*").alias("df"))
-
-    return (
-        matched.join(F.broadcast(df_counts), "term")
-        .join(doc_stats, "doc_key")
-        .crossJoin(F.broadcast(corpus))
-        # One JVM-parsed scoring expression (r12) — see _term_score_sql.
-        .withColumn("term_score", F.expr(_term_score_sql()))
-        .groupBy("doc_key")
-        .agg(F.sum("term_score").alias("score"))
-    )
-
-
-def _term_score_sql(n: int | None = None, avgdl: float | None = None) -> str:
+def _term_score_sql(n: int, avgdl: float) -> str:
     """The Lucene-style per-posting score as ONE SQL string — parsed
     JVM-side in a single py4j round-trip instead of built as ~15 chained
-    Column calls (the r12 construction-floor fix; the parsed tree and its
-    arithmetic are identical to the Column form both scorers used before).
-    Live path: `n`/`avgdl` are columns from the broadcast corpus row.
-    Index path: they fold in as literals (repr() round-trips doubles
-    exactly; n < 2^53 makes double-vs-long subtraction order exact)."""
+    Column calls. `n` and `avgdl` fold in as literals (repr() round-trips
+    doubles exactly; n < 2^53 makes double-vs-long subtraction order
+    exact)."""
     # NB: the D suffix is load-bearing — a bare "500.0" parses as a
     # DECIMAL literal in Spark SQL, not a double.
-    n_sql = "n" if n is None else f"{float(n)!r}D"
-    avgdl_sql = "avgdl" if avgdl is None else f"{float(avgdl)!r}D"
     return (
-        f"log(1.0D + ({n_sql} - df + 0.5D) / (df + 0.5D)) "
+        f"log(1.0D + ({float(n)!r}D - df + 0.5D) / (df + 0.5D)) "
         f"* (tf * {K1 + 1.0!r}D) "
-        f"/ (tf + {K1!r}D * ({1.0 - B!r}D + {B!r}D * dl / {avgdl_sql}))"
+        f"/ (tf + {K1!r}D * ({1.0 - B!r}D + {B!r}D * dl / {float(avgdl)!r}D))"
     )
 
 
-def _topk_by_score(scored: DataFrame, k: int) -> DataFrame:
-    """Rounded-score top-k with the id tie-break (total order)."""
+def topk_sql(scored: str, k: int) -> str:
+    """Top-k by rounded score over a scored (doc_key, score) text, ties
+    broken by id (rounding makes cross-engine ordering total). Spark
+    executes ORDER BY ... LIMIT as TakeOrderedAndProject — no global sort
+    materialization."""
     return (
-        scored.select(F.col("doc_key"), F.round("score", 4).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_key"))
-        .limit(k)
+        "SELECT doc_key, round(score, 4) AS score FROM (" + scored + ") kw ORDER BY score DESC, doc_key LIMIT "
+        + str(int(k))
     )
 
 
@@ -165,37 +145,14 @@ def bm25_topk(
     query_terms: list[str],
     k: int,
 ) -> DataFrame:
-    """Top-k by rounded score (rounding makes cross-engine ordering total
-    when combined with the id tie-break). Spark executes orderBy().limit()
-    as TakeOrderedAndProject — no global sort materialization."""
-    return _topk_by_score(bm25_scores(docs, id_col, text_col, query_terms), k)
+    """topk_sql over the live index of `docs`."""
+    text, post = scored_live_sql(docs, id_col, text_col, query_terms)
+    return post.sparkSession.sql(topk_sql(text, k), post=post)
 
 
 # --------------------------------------------------------------------------
 # Persisted index — the build-once-query-many contract at cluster scale.
 # --------------------------------------------------------------------------
-
-
-def _write_term_df(postings: DataFrame, path: str, mode: str) -> None:
-    """Materialize the per-term document frequency — Lucene's docFreq,
-    stored in the term dictionary rather than recomputed per query.
-    Before r13 the serving plan derived df at query time with a SECOND
-    scan of the term-pruned postings plus a groupBy + BroadcastExchange
-    (a separate driver job per query); with df in the index the scorer
-    folds it in as literals and the whole query is ONE postings scan
-    (guide §2.3/§2.4 — fewer passes, fewer exchanges). Layout matches
-    the postings discipline (hash-partitioned by term, sorted within
-    partitions) so the query-term read is row-group-prunable; extends
-    APPEND delta rows and readers sum per term, exactly like the
-    corpus-scalar accumulation."""
-    (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .repartition(max(1, N_BUCKETS // 8), "term")
-        .sortWithinPartitions("term")
-        .write.mode(mode)
-        .parquet(f"{path}/term_df")
-    )
 
 
 # Driver-side term-df lookups, one entry per term_df directory: its
@@ -243,65 +200,61 @@ def persist_index(
     source_signature: str | None = None,
 ) -> None:
     """Materialize the index as parquet: postings hash-partitioned by term
-    (repartition(N_BUCKETS, term) + sorted within partitions), the
-    per-doc length DENORMALIZED into each posting row, the term_df
-    dictionary, and the corpus scalars (N, total_dl) in the CAS meta
-    record. A query's term lookup then touches only the
-    partitions/row-groups its terms hash to, and scoring
-    needs NO doc-side join at all — the same reason Lucene stores norms
-    inline in the postings rather than in a separate doc table. The dl
-    copy costs ~one long per posting row at build time (amortized across
-    every query); at sf100 it removed a 1.5M×4M-row doc_stats shuffle
-    from every query (SCALING.md r5). doc_stats is still written for
-    consumers that want the per-doc view. Rebuild cadence mirrors the
-    reference: once per ingest batch
+    (repartition(N_BUCKETS, term) + sorted within partitions), each row
+    carrying its document's length dl, the term_df dictionary, and the
+    corpus scalars (N, total_dl) in the CAS meta record. A query's term
+    lookup then touches only the partitions/row-groups its terms hash
+    to, and scoring needs NO doc-side join at all — the same reason
+    Lucene stores norms inline in the postings rather than in a separate
+    doc table. At sf100 the inline dl removed a 1.5M×4M-row doc_stats
+    shuffle from every query (SCALING.md r5). doc_stats (doc_key, dl) is
+    still written, one row per document with ≥1 token; no scorer reads
+    it, only perfbench's ingest check counts its rows. Rebuild cadence
+    mirrors the reference: once per ingest batch
     (/root/reference/src/pipeline.py:164-165)."""
-    # Tokenized once: the term dictionary, the doc_stats join, the
-    # doc_stats write and the scalars all read these postings, and each
-    # would otherwise re-tokenize the corpus.
+    # Cached, so the term dictionary, the postings, doc_stats and the
+    # scalars do not each re-tokenize the corpus.
     postings = build_postings(docs, id_col, text_col).cache()
     try:
-        doc_stats = build_doc_stats(postings)
-        # Term dictionary FIRST (r13): (term, df) — the Lucene docFreq slot.
-        # Written before the postings so a crash mid-build/mid-extend can
-        # only leave df rows whose postings are missing (scores then
-        # under-weight those terms' idf slightly), never postings rows with
-        # no df entry (which would NULL their scores in the literal-df
-        # serving plan). Readers sum rows per term, so extends can append.
-        _write_term_df(postings, path, "overwrite")
-        (
-            postings.join(doc_stats, "doc_key")
-            .repartition(N_BUCKETS, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(f"{path}/postings")
-        )
-        doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
-        # Corpus scalars (N, total token count; avgdl derives) are published
-        # through the manifest CAS (sources/manifest.py commit_meta) — the
-        # repo's one artifact-publication protocol. The commit is atomic, so
-        # a reader never sees a half-replaced record (the crash window a
-        # mode('overwrite') parquet rewrite of the old {path}/corpus dir
-        # had), and the exact integer total lets extend_index merge scalars
-        # exactly instead of reconstructing the sum from a rounded double.
-        row = doc_stats.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("total_dl")
-        ).collect()[0]
+        n, total_dl = _write_index(postings, path, "overwrite")
     finally:
         postings.unpersist()
     from ..sources.manifest import commit_meta
 
-    # source_signature (when the caller supplies one — a stat digest of
-    # the source docs table) rides in the same record, making the index
-    # serve-or-build capable via ensure_index.
-    payload = {
-        "n": int(row["n"]),
-        "total_dl": int(row["total_dl"] or 0),
-        "layout": _LAYOUT_VERSION,
-    }
+    # The scalars (N, total token count; avgdl derives) are published
+    # through the manifest CAS: the commit is atomic, so a reader never
+    # sees a half-replaced record, and the exact integer total lets
+    # extend_index merge scalars exactly. source_signature (when the
+    # caller supplies one — a stat digest of the source docs table)
+    # rides in the same record, making the index serve-or-build capable
+    # via ensure_index.
+    payload = {"n": n, "total_dl": total_dl, "layout": _LAYOUT_VERSION}
     if source_signature is not None:
         payload["source_signature"] = source_signature
     commit_meta(path, payload)
+
+
+def _write_index(postings: DataFrame, path: str, mode: str) -> tuple[int, int]:
+    """Write (mode "overwrite" or "append") the term dictionary, the
+    postings and doc_stats of these cached postings under `path`; returns
+    their (n, total_dl).
+
+    The term dictionary, term_df, holds each term's df — Lucene's
+    docFreq, stored rather than counted per query, so the scorer folds
+    it in as a literal. It is written FIRST, so a crash mid-build or
+    mid-extend can only leave df rows whose postings are missing (scores
+    then under-weight those terms' idf slightly), never postings rows
+    with no df entry (which would NULL their scores). Readers sum its
+    rows per term, so extends append. It and the postings are
+    hash-partitioned by term and sorted within partitions, so a query's
+    term read is row-group-prunable."""
+    term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
+    for table, rows, parts in (("term_df", term_df, max(1, N_BUCKETS // 8)), ("postings", postings, N_BUCKETS)):
+        rows.repartition(parts, "term").sortWithinPartitions("term").write.mode(mode).parquet(f"{path}/{table}")
+    doc_stats = postings.select("doc_key", "dl").distinct()
+    doc_stats.write.mode(mode).parquet(f"{path}/doc_stats")
+    row = doc_stats.agg(F.count("*"), F.sum("dl")).first()
+    return int(row[0]), int(row[1] or 0)
 
 
 # Persisted-index layout version: 2 (r13) = postings + doc_stats + the
@@ -388,8 +341,8 @@ def extend_index(
     (a) df is the per-term sum of the term_df rows, and the delta's
         (term, df) rows are appended beside the base ones (delta ids
         are NEW, so the counts add exactly);
-    (b) dl is per-doc and denormalized into each appended row, same as
-        the build path;
+    (b) dl is per-doc and rides in each appended row, same as the
+        build path;
     (c) the corpus scalars merge EXACTLY: the stored integer total_dl
         accumulates the delta's token count and avgdl is re-derived as
         total_dl/n — double accumulation of integers is exact below
@@ -408,48 +361,36 @@ def extend_index(
     # An index without committed current-layout scalars raises here,
     # before any append (it needs a rebuild, not an extend).
     corpus_scalars(path)
-    delta_postings = build_postings(new_docs, id_col, text_col)
-    delta_stats = build_doc_stats(delta_postings).cache()
+    delta = build_postings(new_docs, id_col, text_col).cache()
     try:
-        # Delta term-df rows land first (see _write_term_df's crash-order
-        # rationale); readers sum rows per term, and delta ids are NEW
-        # docs by contract, so delta counts add exactly.
-        _write_term_df(delta_postings, path, "append")
-        (
-            delta_postings.join(delta_stats, "doc_key")
-            .repartition(N_BUCKETS, "term")
-            .sortWithinPartitions("term")
-            .write.mode("append")
-            .parquet(f"{path}/postings")
-        )
-        delta_stats.write.mode("append").parquet(f"{path}/doc_stats")
-        d = delta_stats.agg(F.sum("dl").alias("s"), F.count("*").alias("c")).collect()[0]
-        dn, dtotal = int(d["c"]), int(d["s"] or 0)
-        from ..sources.manifest import update_meta
-
-        # The commit goes through update_meta's pinned-version CAS, which
-        # re-adds THIS delta to whatever payload won any concurrent race
-        # (two concurrent extends both land; last-writer-wins would
-        # silently drop one delta's counts from the scalars forever).
-        def add_delta(current: dict | None) -> dict:
-            if current is None:
-                raise FileNotFoundError(f"BM25 index meta record at {path} vanished mid-extend")
-            # Preserve every other key (notably source_signature) — the
-            # scalar accumulation must not strip the freshness record —
-            # and ADVANCE the signature when the caller hands in the
-            # post-ingest one, in the SAME pinned-version CAS commit as
-            # the scalars, so ensure_index serves the extended files
-            # instead of full-rebuilding (the r9 economics defect).
-            out = dict(current)
-            out["n"] = int(current["n"]) + dn
-            out["total_dl"] = int(current["total_dl"]) + dtotal
-            if source_signature is not None:
-                out["source_signature"] = source_signature
-            return out
-
-        update_meta(path, add_delta)
+        # Delta ids are NEW docs by contract, so the delta's term-df rows,
+        # postings and scalars add exactly to the base ones.
+        dn, dtotal = _write_index(delta, path, "append")
     finally:
-        delta_stats.unpersist()
+        delta.unpersist()
+    from ..sources.manifest import update_meta
+
+    # The commit goes through update_meta's pinned-version CAS, which
+    # re-adds THIS delta to whatever payload won any concurrent race
+    # (two concurrent extends both land; last-writer-wins would
+    # silently drop one delta's counts from the scalars forever).
+    def add_delta(current: dict | None) -> dict:
+        if current is None:
+            raise FileNotFoundError(f"BM25 index meta record at {path} vanished mid-extend")
+        # Preserve every other key (notably source_signature) — the
+        # scalar accumulation must not strip the freshness record —
+        # and ADVANCE the signature when the caller hands in the
+        # post-ingest one, in the SAME pinned-version CAS commit as
+        # the scalars, so ensure_index serves the extended files
+        # instead of full-rebuilding (the r9 economics defect).
+        out = dict(current)
+        out["n"] = int(current["n"]) + dn
+        out["total_dl"] = int(current["total_dl"]) + dtotal
+        if source_signature is not None:
+            out["source_signature"] = source_signature
+        return out
+
+    update_meta(path, add_delta)
 
 
 def _sql_str_lit(t: str) -> str:
@@ -481,21 +422,43 @@ def scored_from_index_sql(
     added: Mapping[str, Mapping[str, int]] | None = None,
     removed: Mapping[int, Mapping[str, int]] | None = None,
 ) -> tuple[str, DataFrame]:
-    """The index-served scorer as ONE SQL text and the `{post}` DataFrame
-    it reads, to pass as spark.sql(text, post=post): literal IN term
-    pushdown, df from the term dictionary folded in as a literal map,
-    corpus scalars as double literals — one spark.sql round-trip for the
-    whole tree (r13 construction-floor fix, guide §1: the op-by-op build
-    cost ~0.16 s of py4j per bm25_search call at sf0.1). Also the
-    composable kw-leg fragment for the hybrid family's single SQL text
-    (retrieval/queries.py). An empty term list yields a text that scores
+    """scored_sql over the persisted index at `path`: `post` is its
+    memoized postings scan (read_parquet_cached), df comes from the term
+    dictionary (a dict read when warm) and N/total_dl from the meta
+    record — no Spark job before the scoring one. Also the composable
+    kw-leg fragment for the hybrid family's single SQL text
+    (retrieval/queries.py) and the engine's keyword leg, whose session
+    uploads and deletes are `added` and `removed` (see scored_sql)."""
+    from ..sources.catalog import read_parquet_cached
+
+    post = read_parquet_cached(spark, f"{path}/postings")
+    terms = sorted(set(query_terms))
+    return scored_sql(post, terms, _term_df_lookup(path, terms), *corpus_scalars(path), added, removed)
+
+
+def scored_sql(
+    post: DataFrame,
+    terms: list[str],
+    dfs: Mapping[str, int],
+    n: int,
+    total_dl: int,
+    added: Mapping[str, Mapping[str, int]] | None = None,
+    removed: Mapping[int, Mapping[str, int]] | None = None,
+) -> tuple[str, DataFrame]:
+    """The one BM25 scorer: ONE SQL text over a postings frame
+    (doc_key, term, tf, dl) and the frame it reads, to pass as
+    spark.sql(text, post=post). `terms` are the sorted distinct query
+    terms, `dfs` their document frequencies and `n`/`total_dl` the
+    corpus scalars; they enter the text as literals (literal IN term
+    pushdown, df as a literal map, N and avgdl as double literals), so
+    the plan is one postings scan → score projection → GROUP BY doc_key
+    (r13 construction-floor fix, guide §1: one spark.sql round-trip for
+    the whole tree). An empty term list yields a text that scores
     nothing.
 
-    `post` is the index's memoized postings scan (read_parquet_cached),
-    coalesced to one partition when the query terms' summed df — read
-    from the term dictionary with the df literals, a dict read when warm
-    — is at most SINGLE_TASK_POSTINGS. The term IN filter still pushes
-    through the coalesce into the parquet scan.
+    The returned frame is `post` coalesced to one partition when the
+    query terms' summed df is at most SINGLE_TASK_POSTINGS. The term IN
+    filter still pushes through the coalesce into the scan.
 
     `added` and `removed` are exact read-time edits of the index, each
     document given as its {term: tf} counts: `added` documents (keyed by
@@ -507,16 +470,11 @@ def scored_from_index_sql(
     in as a VALUES list; the scoring expression is the same. With either
     edit given, keys are strings (index keys cast), so ties break by
     string id."""
-    from ..sources.catalog import read_parquet_cached
-
-    post = read_parquet_cached(spark, f"{path}/postings")
     edited = added is not None or removed is not None
     key_sql = "CAST(doc_key AS STRING) AS doc_key" if edited else "doc_key"
-    terms = sorted(set(query_terms))
     if not terms:
         return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false", post
-    n, total_dl = corpus_scalars(path)
-    dfs = _term_df_lookup(path, terms)
+    dfs = dict(dfs)
     if sum(dfs.values()) <= SINGLE_TASK_POSTINGS:
         post = post.coalesce(1)
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
@@ -543,7 +501,7 @@ def scored_from_index_sql(
     entries = ", ".join(f"{_sql_str_lit(t)}, {dfs[t]}L" for t in terms)
     score = _term_score_sql(n=n, avgdl=avgdl)
     # NB: literal braces around `post` are load-bearing — this text is
-    # passed to spark.sql(..., post=<postings scan>) as a template, never
+    # passed to spark.sql(..., post=<postings frame>) as a template, never
     # through an f-string.
     text = (
         "SELECT doc_key, sum(" + score + ") AS score FROM ("
@@ -571,16 +529,16 @@ def bm25_scores_from_index(
       postings at sf100); with it, PushedFilters carries In(term, ...)
       into the reader and the sortWithinPartitions('term') layout makes
       each term's rows contiguous row-group runs min/max stats can skip.
-    - dl rides inside the posting rows (persist_index denormalizes it),
-      so scoring is matched-rows algebra + one groupBy(doc_key) — the
-      1.5M-doc doc_stats join the live path needs is gone.
+    - dl rides inside the posting rows, so scoring is matched-rows
+      algebra + one groupBy(doc_key), with no doc-side join.
     - df (from the term dictionary) and the corpus scalars (from the
       meta record) enter as LITERALS read driver-side, so they fold into
       the whole-stage-codegen score expression: the plan is one postings
       scan → score projection → groupBy(doc_key).
 
-    Same scores as the live path (same dl, same scalars): proven by the
-    shared oracle row and the round-trip test."""
+    Same text as the live path (bm25_scores) over the same postings
+    rows and scalars: proven by the shared oracle row and the
+    round-trip test."""
     # r12: the postings scan is memoized per file-stat signature
     # (read_parquet_cached) — an unchanged index used to pay a ~190 ms
     # footer/listing round-trip on EVERY query, the single largest slice
@@ -595,12 +553,8 @@ def bm25_topk_from_index(
     query_terms: list[str],
     k: int,
 ) -> DataFrame:
-    """Top-k by rounded score over the index-served scorer: the whole
-    query — scorer + rounded top-k — is one spark.sql round-trip (scan →
-    score → hash agg → TakeOrderedAndProject)."""
+    """topk_sql over the persisted index: the whole query — scorer +
+    rounded top-k — is one spark.sql round-trip (scan → score → hash agg
+    → TakeOrderedAndProject)."""
     text, post = scored_from_index_sql(spark, path, query_terms)
-    return spark.sql(
-        "SELECT doc_key, round(score, 4) AS score FROM (" + text + ") kw ORDER BY score DESC, doc_key LIMIT "
-        + str(int(k)),
-        post=post,
-    )
+    return spark.sql(topk_sql(text, k), post=post)

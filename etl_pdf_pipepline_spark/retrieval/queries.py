@@ -1,9 +1,11 @@
 """Registered retrieval queries (reference Q1–Q6) with DuckDB oracles.
 
-The BM25 oracle SQL mirrors bm25.py's DataFrame plan CTE-for-stage:
-tokenize→explode (toks), tf, dl, corpus stats, df over query terms, then
-the Lucene-style score. The hybrid oracle composes the BM25 and cosine
-rankings with RRF exactly as hybrid.py does.
+The BM25 oracle SQL recomputes the scores from raw text, one CTE per
+step: tokenize→explode (toks), tf, dl, corpus stats, df over query terms,
+then the Lucene-style score. It shares no code with bm25.py's one scorer
+(scored_sql), which reads a postings frame with df and the corpus scalars
+as literals. The hybrid oracle composes the BM25 and cosine rankings
+with RRF exactly as hybrid.py does.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.text import title_from_filename, tokens
 from ..registry import query
 from ..sources.catalog import load_table, warehouse_path
-from .bm25 import bm25_scores, bm25_topk
+from .bm25 import bm25_scores, bm25_topk, scored_from_index_sql, scored_live_sql, topk_sql
 from .hybrid import context_budget_cut, rank_top, route_topic, rrf_fuse
 
 QUERY_TERMS = ["spark", "join", "fast", "table"]
@@ -66,7 +68,7 @@ def _bm25_ctes(doc_filter: str = "", qterms: str = _QTERMS_SQL) -> str:
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference Q2 keyword search
     (/root/reference/src/load/lancedb_store.py:192-222) as an explicit
-    postings-join BM25, top-15.
+    postings BM25, top-15.
 
     r11 routing (same contract as revenue_by_nation's bucketed layout):
     when this corpus's persisted postings index is FRESH (built at
@@ -74,17 +76,23 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve from it (literal term pushdown into the postings scan, dl
     inline, no tokenization) — the reference's actual steady state, where
     every search reads the once-per-ingest Tantivy index. Cold corpus or
-    stale index falls back to the live scan plan; both paths answer the
-    identical oracle (the shared gate row of bm25_topk_from_index), and
-    bench.py publishes the scan-path wall beside the served one."""
-    if bm25_index_servable(spark, sf_dir):
-        from .bm25 import bm25_topk_from_index
+    stale index falls back to the live index; the routing only picks
+    which postings frame the one top-k text reads (_keyword_leg), both
+    answer the identical oracle (the shared gate row of
+    bm25_topk_from_index), and bench.py publishes the scan-path wall
+    beside the served one."""
+    text, post = _keyword_leg(spark, sf_dir)
+    return spark.sql(topk_sql(text, 15), post=post).withColumnRenamed("doc_key", "doc_id")
 
-        return bm25_topk_from_index(
-            spark, _bm25_index_path(sf_dir), QUERY_TERMS, 15
-        ).withColumnRenamed("doc_key", "doc_id")
+
+def _keyword_leg(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+    """The QUERY_TERMS scorer text and the postings frame it reads:
+    this corpus's persisted index when it is fresh (bm25_index_servable),
+    its live index otherwise."""
+    if bm25_index_servable(spark, sf_dir):
+        return scored_from_index_sql(spark, _bm25_index_path(sf_dir), QUERY_TERMS)
     docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk(docs, "doc_id", "text", QUERY_TERMS, 15).withColumnRenamed("doc_key", "doc_id")
+    return scored_live_sql(docs, "doc_id", "text", QUERY_TERMS)
 
 
 @query(
@@ -216,9 +224,9 @@ def bm25_search_title_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bm25_topk_from_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted-index path of S12 (VERDICT r4 ask #8), gated against
-    the SAME oracle as bm25_search: build the bucketed postings +
-    doc-stats parquet pair (bm25.persist_index — term-hash-partitioned,
-    sorted within partitions), then score top-15 from the files with no
+    the SAME oracle as bm25_search: build the persisted index
+    (bm25.persist_index — postings term-hash-partitioned and sorted
+    within partitions), then score top-15 from the files with no
     corpus scan or tokenization. A green row proves index-path ≡
     recompute-path end-to-end (build + read-back + score), which is the
     100 TB story for repeated queries: the reference builds its Tantivy
@@ -416,6 +424,8 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11: the keyword leg routes through the persisted postings index when
     fresh (bm25_index_servable — same routing/fallback/oracle contract as
     bm25_search; hybrid_rrf_from_index stays the always-build gate row).
+    The routing only picks the postings frame (_keyword_leg): both routes
+    run the same SQL text.
 
     r13: the query vector enters the vector leg as a SQL LITERAL
     (array_lit_sql over the signature-memoized fetch) instead of a
@@ -425,39 +435,29 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds it driver-side into a literal and computes each per-row
     value once.
 
-    r13 construction floor (guide §1): on the served route the ENTIRE
-    query — index-scored kw leg, literal-vector leg, both top-20 ranks,
-    union-RRF, top-10 — is ONE spark.sql round-trip (profiled 0.27 s of
-    op-by-op py4j construction per call at sf0.1), built by
-    hybrid.rrf_sql, the SQL twin of rank_top/rrf_fuse that SparkEngine
-    serves hybrid search with too."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    r13 construction floor (guide §1): the ENTIRE query — scored kw leg,
+    literal-vector leg, both top-20 ranks, union-RRF, top-10 — is ONE
+    spark.sql round-trip (profiled 0.27 s of op-by-op py4j construction
+    per call at sf0.1), built by hybrid.rrf_sql, the SQL twin of
+    rank_top/rrf_fuse that SparkEngine serves hybrid search with too."""
+    from ..functions.vectors import cosine_lit_sql
+    from ..operators.similarity import _query_vector_cached
+    from .hybrid import rrf_sql
 
-    if bm25_index_servable(spark, sf_dir):
-        from ..functions.vectors import cosine_lit_sql
-        from ..operators.similarity import _query_vector_cached
-        from .bm25 import scored_from_index_sql
-        from .hybrid import rrf_sql
-
-        kw_sql, post = scored_from_index_sql(spark, _bm25_index_path(sf_dir), QUERY_TERMS)
-        cos = cosine_lit_sql("embedding", _query_vector_cached(spark, sf_dir, 0))
-        vec_sql = "SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}"
-        return spark.sql(
-            rrf_sql(kw_sql, vec_sql, depth=20, k=10),
-            post=post,
-            emb=emb,
-        ).withColumnRenamed("doc_key", "doc_id")
-
-    docs = load_table(spark, sf_dir, "documents")
-    kw = bm25_scores(docs, "doc_id", "text", QUERY_TERMS)
-    kw_rank = rank_top(kw, 20, "doc_key")
-    vec_rank = rank_top(_vec_scored_lit(spark, sf_dir, emb), 20, "doc_key")
-    return rrf_fuse(kw_rank, vec_rank, "doc_key", k=10).withColumnRenamed("doc_key", "doc_id")
+    kw_sql, post = _keyword_leg(spark, sf_dir)
+    cos = cosine_lit_sql("embedding", _query_vector_cached(spark, sf_dir, 0))
+    vec_sql = "SELECT vec_id AS doc_key, round(" + cos + ", 4) AS score FROM {emb}"
+    return spark.sql(
+        rrf_sql(kw_sql, vec_sql, depth=20, k=10),
+        post=post,
+        emb=load_table(spark, sf_dir, "embeddings"),
+    ).withColumnRenamed("doc_key", "doc_id")
 
 
 def _vec_scored_lit(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
-    """(doc_key, score): the hybrid family's vector leg — cosine against
-    the literal query vector, shared by the live and from-index paths."""
+    """(doc_key, score): hybrid_rrf_from_index's vector leg — cosine
+    against the literal query vector, the DataFrame form of
+    hybrid_rrf_search's vector text."""
     from ..functions.vectors import cosine_lit_sql
     from ..operators.similarity import _query_vector_cached
 

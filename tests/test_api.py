@@ -130,6 +130,19 @@ def test_search_invalid_mode_400(client):
     assert "Invalid search mode" in r.get_json()["detail"]
 
 
+@pytest.mark.parametrize("path, count", [("/search", "limit"), ("/search/context", "max_tokens")])
+@pytest.mark.parametrize(
+    "fields",
+    [{"query": None}, {"query": 5}, {"count": "abc"}, {"count": None}, {"title_filter": {"a": 1}}],
+    ids=["null-query", "int-query", "text-count", "null-count", "object-title-filter"],
+)
+def test_malformed_search_body_is_a_bad_request(client, path, count, fields):
+    body = {"query": "spark"} | {count if k == "count" else k: v for k, v in fields.items()}
+    r = client.post(path, json=body)
+    assert r.status_code == 400, (r.status_code, r.data)
+    assert r.get_json()["detail"]
+
+
 @pytest.mark.parametrize("mode", ["keyword", "vector", "hybrid"])
 def test_search_title_filter(client, mode):
     r = client.post(
@@ -171,6 +184,9 @@ def test_list_get_document_and_404(client):
     assert detail["id"] == doc_id and detail["chunk_count"] >= 1
     assert "file_hash" in detail and detail["file_hash"].startswith("sha256:")
     assert client.get("/documents/nope-999").status_code == 404
+    # a non-integer limit is the client's error (FastAPI's own check says 422)
+    assert client.get("/documents?limit=abc").status_code in (400, 422)
+    assert client.get(f"/documents/{doc_id}/chunks?limit=abc").status_code in (400, 422)
 
 
 def test_document_markdown(client):

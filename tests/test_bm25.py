@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import tempfile
 
 import pytest
 from hypothesis import given, settings
@@ -56,14 +57,39 @@ def test_absent_term_empty(spark, docs):
 
 
 def test_persisted_index_matches_in_memory(spark, docs, tmp_path):
+    """The live and index-served top-k agree, and persist_index writes
+    the pinned layout: a build change that alters these files must bump
+    _LAYOUT_VERSION and this test."""
+    import pyarrow.parquet as pq
+
     from etl_pdf_pipepline_spark.retrieval.bm25 import (
+        _LAYOUT_VERSION,
         bm25_scores_from_index,
         bm25_topk_from_index,
         persist_index,
     )
+    from etl_pdf_pipepline_spark.sources.manifest import read_meta
 
     path = str(tmp_path / "idx")
-    persist_index(docs, "doc_id", "text", path)
+    # a document with no tokens has no postings and no doc_stats row
+    persist_index(docs.union(spark.createDataFrame([("d5", " \t ")], docs.schema)), "doc_id", "text", path)
+
+    def layout(table: str) -> list:
+        schema = pq.read_schema(next((tmp_path / "idx" / table).glob("*.parquet")))
+        return [(f.name, str(f.type), f.nullable) for f in schema]
+
+    assert _LAYOUT_VERSION == 2
+    assert layout("postings") == [
+        ("doc_key", "string", True), ("term", "string", True), ("tf", "int64", False), ("dl", "int64", True)
+    ]
+    assert layout("doc_stats") == [("doc_key", "string", True), ("dl", "int64", True)]
+    assert layout("term_df") == [("term", "string", True), ("df", "int64", False)]
+    dls = {"d1": 3, "d2": 3, "d3": 4, "d4": 4}  # token counts of CORPUS
+    stats = spark.read.parquet(f"{path}/doc_stats").collect()
+    assert sorted((r.doc_key, r.dl) for r in stats) == sorted(dls.items())
+    meta = read_meta(path)
+    assert (meta["n"], meta["total_dl"], meta["layout"]) == (len(dls), sum(dls.values()), 2)
+
     live = bm25_topk(docs, "doc_id", "text", ["spark", "sql"], k=10).collect()
     from_idx = bm25_topk_from_index(spark, path, ["spark", "sql"], k=10).collect()
     assert [(r.doc_key, r.score) for r in live] == [(r.doc_key, r.score) for r in from_idx]
@@ -84,7 +110,8 @@ def test_persisted_index_matches_in_memory(spark, docs, tmp_path):
 )
 def test_property_bm25_invariants(texts, k):
     """For arbitrary corpora: limit honored; scores positive; only docs
-    containing a query term are scored."""
+    containing a query term are scored; live scores equal those served
+    from a persisted index."""
     from etl_pdf_pipepline_spark.session import get_spark
 
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
@@ -99,6 +126,33 @@ def test_property_bm25_invariants(texts, k):
     for r in out:
         assert r.score > 0
         assert r.doc_key in matching
+    from etl_pdf_pipepline_spark.retrieval.bm25 import bm25_scores_from_index, persist_index
+
+    live = bm25_scores(docs, "doc_id", "text", ["a", "ab"]).collect()
+    with tempfile.TemporaryDirectory() as d:
+        persist_index(docs, "doc_id", "text", d)
+        served = bm25_scores_from_index(spark, d, ["a", "ab"]).collect()
+    assert {r.doc_key: round(r.score, 4) for r in live} == {r.doc_key: round(r.score, 4) for r in served}
+
+
+def test_live_scores_warm_call_runs_four_jobs(spark, docs):
+    """A warm live scoring call is one aggregate collect over the cached
+    postings (df, N and total_dl; under AQE each of its two exchanges is
+    a job of its own, and the result a third) plus the scoring job, which
+    reads a small posting union in one task."""
+    sc = spark.sparkContext
+
+    def jobs(group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            bm25_scores(docs, "doc_id", "text", ["spark", "sql"]).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs("test-live-cold")
+    assert jobs("test-live-warm") == 4
 
 
 def test_release_indexes_unpersists_cached_postings(spark):
@@ -109,7 +163,7 @@ def test_release_indexes_unpersists_cached_postings(spark):
     )
     bm25.bm25_scores(df, "doc_id", "text", ["spark"]).collect()
     assert len(bm25._CACHED_INDEXES) >= 1
-    cached = [p for p, _ in bm25._CACHED_INDEXES.values()]
+    cached = list(bm25._CACHED_INDEXES.values())
     n = bm25.release_indexes()
     assert n >= 1 and not bm25._CACHED_INDEXES
     for p in cached:
@@ -133,6 +187,6 @@ def test_live_index_list_holds_one_entry_per_lineage(spark):
     assert other.semanticHash() == df.semanticHash()
     bm25.bm25_scores(other, "doc_id", "text", ["spark"])
     assert len(bm25._CACHED_INDEXES) == 2
-    cached = [p for p, _ in bm25._CACHED_INDEXES.values()]
+    cached = list(bm25._CACHED_INDEXES.values())
     assert bm25.release_indexes() == 2
     assert not any(p.is_cached for p in cached)

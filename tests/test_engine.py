@@ -140,6 +140,16 @@ def test_title_filter_keeps_corpus_wide_scores(spark):
     assert [(h["document_id"], h["score"]) for h in kept] == [(top["document_id"], top["score"])]
 
 
+@pytest.mark.parametrize("space", ["\u3000", "\u00a0"])
+def test_query_is_split_as_the_index_splits_text(spark, space):
+    """The index splits text on ASCII whitespace only, so a term holding
+    U+3000 or U+00A0 is one term, and a query for it must find it."""
+    eng = SparkEngine(spark, SF_SMALL)
+    up = eng.upload("cities.pdf", f"%PDF-1.4 tokyo{space}osaka zebraword".encode())
+    hits = eng.search(f"tokyo{space}osaka", mode="keyword", limit=5)
+    assert [h["document_id"] for h in hits] == [up["document_id"]]
+
+
 def test_query_terms_are_sql_literals(spark):
     """Terms the corpus lacks add nothing to a BM25 score, so quotes,
     backslashes and template braces in them must not change the answer."""

@@ -23,6 +23,18 @@ def test_tokens_empty_string(spark):
     assert one(spark, TX.tokens("s"), s="") == []
 
 
+def test_query_tokens_equal_tokens(spark):
+    """The driver-side twin splits every string as the JVM's tokens does,
+    Unicode spaces and line terminators included."""
+    import random
+
+    rng = random.Random(7)
+    alphabet = ["a", "B", " ", "\t", "\n", "\r", "\x0b", "\f", "\xa0", "\u3000", "\u2028", "\u0085", "\u2029"]
+    texts = [""] + ["".join(rng.choices(alphabet, k=rng.randint(1, 12))) for _ in range(400)]
+    rows = spark.createDataFrame([(t,) for t in texts], "s string").select("s", TX.tokens("s").alias("t")).collect()
+    assert {r.s: r.t for r in rows} == {t: TX.query_tokens(t) for t in texts}
+
+
 def test_token_count_estimate_words_times_1_3(spark):
     # reference _estimate_tokens: int(words * 1.3) — chunker.py:124-126
     assert one(spark, TX.token_count_estimate("s"), s="a b c d") == int(4 * 1.3)
