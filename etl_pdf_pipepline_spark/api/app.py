@@ -47,20 +47,25 @@ def _int_arg(value: Any, name: str) -> int:
         raise BadRequest(f"{name} must be an integer")
 
 
-def _search_body(body: Any, count: str, default: int) -> tuple[str, str, int, str | None]:
-    """(query, mode, `count`, title_filter) from a /search or
-    /search/context JSON body, the one parser both frontends use:
-    BadRequest (HTTP 400) for a body that is not an object and for a
-    field of the wrong type."""
+def _search_body(body: Any, count: str, default: int) -> tuple[str, str, int]:
+    """(query, mode, `count`) from a /search or /search/context JSON body,
+    the one parser both frontends use: BadRequest (HTTP 400) for a body
+    that is not an object and for a field of the wrong type."""
     if not isinstance(body, dict):
         raise BadRequest("The request body must be a JSON object")
-    query, mode, title = body.get("query", ""), body.get("mode", "hybrid"), body.get("title_filter")
+    query, mode = body.get("query", ""), body.get("mode", "hybrid")
     for name, value in (("query", query), ("mode", mode)):
         if not isinstance(value, str):
             raise BadRequest(f"{name} must be a string")
+    return query, mode, _int_arg(body.get(count, default), count)
+
+
+def _title_filter(body: dict) -> str | None:
+    """/search's optional title_filter; BadRequest (HTTP 400) if not a string."""
+    title = body.get("title_filter")
     if title is not None and not isinstance(title, str):
         raise BadRequest("title_filter must be a string")
-    return query, mode, _int_arg(body.get(count, default), count), title
+    return title
 
 
 def _engine(spark=None, sf_dir: str | None = None) -> SparkEngine:
@@ -100,12 +105,12 @@ def create_app(spark=None, sf_dir: str | None = None):  # pragma: no cover
 
     @app.post("/search")
     def search(body: dict[str, Any]) -> list[dict[str, Any]]:
-        query, mode, limit, title_filter = guard(_search_body, body, "limit", 10)
-        return guard(eng.search, query, mode, limit, title_filter)
+        query, mode, limit = guard(_search_body, body, "limit", 10)
+        return guard(eng.search, query, mode, limit, guard(_title_filter, body))
 
     @app.post("/search/context")
     def context(body: dict[str, Any]) -> dict[str, Any]:
-        query, mode, max_tokens, _ = guard(_search_body, body, "max_tokens", 4000)
+        query, mode, max_tokens = guard(_search_body, body, "max_tokens", 4000)
         return guard(eng.get_context, query, max_tokens, mode)
 
     @app.get("/stats")
@@ -182,12 +187,12 @@ def create_flask_app(spark=None, sf_dir: str | None = None):
     @app.post("/search")
     def search():
         body = request.get_json(force=True, silent=True) or {}
-        return jsonify(eng.search(*_search_body(body, "limit", 10)))
+        return jsonify(eng.search(*_search_body(body, "limit", 10), _title_filter(body)))
 
     @app.post("/search/context")
     def context():
         body = request.get_json(force=True, silent=True) or {}
-        query, mode, max_tokens, _ = _search_body(body, "max_tokens", 4000)
+        query, mode, max_tokens = _search_body(body, "max_tokens", 4000)
         return jsonify(eng.get_context(query, max_tokens, mode))
 
     @app.get("/stats")

@@ -14,7 +14,8 @@ Every BM25 request is scored by ONE SQL text (scored_sql) over either
 frame: a literal IN term filter on the postings, df and the corpus
 scalars (N, avgdl) folded in as literals, one GROUP BY doc_key. The
 index reader takes those literals from the term dictionary and the meta
-record; the live reader from one aggregate over its cached postings.
+record; the live reader counts N and total_dl once per cached lineage
+and the query terms' df in one aggregate per call.
 top-k is that text under ORDER BY ... LIMIT (TakeOrderedAndProject).
 
 Parameters k1=1.2, b=0.75 (Lucene/LanceDB defaults, SURVEY.md §7.3), idf =
@@ -72,41 +73,51 @@ def scored_live_sql(
     text_col: str,
     query_terms: list[str],
 ) -> tuple[str, DataFrame]:
-    """scored_sql over the live index of `docs`: its postings, tokenized
-    and .cache()d, so repeated queries over the same corpus lineage
-    (Spark's cache manager matches canonicalized plans) reuse one
-    materialization. df of the query terms, N and total_dl come from one
-    aggregate collect over those postings. Its callers are the registry
-    rows that score a derived view (routed, title-weighted, context) or a
-    corpus without a fresh index. Serving (api/engine.py, which cli.py
-    search calls) reads the persisted index instead
-    (scored_from_index_sql), which pins no executor memory per corpus
-    lineage."""
-    post = build_postings(docs, id_col, text_col).cache()
-    _CACHED_INDEXES.setdefault((id(post.sparkSession), post.semanticHash()), post)
+    """scored_sql over the live index of `docs` (_live_index), with the
+    query terms' df from one aggregate over its cached postings. Its
+    callers are the registry rows that score a derived view (routed,
+    title-weighted, context) or a corpus without a fresh index; serving
+    (api/engine.py) reads the persisted index (scored_from_index_sql),
+    which pins no executor memory per corpus lineage."""
+    post, n, total_dl, rows = _live_index(build_postings(docs, id_col, text_col))
     terms = sorted(set(query_terms))
     # postings rows are unique per (doc, term): a term's row count is its df
-    n, total_dl, *dfs = post.agg(
-        F.count_distinct("doc_key"), F.sum("tf"), *[F.count_if(F.col("term") == t) for t in terms]
-    ).first()
-    return scored_sql(post, terms, dict(zip(terms, dfs)), n, total_dl or 0)
+    dfs = post.agg(*[F.count_if(F.col("term") == t) for t in terms]).first() if terms else ()
+    # spark.sql drops its template views after analysis, and dropping a
+    # view whose plan IS a cached plan uncaches it: hand it a filtered
+    # frame over the cached postings, never the cached frame itself. The
+    # cached rows are not sorted by term, so the scan reads all of them.
+    terms_only = post.where(F.col("term").isin(terms))
+    return scored_sql(terms_only, rows, terms, dict(zip(terms, dfs)), n, total_dl)
 
 
-# Every live (cached) index registered here so long-lived sessions (the
-# REST API, notebook sessions) can drop them: each DISTINCT corpus lineage
-# pins one materialization in executor memory until released. Re-caching
-# an identical canonical plan is a no-op in Spark's cache manager, and the
-# entry is keyed by the session and that plan's semantic hash, so
-# per-query calls over one lineage hold one entry while the same plan
-# cached in another session gets its own.
-_CACHED_INDEXES: dict[tuple[int, int], DataFrame] = {}
+# Every live (cached) index, with its (n, total_dl, rows), registered so
+# long-lived sessions (the REST API, notebooks) can drop them: each
+# distinct corpus lineage pins one materialization in executor memory
+# until released. Keyed by session and postings-plan semantic hash, so
+# the calls over one lineage share one entry and another session's own
+# cache of the same plan gets its own.
+_CACHED_INDEXES: dict[tuple[int, int], tuple[DataFrame, int, int, int]] = {}
+
+
+def _live_index(postings: DataFrame) -> tuple[DataFrame, int, int, int]:
+    """(cached postings, n, total_dl, rows) for this postings plan, cached
+    and counted once per lineage (every call on a hash collision)."""
+    key = (id(postings.sparkSession), postings.semanticHash())
+    entry = _CACHED_INDEXES.get(key)
+    if entry is None or not entry[0].sameSemantics(postings):
+        post = postings.cache()
+        n, total_dl, rows = post.agg(F.count_distinct("doc_key"), F.sum("tf"), F.count("*")).first()
+        entry = (post, n, total_dl or 0, rows)
+        _CACHED_INDEXES.setdefault(key, entry)
+    return entry
 
 
 def release_indexes() -> int:
     """Unpersist all cached live indexes; returns how many lineages were
     dropped. Idempotent — double-unpersist is a Spark no-op."""
     n = len(_CACHED_INDEXES)
-    for postings in _CACHED_INDEXES.values():
+    for postings, *_ in _CACHED_INDEXES.values():
         postings.unpersist()
     _CACHED_INDEXES.clear()
     return n
@@ -400,8 +411,9 @@ def _sql_str_lit(t: str) -> str:
     return "'" + t.replace("{", "{{").replace("}", "}}") + "'"
 
 
-# Σdf (posting rows a query's keyword leg reads) at or below which the
-# leg reads them in ONE task: its GROUP BY doc_key then needs no exchange,
+# Posting rows a query's keyword leg scans (Σdf over the term-sorted
+# persisted index, every row of a cached live index) at or below which
+# the leg reads them in ONE task: its GROUP BY doc_key then needs no exchange,
 # so AQE runs no separate shuffle-map job and the leg is one Spark job
 # with one stage. Above it the partitioned scan and its shuffle stay.
 # Placed at the measured crossover (tools/keyword_leg_crossover.py:
@@ -433,11 +445,15 @@ def scored_from_index_sql(
 
     post = read_parquet_cached(spark, f"{path}/postings")
     terms = sorted(set(query_terms))
-    return scored_sql(post, terms, _term_df_lookup(path, terms), *corpus_scalars(path), added, removed)
+    dfs = _term_df_lookup(path, terms)
+    # The postings files are sorted by term, so the IN filter skips row
+    # groups and the scan reads about Σdf rows.
+    return scored_sql(post, sum(dfs.values()), terms, dfs, *corpus_scalars(path), added, removed)
 
 
 def scored_sql(
     post: DataFrame,
+    scan_rows: int,
     terms: list[str],
     dfs: Mapping[str, int],
     n: int,
@@ -456,9 +472,10 @@ def scored_sql(
     the whole tree). An empty term list yields a text that scores
     nothing.
 
-    The returned frame is `post` coalesced to one partition when the
-    query terms' summed df is at most SINGLE_TASK_POSTINGS. The term IN
-    filter still pushes through the coalesce into the scan.
+    The returned frame is `post` coalesced to one partition when
+    `scan_rows`, the rows its term-filtered scan reads, is at most
+    SINGLE_TASK_POSTINGS. The term IN filter still pushes through the
+    coalesce into the scan.
 
     `added` and `removed` are exact read-time edits of the index, each
     document given as its {term: tf} counts: `added` documents (keyed by
@@ -475,7 +492,7 @@ def scored_sql(
     if not terms:
         return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false", post
     dfs = dict(dfs)
-    if sum(dfs.values()) <= SINGLE_TASK_POSTINGS:
+    if scan_rows <= SINGLE_TASK_POSTINGS:
         post = post.coalesce(1)
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
     added, removed = added or {}, removed or {}
@@ -529,20 +546,14 @@ def bm25_scores_from_index(
       postings at sf100); with it, PushedFilters carries In(term, ...)
       into the reader and the sortWithinPartitions('term') layout makes
       each term's rows contiguous row-group runs min/max stats can skip.
-    - dl rides inside the posting rows, so scoring is matched-rows
-      algebra + one groupBy(doc_key), with no doc-side join.
-    - df (from the term dictionary) and the corpus scalars (from the
-      meta record) enter as LITERALS read driver-side, so they fold into
-      the whole-stage-codegen score expression: the plan is one postings
-      scan → score projection → groupBy(doc_key).
+    - dl rides inside the posting rows and df and the corpus scalars
+      enter as literals (scored_sql), so there is no doc-side join.
+    - The scan is memoized per file-stat signature (read_parquet_cached):
+      r12 measured ~190 ms of footer/listing reads per query without it.
 
     Same text as the live path (bm25_scores) over the same postings
     rows and scalars: proven by the shared oracle row and the
     round-trip test."""
-    # r12: the postings scan is memoized per file-stat signature
-    # (read_parquet_cached) — an unchanged index used to pay a ~190 ms
-    # footer/listing round-trip on EVERY query, the single largest slice
-    # of the served bm25/hybrid walls at sf0.1.
     text, post = scored_from_index_sql(spark, path, query_terms)
     return spark.sql(text, post=post)
 

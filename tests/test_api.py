@@ -130,11 +130,22 @@ def test_search_invalid_mode_400(client):
     assert "Invalid search mode" in r.get_json()["detail"]
 
 
-@pytest.mark.parametrize("path, count", [("/search", "limit"), ("/search/context", "max_tokens")])
+_MALFORMED = {
+    "null-query": {"query": None},
+    "int-query": {"query": 5},
+    "text-count": {"count": "abc"},
+    "null-count": {"count": None},
+}
+
+
+# /search/context reads no title_filter, so only /search rejects a bad one.
 @pytest.mark.parametrize(
-    "fields",
-    [{"query": None}, {"query": 5}, {"count": "abc"}, {"count": None}, {"title_filter": {"a": 1}}],
-    ids=["null-query", "int-query", "text-count", "null-count", "object-title-filter"],
+    "path, count, fields",
+    [
+        *((p, c, f) for p, c in [("/search", "limit"), ("/search/context", "max_tokens")] for f in _MALFORMED.values()),
+        ("/search", "limit", {"title_filter": {"a": 1}}),
+    ],
+    ids=[*(f"{p}-{i}" for p in ["search", "context"] for i in _MALFORMED), "search-object-title-filter"],
 )
 def test_malformed_search_body_is_a_bad_request(client, path, count, fields):
     body = {"query": "spark"} | {count if k == "count" else k: v for k, v in fields.items()}

@@ -135,11 +135,11 @@ def test_property_bm25_invariants(texts, k):
     assert {r.doc_key: round(r.score, 4) for r in live} == {r.doc_key: round(r.score, 4) for r in served}
 
 
-def test_live_scores_warm_call_runs_four_jobs(spark, docs):
-    """A warm live scoring call is one aggregate collect over the cached
-    postings (df, N and total_dl; under AQE each of its two exchanges is
-    a job of its own, and the result a third) plus the scoring job, which
-    reads a small posting union in one task."""
+def test_live_scores_warm_call_runs_two_jobs(spark, docs):
+    """A warm live scoring call is two jobs: one aggregate collect of its
+    terms' df over the cached postings (N, total_dl and the row count
+    were taken on the cold call) and the scoring job, which reads the
+    small cached postings in one task."""
     sc = spark.sparkContext
 
     def jobs(group: str) -> int:
@@ -152,7 +152,49 @@ def test_live_scores_warm_call_runs_four_jobs(spark, docs):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     jobs("test-live-cold")
-    assert jobs("test-live-warm") == 4
+    assert jobs("test-live-warm") == 2
+
+
+def test_live_single_task_choice_counts_every_cached_posting(spark, monkeypatch):
+    """The cached live postings are not sorted by term, so a scan of them
+    reads every row: the one-task plan (a coalesce(1) over the postings)
+    is chosen on that row count, not on the query terms' summed df,
+    which is what the persisted index's pruned scan reads."""
+    from etl_pdf_pipepline_spark.retrieval import bm25
+
+    def one_task(live: bool, limit: int) -> bool:
+        monkeypatch.setattr(bm25, "SINGLE_TASK_POSTINGS", limit)
+        if live:
+            _, post = bm25.scored_live_sql(df, "doc_id", "text", ["rare0"])
+        else:
+            _, post = bm25.scored_from_index_sql(spark, d, ["rare0"])
+        return post._jdf.queryExecution().logical().nodeName() == "Repartition"
+
+    rows = [(f"d{i}", f"rare{i % 2} common filler{i}") for i in range(6)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    post_rows, sum_df = 3 * len(rows), 3
+    assert one_task(True, post_rows) and not one_task(True, post_rows - 1)
+    with tempfile.TemporaryDirectory() as d:
+        bm25.persist_index(df, "doc_id", "text", d)
+        assert one_task(False, sum_df) and not one_task(False, sum_df - 1)
+
+
+def test_live_postings_stay_cached_on_the_partitioned_plan(spark, monkeypatch):
+    """Scoring over the live index leaves its postings cached on both of
+    the keyword leg's plans. spark.sql drops the views it makes for its
+    frame arguments, and dropping a view of the cached frame itself would
+    uncache it, so each later call would tokenize the corpus again."""
+    from etl_pdf_pipepline_spark.retrieval import bm25
+
+    bm25.release_indexes()
+    df = spark.sql("SELECT * FROM VALUES (1, 'spark joins shuffle'), (2, 'window spark') AS t(doc_id, text)")
+    for limit in (bm25.SINGLE_TASK_POSTINGS, 0):
+        monkeypatch.setattr(bm25, "SINGLE_TASK_POSTINGS", limit)
+        for _ in range(2):
+            assert len(bm25.bm25_scores(df, "doc_id", "text", ["spark"]).collect()) == 2
+        ((post, *_),) = bm25._CACHED_INDEXES.values()
+        assert post.storageLevel.useMemory, limit
+    bm25.release_indexes()
 
 
 def test_release_indexes_unpersists_cached_postings(spark):
@@ -163,7 +205,7 @@ def test_release_indexes_unpersists_cached_postings(spark):
     )
     bm25.bm25_scores(df, "doc_id", "text", ["spark"]).collect()
     assert len(bm25._CACHED_INDEXES) >= 1
-    cached = list(bm25._CACHED_INDEXES.values())
+    cached = [p for p, *_ in bm25._CACHED_INDEXES.values()]
     n = bm25.release_indexes()
     assert n >= 1 and not bm25._CACHED_INDEXES
     for p in cached:
@@ -187,6 +229,6 @@ def test_live_index_list_holds_one_entry_per_lineage(spark):
     assert other.semanticHash() == df.semanticHash()
     bm25.bm25_scores(other, "doc_id", "text", ["spark"])
     assert len(bm25._CACHED_INDEXES) == 2
-    cached = list(bm25._CACHED_INDEXES.values())
+    cached = [p for p, *_ in bm25._CACHED_INDEXES.values()]
     assert bm25.release_indexes() == 2
     assert not any(p.is_cached for p in cached)
