@@ -40,7 +40,10 @@ except Exception:  # pragma: no cover - environment-dependent
 
 
 def _int_arg(value: Any, name: str) -> int:
-    """An integer request field; BadRequest (HTTP 400) when it is not one."""
+    """An integer request field; BadRequest (HTTP 400) when it is not one,
+    a number with a fractional part included (int() would truncate it)."""
+    if isinstance(value, float) and not value.is_integer():
+        raise BadRequest(f"{name} must be an integer")
     try:
         return int(value)
     except (TypeError, ValueError, OverflowError):

@@ -2,8 +2,9 @@
 
 Every function here returns a pyspark Column built ONLY from built-in
 functions, so the whole expression stays inside whole-stage codegen (no
-Python in the hot path); the one exception is query_tokens, the driver-side
-twin of `tokens` for query strings. Each cites the reference behavior it
+Python in the hot path); the exceptions are query_tokens and filename_title,
+the driver-side twins of `tokens` for a query string and of
+`title_from_filename` for one filename. Each cites the reference behavior it
 re-expresses.
 """
 
@@ -78,6 +79,30 @@ def title_from_filename(filename: Column | str) -> Column:
     t = F.regexp_replace(t, r"[_-]\d{4,8}$", "")
     t = F.regexp_replace(t, r"[_-]+", " ")
     return F.trim(t)
+
+
+# Java's $ without MULTILINE: the end of input, or before a final line
+# terminator (\r\n, or one of \n \r U+0085 U+2028 U+2029). Java also
+# refuses the \n of a final \r\n; no pattern below ends in \r, so that
+# case cannot arise here.
+_JAVA_END = r"(?=(?:\r\n|[\n\r\u0085\u2028\u2029])?\Z)"
+# title_from_filename's patterns, with Java's ASCII-only \d.
+_TITLE_RULES = [
+    (re.compile(r"\.pdf" + _JAVA_END), ""),
+    (re.compile(r"^[A-Z]{2,3}[0-9]{2,4}[ _-]*"), ""),
+    (re.compile(r"[_-][0-9]{4,8}" + _JAVA_END), ""),
+    (re.compile(r"[_-]+"), " "),
+]
+
+
+def filename_title(filename: str) -> str:
+    """`title_from_filename` on the driver, for one filename: the same
+    Java regexes and a trim of spaces only, so a title read on the
+    driver is the one Spark derives (Python's \\d and $ would read
+    "AB12٣_x.pdf" and "x_1234\\r" differently)."""
+    for pattern, repl in _TITLE_RULES:
+        filename = pattern.sub(repl, filename)
+    return filename.strip(" ")
 
 
 # --- Extraction-quality metrics (reference `analyze_quality`,

@@ -11,6 +11,7 @@ place to attach bucketing/partitioning decisions at cluster scale).
 from __future__ import annotations
 
 import os
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,8 +118,31 @@ def pin_events_read_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where table `name` of the corpus at `sf_dir` lives: the one path
+    rule of load_table's Spark scan and of arrow_dataset's driver reads."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+_ARROW_CACHE: dict[str, Any] = {}
+
+
+def arrow_dataset(sf_dir: str, name: str) -> Any:
+    """A pyarrow dataset over the same files as load_table(…, name), for
+    keyed reads of a few rows on the driver with no Spark job. Memoized
+    per path, with no file-stat signature, for load_table's reason: the
+    source tables are read-only (TESTDATA.md)."""
+    import pyarrow.dataset as pads
+
+    path = table_path(sf_dir, name)
+    ds = _ARROW_CACHE.get(path)
+    if ds is None:
+        ds = _ARROW_CACHE[path] = pads.dataset(path, format="parquet")
+    return ds
+
+
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if name == "events":
         # Scaled copies (tools/gen_scale.py) store ts as plain int64
         # nanos; an already-timestamp ts (µs) passes through untouched.
@@ -157,7 +181,7 @@ def table_stat_signature(sf_dir: str, tables: tuple[str, ...]) -> str:
 
     parts: list[str] = []
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
+        p = table_path(sf_dir, t)
         if os.path.isdir(p):
             for root, _dirs, files in sorted(os.walk(p)):
                 for fn in sorted(files):

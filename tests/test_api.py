@@ -135,6 +135,7 @@ _MALFORMED = {
     "int-query": {"query": 5},
     "text-count": {"count": "abc"},
     "null-count": {"count": None},
+    "float-count": {"count": 2.5},
 }
 
 
@@ -261,6 +262,9 @@ def test_chunks_endpoints(client):
     assert one.status_code == 200 and one.get_json()["text"] == c0["text"]
     assert client.get(f"/chunks/{doc_id}:9999").status_code == 404
     assert client.get("/chunks/garbage").status_code == 404
+    # only the canonical ASCII index names a chunk; "²" is no server error
+    for idx in ("²", "03", "٣", "00", "٠"):
+        assert client.get(f"/chunks/{doc_id}:{idx}").status_code == 404, idx
 
 
 def test_images_endpoints(client):

@@ -63,10 +63,10 @@ def test_title_filter_matches_upload_filename_title(spark):
 
 def test_search_is_one_plan(spark):
     """Job count of a warmed hybrid search does not grow with its limit:
-    the ranking is one collect and the title/text lookup one more, never
-    one lookup per hit. With no session deltas and a small posting
-    union, the ranking is one job in every mode, so a search runs at
-    most 2."""
+    the ranking is one collect and the title/text lookup a keyed read on
+    the driver, never one lookup per hit. With no session deltas and a
+    small posting union, the ranking is one job in every mode, so a
+    search runs exactly 1."""
     eng = SparkEngine(spark, SF_SMALL)
     query = "spark join window"
 
@@ -79,7 +79,48 @@ def test_search_is_one_plan(spark):
     assert jobs(3) == jobs(10)
     for mode in ("keyword", "vector", "hybrid"):
         eng.search(query, mode=mode, limit=5)  # warms this mode's lookup path
-        assert jobs(5, mode) <= 2, mode
+        assert jobs(5, mode) == 1, mode
+
+
+def test_document_reads_run_no_job(spark):
+    """A lake document's chunks, markdown and chunk come from the keyed
+    driver read, so they run no Spark job; get_document runs one, its
+    image lookup."""
+    eng = SparkEngine(spark, SF_SMALL)
+    reads = {
+        "get_document_chunks": (lambda: eng.get_document_chunks("3"), 0),
+        "get_document_markdown": (lambda: eng.get_document_markdown("3"), 0),
+        "get_chunk": (lambda: eng.get_chunk("3:0"), 0),
+        "get_document": (lambda: eng.get_document("3"), 1),
+    }
+    for name, (call, want) in reads.items():
+        call()  # warms the memoized scans
+        out, n = _jobs(spark, f"test-doc-read-{name}", call)
+        assert out and n == want, (name, n)
+
+
+def test_lake_titles_match_the_listing(spark):
+    """The keyed driver read titles a document as the Spark listing does."""
+    eng = SparkEngine(spark, SF_SMALL)
+    listed = eng.list_documents()
+    assert listed
+    for d in listed:
+        assert eng.get_document(d["id"])["title"] == d["title"], d["id"]
+
+
+def test_chunk_ids_are_canonical(spark):
+    """A chunk index is canonical ASCII decimal, as a document id is:
+    "03", "٣" and "²" name no chunk, and "²" is no server error."""
+    eng = SparkEngine(spark, SF_SMALL)
+    up = eng.upload("long.pdf", b"%PDF-1.4 " + b"spark " * 2000)["document_id"]
+    chunks = eng.get_document_chunks(up)
+    assert len(chunks) > 3
+    assert eng.get_chunk(f"{up}:3") == chunks[3]
+    for doc_id in ("0", up):
+        assert eng.get_chunk(f"{doc_id}:0")["id"] == f"{doc_id}:0"
+        for idx in ("²", "03", "٣", "00", "٠", "+0", "-0", " 0"):
+            with pytest.raises(NotFound):
+                eng.get_chunk(f"{doc_id}:{idx}")
 
 
 @pytest.mark.parametrize("mode", ["keyword", "vector", "hybrid"])
@@ -97,9 +138,11 @@ def test_negative_limit_is_a_bad_request(spark, mode):
     assert eng.get_document_chunks("0", limit=0) == []
 
 
-def test_unknown_non_numeric_id_runs_no_job(spark):
+def test_unknown_id_runs_no_job(spark):
+    """Non-canonical ids, ids past the bigint range and canonical ids the
+    lake lacks are all NotFound without a Spark job."""
     eng = SparkEngine(spark, SF_SMALL)
-    for bad in ("nope-999", "007"):
+    for bad in ("nope-999", "007", "987654321", "99999999999999999999"):
 
         def lookup():
             with pytest.raises(NotFound):

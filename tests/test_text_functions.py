@@ -58,6 +58,45 @@ def test_title_from_filename_strips_code_and_dates(spark):
         assert one(spark, TX.title_from_filename("f"), f=fname) == want
 
 
+def test_filename_title_equals_title_from_filename(spark):
+    """The driver-side twin titles every filename as Spark does: Java's
+    \\d is ASCII only and its $ also matches before a final line
+    terminator, \\r\\n included."""
+    import random
+
+    rng = random.Random(11)
+    upper = [chr(c) for c in range(ord("A"), ord("Z") + 1)]
+    lower = [chr(c) for c in range(ord("a"), ord("z") + 1)]
+    digits = [*"0123456789", "٣", "٠", "５", "²"]
+    seps = ["_", "-", " ", "\t"]
+    ends = ["", ".pdf", ".PDF"]
+    terminators = ["", "\n", "\r", "\r\n", "\u0085", "\u2028", "\u2029"]
+
+    def pick(pool, lo, hi):
+        return "".join(rng.choices(pool, k=rng.randint(lo, hi)))
+
+    def filename() -> str:
+        code = pick(upper, 1, 4) + pick(digits, 1, 5) + pick(seps, 0, 2) if rng.random() < 0.6 else ""
+        body = pick(upper + lower + digits + seps + ["."], 0, 10)
+        date = rng.choice(seps) + pick(digits, 3, 9) if rng.random() < 0.6 else ""
+        tail = rng.choice(ends) + rng.choice(terminators)
+        # a terminator before the date code or extension, or a second one
+        if rng.random() < 0.2:
+            tail = rng.choice(terminators) + tail
+        return code + body + date + tail
+
+    names = ["", "AB12٣_x.pdf", "x_1234\r", "x_1234\r\n", "x.pdf\n\n"]
+    names += [filename() for _ in range(600)]
+    rows = (
+        spark.createDataFrame([(n,) for n in names], "f string")
+        .select("f", TX.title_from_filename("f").alias("t"))
+        .collect()
+    )
+    assert {r.f: r.t for r in rows} == {n: TX.filename_title(n) for n in names}
+    assert TX.filename_title("AB12٣_x.pdf") == "٣ x"
+    assert TX.filename_title("x_1234\r") == "x\r"
+
+
 def test_quality_ratios(spark):
     s = "ab cd"  # 5 chars, 1 space
     assert one(spark, TX.whitespace_ratio(F.col("s")), s=s) == 1 / 5
