@@ -7,46 +7,42 @@ deltas).
 Storage model: the corpus is the immutable parquet lake (documents /
 embeddings tables). HTTP uploads and deletes are session DELTAS — a
 driver-side map of uploaded documents (each a single parsed file;
-deleting one drops it) and a map of the deleted lake documents' posting
-rows — applied as a union / anti-filter over the lake at read time.
+deleting one drops it) and a map of the deleted lake documents' term
+counts — applied as a union / anti-filter over the lake at read time.
 That is deliberately the lakehouse shape of the reference's SQLite row
 mutations (src/load/sqlite_store.py): at scale the same deltas are
 flushed through the sink rewrites (sources/sinks.py upsert/delete_where)
 into new table versions; the API semantics don't change.
 
-Serving view: `_docs()` is (lake minus deleted) ∪ uploads, one row per
-document carrying its `filename` and the `title` derived from it by the
-reference's filename rule. Listing, stats and the title filter read it.
+Where a request runs: Spark runs the plans that span the corpus: a
+search's ranking, and the serving view `_docs()` — (lake minus deleted)
+∪ uploads, each document with its `filename` and the `title` the
+reference's filename rule derives from it — behind the title filter,
+`stats` and `list_documents`. A request about one document works from
+its row, read once per request on the driver (`_doc_row`: the upload's
+dict, or one keyed pyarrow read of the documents table, `_lake_rows`),
+and runs no Spark job, whose fixed cost would be most of it: metadata,
+chunks, markdown, image, and the {term: tf} index delta of an upload or
+a delete, `query_tokens` of its text. The reference answers these with
+one keyed SQLite read each (src/load/sqlite_store.py:50-66, 85-100).
 
 Search: the keyword leg is served from the persisted BM25 index, built
-or found fresh once per engine (retrieval/queries.py::ensure_bm25_index
-— the reference builds its full-text index once per ingest batch and
-every query reads it, src/pipeline.py:164-165). The deltas edit that
-index exactly at read time (bm25.scored_sql's `added`
-and `removed`): each upload's term counts are taken once, at upload, and
-kept on its row, and each deleted lake document's posting rows once, at
-delete; a search corrects N, total_dl and df by them, skips the
-deleted keys in the postings scan and unions the uploads' rows in.
-Uploads are not written into the shared index: they are not in the
-documents table, so its freshness record would serve them to every other
-reader of the corpus. The vector leg is a cosine scan of the embeddings
-with the query vector as a literal (functions/vectors.py::cosine_lit_sql,
-each per-row value computed once), and hybrid mode fuses the two with
-RRF — all one spark.sql text, collected once. When the query terms'
-postings are few (bm25.scored_sql: Σdf at most
-SINGLE_TASK_POSTINGS), the keyword leg reads them in one task, its
-GROUP BY needs no exchange and the ranking is one Spark job with one
-stage; above that, and whenever uploads are served (their VALUES rows
-union a second partition in), the leg shuffles and AQE runs that
-exchange as a job of its own. Title and text of the at most `limit`
-lake hits then come from one keyed pyarrow read of the documents table
-on the driver (`_lake_rows`), not from a Spark job, whose fixed cost
-would be most of the lookup's; folding the lookup into the ranked plan
-either broadcasts every document's text (left join) or evaluates the
-ranking twice (semi-join), both measured slower. Upload rows are
-already on the driver. So a warmed search with no uploads runs 1 Spark
-job in every mode, and the document and chunk reads run none of their
-own (get_document's image lookup is one job).
+or found fresh once per engine (retrieval/queries.py::ensure_bm25_index;
+the reference builds its full-text index once per ingest batch,
+src/pipeline.py:164-165), edited exactly at read time by the deltas
+(bm25.scored_sql's `added` and `removed`). Uploads are not written into
+the shared index: they are not in the documents table, so its freshness
+record would serve them to every other reader of the corpus. The vector
+leg is a cosine scan of the embeddings with the query vector as a
+literal (functions/vectors.py::cosine_lit_sql), and hybrid mode fuses
+the two with RRF: one spark.sql text, collected once. While the query
+terms' postings are few (Σdf at most bm25.SINGLE_TASK_POSTINGS) the
+keyword leg's rows, the uploads' VALUES rows included, are read in one
+task and need no exchange, so a warmed search runs 1 Spark job in every
+mode, with or without deltas. The at most `limit` lake hits' title and
+text then come from `_lake_rows`; folding that lookup into the ranked
+plan either broadcasts every document's text (left join) or evaluates
+the ranking twice (semi-join), both measured slower.
 
 Everything here returns plain dicts/lists so the same engine backs any
 HTTP frontend (FastAPI when installed, Flask otherwise — api/app.py).
@@ -58,13 +54,13 @@ import hashlib
 from collections import Counter
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import filename_title, query_tokens, title_from_filename, tokens
+from ..functions.text import filename_title, query_tokens, title_from_filename
 from ..functions.vectors import cosine_lit_sql
 from ..operators.chunker import chunk_text
-from ..operators.multimodal import decode_image_fake, media_table
+from ..operators.multimodal import decode_image_fake
 # perfbench/run.py::_wrap_layers re-binds bm25_scores, embed_query and
 # load_table on this module to span them, so all three must stay bound
 # here — bm25_scores too, although the engine no longer calls it.
@@ -72,7 +68,7 @@ from ..retrieval.bm25 import bm25_scores, scored_from_index_sql  # noqa: F401
 from ..retrieval.embedder import HashEmbedder, embed_query
 from ..retrieval.hybrid import SearchMode, route_topic, rrf_sql
 from ..retrieval.queries import ensure_bm25_index
-from ..sources.catalog import DEFAULT_SF_DIR, arrow_dataset, load_table, read_parquet_cached
+from ..sources.catalog import DEFAULT_SF_DIR, arrow_dataset, load_table
 from ..sources.extract import _parse_passthrough
 
 TOKEN_FACTOR = 1.3  # reference src/transform/chunker.py:124-126
@@ -91,17 +87,6 @@ def _check_limit(limit: int) -> None:
     and a list slice [:-1] would silently drop the last item."""
     if limit < 0:
         raise BadRequest(f"Invalid limit: {limit}. Use 0 or more")
-
-
-def _lake_filename(doc_id: Column) -> Column:
-    """A lake document's filename, the input of its title (`_lake_rows`
-    spells the same rule on the driver)."""
-    return F.concat("source", F.lit("_report_"), doc_id, F.lit(".pdf"))
-
-
-def _titled(docs: DataFrame) -> DataFrame:
-    """The one title rule: `title` from `filename` (reference F10)."""
-    return docs.withColumn("title", title_from_filename(F.col("filename")))
 
 
 def _lake_id(document_id: str) -> int:
@@ -155,7 +140,7 @@ class SparkEngine:
     def _docs(self, uploads: bool = True) -> DataFrame:
         """The serving view: the lake minus its deleted documents ∪ uploads
         (unless `uploads` is False), with each document's filename and
-        title."""
+        the title the reference's filename rule gives it (F10)."""
         doc_id = F.col("doc_id").cast("string")
         docs = load_table(self.spark, self.sf_dir, "documents")
         if self._removed:
@@ -166,7 +151,8 @@ class SparkEngine:
             "lang",
             "source",
             "n_chars",
-            _lake_filename(doc_id).alias("filename"),
+            # the filename `_lake_rows` spells on the driver
+            F.concat("source", F.lit("_report_"), doc_id, F.lit(".pdf")).alias("filename"),
         )
         rows = [
             (u["id"], u["text"] or "", "en", "upload", len(u["text"] or ""), u["filename"])
@@ -175,7 +161,7 @@ class SparkEngine:
         ]
         if rows:
             docs = docs.unionByName(self.spark.createDataFrame(rows, docs.schema))
-        return _titled(docs)
+        return docs.withColumn("title", title_from_filename(F.col("filename")))
 
     def _lake_rows(self, keys: list[int]) -> dict[str, dict[str, Any]]:
         """{doc_id: {filename, title, text}} for the lake documents with
@@ -197,19 +183,13 @@ class SparkEngine:
             out[str(r["doc_id"])] = {"filename": name, "title": title, "text": r["text"]}
         return out
 
-    def _live_lake_id(self, document_id: str) -> int:
-        """_lake_id for a lake document this engine still serves: NotFound
-        for a non-canonical id and for a deleted document."""
-        key = _lake_id(document_id)
-        if key in self._removed:
-            raise NotFound(document_id)
-        return key
-
     def _doc_row(self, document_id: str) -> dict[str, Any]:
+        """The document's row with its text: a copy of the upload's, or
+        one `_lake_rows` read; NotFound for an id the engine lacks."""
         if document_id in self._uploads:
             return dict(self._uploads[document_id])
-        key = self._live_lake_id(document_id)
-        r = self._lake_rows([key]).get(document_id)
+        key = _lake_id(document_id)
+        r = None if key in self._removed else self._lake_rows([key]).get(document_id)
         if r is None:
             raise NotFound(document_id)
         return {
@@ -227,8 +207,8 @@ class SparkEngine:
 
     def _corpus_dim(self) -> int:
         if self._dim is None:
-            emb = load_table(self.spark, self.sf_dir, "embeddings")
-            self._dim = len(emb.select("embedding").first()[0])
+            first = arrow_dataset(self.sf_dir, "embeddings").head(1, columns=["embedding"])
+            self._dim = len(first["embedding"][0])
         return self._dim
 
     # ---------------------------------------------------------------- search
@@ -366,21 +346,12 @@ class SparkEngine:
         if status in (None, "completed"):
             rows = (
                 self._docs(uploads=False)
-                .select("doc_id", "filename", "title")
-                .orderBy(F.col("doc_id").cast("long"))
+                .select(F.col("doc_id").alias("id"), "filename", "title")
+                .orderBy(F.col("id").cast("long"))
                 .limit(limit)
                 .collect()
             )
-            out = [
-                {
-                    "id": r.doc_id,
-                    "filename": r.filename,
-                    "title": r.title,
-                    "status": "completed",
-                    "page_count": 1,
-                }
-                for r in rows
-            ]
+            out = [{**r.asDict(), "status": "completed", "page_count": 1} for r in rows]
         for u in self._uploads.values():
             if len(out) >= limit:
                 break
@@ -390,9 +361,8 @@ class SparkEngine:
 
     def get_document(self, document_id: str) -> dict[str, Any]:
         doc = self._doc_row(document_id)
-        chunks = chunk_text(doc.get("text") or "")
-        doc["chunk_count"] = len(chunks)
-        doc["image_count"] = len(self._images_for(document_id))
+        doc["chunk_count"] = len(chunk_text(doc["text"] or ""))
+        doc["image_count"] = len(self._images_for(doc))
         doc.pop("text", None)
         doc.pop("terms", None)
         return doc
@@ -411,7 +381,8 @@ class SparkEngine:
         """Reference POST /documents/upload (documents.py:112-168):
         hash-dedup, optional force-replace, synchronous parse. The parse
         is the same seam the distributed path uses
-        (sources/extract.py::extract_markdown) applied to one file."""
+        (sources/extract.py::extract_markdown) applied to one file. Title
+        and index delta come from `filename_title` and `query_tokens`."""
         if not filename or not filename.lower().endswith(".pdf"):
             raise BadRequest("Only PDF files are accepted")
         file_hash = "sha256:" + hashlib.sha256(content).hexdigest()
@@ -433,16 +404,10 @@ class SparkEngine:
             status, err = "completed", None
         except Exception as e:  # parse-side capture, M4 policy
             text, pages, status, err = None, None, "failed", str(e)
-        # one job yields the title and the upload's index delta
-        row = (
-            _titled(self.spark.createDataFrame([(filename, text)], "filename string, text string"))
-            .select("title", tokens("text").alias("terms"))
-            .first()
-        )
         self._uploads[doc_id] = {
             "id": doc_id,
             "filename": filename,
-            "title": row.title,
+            "title": filename_title(filename),
             "status": status,
             "page_count": pages,
             "source_path": f"upload://{filename}",
@@ -450,7 +415,7 @@ class SparkEngine:
             "extraction_method": "passthrough",
             "error_message": err,
             "text": text,
-            "terms": Counter(row.terms or []),  # its {term: tf} index delta
+            "terms": Counter(query_tokens(text or "")),  # its {term: tf} index delta
         }
         return {
             "document_id": doc_id,
@@ -465,13 +430,11 @@ class SparkEngine:
         M2 cascade as a session delta: an upload is dropped, a lake
         document's posting rows are withdrawn from the index (its one
         record, `_removed`); the lake rewrite (sinks.delete_where)
-        applies it durably."""
-        self._doc_row(document_id)  # 404 if unknown
+        applies it durably. Those rows are `query_tokens` of the text the
+        404 check reads: the index tokenizes that text with `tokens`."""
+        doc = self._doc_row(document_id)  # 404 if unknown
         if self._uploads.pop(document_id, None) is None:
-            key = int(document_id)
-            post = read_parquet_cached(self.spark, f"{self._index}/postings")
-            rows = post.filter(F.col("doc_key") == key).select("term", "tf").collect()
-            self._removed[key] = {r.term: int(r.tf) for r in rows}
+            self._removed[int(document_id)] = Counter(query_tokens(doc["text"] or ""))
         return {"message": f"Document deleted: {document_id}"}
 
     # ---------------------------------------------------------------- chunks
@@ -509,62 +472,46 @@ class SparkEngine:
 
     # ---------------------------------------------------------------- images
 
-    def _images_for(self, document_id: str) -> list[dict[str, Any]]:
-        if document_id in self._uploads:
+    def _images_for(self, doc: dict[str, Any]) -> list[dict[str, Any]]:
+        """A document's images, from its `_doc_row` as media_table builds
+        them: a lake document's one media row has media_id = doc_id and
+        content = its text's UTF-8 bytes. An upload has none, and so has a
+        lake document with null text (null content): image_count 0, and
+        404 from the image reads."""
+        if doc["id"] in self._uploads or doc["text"] is None:
             return []
-        key = self._live_lake_id(document_id)
-        rows = (
-            media_table(self.spark, self.sf_dir)
-            .filter(F.col("media_id") == key)
-            .select("media_id", "media_type", "content")
-            .collect()
-        )
-        out = []
-        for r in rows:
-            width, height, fmt = decode_image_fake(bytes(r.content))
-            out.append(
-                {
-                    "id": f"img-{r.media_id}",
-                    "document_id": document_id,
-                    "page_number": 1,
-                    "image_index": 0,
-                    "file_path": f"media://{r.media_id}",
-                    "width": width,
-                    "height": height,
-                    "format": fmt,
-                    "caption": None,
-                }
-            )
-        return out
+        width, height, fmt = decode_image_fake(doc["text"].encode())
+        return [
+            {
+                "id": f"img-{doc['id']}",
+                "document_id": doc["id"],
+                "page_number": 1,
+                "image_index": 0,
+                "file_path": f"media://{doc['id']}",
+                "width": width,
+                "height": height,
+                "format": fmt,
+                "caption": None,
+            }
+        ]
+
+    def _image_doc(self, image_id: str) -> dict[str, Any]:
+        """The `_doc_row` of the document with image `image_id`."""
+        try:
+            doc = self._doc_row(image_id[4:]) if image_id.startswith("img-") else None
+        except NotFound:
+            doc = None
+        if doc is None or not self._images_for(doc):
+            raise NotFound(image_id)
+        return doc
 
     def get_document_images(self, document_id: str) -> list[dict[str, Any]]:
-        self._doc_row(document_id)  # 404 if unknown
-        return self._images_for(document_id)
+        return self._images_for(self._doc_row(document_id))
 
     def get_image(self, image_id: str) -> dict[str, Any]:
-        if not image_id.startswith("img-"):
-            raise NotFound(image_id)
-        imgs = self._images_for(image_id[4:])
-        if not imgs:
-            raise NotFound(image_id)
-        return imgs[0]
+        return self._images_for(self._image_doc(image_id))[0]
 
     def get_image_file(self, image_id: str) -> bytes:
         """Reference GET /images/{id}/file (images.py:76-…): the raw bytes
-        of the opaque binary column."""
-        if not image_id.startswith("img-"):
-            raise NotFound(image_id)
-        try:
-            key = self._live_lake_id(image_id[4:])
-        except NotFound:
-            raise NotFound(image_id)
-        row = (
-            media_table(self.spark, self.sf_dir)
-            .filter(F.col("media_id") == key)
-            .select("content")
-            .limit(1)
-            .collect()
-        )
-        if not row:
-            raise NotFound(image_id)
-        return bytes(row[0].content)
+        of the opaque binary column, the content _images_for decodes."""
+        return self._image_doc(image_id)["text"].encode()

@@ -472,10 +472,10 @@ def scored_sql(
     the whole tree). An empty term list yields a text that scores
     nothing.
 
-    The returned frame is `post` coalesced to one partition when
-    `scan_rows`, the rows its term-filtered scan reads, is at most
-    SINGLE_TASK_POSTINGS. The term IN filter still pushes through the
-    coalesce into the scan.
+    When `scan_rows`, the rows its term-filtered scan reads, is at most
+    SINGLE_TASK_POSTINGS, a COALESCE(1) hint puts the scored rows, the
+    scan and any added VALUES, in one task, whose GROUP BY needs no
+    exchange; the term IN filter still reaches the scan.
 
     `added` and `removed` are exact read-time edits of the index, each
     document given as its {term: tf} counts: `added` documents (keyed by
@@ -492,8 +492,6 @@ def scored_sql(
     if not terms:
         return "SELECT " + key_sql + ", 0.0D AS score FROM {post} WHERE false", post
     dfs = dict(dfs)
-    if scan_rows <= SINGLE_TASK_POSTINGS:
-        post = post.coalesce(1)
     terms_in = ", ".join(_sql_str_lit(t) for t in terms)
     added, removed = added or {}, removed or {}
     rows = "SELECT " + key_sql + ", term, tf, dl FROM {post} WHERE term IN (" + terms_in + ")"
@@ -514,6 +512,8 @@ def scored_sql(
     ]
     if values:
         rows += " UNION ALL SELECT * FROM VALUES " + ", ".join(values) + " AS up(doc_key, term, tf, dl)"
+    if scan_rows <= SINGLE_TASK_POSTINGS:
+        rows = "SELECT /*+ COALESCE(1) */ * FROM (" + rows + ") r"
     avgdl = float(total_dl) / n if n else 0.0
     entries = ", ".join(f"{_sql_str_lit(t)}, {dfs[t]}L" for t in terms)
     score = _term_score_sql(n=n, avgdl=avgdl)

@@ -157,7 +157,7 @@ def test_live_scores_warm_call_runs_two_jobs(spark, docs):
 
 def test_live_single_task_choice_counts_every_cached_posting(spark, monkeypatch):
     """The cached live postings are not sorted by term, so a scan of them
-    reads every row: the one-task plan (a coalesce(1) over the postings)
+    reads every row: the one-task plan (a COALESCE(1) hint over the rows)
     is chosen on that row count, not on the query terms' summed df,
     which is what the persisted index's pruned scan reads."""
     from etl_pdf_pipepline_spark.retrieval import bm25
@@ -165,10 +165,10 @@ def test_live_single_task_choice_counts_every_cached_posting(spark, monkeypatch)
     def one_task(live: bool, limit: int) -> bool:
         monkeypatch.setattr(bm25, "SINGLE_TASK_POSTINGS", limit)
         if live:
-            _, post = bm25.scored_live_sql(df, "doc_id", "text", ["rare0"])
+            text, _ = bm25.scored_live_sql(df, "doc_id", "text", ["rare0"])
         else:
-            _, post = bm25.scored_from_index_sql(spark, d, ["rare0"])
-        return post._jdf.queryExecution().logical().nodeName() == "Repartition"
+            text, _ = bm25.scored_from_index_sql(spark, d, ["rare0"])
+        return "/*+ COALESCE(1) */" in text
 
     rows = [(f"d{i}", f"rare{i % 2} common filler{i}") for i in range(6)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])

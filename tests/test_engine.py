@@ -6,6 +6,7 @@ index exactly, pinning no executor memory."""
 from __future__ import annotations
 
 import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,14 +65,16 @@ def test_title_filter_matches_upload_filename_title(spark):
 def test_search_is_one_plan(spark):
     """Job count of a warmed hybrid search does not grow with its limit:
     the ranking is one collect and the title/text lookup a keyed read on
-    the driver, never one lookup per hit. With no session deltas and a
-    small posting union, the ranking is one job in every mode, so a
-    search runs exactly 1."""
+    the driver, never one lookup per hit. With a small posting union the
+    ranking is one job in every mode, with no session deltas and with
+    uploads and deletes (the uploads' VALUES rows join the postings scan
+    in its one task), so a search runs exactly 1."""
     eng = SparkEngine(spark, SF_SMALL)
     query = "spark join window"
 
-    def jobs(limit: int, mode: str = "hybrid") -> int:
-        hits, n = _jobs(spark, f"test-one-plan-{mode}-{limit}", lambda: eng.search(query, mode=mode, limit=limit))
+    def jobs(limit: int, mode: str = "hybrid", phase: str = "") -> int:
+        group = f"test-one-plan-{phase}{mode}-{limit}"
+        hits, n = _jobs(spark, group, lambda: eng.search(query, mode=mode, limit=limit))
         assert len(hits) == limit
         return n
 
@@ -80,23 +83,109 @@ def test_search_is_one_plan(spark):
     for mode in ("keyword", "vector", "hybrid"):
         eng.search(query, mode=mode, limit=5)  # warms this mode's lookup path
         assert jobs(5, mode) == 1, mode
+    eng.upload("deltas_a.pdf", b"%PDF-1.4 spark join window")
+    eng.upload("deltas_b.pdf", b"%PDF-1.4 join join window")
+    for hit in eng.search(query, mode="keyword", limit=2):
+        eng.delete_document(hit["document_id"])
+    for mode in ("keyword", "vector", "hybrid"):
+        eng.search(query, mode=mode, limit=5)
+        assert jobs(5, mode, "deltas-") == 1, ("deltas", mode)
 
 
 def test_document_reads_run_no_job(spark):
-    """A lake document's chunks, markdown and chunk come from the keyed
-    driver read, so they run no Spark job; get_document runs one, its
-    image lookup."""
+    """Every request about one document works from its row on the
+    driver, the keyed read of a lake document or an upload's dict, so
+    none runs a Spark job: the document, chunk and image reads, an
+    upload, and the delete of a lake document and of an upload."""
     eng = SparkEngine(spark, SF_SMALL)
     reads = {
-        "get_document_chunks": (lambda: eng.get_document_chunks("3"), 0),
-        "get_document_markdown": (lambda: eng.get_document_markdown("3"), 0),
-        "get_chunk": (lambda: eng.get_chunk("3:0"), 0),
-        "get_document": (lambda: eng.get_document("3"), 1),
+        "get_document": lambda: eng.get_document("3"),
+        "get_document_chunks": lambda: eng.get_document_chunks("3"),
+        "get_document_markdown": lambda: eng.get_document_markdown("3"),
+        "get_chunk": lambda: eng.get_chunk("3:0"),
+        "get_document_images": lambda: eng.get_document_images("3"),
+        "get_image": lambda: eng.get_image("img-3"),
+        "get_image_file": lambda: eng.get_image_file("img-3"),
     }
-    for name, (call, want) in reads.items():
+    for name, call in reads.items():
         call()  # warms the memoized scans
         out, n = _jobs(spark, f"test-doc-read-{name}", call)
-        assert out and n == want, (name, n)
+        assert out and n == 0, (name, n)
+    up, n = _jobs(spark, "test-doc-upload", lambda: eng.upload("no_job.pdf", b"%PDF-1.4 spark join"))
+    assert up["status"] == "completed" and n == 0, n
+    for doc_id in ("3", up["document_id"]):
+        out, n = _jobs(spark, f"test-doc-delete-{doc_id}", lambda d=doc_id: eng.delete_document(d))
+        assert out and n == 0, (doc_id, n)
+        with pytest.raises(NotFound):
+            eng.get_document(doc_id)
+
+
+def test_deletes_withdraw_the_persisted_postings(spark):
+    """A delete withdraws `query_tokens` of the document's text from the
+    index, so for every document of the corpus those counts must be its
+    persisted postings' {term: tf}, and its dl their sum."""
+    import pyarrow.dataset as pads
+
+    from etl_pdf_pipepline_spark.functions.text import query_tokens
+    from etl_pdf_pipepline_spark.sources.catalog import arrow_dataset
+
+    eng = SparkEngine(spark, SF_SMALL)
+    posted: dict[int, dict[str, int]] = {}
+    dls: dict[int, int] = {}
+    for r in pads.dataset(f"{eng._index}/postings", format="parquet").to_table().to_pylist():
+        posted.setdefault(r["doc_key"], {})[r["term"]] = r["tf"]
+        assert dls.setdefault(r["doc_key"], r["dl"]) == r["dl"], r
+    docs = arrow_dataset(SF_SMALL, "documents").to_table(columns=["doc_id", "text"]).to_pylist()
+    assert len(docs) == 500
+    for d in docs:
+        counts = Counter(query_tokens(d["text"] or ""))
+        assert counts == posted.pop(d["doc_id"], {}), d["doc_id"]
+        assert dls.pop(d["doc_id"], 0) == sum(counts.values()), d["doc_id"]
+    assert not posted
+
+
+def test_images_are_the_media_table_rows(spark):
+    """Every document's image, as the engine builds it from the document's
+    row, is its media_table row: the bytes, and the width, height and
+    format decode_image_fake reads from them."""
+    from etl_pdf_pipepline_spark.operators.multimodal import decode_image_fake, media_table
+
+    eng = SparkEngine(spark, SF_SMALL)
+    rows = media_table(spark, SF_SMALL).collect()
+    assert len(rows) == 500
+    for r in rows:
+        image_id = f"img-{r.media_id}"
+        content = bytes(r.content)
+        img = eng.get_image(image_id)
+        assert eng.get_image_file(image_id) == content, image_id
+        assert (img["width"], img["height"], img["format"]) == decode_image_fake(content), image_id
+        assert img["document_id"] == str(r.media_id)
+
+
+def test_null_text_document_has_no_image(spark, tmp_path):
+    """A lake document with null text has no image, as its media row's
+    content is null: image_count 0 and NotFound from the image reads. Its
+    delete withdraws nothing from the index."""
+    spark.createDataFrame(
+        [(7, "alpha text", "en", "src0", 10), (8, None, "en", "src1", 0)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    try:  # the engine builds this corpus's index under spark-warehouse/
+        eng = SparkEngine(spark, str(tmp_path))
+        assert eng.get_document("7")["image_count"] == 1
+        doc = eng.get_document("8")
+        assert doc["image_count"] == 0
+        assert doc["chunk_count"] == len(eng.get_document_chunks("8"))
+        assert eng.get_document_images("8") == []
+        with pytest.raises(NotFound):
+            eng.get_image("img-8")
+        with pytest.raises(NotFound):
+            eng.get_image_file("img-8")
+        before = eng.search("alpha", mode="keyword", limit=2)
+        eng.delete_document("8")
+        assert eng.search("alpha", mode="keyword", limit=2) == before
+    finally:
+        shutil.rmtree(_bm25_index_path(str(tmp_path)), ignore_errors=True)
 
 
 def test_lake_titles_match_the_listing(spark):

@@ -25,12 +25,17 @@ def test_tokens_empty_string(spark):
 
 def test_query_tokens_equal_tokens(spark):
     """The driver-side twin splits every string as the JVM's tokens does,
-    Unicode spaces and line terminators included."""
+    Unicode spaces and line terminators included, and lowercases every
+    code point as the JVM does, alone, word-medial and word-final."""
     import random
 
     rng = random.Random(7)
     alphabet = ["a", "B", " ", "\t", "\n", "\r", "\x0b", "\f", "\xa0", "\u3000", "\u2028", "\u0085", "\u2029"]
     texts = [""] + ["".join(rng.choices(alphabet, k=rng.randint(1, 12))) for _ in range(400)]
+    code_points = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    blocks = [code_points[i : i + 4096] for i in range(0, len(code_points), 4096)]
+    # every code point alone, between capital sigmas and before a final one
+    texts += [sep.join(b) for sep in (" ", "\u03a3", "\u03a3 ") for b in blocks]
     rows = spark.createDataFrame([(t,) for t in texts], "s string").select("s", TX.tokens("s").alias("t")).collect()
     assert {r.s: r.t for r in rows} == {t: TX.query_tokens(t) for t in texts}
 

@@ -1,5 +1,5 @@
 """Time the index-served keyword leg's two plans at several posting-row
-counts: one task (the postings scan coalesced to one partition) and the
+counts: one task (the scanned rows coalesced to one partition) and the
 partitioned scan with its GROUP BY shuffle. bm25.SINGLE_TASK_POSTINGS is
 placed where they cross.
 
