@@ -214,7 +214,6 @@ def _events_user_sliced(
         pin_events_read_confs,
         raw_pruned_files,
         read_parquet_cached,
-        read_parquet_paths_cached,
         table_stat_signature,
     )
     from ..sources.manifest import meta_matches
@@ -239,9 +238,7 @@ def _events_user_sliced(
             # the shared catalog helper, which also pins the UTC session
             # zone the ntz→timestamp cast depends on, ADVICE r13 #1).
             pin_events_read_confs(spark)
-            return _normalize_events_ts(
-                read_parquet_paths_cached(spark, tuple(raw_files))
-            )
+            return _normalize_events_ts(read_parquet_cached(spark, *raw_files))
         # r13 file-level pruning (guide §6 / SCALING.md sf100 floor
         # decomposition): the per-file (user_id, ts) boxes in the
         # layout's CAS meta drop non-overlapping FILES before Spark
@@ -251,7 +248,7 @@ def _events_user_sliced(
         # read set; the exact predicate still applies downstream.
         files = zorder_pruned_files(sf_dir, user_hi_exclusive=user_hi_exclusive)
         if files:
-            return read_parquet_paths_cached(spark, tuple(files))
+            return read_parquet_cached(spark, *files)
         path = zorder_events_path(sf_dir)
         if meta_matches(path, source_signature=table_stat_signature(sf_dir, ("events",))):
             return read_parquet_cached(spark, path)

@@ -47,8 +47,8 @@ _EMB_DIM = 64
 
 def _query_vector_cached(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
     """The standard query vector (a query PARAMETER — the reference's
-    arrives as a literal argument) memoized per (session, embeddings
-    file-stat signature): fetching it was a whole filtered-scan Spark
+    arrives as a literal argument) memoized per embeddings file-stat
+    signature: fetching it was a whole filtered-scan Spark
     job on EVERY call of every probe query — pure repetition, since the
     vector only changes when the embeddings files do (r13; same currency
     and rationale as table_scalar_cached's other users). Any ingest

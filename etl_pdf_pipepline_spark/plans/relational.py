@@ -547,14 +547,14 @@ def _orders_custkey_sliced(
     gate plans are unchanged. The exact predicate is ALWAYS applied
     downstream — pruning only shrinks the read set."""
     from ..plans.bucketed import scan_forced
-    from ..sources.catalog import raw_pruned_files, read_parquet_paths_cached
+    from ..sources.catalog import raw_pruned_files, read_parquet_cached
 
     if not scan_forced():
         files = raw_pruned_files(
             sf_dir, "orders", "o_custkey", hi_exclusive=custkey_hi_exclusive
         )
         if files:
-            return read_parquet_paths_cached(spark, tuple(files))
+            return read_parquet_cached(spark, *files)
     return load_table(spark, sf_dir, "orders")
 
 

@@ -167,23 +167,27 @@ def bm25_topk(
 
 
 # Driver-side term-df lookups, one entry per term_df directory: its
-# file-stat signature and the df of every term looked up under it (0 for
-# a term the index lacks). A warm lookup is a dict read; a cold one reads
-# only the terms the entry lacks, with a pyarrow row-group-pruned read of
-# a tiny table — no Spark job either way (the same pattern as
-# corpus_scalars' literal fold). A rewritten index has a new signature,
-# which replaces the entry, so each index holds one entry.
+# stat signature and the df of terms looked up under it (0 for a term the
+# index lacks). A warm lookup is a dict read; a cold one reads only the
+# terms the entry lacks, with a pyarrow row-group-pruned read of a tiny
+# table — no Spark job either way (the same pattern as corpus_scalars'
+# literal fold). A rewritten index has a new signature, which replaces the
+# entry, so each index holds one entry. It accumulates per term, so it is
+# not a catalog.memo value; past _TERM_DF_MAX terms the entry starts over
+# from the current query's terms, so a long-lived engine sent distinct
+# queries holds at most that many per index.
 _TERM_DF_CACHE: dict[str, tuple[str, dict[str, int]]] = {}
+_TERM_DF_MAX = 4096
 
 
 def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int]:
     """{term: df} for the query terms from the index's term dictionary,
     0 for a term it lacks; a missing term_df/ raises (the reader, not a
     fallback)."""
-    from ..sources.catalog import path_stat_signature
+    from ..sources.catalog import stat_signature
 
     d = f"{path}/term_df"
-    sig = path_stat_signature(d)
+    sig = stat_signature(d)
     cached_sig, known = _TERM_DF_CACHE.get(d, (None, {}))
     if cached_sig != sig:
         known = {}
@@ -194,12 +198,16 @@ def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int]:
         tbl = pads.dataset(d, format="parquet").to_table(
             filter=pads.field("term").isin(missing), columns=["term", "df"]
         )
+        fresh = dict.fromkeys(missing, 0)
+        for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+            fresh[term] += int(df)
         # A new dict, published whole: a concurrent lookup never sees, or
         # adds to, a half-summed entry.
-        known = {**known, **dict.fromkeys(missing, 0)}
-        for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-            known[term] += int(df)
-        _TERM_DF_CACHE[d] = (sig, known)
+        known = {**known, **fresh}
+        if len(known) > _TERM_DF_MAX:
+            known = {t: known[t] for t in query_terms}
+        if len(known) <= _TERM_DF_MAX:
+            _TERM_DF_CACHE[d] = (sig, known)
     return {t: known[t] for t in query_terms}
 
 
@@ -548,8 +556,8 @@ def bm25_scores_from_index(
       each term's rows contiguous row-group runs min/max stats can skip.
     - dl rides inside the posting rows and df and the corpus scalars
       enter as literals (scored_sql), so there is no doc-side join.
-    - The scan is memoized per file-stat signature (read_parquet_cached):
-      r12 measured ~190 ms of footer/listing reads per query without it.
+    - The scan is memoized under the postings' stat signature
+      (read_parquet_cached), so a query pays no footer or listing reads.
 
     Same text as the live path (bm25_scores) over the same postings
     rows and scalars: proven by the shared oracle row and the

@@ -3,14 +3,23 @@
 The reference keeps three hand-synchronized schemas (dataclasses, SQLite DDL,
 LanceDB PyArrow — `/root/reference/src/models.py`,
 `src/load/sqlite_store.py:44-117`, `src/load/lancedb_store.py:33-47`).
-Here the parquet footer IS the schema; this module is just a thin, cached
-loader so every operator reads through one code path (and therefore one
-place to attach bucketing/partitioning decisions at cluster scale).
+Here the parquet footer IS the schema; this module is the one loader every
+operator reads through, and the one memo every reader caches in.
+
+The memo rule (`memo`): a memoized value is served while the stat signature
+it was built under is unchanged (`stat_signature`: md5 over path, mtime_ns
+and size of every file), and a DataFrame only to the session that built it.
+Read-only sources (the driver's tables, TESTDATA.md) are memoized with no
+signature; artifacts that get rewritten (indexes, manifests, layouts, lakes)
+carry one, and the same signature is what their persisted
+`source_signature` records compare against.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import stat
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,30 +52,72 @@ def warehouse_path(sf_dir: str, stem: str) -> str:
     tag being md5 of the corpus's absolute path so distinct corpora never
     share an artifact. The one location rule every persisted index,
     layout, manifest and lake uses."""
-    import hashlib
-
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
     return os.path.join(_WAREHOUSE_DIR, f"{stem}_{tag}")
 
 
-_DF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# The one memo store: key -> (stat signature at build time, value).
+_MEMO: dict[tuple, tuple[str | None, Any]] = {}
+
+
+def memo(key: tuple, build, sig: str | None = None, spark: SparkSession | None = None):
+    """`build()` memoized under `key`, the package's one cache rule:
+
+    - a hit is served only while `sig` (a stat_signature of the files the
+      value derives from) is unchanged; any rewrite, extend or compaction
+      changes it and the next call rebuilds. None means the inputs are
+      read-only (the source tables, TESTDATA.md), so no stat walk is paid;
+    - with `spark` given, the value is a DataFrame: the entry is per
+      session, and a hit is served only while `value.sparkSession is
+      spark`. A mismatch is another session object under the same id();
+      the entry is evicted and rebuilt for the caller.
+
+    What it saves: a DataFrame is immutable and its scan's file index is
+    fixed when it is built, so rebuilding one is pure repetition. Building
+    a parquet scan costs ≈0.2 s of py4j footer reads per table, and
+    ≈190 ms per listing of a rewritten artifact, against ≈1 ms per
+    thousand files for the signature's stat walk. Driver scalars and
+    footer stats each save a whole Spark job or footer walk per call."""
+    if spark is not None:
+        key = (*key, id(spark))
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == sig and (spark is None or hit[1].sparkSession is spark):
+        return hit[1]
+    _MEMO.pop(key, None)
+    value = build()
+    _MEMO[key] = (sig, value)
+    return value
+
+
+def stat_signature(*paths: str) -> str:
+    """md5 over (path, mtime_ns, size) of every file under each path, in
+    order: one stat per file, no data read. A missing path, or a file
+    that vanishes mid-walk, is skipped. Persisted layouts store it as
+    their `source_signature`, so its string must not change."""
+    parts: list[str] = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            continue
+        if not stat.S_ISDIR(st.st_mode):
+            parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
+            continue
+        for root, _dirs, files in sorted(os.walk(p)):
+            for fn in sorted(files):
+                try:
+                    st = os.stat(os.path.join(root, fn))
+                except OSError:
+                    continue
+                parts.append(f"{root}/{fn}:{st.st_mtime_ns}:{st.st_size}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Column pruning + predicate pushdown are Catalyst's
     job — callers express plain DataFrame ops and the parquet scan shrinks
-    to what is actually referenced.
-
-    The scan DataFrame is memoized per (session, dir, table): DataFrames
-    are immutable, and rebuilding one re-reads parquet footers over py4j
-    (~0.2s per table per query — pure fixed overhead). The memo key
-    deliberately carries NO file-stat signature (unlike
-    read_parquet_cached below): the source tables are read-only by the
-    driver contract (TESTDATA.md), so a per-call stat walk over e.g.
-    documents' 1001 files at sf100 would be pure overhead on every query
-    construction. Artifact paths that legitimately get rewritten
-    (indexes, manifests, layouts) must go through read_parquet_cached,
-    whose signature key invalidates on any rewrite."""
+    to what is actually referenced. Memoized per (session, dir, table)
+    with no signature: the source tables are read-only."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     # Pin the session timezone even when the caller supplied its own
@@ -77,18 +128,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # and VALIDATE the supplied default ("" -> INVALID_CONF_VALUE).
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (id(spark), sf_dir, name)
-    cached = _DF_CACHE.get(key)
-    # Guard against id() reuse after a session is stopped and collected:
-    # only serve a cached scan built by THIS live session object; evict
-    # on mismatch so dead-session handles don't accumulate (ADVICE r12).
-    if cached is not None:
-        if cached.sparkSession is spark:
-            return cached
-        del _DF_CACHE[key]
-    df = _read_table(spark, sf_dir, name)
-    _DF_CACHE[key] = df
-    return df
+    return memo(("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name), spark=spark)
 
 
 def pin_events_read_confs(spark: SparkSession) -> None:
@@ -124,21 +164,14 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-_ARROW_CACHE: dict[str, Any] = {}
-
-
 def arrow_dataset(sf_dir: str, name: str) -> Any:
     """A pyarrow dataset over the same files as load_table(…, name), for
     keyed reads of a few rows on the driver with no Spark job. Memoized
-    per path, with no file-stat signature, for load_table's reason: the
-    source tables are read-only (TESTDATA.md)."""
+    per path with no signature, as load_table is."""
     import pyarrow.dataset as pads
 
     path = table_path(sf_dir, name)
-    ds = _ARROW_CACHE.get(path)
-    if ds is None:
-        ds = _ARROW_CACHE[path] = pads.dataset(path, format="parquet")
-    return ds
+    return memo(("arrow", path), lambda: pads.dataset(path, format="parquet"))
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -150,6 +183,26 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
         return _normalize_events_ts(df)
     return spark.read.parquet(path)
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table `name` as a file-stream source, normalized as _read_table
+    normalizes the batch read. A file stream needs an explicit schema: the
+    batch read's, memoized per path. A Spark-written table is a directory
+    of part files and streams from that directory; a single-file table
+    streams from its parent through a pathGlobFilter on its file name.
+    That filter pointed at a directory of part-*.parquet files matches
+    nothing, and the stream silently reads zero rows."""
+    path = table_path(sf_dir, name)
+    if name == "events":
+        pin_events_read_confs(spark)
+    schema = memo(("schema", path), lambda: spark.read.parquet(path).schema)
+    reader = spark.readStream.schema(schema)
+    if os.path.isdir(path):
+        stream = reader.parquet(path)
+    else:
+        stream = reader.option("pathGlobFilter", os.path.basename(path)).parquet(sf_dir)
+    return _normalize_events_ts(stream) if name == "events" else stream
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -172,119 +225,27 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 def table_stat_signature(sf_dir: str, tables: tuple[str, ...]) -> str:
-    """md5 over (path, mtime_ns, size) of every file backing the named
-    tables — the cheap freshness tag persisted layouts (bucketed facts,
-    LSH band index) store at build time and compare before serving, so a
-    corpus regenerated in place invalidates the layout instead of being
-    served stale. One stat per file, no data read."""
-    import hashlib
-
-    parts: list[str] = []
-    for t in tables:
-        p = table_path(sf_dir, t)
-        if os.path.isdir(p):
-            for root, _dirs, files in sorted(os.walk(p)):
-                for fn in sorted(files):
-                    st = os.stat(os.path.join(root, fn))
-                    parts.append(f"{root}/{fn}:{st.st_mtime_ns}:{st.st_size}")
-        elif os.path.exists(p):
-            st = os.stat(p)
-            parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
+    """stat_signature of the files backing the named tables — the
+    freshness tag persisted layouts (bucketed facts, LSH band index,
+    z-order, BM25 index) store at build time and compare before serving,
+    so a corpus regenerated in place invalidates the layout instead of
+    being served stale."""
+    return stat_signature(*(table_path(sf_dir, t) for t in tables))
 
 
-def path_stat_signature(path: str) -> str:
-    """table_stat_signature for an arbitrary artifact directory (or file):
-    md5 over (relpath, mtime_ns, size) of every file under it. One stat
-    per file, no data read — ~1 ms per thousand files, vs ~190 ms for the
-    spark.read.parquet footer/schema round-trip it lets callers skip."""
-    import hashlib
+def read_parquet_cached(spark: SparkSession, *paths: str) -> DataFrame:
+    """spark.read.parquet(*paths) memoized per (session, paths) under the
+    paths' stat signature — for artifacts that get rewritten (indexes,
+    manifests, layouts) and for explicit file lists (metadata-pruned
+    reads). Lifecycle verbs that read-then-overwrite a path simply miss
+    (one extra stat walk, no staleness)."""
+    return memo(
+        ("parquet", *map(os.path.abspath, paths)),
+        lambda: spark.read.parquet(*paths),
+        sig=stat_signature(*paths),
+        spark=spark,
+    )
 
-    parts: list[str] = []
-    if os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for fn in sorted(files):
-                try:
-                    st = os.stat(os.path.join(root, fn))
-                except OSError:
-                    continue
-                parts.append(f"{root}/{fn}:{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        parts.append(f"{path}:{st.st_mtime_ns}:{st.st_size}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-# (session id, abspath) -> (stat signature at read time, scan DataFrame)
-_PARQUET_CACHE: dict[tuple[int, str], tuple[str, DataFrame]] = {}
-
-
-def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet memoized per (session, path, file-stat signature).
-
-    Building a parquet scan DataFrame costs a ~190 ms driver round-trip
-    (file listing + footer schema inference over py4j) EVERY call — at
-    sf0.1 that floor dominated every index-served query's wall (the r11
-    profile: serving paths re-reading an unchanged postings/signature/
-    manifest layout per query). DataFrames are immutable and the scan's
-    InMemoryFileIndex snapshots the listing at creation, so reusing one is
-    correct exactly as long as the files it listed are unchanged — which
-    is what the stat signature (mtime_ns+size of every file under `path`)
-    checks, the same freshness currency the serve-or-build layouts already
-    use. Any rewrite/extend/compaction changes the signature and the next
-    call re-reads. Lifecycle verbs that read-then-overwrite a path simply
-    miss the cache (one extra stat walk, no staleness)."""
-    key = (id(spark), os.path.abspath(path))
-    sig = path_stat_signature(path)
-    hit = _PARQUET_CACHE.get(key)
-    # `is spark` guards id() reuse after a stopped session is collected,
-    # same as load_table's _DF_CACHE. A mismatch means the entry belongs
-    # to a dead session whose id() was recycled — evict it so stale
-    # DataFrame handles don't accumulate in long-lived multi-session
-    # processes (ADVICE r12).
-    if hit is not None:
-        if hit[1].sparkSession is not spark:
-            del _PARQUET_CACHE[key]
-        elif hit[0] == sig:
-            return hit[1]
-    df = spark.read.parquet(path)
-    _PARQUET_CACHE[key] = (sig, df)
-    return df
-
-
-def read_parquet_paths_cached(spark: SparkSession, paths: tuple[str, ...]) -> DataFrame:
-    """read_parquet_cached for an EXPLICIT file list (metadata-pruned
-    reads, e.g. the z-layout's per-file-box pruning): memoized per
-    (session, path tuple, stat signature over exactly those files)."""
-    import hashlib
-
-    parts = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
-        except OSError:
-            parts.append(f"{p}:gone")
-    sig = hashlib.md5("|".join(parts).encode()).hexdigest()
-    key = (id(spark), "||".join(paths))
-    hit = _PARQUET_CACHE.get(key)
-    if hit is not None:
-        if hit[1].sparkSession is not spark:
-            del _PARQUET_CACHE[key]
-        elif hit[0] == sig:
-            return hit[1]
-    df = spark.read.parquet(*paths)
-    _PARQUET_CACHE[key] = (sig, df)
-    return df
-
-
-# (abs table dir, col) -> (table stat signature, {abs path: (min, max)} | None)
-# In-memory memo over the persisted stats manifest below. The manifest
-# holds METADATA derived from the source files (per-file min/max), keyed
-# on their stat signature — the same currency as the z-layout's CAS
-# boxes; every bench/oracle run still computes results from the parquet
-# inputs.
-_RAW_FILE_STATS_CACHE: dict[tuple[str, str], tuple[str, dict | None]] = {}
 
 # Physical parquet types whose min/max stats are exact and totally
 # ordered (ADVICE r13 #2): float stats lie under NaN, and binary/string
@@ -313,8 +274,6 @@ def _raw_stats_manifest_root(table_dir: str, col: str) -> str:
     (table directory, column) — the at-ingest stats record VERDICT r13
     ask #3 names, reusing the z-layout's CAS-meta pattern. Keyed on the
     absolute source path so distinct corpora never share a record."""
-    import hashlib
-
     tag = hashlib.md5(f"{table_dir}::{col}".encode()).hexdigest()[:10]
     return os.path.join(_WAREHOUSE_DIR, f"raw_stats_{tag}")
 
@@ -346,7 +305,7 @@ def _raw_file_stats(sf_dir: str, table: str, col: str) -> dict | None:
     """Per-file min/max of `col` across a raw multi-file table directory.
     Resolution order (each level memoizes into the one above):
 
-    1. in-process cache, keyed on the files' stat signature;
+    1. the memo, under the files' stat signature;
     2. the persisted stats manifest (CAS meta in the warehouse) — a cold
        PROCESS pays one ~1 ms meta read instead of an O(n_files) footer
        walk, the scale-safe posture for 10^5-file corpora (measured at
@@ -356,31 +315,31 @@ def _raw_file_stats(sf_dir: str, table: str, col: str) -> dict | None:
        manifest is (re)committed for directories above the threshold so
        the next cold process takes level 2.
 
-    Returns None when the table is a single file (nothing to prune), the
-    column is not exact-int-prunable, or any file lacks min/max stats —
-    callers fall back to the plain scan."""
-    path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    The manifest holds metadata derived from the source files, keyed on
+    their stat signature; results are still computed from the parquet
+    inputs. Returns None when the table is a single file (nothing to
+    prune), the column is not exact-int-prunable, or any file lacks
+    min/max stats — callers fall back to the plain scan."""
+    path = os.path.abspath(table_path(sf_dir, table))
     if not os.path.isdir(path):
         return None
     sig = table_stat_signature(sf_dir, (table,))
-    key = (path, col)
-    hit = _RAW_FILE_STATS_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
+    return memo(("raw_file_stats", path, col), lambda: _stored_file_stats(path, col, sig), sig=sig)
 
+
+def _stored_file_stats(path: str, col: str, sig: str) -> dict | None:
+    """Levels 2 and 3 of _raw_file_stats: the manifest, else the footers."""
     from .manifest import commit_meta, read_meta
 
     mroot = _raw_stats_manifest_root(path, col)
     meta = read_meta(mroot) or {}
     if meta.get("source_signature") == sig and meta.get("col") == col:
         raw = meta.get("stats")
-        stats = (
+        return (
             {os.path.join(path, fn): (int(lo), int(hi)) for fn, (lo, hi) in raw.items()}
             if raw is not None
             else None
         )
-        _RAW_FILE_STATS_CACHE[key] = (sig, stats)
-        return stats
 
     files = [
         os.path.join(path, fn)
@@ -394,7 +353,6 @@ def _raw_file_stats(sf_dir: str, table: str, col: str) -> dict | None:
             stats = None
             break
         stats[fp] = mm
-    _RAW_FILE_STATS_CACHE[key] = (sig, stats)
     # Persist the manifest only when the directory is large enough that a
     # cold footer walk is worth skipping (≤_RAW_STATS_MAX_SERIAL files
     # recompute in single-digit ms — writing a warehouse record for every
@@ -456,27 +414,17 @@ def raw_pruned_files(
     return keep
 
 
-# (session id, sf_dir, table, tag) -> (table stat signature, value)
-_SCALAR_CACHE: dict[tuple[int, str, str, str], tuple[str, object]] = {}
-
-
 def table_scalar_cached(spark: SparkSession, sf_dir: str, table: str, tag: str, compute):
     """Memoize a BOUNDED driver-side scalar derived from one source table
-    (e.g. max(user_id) for a decile cut) per (session, table, file-stat
-    signature). These scalars are properties of the table contents, not of
-    the query — recomputing one per query is a whole extra Spark job of
-    pure repetition (the r12 floor profile: events_zorder_served paid a
-    max(user_id) job on every call). Same staleness currency as every
-    serve-or-build layout: any change to the table's files changes the
-    signature and forces recompute."""
-    key = (id(spark), sf_dir, table, tag)
-    sig = table_stat_signature(sf_dir, (table,))
-    hit = _SCALAR_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    val = compute()
-    _SCALAR_CACHE[key] = (sig, val)
-    return val
+    (e.g. max(user_id) for a decile cut) under the table's stat
+    signature. These scalars are properties of the table contents, not of
+    the query or the session — recomputing one per query is a whole extra
+    Spark job of pure repetition (events_zorder_served paid a
+    max(user_id) job on every call). Any change to the table's files
+    changes the signature and forces recompute."""
+    return memo(
+        ("scalar", sf_dir, table, tag), compute, sig=table_stat_signature(sf_dir, (table,))
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:

@@ -401,39 +401,24 @@ def snapshot_files(manifest: dict, bounds: dict | None = None) -> list[str]:
     return out
 
 
-# (session id, root, version-or-None, bounds key) -> (root stat signature,
-# snapshot DataFrame). Same memoization contract as catalog.
-# read_parquet_cached: building the scan costs a ~100-190 ms driver
-# round-trip per call (file-list resolution + reader construction +
-# analysis), pure repetition while the lake is unchanged; the
-# path_stat_signature over the WHOLE root (manifests + data files + DV
-# files) is the freshness currency — any commit, compaction, vacuum or
-# rewrite changes it and the next call re-resolves. r13 (guide §1: the
-# sf0.1 profile put 0.1-0.2 s of every snapshot-served query's wall in
-# this construction).
-_SNAPSHOT_CACHE: dict[tuple[int, str, int | None, str], tuple[str, DataFrame]] = {}
-
-
 def read_snapshot(
     spark: SparkSession,
     root: str,
     version: int | None = None,
     bounds: dict | None = None,
 ) -> DataFrame:
-    from .catalog import path_stat_signature
+    """_read_snapshot_uncached through catalog.memo, per (session, root,
+    version, bounds), signed by the WHOLE root (manifests, data files and
+    DV files): any commit, compaction, vacuum or rewrite re-resolves."""
+    from .catalog import memo, stat_signature
 
     bkey = repr(sorted(bounds.items())) if bounds else ""
-    key = (id(spark), os.path.abspath(root), version, bkey)
-    sig = path_stat_signature(root)
-    hit = _SNAPSHOT_CACHE.get(key)
-    if hit is not None:
-        if hit[1].sparkSession is not spark:
-            del _SNAPSHOT_CACHE[key]
-        elif hit[0] == sig:
-            return hit[1]
-    df = _read_snapshot_uncached(spark, root, version, bounds)
-    _SNAPSHOT_CACHE[key] = (sig, df)
-    return df
+    return memo(
+        ("snapshot", os.path.abspath(root), version, bkey),
+        lambda: _read_snapshot_uncached(spark, root, version, bounds),
+        sig=stat_signature(root),
+        spark=spark,
+    )
 
 
 def _read_snapshot_uncached(

@@ -34,29 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import _INCR_ORACLE, lsh_band_keys, persist_lsh_band_index
 from ..registry import query
-from ..sources.catalog import warehouse_path
-
-_SCHEMA_CACHE: dict[tuple[int, str], object] = {}
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents as a file-stream source — same single-file vs
-    Spark-written-directory dispatch as streaming/events.py:stream_events
-    (the r5 empty-stream postmortem applies verbatim: a pathGlobFilter
-    pointed at a directory of part files matches nothing)."""
-    key = (id(spark), sf_dir)
-    raw_schema = _SCHEMA_CACHE.get(key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        _SCHEMA_CACHE[key] = raw_schema
-    src_path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(src_path):
-        return spark.readStream.schema(raw_schema).parquet(src_path)
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+from ..sources.catalog import stream_table, warehouse_path
 
 
 @query("streaming_near_dup_ingest", oracle=_INCR_ORACLE)
@@ -79,7 +57,7 @@ def streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)  # fresh deterministic run per gate
     out = os.path.join(base, "decisions")
 
-    delta = stream_documents(spark, sf_dir).filter(F.col("doc_id") % 20 == 0)
+    delta = stream_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
 
     def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
         (

@@ -34,52 +34,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..plans.partitioned import DAY_ROLLUP_ORACLE as _DAY_ROLLUP_ORACLE
 from ..registry import query
-from ..sources.catalog import warehouse_path
+from ..sources.catalog import memo, pin_events_read_confs, stream_table, table_path, warehouse_path
 
 SESSION_GAP_MS = 30 * 60 * 1000
 
 _SINK_COUNTER = itertools.count()
-_SCHEMA_CACHE: dict[tuple[int, str], object] = {}
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a file-stream source. Schema comes from a batch read of
-    the same file (file streams require an explicit schema); the
-    TIMESTAMP(NANOS) column rides in as int64 and is rebuilt to
-    microseconds exactly as the batch catalog does."""
-    # Same session hardening as sources/catalog.load_table: the driver may
-    # hand us a non-UTC session, and window renderings must match the
-    # timezone-naive oracle. One shared load-boundary helper (r14).
-    from ..sources.catalog import pin_events_read_confs
-
-    pin_events_read_confs(spark)
-    key = (id(spark), sf_dir)
-    raw_schema = _SCHEMA_CACHE.get(key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _SCHEMA_CACHE[key] = raw_schema
-    src_path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(src_path):
-        # Spark-written source (the .scale dirs): events.parquet is a
-        # DIRECTORY of part files. The single-file branch's pathGlobFilter
-        # would match NO files here (it filters file names, and the parts
-        # are part-*.parquet) — the stream would silently read zero rows,
-        # which is exactly the hollow-benchmark failure mode fixed in r5:
-        # streaming bench numbers at .scale sf were measuring an empty
-        # stream. Point the stream at the directory itself.
-        stream = spark.readStream.schema(raw_schema).parquet(src_path)
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    # Same ts normalization as the batch catalog (sources/catalog.py:
-    # _normalize_events_ts) — dispatch on the SOURCE dtype, never assume
-    # int64 nanos: the driver's parquet reads back TIMESTAMP_NTZ.
-    from ..sources.catalog import _normalize_events_ts
-
-    return _normalize_events_ts(stream)
+    """events as a file-stream source (catalog.stream_table)."""
+    return stream_table(spark, sf_dir, "events")
 
 
 def _stream_state_partitions(sf_dir: str) -> int:
@@ -103,7 +67,7 @@ def _stream_state_partitions(sf_dir: str) -> int:
     from ..session import parquet_bytes, partitions_for_bytes
 
     return partitions_for_bytes(
-        parquet_bytes(os.path.join(sf_dir, "events.parquet")), floor=1
+        parquet_bytes(table_path(sf_dir, "events")), floor=1
     )
 
 
@@ -116,34 +80,19 @@ def _stream_state_partitions(sf_dir: str) -> int:
 # construction, not a copy.
 STREAM_STAGES: dict[str, Any] = {}
 
-# (session id, sf_dir, stage name) -> stage DataFrame. A stage is a LAZY
-# streaming plan handle — rebuilding one costs ~0.15-0.5 s of py4j
-# construction per drain (r14 probe: the single biggest removable slice
-# of the drain wall), while reusing one is correct by construction: the
-# file source resolves its file list when each QUERY starts (not when
-# the DataFrame is built), every drain runs under a fresh checkpoint, so
-# nothing is cached but the plan. Same discipline as catalog._DF_CACHE,
-# including the `.sparkSession is spark` id()-reuse guard.
-_STAGE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
+# A stage is a LAZY streaming plan handle, memoized per (session, sf_dir,
+# stage name): rebuilding one costs ~0.15-0.5 s of py4j construction per
+# drain, while reusing one is correct by construction: the file source
+# resolves its file list when each QUERY starts (not when the DataFrame
+# is built), every drain runs under a fresh checkpoint, so nothing is
+# cached but the plan.
 def stream_stage(name: str):
     def deco(fn):
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (id(spark), sf_dir, name)
-            hit = _STAGE_CACHE.get(key)
-            if hit is not None:
-                if hit.sparkSession is spark:
-                    # Re-pin the read confs the cached plan depends on
-                    # (guarded reads — no py4j set in steady state).
-                    from ..sources.catalog import pin_events_read_confs
-
-                    pin_events_read_confs(spark)
-                    return hit
-                del _STAGE_CACHE[key]
-            df = fn(spark, sf_dir)
-            _STAGE_CACHE[key] = df
-            return df
+            # The read confs the cached plan depends on (guarded reads —
+            # no py4j set in steady state).
+            pin_events_read_confs(spark)
+            return memo(("stage", sf_dir, name), lambda: fn(spark, sf_dir), spark=spark)
 
         cached.__name__ = fn.__name__
         cached.__doc__ = fn.__doc__

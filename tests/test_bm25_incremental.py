@@ -173,3 +173,11 @@ def test_term_df_cache_holds_one_entry_per_index(spark, tmp_path):
     assert [k for k in bm25._TERM_DF_CACHE if str(tmp_path) in str(k)] == [key]
     new_sig, known = bm25._TERM_DF_CACHE[key]
     assert new_sig != old_sig and set(known) == set(terms)
+
+    # Distinct absent terms past the cap: answers still equal the
+    # postings recount, and the entry never holds more than the cap.
+    batch = 1000
+    for i in range(bm25._TERM_DF_MAX // batch + 2):
+        terms = vocab[:2] + [f"gone{i}x{j}" for j in range(batch)]
+        assert lookup(terms) == postings_df(terms)
+        assert len(bm25._TERM_DF_CACHE[key][1]) <= bm25._TERM_DF_MAX

@@ -388,3 +388,17 @@ def test_table_scalar_cached_invalidates_on_table_change(spark, corpus_copy):
     assert table_scalar_cached(spark, corpus_copy, "documents", "probe", compute) == 42
     assert calls["n"] == 2
 
+    # read_parquet_cached, the same rule for a scan: served while the
+    # path is unchanged, read afresh once it is rewritten.
+    from etl_pdf_pipepline_spark.sources.catalog import read_parquet_cached
+
+    path = os.path.join(corpus_copy, "probe_scan.parquet")
+    shutil.copy(os.path.join(corpus_copy, "region.parquet"), path)
+    try:
+        first = read_parquet_cached(spark, path)
+        assert read_parquet_cached(spark, path) is first and first.count() == 5
+        shutil.copy(os.path.join(corpus_copy, "nation.parquet"), path)
+        fresh = read_parquet_cached(spark, path)
+        assert fresh is not first and fresh.count() == 25
+    finally:
+        os.remove(path)

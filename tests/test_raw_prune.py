@@ -11,10 +11,14 @@ import os
 
 import pytest
 
-from etl_pdf_pipepline_spark.sources.catalog import (
-    _RAW_FILE_STATS_CACHE,
-    raw_pruned_files,
-)
+from etl_pdf_pipepline_spark.sources import catalog as cat
+from etl_pdf_pipepline_spark.sources.catalog import raw_pruned_files
+
+
+def _forget_raw_file_stats() -> None:
+    """Drop the in-process level of _raw_file_stats: its memo entries."""
+    for k in [k for k in cat._MEMO if k[0] == "raw_file_stats"]:
+        del cat._MEMO[k]
 
 
 @pytest.fixture()
@@ -94,9 +98,9 @@ def test_single_file_table_returns_none(tmp_path, spark):
 def test_stats_cache_invalidates_on_rewrite(spark, multi_file_dir):
     files1 = raw_pruned_files(multi_file_dir, "orders", "o_custkey", hi_exclusive=50)
     assert files1 and len(files1) == 1
-    # r14 key shape: (abs table dir, col) — abspath-normalized (ADVICE r13 #3).
+    # Memo key shape: ("raw_file_stats", abs table dir, col) — abspath-normalized.
     table_dir = os.path.join(os.path.abspath(multi_file_dir), "orders.parquet")
-    key_hits = [k for k in _RAW_FILE_STATS_CACHE if k[0] == table_dir]
+    key_hits = [k for k in cat._MEMO if k[:2] == ("raw_file_stats", table_dir)]
     assert key_hits
     # Rewrite the table with different ranges: signature changes, the
     # memo recomputes, and the prune reflects the new layout.
@@ -190,12 +194,12 @@ def test_stats_manifest_round_trip(multi_file_dir, monkeypatch):
     table_dir = os.path.join(os.path.abspath(multi_file_dir), "orders.parquet")
     mroot = cat._raw_stats_manifest_root(table_dir, "o_custkey")
     shutil.rmtree(mroot, ignore_errors=True)
-    cat._RAW_FILE_STATS_CACHE.clear()
+    _forget_raw_file_stats()
     warm = raw_pruned_files(multi_file_dir, "orders", "o_custkey", hi_exclusive=50)
     assert warm and len(warm) == 1
     assert os.path.isdir(mroot)  # manifest committed
     # Simulate a cold process: drop the in-memory memo, resolve again.
-    cat._RAW_FILE_STATS_CACHE.clear()
+    _forget_raw_file_stats()
     from etl_pdf_pipepline_spark.sources.manifest import read_meta
 
     meta = read_meta(mroot)
@@ -211,7 +215,7 @@ def test_small_dirs_do_not_persist_manifest(multi_file_dir):
     (tiny test corpora must not litter spark-warehouse)."""
     from etl_pdf_pipepline_spark.sources import catalog as cat
 
-    cat._RAW_FILE_STATS_CACHE.clear()
+    _forget_raw_file_stats()
     stats = cat._raw_file_stats(multi_file_dir, "orders", "o_custkey")
     assert stats and len(stats) == 3
     table_dir = os.path.join(os.path.abspath(multi_file_dir), "orders.parquet")
